@@ -998,8 +998,8 @@ object CorpusQueries {
     * tf/df/N/Σdl, avgdl as sum-then-divide, the same ln/idf/denominator
     * expression — scores are bit-stable between engines. */
   /** q138/q141 shared oracle prefix: everything up to the per-(doc,
-    * term) scored postings (`sc`) — the exact float shape
-    * Retrieval.scoredPostings produces. */
+    * term) scored postings (`sc`) — the exact float shape of
+    * Retrieval's per-term score columns. */
   private def bm25ScoredSql(terms: Seq[String], k1: Double = 1.2,
       b: Double = 0.75): String = {
     val termList = terms.map(t => s"'$t'").mkString(", ")

@@ -9,21 +9,21 @@ import org.apache.spark.sql.functions._
 /** Lexical retrieval scoring — the BM25 side of the search story (the
   * ANN operators in [[Similarity]] are its dense counterpart).
   *
-  * Scale shape: the one-shot forms scan and tokenize the corpus ONCE —
-  * a narrow (id, dl, query-term tokens) projection is materialized
-  * ([[queryTermBase]]) and postings, document frequency and corpus
-  * stats all derive from it (the naive declarative form re-scanned the
-  * raw text once per aggregate — 3× for the hybrid workload). The
-  * production path is still the incremental pair [[bm25StatsDelta]] +
-  * [[bm25WithStats]], which tokenizes each document exactly once at
-  * ingest and never re-reads the corpus to score. The gram explode is
-  * filtered to the query-term set BEFORE any shuffle, so the
-  * (doc, term) aggregate carries only matching postings (≪ corpus
-  * tokens); document-frequency and the (N, avgdl) corpus stats are
-  * term-count / single-row frames broadcast into the scoring
-  * projection; the final top-k is a rank window over the scored
-  * postings (WindowGroupLimit prunes). Nothing ever shuffles the text
-  * column.
+  * Scale shape: every form scans and tokenizes the corpus ONCE into a
+  * narrow base — (id, dl, tf of each distinct query term) — with tf
+  * read off the query-term token stream in the projection, so no
+  * posting is ever exploded or shuffled. The statistics BM25 needs
+  * beyond the document itself are collected to the driver ONCE per
+  * call: N, Σdl and the df of each query term (2 + #terms longs; the
+  * one-shot forms aggregate them from the materialized base, the
+  * `WithStats` forms fold them from the maintained [[bm25StatsDelta]]
+  * rows, which never re-scan the corpus). They are bounded by the
+  * query, not the corpus, and inlined as literals, so scoring is a
+  * pure projection over the base — no broadcast join, no df or
+  * one-row stats aggregate in the plan. The only exchange left is the
+  * ranking: a per-term window ([[bm25]]), per-partition top-k heaps
+  * ([[bm25Query]]), or a per-query window ([[bm25Queries]]). Nothing
+  * ever shuffles the text column.
   *
   * Determinism: every float is derived from exact longs (tf, df, N,
   * Σdl) with a fixed expression shape — avgdl is exact-sum-then-divide,
@@ -31,70 +31,114 @@ import org.apache.spark.sql.functions._
   * so scores are bit-stable and oracle-checkable. Multi-term document
   * scores ([[bm25Query]]) sum the per-term scores in the CALLER'S term
   * order as one fixed left-to-right expression, never a float `sum`
-  * aggregate whose combine order could vary.
+  * aggregate whose combine order could vary. Document ids are unique
+  * by contract (each row is one document).
   */
 object Retrieval {
 
-  /** (idCol, __toks, __dl) — the single tokenized projection every
-    * other frame here derives from. */
-  private def tokenized(docs: DataFrame, idCol: String,
-      textCol: String): DataFrame =
-    docs
-      .select(col(idCol), TextStats.tokens(col(textCol)).as("__toks"))
-      .select(col(idCol), col("__toks"), size(col("__toks")).as("__dl"))
-
-  /** ONE corpus pass shared by postings, document frequency and corpus
-    * stats in the one-shot forms: (idCol, __dl, __qt) with __qt = the
-    * token stream filtered to the query-term set (duplicates and order
-    * kept — fused [[graft.functions.TokensInSetExpr]], pinned bit-equal
-    * to `filter(toks, isInCollection)` in ScaleSpec). Eagerly
-    * materialized with localCheckpoint (ContextCleaner reclaims the
-    * blocks once unreferenced, unlike persist) so the tf / df / (N,
-    * avgdl) aggregates all read this ~tens-of-bytes-per-doc narrow
-    * frame: the previous declarative form re-scanned AND re-tokenized
-    * the raw text once per aggregate — the q172 physical plan scanned
-    * `documents` three times (guide §2.3, scan/shuffle fewer bytes). */
+  /** (idCol, __dl, __tf0 … __tfN) for the distinct `terms`: tf is the
+    * count of the term in the query-term token stream (fused
+    * [[graft.functions.TokensInSetExpr]], pinned bit-equal to
+    * `filter(toks, isInCollection)` in ScaleSpec), read off with
+    * `size(qt) - size(array_remove(qt, t))`. */
   // deliberately NOT Par.widened: measured at sf0.1 AND the KB corpus,
   // the raw-text exchange costs more than the (fused, fast) tokenize
   // battery saves here — q138 0.66→0.99 s, q141 0.52→0.91 s with it
-  private def queryTermBase(docs: DataFrame, idCol: String,
-      textCol: String, terms: Seq[String]): DataFrame =
+  private def termBase(docs: DataFrame, idCol: String, textCol: String,
+      terms: Seq[String]): DataFrame = {
+    val qt = col("__qt")
     docs
       .select(col(idCol), TextStats.tokens(col(textCol)).as("__toks"))
       .select(col(idCol), size(col("__toks")).as("__dl"),
         graft.functions.TextFns.tokensInSetCol(col("__toks"), terms)
           .as("__qt"))
-      .graftCheckpoint(true)
+      .select(col(idCol) +: col("__dl") +: terms.indices.map(i =>
+        (size(qt) - size(array_remove(qt, terms(i)))).as(s"__tf$i")): _*)
+  }
 
-  /** [[postings]] from the materialized [[queryTermBase]] — __qt is
-    * already filtered to the term set, so only the null row of an
-    * empty/null array is dropped. */
-  private def basePostings(base: DataFrame, idCol: String): DataFrame =
-    base
-      .select(col(idCol), col("__dl"), explode_outer(col("__qt")).as("__t"))
-      .filter(col("__t").isNotNull)
-      .groupBy(col(idCol), col("__t"), col("__dl"))
-      .agg(count(lit(1)).as("__tf"))
+  /** Corpus statistics held on the driver: N and Σdl (None when the
+    * corpus is empty) and the df of each query term that has one. */
+  private case class CorpusStats(n: Long, sumDl: Option[Long],
+      df: Map[String, Long])
 
-  /** Corpus stats (N, avgdl) from the materialized [[queryTermBase]] —
-    * same exact-longs-then-divide shape as the `tokenized` form. */
-  private def baseStats(base: DataFrame): DataFrame =
-    base.agg(count(lit(1)).as("__N"),
-      (sum(col("__dl")).cast("double") / count(lit(1))).as("__avgdl"))
+  /** One-shot stats: ONE aggregate over the materialized base. */
+  private def corpusStats(base: DataFrame, terms: Seq[String]): CorpusStats = {
+    val r = base.agg(count(lit(1)), sum(col("__dl")) +:
+      terms.indices.map(i => count(when(col(s"__tf$i") > 0, lit(1)))): _*)
+      .head()
+    CorpusStats(r.getLong(0), if (r.isNullAt(1)) None else Some(r.getLong(1)),
+      terms.indices.map(i => terms(i) -> r.getLong(i + 2)).toMap)
+  }
 
-  /** (idCol, __dl, __t, __tf) postings for the query-term set — the
-    * per-document side of BM25, shared by the one-shot and
-    * incremental-stats forms. */
-  private def postings(toks: DataFrame, idCol: String,
-      terms: Seq[String]): DataFrame =
-    toks
-      .select(col(idCol), col("__dl"),
-        explode_outer(col("__toks")).as("__t"))
-      // isNotNull is generate hygiene (Dedup class doc); isInCollection
-      // subsumes it but stating both keeps the contract explicit
-      .filter(col("__t").isNotNull && col("__t").isInCollection(terms))
-      .groupBy(col(idCol), col("__t"), col("__dl"))
-      .agg(count(lit(1)).as("__tf"))
+  /** Maintained stats: the sum-by-key fold of the appended
+    * [[bm25StatsDelta]] rows, restricted to the corpus rows and the
+    * query terms' df rows (≤ 2 + #terms rows reach the driver). */
+  private def foldStats(statsRows: DataFrame,
+      terms: Seq[String]): CorpusStats = {
+    val folded = statsRows
+      .filter(col("stat") === "corpus" ||
+        (col("stat") === "df" && col("key").isInCollection(terms)))
+      .groupBy(col("stat"), col("key")).agg(sum(col("n")))
+      .collect().map(r =>
+        (r.getString(0), r.getString(1)) -> r.getAs[java.lang.Long](2))
+      .toMap
+    val n = folded.get(("corpus", "n_docs"))
+    require(n.isDefined && folded.contains(("corpus", "sum_dl")),
+      "BM25 stats rows hold no corpus n_docs/sum_dl rows")
+    // Σdl is null when every folded batch was empty
+    CorpusStats(n.get, Option(folded(("corpus", "sum_dl"))).map(_.toLong),
+      folded.collect { case (("df", t), v) => t -> v.toLong })
+  }
+
+  /** A scored base: `frame` holds one `__s{i}` column per slot term —
+    * its BM25 score (Robertson/Lucene IDF: ln((N - df + 0.5)/(df +
+    * 0.5) + 1)), rounded to 6, where the document holds the term, null
+    * elsewhere. A term without a df (absent from the maintained stats)
+    * scores nowhere. */
+  private case class Scored(frame: DataFrame, slots: Seq[String],
+      st: CorpusStats) {
+    def hit(t: String): Column =
+      if (st.df.contains(t)) col(s"__tf${slots.indexOf(t)}") > 0 else lit(false)
+    /** A query matches the documents holding any of its scored terms. */
+    def matches(query: Seq[String]): Column =
+      query.distinct.map(hit).reduce(_ || _)
+    /** A query's unrounded total: the fixed left-to-right chain of
+      * coalesce(score_t, 0) in the query's own term order. */
+    def total(query: Seq[String]): Column =
+      query.map(t => coalesce(col(s"__s${slots.indexOf(t)}"), lit(0.0)))
+        .reduce(_ + _)
+  }
+
+  /** Score the distinct `terms` in one of two stats modes: `statsRows`
+    * None → materialize the base (it is read twice: stats, then
+    * scores) and aggregate its stats; Some → fold the maintained rows
+    * and score the batch in one pass. N, avgdl and df are literals. */
+  private def scoredBase(docs: DataFrame, statsRows: Option[DataFrame],
+      idCol: String, textCol: String, terms: Seq[String], k1: Double,
+      b: Double): Scored = {
+    val slots = terms.distinct
+    require(slots.nonEmpty, "need at least one query term")
+    val base = termBase(docs, idCol, textCol, slots)
+    val (in, st) = statsRows match {
+      case None =>
+        // lazy: the stats job materializes the blocks the scores read
+        val m = base.graftCheckpoint(false)
+        (m, corpusStats(m, slots))
+      case Some(rows) => (base, foldStats(rows, slots))
+    }
+    val n = lit(st.n)
+    val avgdl = st.sumDl.fold(lit(null).cast("long"))(lit(_))
+      .cast("double") / n
+    Scored(in.select(col("*") +: slots.indices.map { i =>
+      val tf = col(s"__tf$i")
+      st.df.get(slots(i)).fold(lit(null).cast("double")) { d =>
+        val df = lit(d)
+        val idf = log((n - df + lit(0.5)) / (df + lit(0.5)) + lit(1.0))
+        when(tf > 0, round(idf * tf * lit(k1 + 1.0) /
+          (tf + lit(k1) * (lit(1.0 - b) + lit(b) * col("__dl") / avgdl)), 6))
+      }.as(s"__s$i")
+    }: _*), slots, st)
+  }
 
   /** Per-batch corpus-stats DELTA: (stat, key, n) rows —
     * ('df', term, docs-containing-term), ('corpus', 'n_docs', batch
@@ -105,192 +149,130 @@ object Retrieval {
     * and never re-scans the corpus to refresh df/N/avgdl. */
   def bm25StatsDelta(batch: DataFrame, idCol: String, textCol: String,
       terms: Seq[String]): DataFrame = {
-    val base = queryTermBase(batch, idCol, textCol, terms)
-    val corpus = base.agg(count(lit(1)).as("__n"), sum(col("__dl")).as("__s"))
-      .select(explode(array(
-        struct(lit("corpus").as("stat"), lit("n_docs").as("key"),
-          col("__n").as("n")),
-        struct(lit("corpus").as("stat"), lit("sum_dl").as("key"),
-          col("__s").as("n")))).as("r"))
-      .select("r.stat", "r.key", "r.n")
-    // per-doc array_distinct then a count per term == the previous
-    // (id, term) DISTINCT then count — df counts each doc once
-    val dfreq = base
-      .select(explode_outer(array_distinct(col("__qt"))).as("__t"))
-      .filter(col("__t").isNotNull)
-      .groupBy(col("__t")).agg(count(lit(1)).as("n"))
-      .select(lit("df").as("stat"), col("__t").as("key"), col("n"))
-    corpus.unionByName(dfreq)
+    val ts = terms.distinct
+    val st = corpusStats(termBase(batch, idCol, textCol, ts), ts)
+    val sp = batch.sparkSession
+    import sp.implicits._
+    // one df row per term held by at least one document
+    (("corpus", "n_docs", Option(st.n)) +: ("corpus", "sum_dl", st.sumDl) +:
+      ts.filter(st.df(_) > 0).map(t => ("df", t, Option(st.df(t)))))
+      .toDF("stat", "key", "n")
   }
 
-  /** Score postings against MAINTAINED stats (the sum-by-key fold of
+  /** Score documents against MAINTAINED stats (the sum-by-key fold of
     * appended [[bm25StatsDelta]] rows) — same float shape as [[bm25]],
     * with N and Σdl exact longs, so the two forms are bit-identical
     * on the same corpus. */
   def bm25WithStats(docs: DataFrame, statsRows: DataFrame, idCol: String,
       textCol: String, terms: Seq[String], k: Int, k1: Double = 1.2,
-      b: Double = 0.75): DataFrame = {
-    val (dfreq, corpus) = foldStats(statsRows)
-    rankPerTerm(scoredPostings(
-      postings(tokenized(docs, idCol, textCol), idCol, terms),
-      dfreq, corpus, k1, b), idCol, k)
-  }
+      b: Double = 0.75): DataFrame =
+    rankPerTerm(docs, Some(statsRows), idCol, textCol, terms, k, k1, b)
 
-  /** (dfreq, corpus) frames from maintained additive stats rows. */
-  private def foldStats(statsRows: DataFrame): (DataFrame, DataFrame) = {
-    val folded = statsRows.groupBy(col("stat"), col("key"))
-      .agg(sum(col("n")).as("n"))
-    val corpus = folded.filter(col("stat") === "corpus")
-      .groupBy()
-      .agg(max(when(col("key") === "n_docs", col("n"))).as("__N"),
-        max(when(col("key") === "sum_dl", col("n"))).as("__sumdl"))
-      .select(col("__N"),
-        (col("__sumdl").cast("double") / col("__N")).as("__avgdl"))
-    val dfreq = folded.filter(col("stat") === "df")
-      .select(col("key").as("__t"), col("n").as("__df"))
-    (dfreq, corpus)
-  }
-
-  /** Top-k documents per query term by BM25 (Robertson/Lucene IDF:
-    * ln((N - df + 0.5)/(df + 0.5) + 1)). Output:
+  /** Top-k documents per query term by BM25. Output:
     * (term, idCol, score rounded to 6, rank ≤ k). */
   def bm25(docs: DataFrame, idCol: String, textCol: String,
       terms: Seq[String], k: Int, k1: Double = 1.2,
-      b: Double = 0.75): DataFrame = {
-    val base = queryTermBase(docs, idCol, textCol, terms)
-    val tf = basePostings(base, idCol)
-    val dfreq = tf.groupBy(col("__t")).agg(count(lit(1)).as("__df"))
-    rankPerTerm(scoredPostings(tf, dfreq, baseStats(base), k1, b), idCol, k)
+      b: Double = 0.75): DataFrame =
+    rankPerTerm(docs, None, idCol, textCol, terms, k, k1, b)
+
+  /** One (term, id, score) row per scored term a document holds, then
+    * a rank window partitioned by term (WindowGroupLimit prunes). */
+  private def rankPerTerm(docs: DataFrame, statsRows: Option[DataFrame],
+      idCol: String, textCol: String, terms: Seq[String], k: Int,
+      k1: Double, b: Double): DataFrame = {
+    val sc = scoredBase(docs, statsRows, idCol, textCol, terms, k1, b)
+    val perTerm = sc.slots.indices.map(i => struct(lit(sc.slots(i)).as("term"),
+      sc.hit(sc.slots(i)).as("__hit"), col(s"__s$i").as("score")))
+    sc.frame.filter(sc.matches(sc.slots))
+      .select(col(idCol), explode(array(perTerm: _*)).as("__p"))
+      .filter(col("__p.__hit"))
+      .select(col("__p.term").as("term"), col(idCol),
+        col("__p.score").as("score"))
+      .withColumn("rank", row_number().over(
+        Window.partitionBy(col("term"))
+          .orderBy(col("score").desc, col(idCol).asc)))
+      .filter(col("rank") <= k)
   }
 
   /** The user-facing retrieval shape: a multi-term QUERY scored per
     * document — score(doc) = Σ over query terms of the q138 per-term
     * BM25 score — then top-k documents. The sum is a FIXED left-to-
-    * right chain of coalesce(score_t, 0) in the caller's term order
-    * (one expression per term out of a pivot), not a float aggregate,
-    * so the total is bit-stable and the oracle replays it verbatim.
-    * Output: (idCol, score rounded to 6, rank ≤ k). */
+    * right chain of coalesce(score_t, 0) in the caller's term order,
+    * not a float aggregate, so the total is bit-stable and the oracle
+    * replays it verbatim. Output: (idCol, score rounded to 6,
+    * rank ≤ k). */
   def bm25Query(docs: DataFrame, idCol: String, textCol: String,
       terms: Seq[String], k: Int, k1: Double = 1.2,
-      b: Double = 0.75): DataFrame = {
-    val base = queryTermBase(docs, idCol, textCol, terms)
-    val tf = basePostings(base, idCol)
-    val dfreq = tf.groupBy(col("__t")).agg(count(lit(1)).as("__df"))
-    rankPerDoc(scoredPostings(tf, dfreq, baseStats(base), k1, b),
-      idCol, terms, k)
-  }
+      b: Double = 0.75): DataFrame =
+    rankPerDoc(docs, None, idCol, textCol, terms, k, k1, b)
 
   /** [[bm25Query]] against MAINTAINED stats (the q139 decomposition
-    * applied to the per-document form): postings come from the batch
-    * being scored, df/N/Σdl from folded [[bm25StatsDelta]] rows — the
+    * applied to the per-document form): tf comes from the batch being
+    * scored, df/N/Σdl from folded [[bm25StatsDelta]] rows — the
     * corpus is never re-scanned, and the scores are bit-identical to
     * the one-shot [[bm25Query]] on the same corpus (shared oracle). */
   def bm25QueryWithStats(docs: DataFrame, statsRows: DataFrame,
       idCol: String, textCol: String, terms: Seq[String], k: Int,
-      k1: Double = 1.2, b: Double = 0.75): DataFrame = {
-    val (dfreq, corpus) = foldStats(statsRows)
-    rankPerDoc(scoredPostings(
-      postings(tokenized(docs, idCol, textCol), idCol, terms),
-      dfreq, corpus, k1, b), idCol, terms, k)
-  }
+      k1: Double = 1.2, b: Double = 0.75): DataFrame =
+    rankPerDoc(docs, Some(statsRows), idCol, textCol, terms, k, k1, b)
 
-  /** Pivot per-term scores into fixed slots, add in the caller's term
-    * order (deterministic float combine, unlike a `sum` aggregate),
-    * then take the global top-k WITHOUT a global rank window: an
-    * ordered limit plans as TakeOrderedAndProject — per-partition
-    * top-k heaps merged once — where the previous
-    * row_number-then-filter funneled every matched document to ONE
-    * partition first (a common query term's postings are a large
-    * corpus fraction, so that was a single-partition sort of
-    * corpus-scale rows; RetrievalSpec pins the new shape). The order
-    * is total (score desc, id asc), so the k-prefix is deterministic
-    * and the rank window that numbers it runs over ≤ k rows. */
-  private def rankPerDoc(scored: DataFrame, idCol: String,
-      terms: Seq[String], k: Int): DataFrame = {
-    val perTerm: Seq[Column] = terms.map(t =>
-      coalesce(max(when(col("__t") === t, col("score"))), lit(0.0)))
-    val total = round(perTerm.reduce(_ + _), 6)
-    scored.groupBy(col(idCol))
-      .agg(total.as("score"))
+  /** Matching documents with their rounded totals, then the global
+    * top-k WITHOUT a global rank window: an ordered limit plans as
+    * TakeOrderedAndProject — per-partition top-k heaps merged once —
+    * where a row_number-then-filter would funnel every matched
+    * document to ONE partition first (SelectionSpec pins the shape).
+    * The order is total (score desc, id asc), so the k-prefix is
+    * deterministic and the rank window that numbers it runs over ≤ k
+    * rows. */
+  private def rankPerDoc(docs: DataFrame, statsRows: Option[DataFrame],
+      idCol: String, textCol: String, terms: Seq[String], k: Int,
+      k1: Double, b: Double): DataFrame = {
+    val sc = scoredBase(docs, statsRows, idCol, textCol, terms, k1, b)
+    sc.frame.filter(sc.matches(terms))
+      .select(col(idCol), round(sc.total(terms), 6).as("score"))
       .orderBy(col("score").desc, col(idCol).asc)
       .limit(k)
       .withColumn("rank", row_number().over(
         Window.orderBy(col("score").desc, col(idCol).asc)).cast("int"))
-      .select(col(idCol), col("score"), col("rank"))
   }
 
-  /** Per-(doc, term) BM25 scores (rounded to 6), shared by the
-    * per-term and per-document ranking forms. */
-  private def scoredPostings(tf: DataFrame, dfreq: DataFrame,
-      stats: DataFrame, k1: Double, b: Double): DataFrame =
-    tf
-      .join(broadcast(dfreq), Seq("__t"))
-      .crossJoin(broadcast(stats.select(col("__N"), col("__avgdl"))))
-      .withColumn("__idf",
-        log((col("__N") - col("__df") + lit(0.5)) / (col("__df") + lit(0.5))
-          + lit(1.0)))
-      .withColumn("score", round(
-        col("__idf") * col("__tf") * lit(k1 + 1.0) /
-          (col("__tf") + lit(k1) *
-            (lit(1.0 - b) + lit(b) * col("__dl") / col("__avgdl"))), 6))
-
-  private def rankPerTerm(scored: DataFrame, idCol: String,
-      k: Int): DataFrame =
-    scored
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("__t"))
-          .orderBy(col("score").desc, col(idCol).asc)))
-      .filter(col("rank") <= k)
-      .select(col("__t").as("term"), col(idCol), col("score"), col("rank"))
-
   /** BATCH multi-query BM25: score a whole query WORKLOAD in one
-    * pass — the postings explode, document-frequency, and corpus
-    * stats are computed ONCE over the union of all query terms, then
-    * a broadcast (query, term) mapping fans each scored posting out
-    * to the queries that asked for it and a per-(query, doc)
-    * aggregate applies the q141 pivot chain. Versus one [[bm25Query]]
-    * plan per query, this is 2 corpus scans total instead of 2 per
-    * query, and the rank window is PARTITIONED by query (parallel,
-    * never a single-partition sort).
+    * pass — the base and the driver-held stats cover the union of all
+    * query terms, each base row fans out to the queries it matches,
+    * and a rank window PARTITIONED by query (parallel, never a
+    * single-partition sort) takes each query's top k. Versus one
+    * [[bm25Query]] plan per query, the corpus is tokenized once per
+    * workload instead of once per query.
     *
-    * Determinism: each query's total is a `when(__qid === q, chain_q)`
-    * slot whose chain adds the pivot slots in THAT QUERY'S OWN term
-    * order — not the union order, which would re-associate the float
-    * sum whenever two queries share a term at different relative
-    * positions (FP addition is non-associative; the union-order form
-    * this replaced was one ulp off across a round(·,6) boundary in
-    * that case). Absent terms contribute an exact `0.0` (coalesce) and
-    * `x + 0.0` is exact in IEEE arithmetic, so each total is
-    * bit-identical to its standalone [[bm25Query]] chain with no
-    * precondition on term overlap or order (SelectionSpec asserts
-    * equality on overlapping, differently-ordered specs). Catalyst
-    * dedupes the shared `max(when(__t = t, score))` aggregate slots
-    * across queries, so the aggregate still carries one slot per
-    * DISTINCT term. Output: `(query_id, idCol, score, rank ≤ k)`. */
+    * Determinism: each query's total is the chain over THAT QUERY'S
+    * OWN term order — not the union order, which would re-associate
+    * the float sum whenever two queries share a term at different
+    * relative positions (FP addition is non-associative). Absent terms
+    * contribute an exact `0.0` (coalesce) and `x + 0.0` is exact in
+    * IEEE arithmetic, so each total is bit-identical to its standalone
+    * [[bm25Query]] chain with no precondition on term overlap or order
+    * (SelectionSpec asserts equality on overlapping, differently-ordered
+    * specs). Query ids must be distinct and every query needs a term.
+    * Output: `(query_id, idCol, score, rank ≤ k)`. */
   def bm25Queries(docs: DataFrame, idCol: String, textCol: String,
       queries: Seq[(Long, Seq[String])], k: Int, k1: Double = 1.2,
       b: Double = 0.75): DataFrame = {
     require(queries.nonEmpty, "need at least one query")
-    val allTerms = queries.flatMap(_._2).distinct
-    val base = queryTermBase(docs, idCol, textCol, allTerms)
-    val tf = basePostings(base, idCol)
-    val stats = baseStats(base)
-    val dfreq = tf.groupBy(col("__t")).agg(count(lit(1)).as("__df"))
-    val sp = docs.sparkSession
-    import sp.implicits._
-    val qt = queries.flatMap { case (q, ts) => ts.map(t => (q, t)) }
-      .toDF("__qid", "__t")
-    def chain(ts: Seq[String]): Column = ts.map(t =>
-      coalesce(max(when(col("__t") === t, col("score"))), lit(0.0)))
-      .reduce(_ + _)
-    val total = round(queries.tail.foldLeft(
-      when(col("__qid") === queries.head._1, chain(queries.head._2))) {
-        case (acc, (q, ts)) => acc.when(col("__qid") === q, chain(ts))
-      }, 6)
-    scoredPostings(tf, dfreq, stats, k1, b)
-      .join(broadcast(qt), Seq("__t"))
-      .groupBy(col("__qid"), col(idCol))
-      .agg(total.as("score"))
+    require(queries.map(_._1).distinct.size == queries.size,
+      s"duplicate query ids: ${queries.map(_._1).diff(queries.map(_._1).distinct)}")
+    require(queries.forall(_._2.nonEmpty),
+      s"queries without terms: ${queries.filter(_._2.isEmpty).map(_._1)}")
+    val sc = scoredBase(docs, None, idCol, textCol, queries.flatMap(_._2),
+      k1, b)
+    val perQuery = queries.map { case (q, ts) =>
+      struct(lit(q).as("__qid"), sc.matches(ts).as("__hit"),
+        sc.total(ts).as("__sum"))
+    }
+    sc.frame.filter(sc.matches(sc.slots))
+      .select(col(idCol), explode(array(perQuery: _*)).as("__p"))
+      .filter(col("__p.__hit"))
+      .select(col("__p.__qid").as("__qid"), col(idCol),
+        round(col("__p.__sum"), 6).as("score"))
       .withColumn("rank", row_number().over(
         Window.partitionBy(col("__qid"))
           .orderBy(col("score").desc, col(idCol).asc)).cast("int"))

@@ -99,10 +99,12 @@ object Similarity {
   /** IVF-style ANN: corpus partitioned by nearest of `nCells` seed
     * centroids (deterministic: the first nCells corpus vectors by id —
     * a k-means fit plugs into the same shape); each query probes its
-    * `nProbe` nearest cells. One narrow shuffle on cell id; per-cell
-    * candidate sets bound the cosine work. */
+    * `nProbe` nearest cells and ranks the probed cells' vectors by
+    * exact cosine. See [[ivfCandidates]] for what the driver holds;
+    * the only shuffle is the per-query rank window on query_id. */
   def ivfTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
       vecCol: String, k: Int, nCells: Int = 16, nProbe: Int = 2): DataFrame = {
+    require(k >= 1, s"k must be >= 1, got $k")
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("sim").desc, col("neighbor_id").asc)
     ivfCandidates(corpus, queries, idCol, vecCol, nCells, nProbe)
@@ -114,31 +116,43 @@ object Similarity {
 
   /** (query_id, neighbor_id, __qv, __cv) candidate pairs of the IVF
     * index: corpus vectors in any of the query's nProbe nearest cells
-    * — the probe pipeline shared by [[ivfTopK]] and [[ivfRecall]]. */
+    * — the probe pipeline shared by [[ivfTopK]] and [[ivfRecall]].
+    *
+    * The nCells seed centroids (nCells × dim doubles, bounded by the
+    * index parameters, not the corpus) are collected to the driver —
+    * the [[KMeans.assignWithVectors]] pattern — so both sides rank
+    * cells in a projection: each corpus vector takes its nearest cell
+    * with the fused [[graft.functions.VectorMath.bestCellCol]], each
+    * query its nProbe nearest with `sort_array` over inlined
+    * (round-9 cosine, −cell) structs. Both orders are (round-9 cosine
+    * desc, cell asc), NaN first, null last — the window order they
+    * replace. The probe list (|queries| × nProbe rows) is broadcast
+    * into the join, so the corpus is scanned once and never shuffled
+    * whole. */
   private def ivfCandidates(corpus: DataFrame, queries: DataFrame,
       idCol: String, vecCol: String, nCells: Int, nProbe: Int): DataFrame = {
-    val c = corpus.select(col(idCol).as("neighbor_id"),
-      asDouble(col(vecCol)).as("__cv"))
-    val centroids = corpus.orderBy(col(idCol)).limit(nCells)
-      .select(col(idCol).as("cell"), asDouble(col(vecCol)).as("__centroid"))
-    // assign each corpus vector to its nearest centroid (broadcast dims)
-    val wAssign = Window.partitionBy(col("neighbor_id"))
-      .orderBy(col("cdist").desc, col("cell").asc)
-    val assigned = c.crossJoin(broadcast(centroids))
-      .withColumn("cdist", round(cosine(col("__cv"), col("__centroid")), 9))
-      .withColumn("rn", row_number().over(wAssign))
-      .filter(col("rn") === 1)
-      .select(col("neighbor_id"), col("__cv"), col("cell"))
-    // queries probe their nProbe nearest cells
-    val q = queries.select(col(idCol).as("query_id"),
-      asDouble(col(vecCol)).as("__qv"))
-    val wProbe = Window.partitionBy(col("query_id"))
-      .orderBy(col("qdist").desc, col("cell").asc)
-    val probes = q.crossJoin(broadcast(centroids))
-      .withColumn("qdist", round(cosine(col("__qv"), col("__centroid")), 9))
-      .withColumn("rn", row_number().over(wProbe))
-      .filter(col("rn") <= nProbe)
-      .select(col("query_id"), col("__qv"), col("cell"))
+    require(nCells >= 1 && nProbe >= 1,
+      s"nCells and nProbe must be >= 1, got $nCells and $nProbe")
+    val seeds = corpus.orderBy(col(idCol)).limit(nCells)
+      .select(col(idCol).cast("long"), asDouble(col(vecCol))).collect()
+      .map(r => (r.getLong(0),
+        Option(r.getSeq[Double](1)).fold(Seq.empty[Double])(_.toSeq))).toSeq
+    // an empty corpus has no seeds; one placeholder cell keeps the
+    // plan well-formed (no corpus row exists to land in it)
+    val cent = if (seeds.isEmpty) Seq((0L, Seq.empty[Double])) else seeds
+    val assigned = corpus.select(col(idCol).as("neighbor_id"),
+        asDouble(col(vecCol)).as("__cv"))
+      .withColumn("cell",
+        graft.functions.VectorMath.bestCellCol(col("__cv"), cent)("cell"))
+    val ranked = sort_array(array(cent.map { case (cell, ce) =>
+      struct(round(cosine(col("__qv"), typedLit(ce)), 9).as("__d"),
+        lit(-cell).as("__nc"))
+    }: _*), asc = false)
+    val probes = queries.select(col(idCol).as("query_id"),
+        asDouble(col(vecCol)).as("__qv"))
+      .select(col("query_id"), col("__qv"),
+        explode(slice(ranked, 1, nProbe)).as("__p"))
+      .select(col("query_id"), col("__qv"), (-col("__p.__nc")).as("cell"))
     assigned.join(broadcast(probes), Seq("cell"))
       .filter(col("neighbor_id") =!= col("query_id"))
   }
@@ -184,6 +198,7 @@ object Similarity {
   def ivfRecall(corpus: DataFrame, queries: DataFrame, idCol: String,
       vecCol: String, k: Int, nCells: Int, nProbe: Int,
       minMeanRecall: Double): DataFrame = {
+    require(k >= 1, s"k must be >= 1, got $k")
     val cand = ivfCandidates(corpus, queries, idCol, vecCol, nCells, nProbe)
       .select("query_id", "neighbor_id")
     recallGate(bruteForceTopK(corpus, queries, idCol, vecCol, k), cand,
