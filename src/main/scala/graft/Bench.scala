@@ -7,26 +7,8 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // local[32] is the harness spec (builder prompt); shuffle partitions
     // sized to match so every core gets exactly one shuffle task wave.
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // Apply AQE to plans under .persist() (default false in Spark 4
-      // only for cached-partitioning stability, which nothing here
-      // relies on — attachDistributed is the one partition-sensitive
-      // op and it is spec-only). Without this every cached frame
-      // materializes at the static shuffle-partition count and its
-      // consumers inherit that fan-out; with it the cache adopts
-      // AQE-coalesced partitioning — scale-adaptive by definition
-      // (guide §2.2): size-appropriate partitions at any SF. Measured
-      // at sf0.1: q130 taskTime 91 s → 6.9 s, q100 30 s → 3.2 s.
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = graft.core.SessionFactory.build(s"local[$cpus]", Some(cpus))
 
     // JVM/codegen warm-up outside the timed region
     spark.range(1000000).selectExpr("sum(id)").collect()
@@ -104,17 +86,13 @@ object Bench {
     // queries from the timing (q173's whole classifier battery, the
     // reassembled text of q127/q170 — the ShuffleAudit count-pruning
     // bug, found in round 9 via the q175 composition). Timings from
-    // before this change undercount exactly those queries;
-    // SPARK_GRAFT_BENCH_COUNT_ONLY=1 reproduces the old action for
-    // anchor archaeology.
-    val countOnly = sys.env.contains("SPARK_GRAFT_BENCH_COUNT_ONLY")
+    // before this change undercount exactly those queries.
     def timeQuery(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
         : (Double, Boolean) = {
       val t0 = System.nanoTime()
       val errored =
         try {
-          if (countOnly) fn(spark, sfDir).count()
-          else fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+          fn(spark, sfDir).write.format("noop").mode("overwrite").save()
           false
         }
         catch { case scala.util.control.NonFatal(e) =>
@@ -176,9 +154,7 @@ object Bench {
       // tools/bench_reference.json is the MATERIALIZE-action anchor
       // since round 10 (the count-era anchor was retired with the r9
       // action correction — its figures undercounted queries whose
-      // output columns count() pruned). A countOnly archaeology run
-      // compared against it can only under-read, so the 3× retry
-      // guard stays silent there — harmless.
+      // output columns count() pruned).
       val f = new java.io.File("tools/bench_reference.json")
       if (!f.exists()) Map.empty
       else try {

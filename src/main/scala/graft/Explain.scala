@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-inspection tool: prints the formatted physical plan for the
   * named queries (or a default set of scale-critical ones) so pushdown,
   * broadcast choices and WholeStageCodegen spans can be reviewed.
@@ -22,12 +20,7 @@ object Explain {
     val names = if (rest.length > 1) rest.drop(1).toSeq
       else Seq("q1_kpi_agg", "q2_star_join", "q9_watermark_join",
         "q14_collect_capped", "q40_dedup_exact", "q44_ann_cosine")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.core.SessionFactory.build("local[4]", Some(4))
     spark.sparkContext.setLogLevel("ERROR")
     if (full) spark.conf.set("spark.graft.explain.noCheckpoint", "true")
     names.foreach { n =>

@@ -39,16 +39,11 @@ object GenScale {
     val mult = args.lift(1).map(_.toDouble).getOrElse(10.0)
     val docWords = args.lift(2).map(_.toInt).getOrElse(1)
     val tables = args.lift(3).map(_.split(",").map(_.trim).toSet)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      // the driver's files carry TIMESTAMP(MICROS); Spark's default
-      // INT96 would read back as nanos and change query plans
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.SessionFactory.build(
+      s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]", Some(32))
+    // the test data's files carry TIMESTAMP(MICROS); Spark's default
+    // INT96 would read back as nanos and change query plans
+    spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
     generate(spark, outDir, mult, docWords, tables)
     spark.stop()
   }

@@ -1,18 +1,26 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.scheduler._
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
 /** Deterministic per-query profile: job/stage/task counts, shuffle
   * bytes, spill, and summed executor run/CPU time. These metrics are
   * stable across host-contention windows (unlike wall-clock), so they
-  * are the optimization round's primary before/after evidence.
+  * are the optimization round's primary before/after evidence. Below
+  * each query's totals it lists every Spark job, slowest first, with
+  * its call site — which action inside a multi-job operator (streaming
+  * drains, DML, the curation pipelines' stages) actually costs.
   * Usage: runMain graft.Profile [sfDir] [queryName...]
   */
 object Profile {
+  /** One job of the profiled pass; times are listener-event ms. */
+  final case class Job(site: String, submitMs: Long, endMs: Long = -1L,
+      taskTimeMs: Long = 0L, inputBytes: Long = 0L, tasks: Int = 0) {
+    def wallMs: Long = if (endMs >= submitMs) endMs - submitMs else -1L
+  }
+
   final class M {
-    val jobs = new AtomicInteger
     val stages = new AtomicInteger
     val tasks = new AtomicInteger
     val shufRead = new AtomicLong
@@ -21,15 +29,13 @@ object Profile {
     val runTimeMs = new AtomicLong
     val cpuTimeNs = new AtomicLong
     val inputBytes = new AtomicLong
-    // per-job: jobId -> (submit ns, end ns, taskTime ms, input bytes,
-    //                    tasks, description)
-    val jobInfo = new java.util.concurrent.ConcurrentHashMap[Int,
-      (Long, Long, Long, Long, Int, String)]()
+    val jobs = new java.util.concurrent.ConcurrentHashMap[Int, Job]()
     val stageToJob = new java.util.concurrent.ConcurrentHashMap[Int, Int]()
+    val sqlSites = new java.util.concurrent.ConcurrentHashMap[Long, String]()
     def reset(): Unit = {
-      jobs.set(0); stages.set(0); tasks.set(0); shufRead.set(0)
+      stages.set(0); tasks.set(0); shufRead.set(0)
       shufWrite.set(0); spillDisk.set(0); runTimeMs.set(0); cpuTimeNs.set(0)
-      inputBytes.set(0); jobInfo.clear(); stageToJob.clear()
+      inputBytes.set(0); jobs.clear(); stageToJob.clear()
     }
   }
 
@@ -38,35 +44,30 @@ object Profile {
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
     val names = if (args.length > 1) args.drop(1).toSeq
       else Seq("q100_curation_pipeline")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_CACHE", "true"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = graft.core.SessionFactory.build(s"local[$cpus]", Some(cpus))
     spark.sparkContext.setLogLevel("ERROR")
     val m = new M
     spark.sparkContext.addSparkListener(new SparkListener {
       override def onJobStart(j: SparkListenerJobStart): Unit = {
-        m.jobs.incrementAndGet()
-        val desc = Option(j.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description")))
-          .orElse(Option(j.properties)
-            .flatMap(p => Option(p.getProperty("callSite.short"))))
+        // a SQL job is named by its query's action call site (AQE runs
+        // the query's stages as jobs on its own threads); any other job
+        // by its result stage, which is created last
+        val site = Option(j.properties)
+          .flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
+          .flatMap(id => Option(m.sqlSites.get(id.toLong)))
+          .orElse(j.stageInfos.maxByOption(_.stageId).map(_.name))
           .getOrElse("")
-        m.jobInfo.put(j.jobId,
-          (System.nanoTime(), 0L, 0L, 0L, 0, desc))
+        m.jobs.put(j.jobId, Job(site, j.time))
         j.stageIds.foreach(sid => m.stageToJob.put(sid, j.jobId))
-        ()
+      }
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart =>
+          m.sqlSites.put(s.executionId, s.description); ()
+        case _ =>
       }
       override def onJobEnd(j: SparkListenerJobEnd): Unit = {
-        val prev = m.jobInfo.get(j.jobId)
-        if (prev != null) m.jobInfo.put(j.jobId,
-          prev.copy(_2 = System.nanoTime()))
+        m.jobs.computeIfPresent(j.jobId, (_, job) => job.copy(endMs = j.time))
         ()
       }
       override def onStageCompleted(s: SparkListenerStageCompleted): Unit = {
@@ -82,14 +83,11 @@ object Profile {
           m.runTimeMs.addAndGet(tm.executorRunTime)
           m.cpuTimeNs.addAndGet(tm.executorCpuTime)
           m.inputBytes.addAndGet(tm.inputMetrics.bytesRead)
-          val jid = m.stageToJob.get(t.stageId)
-          if (jid != null) {
-            val prev = m.jobInfo.get(jid.intValue())
-            if (prev != null) m.jobInfo.put(jid.intValue(), prev.copy(
-              _3 = prev._3 + tm.executorRunTime,
-              _4 = prev._4 + tm.inputMetrics.bytesRead,
-              _5 = prev._5 + 1))
-          }
+          m.jobs.computeIfPresent(m.stageToJob.getOrDefault(t.stageId, -1),
+            (_, job) => job.copy(
+              taskTimeMs = job.taskTimeMs + tm.executorRunTime,
+              inputBytes = job.inputBytes + tm.inputMetrics.bytesRead,
+              tasks = job.tasks + 1))
         }
         ()
       }
@@ -105,22 +103,23 @@ object Profile {
       val t0 = System.nanoTime()
       fn(spark, sfDir).write.format("noop").mode("overwrite").save()
       val wall = (System.nanoTime() - t0) / 1e9
-      println(f"PROFILE $n%-32s wall=$wall%7.3f jobs=${m.jobs.get}%3d " +
+      Thread.sleep(300) // let the listener bus deliver the last events
+      import scala.jdk.CollectionConverters._
+      val jobs = m.jobs.asScala.toSeq
+      println(f"PROFILE $n%-32s wall=$wall%7.3f jobs=${jobs.size}%3d " +
         f"stages=${m.stages.get}%3d tasks=${m.tasks.get}%5d " +
         f"shufRead=${m.shufRead.get / 1e6}%9.2fMB " +
         f"shufWrite=${m.shufWrite.get / 1e6}%9.2fMB " +
         f"spill=${m.spillDisk.get / 1e6}%7.1fMB " +
         f"taskTime=${m.runTimeMs.get / 1e3}%8.2fs " +
         f"cpu=${m.cpuTimeNs.get / 1e9}%8.2fs " +
-        f"input=${m.inputBytes.get / 1e6}%8.2fMB")
-      if (sys.env.contains("SPARK_GRAFT_PROFILE_JOBS")) {
-        import scala.jdk.CollectionConverters._
-        m.jobInfo.asScala.toSeq.sortBy(_._1).foreach {
-          case (jid, (s0, s1, tt, in, nt, desc)) =>
-            val w = if (s1 > s0) (s1 - s0) / 1e9 else -1.0
-            println(f"  JOB $jid%4d wall=$w%7.3f taskTime=${tt / 1e3}%8.2fs " +
-              f"tasks=$nt%4d input=${in / 1e6}%8.2fMB  ${desc.take(110)}")
-        }
+        f"input=${m.inputBytes.get / 1e6}%8.2fMB " +
+        f"sumJobWall=${jobs.map(_._2.wallMs).filter(_ >= 0).sum / 1e3}%.3fs")
+      jobs.sortBy { case (jid, j) => (-j.wallMs, jid) }.foreach {
+        case (jid, j) =>
+          println(f"  JOB $jid%4d wall=${j.wallMs / 1e3}%7.3f " +
+            f"taskTime=${j.taskTimeMs / 1e3}%8.2fs tasks=${j.tasks}%4d " +
+            f"input=${j.inputBytes / 1e6}%8.2fMB  ${j.site.take(110)}")
       }
     }
     spark.stop()

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Shuffle-volume audit: measured evidence for the narrow-exchange
   * claims in SCALE.md/COVERAGE.md ("dedup shuffles 32-byte
@@ -238,7 +237,7 @@ object ShuffleAudit {
     // SF-proportional partitions (what a real cluster runs) does not.
     // The audit exposes the knob so that claim is measurable.
     val shufflePartitions =
-      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
+      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus).toInt
     // Scan-split override, same posture as the partition-count knob:
     // the synthetic corpora are a FEW large parquet files, so at the
     // default 128 MB maxPartitionBytes a 545 MB corpus scans as ~4
@@ -254,16 +253,10 @@ object ShuffleAudit {
     // map-task count only moves lz4 block boundaries) — spot-verified:
     // q40's KB shuffle reproduces within 0.05% under 128 MB vs 16 MB
     // splits (37.50 vs 37.48 MB). Declared in the artifact when set.
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
+    val spark = graft.core.SessionFactory.build(s"local[$cpus]",
+      Some(shufflePartitions))
     sys.env.get("SPARK_GRAFT_MAX_PARTITION_BYTES")
-      .foreach(b => builder.config("spark.sql.files.maxPartitionBytes", b))
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+      .foreach(spark.conf.set("spark.sql.files.maxPartitionBytes", _))
 
     val tally = new Tally
     spark.sparkContext.addSparkListener(tally)
@@ -322,12 +315,7 @@ object ShuffleAudit {
       // CONSUMES the excised text, measured 4.3× source against its
       // component's 0.064). Narrow-output kernels are unaffected —
       // their exchanges feed filters/aggregates the count still needs.
-      // SPARK_GRAFT_AUDIT_COUNT_ONLY=1 restores the old action for
-      // comparing against pre-correction artifacts.
-      if (sys.env.contains("SPARK_GRAFT_AUDIT_COUNT_ONLY"))
-        fn(spark, sfDir).count()
-      else
-        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+      fn(spark, sfDir).write.format("noop").mode("overwrite").save()
       val secs = (System.nanoTime() - t0) / 1e9
       val (w1, s1) = settled()
       val sh = w1 - w0

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Micro-bench for [[graft.ingest.DeltaLakeRead.state]]'s two file-
@@ -15,13 +14,8 @@ import org.apache.spark.sql.functions._
 object StateBench {
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toInt).getOrElse(200000)
-    val spark = SparkSession.builder()
-      .appName("graft-state-bench")
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
+    val spark = graft.core.SessionFactory.build(
+      s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]", Some(32))
     try {
       val t = java.nio.file.Files.createTempDirectory("statebench")
         .toFile

@@ -5,29 +5,63 @@ import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-/** Engine session entrypoint (SURVEY §7 core/): UTC, AQE (with skew
-  * join + partition coalescing), cores-sized shuffle partitions, the
-  * reference's corrupt/missing-file tolerance confs
-  * (transform_into_delta.py:42-43), and the graft extensions installed.
+/** The engine's one session constructor (SURVEY §7 core/): every main,
+  * lakebench and the test suite build their session here, so
+  * the plans the oracle gates are the plans the bench times. Each conf,
+  * and why:
+  *
+  *  - `spark.sql.session.timeZone=UTC`: timestamp parsing, `date_trunc`
+  *    and the oracle's DuckDB compare all assume UTC; a host-zone
+  *    session shifts every timestamp-derived key.
+  *  - `spark.ui.enabled=false`: no driver web server or its per-job
+  *    status bookkeeping; nothing reads it (SQL metrics come from the
+  *    status store, which works with the UI off).
+  *  - [[GraftExtensions]]: `rolling_hash` in SQL and the AsOfJoin
+  *    planner strategy, injected once at construction.
+  *  - `spark.sql.optimizer.canChangeCachedPlanOutputPartitioning=true`:
+  *    applies AQE to plans under `.persist()`. Spark 4 defaults it to
+  *    false only for cached-partitioning stability, which nothing here
+  *    relies on: [[graft.ingest.SurrogateId.attachDistributed]] (behind
+  *    Delta identity columns) is the one partition-sensitive op, and it
+  *    persists an RDD, which this conf does not touch. Without it every
+  *    cached frame materializes at the static shuffle-partition count
+  *    and its consumers inherit that fan-out; with it the cache adopts
+  *    AQE-coalesced partitioning. Measured at sf0.1: q130 taskTime
+  *    91 s → 6.9 s, q100 30 s → 3.2 s.
+  *  - `spark.sql.shuffle.partitions`, when given: callers size it to
+  *    their core count so every core gets one shuffle task wave (the
+  *    200 default made one curateV2 pass take 36 s on 4 cores).
+  *
+  * AQE and its skew-join handling are on by default in Spark 4. The
+  * reference's corrupt/missing-file tolerance
+  * (transform_into_delta.py:42-43) is NOT session-wide: it would let a
+  * table snapshot silently drop a damaged or vanished data file, so it
+  * rides only the landing-zone readers ([[graft.ingest.Readers]],
+  * [[graft.stream.StreamIngest]]).
   */
 object SessionFactory {
 
-  def build(master: String = "local[*]",
-      shufflePartitions: Option[Int] = None,
-      appName: String = "graft"): SparkSession = {
+  /** The factory's builder, for callers that must add static
+    * deployment confs (warehouse dir, Hive catalog) before the session
+    * exists. Runtime SQL confs a single tool needs go through
+    * `spark.conf.set` after [[build]] instead. */
+  def builder(master: String,
+      shufflePartitions: Option[Int] = None): SparkSession.Builder = {
     val b = SparkSession.builder()
       .master(master)
-      .appName(appName)
       .withExtensions(new GraftExtensions)
       .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.files.ignoreCorruptFiles", "true")
-      .config("spark.sql.files.ignoreMissingFiles", "true")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
+        "true")
     shufflePartitions.foreach(n =>
       b.config("spark.sql.shuffle.partitions", n.toString))
-    val s = b.getOrCreate()
+    b
+  }
+
+  def build(master: String,
+      shufflePartitions: Option[Int] = None): SparkSession = {
+    val s = builder(master, shufflePartitions).getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
   }
@@ -39,23 +73,10 @@ object SessionFactory {
   * strategies plug in at the same point. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
-    val (id, info, builder) = GraftExtensions.rollingHashFn
-    e.injectFunction((id, info, builder))
+    e.injectFunction((new FunctionIdentifier("rolling_hash"),
+      new ExpressionInfo(classOf[RollingHashExpr].getName, "rolling_hash"),
+      (args: Seq[Expression]) => RollingHashExpr(args.head)))
     // custom whole-operator path: AsOfJoin logical node → AsOfJoinExec
     e.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
-  }
-}
-
-object GraftExtensions {
-  private[core] val rollingHashFn = (
-    new FunctionIdentifier("rolling_hash"),
-    new ExpressionInfo(classOf[RollingHashExpr].getName, "rolling_hash"),
-    (args: Seq[Expression]) => RollingHashExpr(args.head))
-
-  /** Same functions on an already-built session (getOrCreate ignores
-    * withExtensions when a session exists). */
-  def register(spark: SparkSession): Unit = {
-    val (id, info, builder) = rollingHashFn
-    spark.sessionState.functionRegistry.registerFunction(id, info, builder)
   }
 }

@@ -52,17 +52,13 @@ object AsOf {
   /** The same semantics as [[join]] through the native operator
     * (graft.plans.AsOfJoin — custom LogicalPlan + Strategy + SparkPlan):
     * one shuffle per side, single-pass sorted merge, no union row
-    * inflation. Registered on the session's extraStrategies on first
-    * use (idempotent). */
+    * inflation. Planned by the AsOfJoin strategy that
+    * [[graft.core.GraftExtensions]] installs on every factory session. */
   def joinNative(left: DataFrame, right: DataFrame, keyCol: String,
       tsCol: String, rightPrefix: String = "asof_"): DataFrame = {
-    import graft.plans.{AsOfJoin, AsOfJoinStrategy}
+    import graft.plans.AsOfJoin
     import org.apache.spark.sql.graft.PlanBridge
     val spark = left.sparkSession
-    if (!spark.experimental.extraStrategies.contains(AsOfJoinStrategy)) {
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ AsOfJoinStrategy
-    }
     val rPref = right.columns.foldLeft(right)(
       (df, c) => df.withColumnRenamed(c, s"$rightPrefix$c"))
     val lPlan = left.queryExecution.analyzed

@@ -37,8 +37,8 @@ case class AsOfJoin(
     copy(left = newLeft, right = newRight)
 }
 
-/** Planner strategy: AsOfJoin → AsOfJoinExec (inject via
-  * spark.experimental.extraStrategies or SparkSessionExtensions). */
+/** Planner strategy: AsOfJoin → AsOfJoinExec (injected by
+  * [[graft.core.GraftExtensions]]). */
 object AsOfJoinStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case AsOfJoin(l, r, lk, rk, lt, rt) =>

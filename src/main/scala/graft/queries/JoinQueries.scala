@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   * Scale notes: the anti/semi joins against small "log" sides broadcast
   * (the reference's J1 file-log is tiny by construction); the watermark
   * join J2 shuffles on the key — its skew mitigation at 100 TB is AQE
-  * skew-join (enabled in SessionFactory) or key salting.
+  * skew-join (on by default in Spark 4) or key salting.
   */
 object JoinQueries {
 

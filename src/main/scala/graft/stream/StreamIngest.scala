@@ -1,6 +1,6 @@
 package graft.stream
 
-import graft.ingest.{SurrogateId, TableIO}
+import graft.ingest.{Readers, SurrogateId, TableIO}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -29,7 +29,7 @@ object StreamIngest {
     // lands every column as STRING (so e.g. key ordering turns
     // lexicographic); inference stays available for exploration
     spark.conf.set("spark.sql.streaming.schemaInference", "true")
-    val reader = spark.readStream
+    val reader = spark.readStream.options(Readers.Tolerant)
       .option("header", "true")
       .option("recursiveFileLookup", "true")
     val stream = schema.fold(reader)(reader.schema).csv(sourceDir)
@@ -66,7 +66,8 @@ object StreamIngest {
       table: String,
       schema: org.apache.spark.sql.types.StructType): Unit = {
     val writerId = new java.io.File(checkpointDir).getAbsolutePath
-    val stream = spark.readStream.schema(schema).parquet(sourceDir)
+    val stream = spark.readStream.options(Readers.Tolerant).schema(schema)
+      .parquet(sourceDir)
     Drain.drain(spark)(stream.writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         if (!batch.isEmpty) {
@@ -105,6 +106,8 @@ object StreamIngest {
     * logical no-ops — unless they compacted away a file this stream
     * has not yet consumed, which fails loudly, as does any remove or
     * DV re-add with dataChange=true (use CDF for row-level diffs).
+    * The log source is a table, not a landing zone, so it skips no
+    * file ([[graft.ingest.Readers.Tolerant]]): a lost commit fails.
     * Blocks until the backlog is drained (AvailableNow). */
   def ingestDeltaAppends(spark: SparkSession, deltaTablePath: String,
       checkpointDir: String, io: graft.ingest.VersionedTableIO,
@@ -180,7 +183,8 @@ object StreamIngest {
       io: TableIO, table: String, keys: Seq[String], opCol: String,
       seqCol: String,
       schema: org.apache.spark.sql.types.StructType): Unit = {
-    val stream = spark.readStream.schema(schema).parquet(sourceDir)
+    val stream = spark.readStream.options(Readers.Tolerant).schema(schema)
+      .parquet(sourceDir)
     Drain.drain(spark)(stream.writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
         if (!batch.isEmpty) {

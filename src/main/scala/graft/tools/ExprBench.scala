@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Round-14 measurement tool: serial-CPU microbench of the text
@@ -11,11 +10,7 @@ import org.apache.spark.sql.functions._
 object ExprBench {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[1]")
-      .config("spark.sql.shuffle.partitions", "1")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.core.SessionFactory.build("local[1]", Some(1))
     spark.sparkContext.setLogLevel("ERROR")
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
       .select("doc_id", "text").localCheckpoint(true)

@@ -1,14 +1,11 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Round-14 measurement: per-call cost of Tables.load (footer/schema
   * read + file listing + reader resolution). Measurement only. */
 object LoadBench {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.core.SessionFactory.build("local[4]")
     spark.sparkContext.setLogLevel("ERROR")
     // warm
     (0 until 5).foreach(_ => graft.core.Tables.load(spark, sfDir, "lineitem"))

@@ -24,15 +24,10 @@ import org.apache.spark.sql.SparkSession
 object MetastoreCheck {
 
   private def session(metastoreDir: String, warehouseDir: String): SparkSession =
-    SparkSession.builder()
-      .master("local[2]")
-      .appName("graft-metastore-check")
-      .config("spark.sql.catalogImplementation", "hive")
+    graft.core.SessionFactory.builder("local[2]", Some(4))
       .config("spark.sql.warehouse.dir", warehouseDir)
       .config("javax.jdo.option.ConnectionURL",
         s"jdbc:derby:;databaseName=$metastoreDir/metastore_db;create=true")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
       .enableHiveSupport()
       .getOrCreate()
 

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.Trigger
 
 /** Round-14/15 measurement tool: where does the fixed per-query
@@ -15,13 +14,8 @@ import org.apache.spark.sql.streaming.Trigger
   */
 object StreamOverhead {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = graft.core.SessionFactory.build(s"local[$cpus]", Some(cpus))
     spark.sparkContext.setLogLevel("ERROR")
     val tmp = java.nio.file.Files.createTempDirectory("so").toString
     spark.range(10).toDF("v").write.parquet(s"$tmp/in")

@@ -1,21 +1,25 @@
 package graft
 
-import graft.core.SessionFactory
-import org.scalatest.funsuite.AnyFunSuite
+import graft.ingest.{DeltaLakeRead, DeltaLakeWrite, Readers}
+import java.io.File
 import java.nio.file.Files
+import org.apache.spark.sql.types.{IntegerType, StringType, StructType}
+import org.scalatest.funsuite.AnyFunSuite
 
 class SessionFactorySpec extends AnyFunSuite {
 
-  // SessionFactory.build getOrCreate-reuses the suite-shared session in
-  // this JVM (its withExtensions path needs a fresh process) — the
-  // register() path is what is testable here, and exercises the same
-  // function triple the extensions inject.
-  lazy val spark = SessionFactory.build(master = "local[4]",
-    shufflePartitions = Some(4))
+  lazy val spark = SparkTestSession.spark
   import spark.implicits._
 
+  test("session confs: UTC, AQE, skew join") {
+    Seq("spark.sql.session.timeZone" -> "UTC",
+      "spark.sql.adaptive.enabled" -> "true",
+      "spark.sql.adaptive.skewJoin.enabled" -> "true")
+      .foreach { case (k, v) => assert(spark.conf.get(k) === v, k) }
+  }
+
+  // rolling_hash comes with construction: no register call
   test("extensions expose rolling_hash to SQL") {
-    graft.core.GraftExtensions.register(spark)
     val got = spark.sql("SELECT rolling_hash('ab') AS h").first().getLong(0)
     assert(got === 31L * 97 + 98)
     // and it agrees with the Column API form
@@ -25,21 +29,80 @@ class SessionFactorySpec extends AnyFunSuite {
     assert(viaCol === got)
   }
 
-  test("corrupt files are skipped, not fatal") {
-    val dir = Files.createTempDirectory("graft_corrupt").toString
-    Seq((1, "a"), (2, "b")).toDF("k", "v")
-      .coalesce(1).write.mode("overwrite").parquet(dir)
-    Files.writeString(java.nio.file.Paths.get(s"$dir/garbage.parquet"),
-      "this is not parquet")
-    // ignoreCorruptFiles applies at scan time; schema inference would
-    // still die on the bad footer → pass the schema (production shape)
-    val schema = Seq((1, "a")).toDF("k", "v").schema
-    assert(spark.read.schema(schema).parquet(dir).count() === 2)
+  // the factory's other confs and the AsOfJoin strategy also come with
+  // construction: no lazy strategy patch
+  test("the suite runs on the factory session") {
+    Seq("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning" -> "true",
+      "spark.sql.shuffle.partitions" -> "4",
+      "spark.sql.files.ignoreCorruptFiles" -> "false",
+      "spark.sql.files.ignoreMissingFiles" -> "false")
+      .foreach { case (k, v) => assert(spark.conf.get(k) === v, k) }
+    assert(spark.sparkContext.getConf.get("spark.ui.enabled") === "false")
+
+    assert(spark.experimental.extraStrategies.isEmpty)
+    val joined = graft.operators.AsOf.joinNative(
+      Seq((1L, 10L)).toDF("k", "ts"), Seq((1L, 5L, "x")).toDF("k", "ts", "v"),
+      "k", "ts")
+    assert(joined.queryExecution.sparkPlan.collectFirst {
+      case e: graft.plans.AsOfJoinExec => e }.nonEmpty,
+      joined.queryExecution.sparkPlan.toString)
+    assert(joined.select("asof_v").as[String].collect().toSeq === Seq("x"))
+    assert(spark.experimental.extraStrategies.isEmpty)
   }
 
-  test("session confs: UTC, AQE, skew join") {
-    assert(spark.conf.get("spark.sql.session.timeZone") === "UTC")
-    assert(spark.conf.get("spark.sql.adaptive.enabled") === "true")
-    assert(spark.conf.get("spark.sql.adaptive.skewJoin.enabled") === "true")
+  test("only the factory builds sessions") {
+    val call = "SparkSession" + ".builder"
+    def scala(f: File): Seq[File] =
+      if (f.isDirectory) f.listFiles().toSeq.flatMap(scala)
+      else if (f.getName.endsWith(".scala")) Seq(f) else Nil
+    val sites = Seq("src/main/scala", "src/test/scala")
+      .flatMap(d => scala(new File(d)))
+      .filter(f => Files.readString(f.toPath).contains(call))
+      .map(_.getPath)
+    assert(sites === Seq("src/main/scala/graft/core/SessionFactory.scala"))
+  }
+
+  /** A 1,000-row Delta table in four data files; returns the table dir
+    * and its data files. */
+  private def fourFileTable(): (String, Seq[File]) = {
+    val t = Files.createTempDirectory("graft_fail_loud").toString
+    DeltaLakeWrite.append(spark.range(1000).toDF("id").repartition(4), t)
+    val files = new File(t).listFiles().toSeq
+      .filter(f => f.getName.endsWith(".parquet"))
+    assert(files.size === 4)
+    (t, files)
+  }
+
+  private def failsToRead(count: => Long): Unit = {
+    val e = intercept[org.apache.spark.SparkException](count)
+    assert(e.getMessage.contains("FAILED_READ_FILE"), e.getMessage)
+  }
+
+  test("a snapshot over a corrupt data file fails") {
+    val (t, files) = fourFileTable()
+    Files.writeString(files.head.toPath, "this is not parquet")
+    failsToRead(DeltaLakeRead.snapshot(spark, t).count())
+  }
+
+  test("a snapshot whose data file vanished fails") {
+    val (t, files) = fourFileTable()
+    val snap = DeltaLakeRead.snapshot(spark, t)
+    files.head.delete()
+    failsToRead(snap.count())
+  }
+
+  test("landing-zone readers skip corrupt and vanished files") {
+    val dir = Files.createTempDirectory("graft_landing").toFile
+    Files.writeString(new File(dir, "a.csv").toPath, "k,v\n1,a\n2,b\n")
+    Files.writeString(new File(dir, "b.csv").toPath, "k,v\n3,c\n")
+    Files.writeString(new File(dir, "bad.csv.gz").toPath, "not gzip")
+    val schema = new StructType().add("k", IntegerType).add("v", StringType)
+    // the tolerance is per source: the session itself still fails
+    failsToRead(spark.read.schema(schema).option("header", "true")
+      .csv(dir.getPath).count())
+    val landed = Readers.csv(spark, dir.getPath, Some(schema))
+    assert(landed.count() === 3)
+    new File(dir, "b.csv").delete()
+    assert(landed.count() === 2)
   }
 }

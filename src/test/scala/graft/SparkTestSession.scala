@@ -2,19 +2,16 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One shared session for the whole forked test JVM. */
+/** One shared session for the whole forked test JVM, built by the
+  * engine's factory so the suite runs the confs and extensions every
+  * entrypoint runs. */
 object SparkTestSession {
   lazy val spark: SparkSession = {
     // keep Derby's log out of the repo root (CatalogSpec side effect)
     System.setProperty("derby.stream.error.file", "target/derby.log")
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-tests")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
+    val s = graft.core.SessionFactory.builder("local[4]", Some(4))
       .config("spark.sql.warehouse.dir",
         java.nio.file.Files.createTempDirectory("graft_wh").toString)
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

@@ -16,5 +16,4 @@ for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
 done
 exec java $OPENS \
   -Xmx"${SPARK_DRIVER_MEM:-8g}" \
-  -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
   -cp "$CLASSES:/opt/spark/jars/*" "$@"
