@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
 
 object Bench {
@@ -104,7 +105,7 @@ object Bench {
     }
 
     // min over ITERS full PASSES, interleaved: pass 1 runs every query
-    // once (absorbing whole-JVM one-off costs — C2/codegen compilation,
+    // once (absorbing whole-JVM one-off costs — C2 compilation,
     // first file listing, page-cache fill — which otherwise land on
     // whichever queries sort first and read as 5-30× regressions
     // between rounds), then passes 2..N re-run the whole set warm. The
@@ -112,7 +113,11 @@ object Bench {
     // single contended host window inflates at most one pass, never a
     // query's reported time (round-5/6 lesson: the driver's window
     // inflated exactly the head + CPU-heavy queries 3× vs the clean
-    // run an hour earlier).
+    // run an hour earlier). Generated-class compilation lands on pass 1
+    // only because the factory sizes Spark's codegen cache above the
+    // set's working set (at Spark's 100-entry default pass 2 recompiled
+    // 3,664 classes after pass 1's 3,957, sf0.01); each pass's compile
+    // count goes to stderr, so warm-pass compiles show.
     val iters = sys.env.getOrElse("SPARK_GRAFT_BENCH_ITERS", "2").toInt
     // dev-loop filter: comma-separated query names; the token
     // "@audited" expands to ShuffleAudit.Audited — the canonical
@@ -132,9 +137,15 @@ object Bench {
     // host), which read as "pass-1 contention" in cross-round
     // comparisons. canary_sec must measure the HOST, not the canary.
     canary()
-    val passes: Seq[Map[String, (Double, Boolean)]] = (1 to iters).map { _ =>
+    val passes: Seq[Map[String, (Double, Boolean)]] = (1 to iters).map { i =>
       canaries += canary()
-      queryList.map { case (name, fn) => name -> timeQuery(fn) }.toMap
+      val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val t0 = System.nanoTime()
+      val pass = queryList.map { case (name, fn) => name -> timeQuery(fn) }.toMap
+      System.err.println(f"BENCH pass $i: wall=${(System.nanoTime() - t0) / 1e9}%.1fs " +
+        s"compiles=${CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0} " +
+        f"canary=${canaries.last}%.3fs")
+      pass
     }
     val prelim: Map[String, Double] =
       queryList.map { case (name, _) =>

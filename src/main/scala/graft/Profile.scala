@@ -1,16 +1,21 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler._
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
 /** Deterministic per-query profile: job/stage/task counts, shuffle
-  * bytes, spill, and summed executor run/CPU time. These metrics are
-  * stable across host-contention windows (unlike wall-clock), so they
-  * are the optimization round's primary before/after evidence. Below
-  * each query's totals it lists every Spark job, slowest first, with
-  * its call site — which action inside a multi-job operator (streaming
-  * drains, DML, the curation pipelines' stages) actually costs.
+  * bytes, spill, summed executor run/CPU time, and the generated
+  * classes Janino compiled (`compiles`, `compileMs`: codegen-cache
+  * misses, so a warm pass of a repeating query should compile next to
+  * none). These metrics are stable across host-contention windows
+  * (unlike wall-clock), so they are the optimization round's primary
+  * before/after evidence. Below each query's totals it lists every
+  * Spark job, slowest first, with its call site — which action inside
+  * a multi-job operator (streaming drains, DML, the curation
+  * pipelines' stages) actually costs.
   * Usage: runMain graft.Profile [sfDir] [queryName...]
   */
 object Profile {
@@ -100,9 +105,13 @@ object Profile {
       fn(spark, sfDir).write.format("noop").mode("overwrite").save()
       Thread.sleep(200)
       m.reset()
+      val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val compileNs0 = CodeGenerator.compileTime
       val t0 = System.nanoTime()
       fn(spark, sfDir).write.format("noop").mode("overwrite").save()
       val wall = (System.nanoTime() - t0) / 1e9
+      val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0
+      val compileMs = (CodeGenerator.compileTime - compileNs0) / 1e6
       Thread.sleep(300) // let the listener bus deliver the last events
       import scala.jdk.CollectionConverters._
       val jobs = m.jobs.asScala.toSeq
@@ -114,6 +123,7 @@ object Profile {
         f"taskTime=${m.runTimeMs.get / 1e3}%8.2fs " +
         f"cpu=${m.cpuTimeNs.get / 1e9}%8.2fs " +
         f"input=${m.inputBytes.get / 1e6}%8.2fMB " +
+        f"compiles=$compiles%4d compileMs=$compileMs%8.1f " +
         f"sumJobWall=${jobs.map(_._2.wallMs).filter(_ >= 0).sum / 1e3}%.3fs")
       jobs.sortBy { case (jid, j) => (-j.wallMs, jid) }.foreach {
         case (jid, j) =>

@@ -28,6 +28,23 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   *    and its consumers inherit that fan-out; with it the cache adopts
   *    AQE-coalesced partitioning. Measured at sf0.1: q130 taskTime
   *    91 s → 6.9 s, q100 30 s → 3.2 s.
+  *  - `spark.sql.codegen.cache.maxEntries=4096`: the JVM-wide LRU
+  *    cache of Janino-compiled generated classes. At Spark's default
+  *    of 100 a repeating workload misses on almost every lookup: one
+  *    `curateV2` pass alone generates about 200 classes, and Bench's
+  *    three passes over the 211 queries at sf0.01 compiled 3,957,
+  *    3,664 and 3,661 classes. At 4096 they compile 2,744, 274 and
+  *    196: the first pass is the working set, and the warm passes'
+  *    residue is code that inlines per-call values as literals (BM25's
+  *    corpus statistics, `current_timestamp()`, DML predicates) or an
+  *    AQE plan variant. Those one-off classes age out first, because
+  *    every pass touches the stable set. Retention with ~3,000 entries
+  *    against 100 (full-GC class histogram after Bench's second pass):
+  *    about 80 MB more heap, mostly byte arrays (the generated source
+  *    the cache keys hold, the class bytes their loaders keep), and
+  *    20 MB more metaspace. The conf is static and the cache
+  *    is sized once, when `CodeGenerator` first loads, so it is set
+  *    here, before the first session exists.
   *  - `spark.sql.shuffle.partitions`, when given: callers size it to
   *    their core count so every core gets one shuffle task wave (the
   *    200 default made one curateV2 pass take 36 s on 4 cores).
@@ -54,6 +71,7 @@ object SessionFactory {
       .config("spark.ui.enabled", "false")
       .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
         "true")
+      .config("spark.sql.codegen.cache.maxEntries", "4096")
     shufflePartitions.foreach(n =>
       b.config("spark.sql.shuffle.partitions", n.toString))
     b

@@ -3,6 +3,7 @@ package graft
 import graft.ingest.{DeltaLakeRead, DeltaLakeWrite, Readers}
 import java.io.File
 import java.nio.file.Files
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.types.{IntegerType, StringType, StructType}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -33,6 +34,7 @@ class SessionFactorySpec extends AnyFunSuite {
   // construction: no lazy strategy patch
   test("the suite runs on the factory session") {
     Seq("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning" -> "true",
+      "spark.sql.codegen.cache.maxEntries" -> "4096",
       "spark.sql.shuffle.partitions" -> "4",
       "spark.sql.files.ignoreCorruptFiles" -> "false",
       "spark.sql.files.ignoreMissingFiles" -> "false")
@@ -48,6 +50,40 @@ class SessionFactorySpec extends AnyFunSuite {
       joined.queryExecution.sparkPlan.toString)
     assert(joined.select("asof_v").as[String].collect().toSeq === Seq("x"))
     assert(spark.experimental.extraStrategies.isEmpty)
+  }
+
+  // Spark's 100-entry class cache is smaller than one curateV2 pass's
+  // ~200 generated classes, so every pass recompiled nearly all of
+  // them; the allowance covers AQE join-side variants
+  test("a repeated curateV2 pass compiles each generated class once") {
+    val rnd = new scala.util.Random(7)
+    val words = Seq("the", "and", "of", "to", "in") ++
+      (1 to 60).map(i => s"word${('a' + i % 26).toChar}$i")
+    def text(n: Int) = Seq.fill(n)(words(rnd.nextInt(words.size))).mkString(" ")
+    val texts = (0 until 60).map(_ => text(30 + rnd.nextInt(40)))
+    // documents 60-79 are exact copies of 0-19
+    val docs = (0 until 80).map(i =>
+      (i.toLong, texts(i % 60), if (i % 3 == 0) "de" else "en"))
+      .toDF("doc_id", "text", "lang")
+    val emb = (0 until 80).map(i =>
+      (i.toLong, Seq.fill(8)(rnd.nextFloat() - 0.5f))).toDF("vec_id", "embedding")
+    def curate(): Unit = graft.scale.Curation.curateV2(
+      corpus = docs.filter($"doc_id" % 10 =!= 0),
+      bench = docs.filter($"doc_id" % 10 === 0), embeddings = emb,
+      idCol = "doc_id", textCol = "text", langCol = "lang",
+      minQuality = 0.5, minJaccard = 0.7,
+      p = graft.scale.Dedup.MinHashParams(k = 64, bands = 16, shingle = 3,
+        reproducible = true),
+      semK = 4, semIters = 2, semMinCosine = 0.9, semMaxNeighbors = 16,
+      unitTokens = 3, decontamN = 5, tau = 0.7, budgetDocs = 40L,
+      packBudget = 512L, packShards = 4, maxBucket = Some(1000)).collect()
+    val compiled = CodegenMetrics.METRIC_COMPILATION_TIME
+    val passes = (1 to 3).map { _ =>
+      val c0 = compiled.getCount
+      curate()
+      compiled.getCount - c0
+    }
+    assert(passes(2) < passes(0) / 10.0, passes)
   }
 
   test("only the factory builds sessions") {
