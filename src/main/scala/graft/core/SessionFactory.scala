@@ -45,6 +45,13 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   *    20 MB more metaspace. The conf is static and the cache
   *    is sized once, when `CodeGenerator` first loads, so it is set
   *    here, before the first session exists.
+  *  - `spark.sql.parquet.fieldId.read.enabled=true`: Delta tables in
+  *    column-mapping `id` mode resolve parquet columns by field id
+  *    ([[graft.ingest.DeltaLakeRead]]). Spark's field-id matching only
+  *    engages for read schemas that carry `parquet.field.id` metadata,
+  *    and only that reader's id-mode schemas do, so every other read
+  *    resolves by name exactly as before. A session conf, not a
+  *    per-read switch, so no read changes the session it runs on.
   *  - `spark.sql.shuffle.partitions`, when given: callers size it to
   *    their core count so every core gets one shuffle task wave (the
   *    200 default made one curateV2 pass take 36 s on 4 cores).
@@ -72,6 +79,7 @@ object SessionFactory {
       .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
         "true")
       .config("spark.sql.codegen.cache.maxEntries", "4096")
+      .config("spark.sql.parquet.fieldId.read.enabled", "true")
     shufflePartitions.foreach(n =>
       b.config("spark.sql.shuffle.partitions", n.toString))
     b

@@ -19,21 +19,24 @@ import scala.jdk.CollectionConverters._
   * adds the mutating verbs on top of the same log primitives.
   *
   * How a mutation lands (the DV fast path — no data-file rewrite):
-  *  1. [[DeltaLakeRead.snapshotMeta]] reads the CURRENT rows with
-  *     `(__file, __pos)` provenance (already-deleted positions
-  *     subtracted, column mapping resolved — conditions are written
-  *     against LOGICAL columns).
+  *  1. [[DeltaLakeRead.snapshotMeta]] reads the rows of the ONE
+  *     replayed state the mutation computes against (the version it
+  *     commits after) with `(__file, __pos)` provenance
+  *     (already-deleted positions subtracted, column mapping resolved
+  *     — conditions are written against LOGICAL columns). `__file` is
+  *     the raw `_metadata.file_path` URI until step 3.
   *  2. ONE aggregation computes, per data file, the matched row
   *     positions AND the live row count — so fully-emptied files are
   *     detected in the same scan (they get a bare `remove`; no
   *     degenerate all-rows DV is left behind to poison later scans).
-  *  3. Each affected file's new DV (existing DV positions ∪ matched
-  *     positions — descriptors are ABSOLUTE, not deltas) is
-  *     serialized and written ON AN EXECUTOR by [[DeletionVectors
-  *     .writeFile]]; the driver only ever holds one small descriptor
-  *     row per file, never position sets. (Executor-side `.bin`
-  *     writes assume a shared filesystem — the same deployment
-  *     posture as every staged write in this engine.)
+  *  3. Each affected file's URI is normalized to its table path
+  *     ([[DeltaLakeRead.normFile]], once per file) and its new DV
+  *     (existing DV positions ∪ matched positions — descriptors are
+  *     ABSOLUTE, not deltas) is serialized and written ON AN EXECUTOR
+  *     by [[DeletionVectors.writeFile]]; the driver only ever holds
+  *     one small descriptor row per file, never position sets.
+  *     (Executor-side `.bin` writes assume a shared filesystem — the
+  *     same deployment posture as every staged write in this engine.)
   *  4. Replacement/new rows (UPDATE's rewrites, upsert's source)
   *     stage as ordinary parquet via [[DeltaLakeWrite.stageData]],
   *     physical-named under column mapping.
@@ -76,7 +79,7 @@ object DeltaLakeDml {
   def delete(spark: SparkSession, tablePath: String,
       condition: String): DmlResult = withRetries(spark) {
     val st = gated(spark, tablePath)
-    val t = DeltaLakeRead.snapshotMeta(spark, tablePath)
+    val t = DeltaLakeRead.snapshotMeta(spark, tablePath, st)
     val cond = expr(condition)
     val cdc = t.filter(cond).select(logicalCols(st): _*)
       .withColumn(DeltaLakeCdf.ChangeTypeCol, lit("delete"))
@@ -96,7 +99,7 @@ object DeltaLakeDml {
     val unknown = set.keySet -- st.schema.fieldNames.toSet
     require(unknown.isEmpty,
       s"SET targets ${unknown.mkString(", ")} not in the table schema")
-    val t = DeltaLakeRead.snapshotMeta(spark, tablePath)
+    val t = DeltaLakeRead.snapshotMeta(spark, tablePath, st)
     val cond = expr(condition)
     val rewritten = t.filter(cond).select(st.schema.fields.toSeq.map { f =>
       set.get(f.name)
@@ -146,7 +149,7 @@ object DeltaLakeDml {
     val newRows = src.select(st.schema.fields.toSeq.map(f =>
       col(DeltaLakeRead.quoted(f.name))
         .cast(DeltaLakeRead.stripType(f.dataType)).as(f.name)): _*)
-    val t = DeltaLakeRead.snapshotMeta(spark, tablePath)
+    val t = DeltaLakeRead.snapshotMeta(spark, tablePath, st)
     val srcKeys = src
       .select(keys.map(c => col(DeltaLakeRead.quoted(c))): _*)
       .distinct().withColumn("__matched", lit(1))
@@ -223,6 +226,7 @@ object DeltaLakeDml {
     // property; the property is what forbids row-level mutation
     require(!st.config.get("delta.appendOnly").contains("true"),
       "table is delta.appendOnly — row-level DML is forbidden on it")
+    testAfterReplay()
     st
   }
 
@@ -255,6 +259,8 @@ object DeltaLakeDml {
     // one scan: per file, live row count + matched positions
     // (collect_list skips the nulls the `when` leaves on non-matches;
     // positions of one parquet file fit one executor by construction)
+    // grouped by the raw file URI: one string per file, so the
+    // normalization below runs once per affected file, not per row
     val perFile = withCond.groupBy(col("__file"))
       .agg(count(lit(1)).as("__live"),
         collect_list(when(cond, col("__pos"))).as("__dead"))
@@ -270,7 +276,8 @@ object DeltaLakeDml {
     // descriptor tuple (one short row per affected file) is collected
     val written = perFile.mapPartitions { it =>
       val root = new File(rootAbs)
-      it.map { case (file, live, dead) =>
+      it.map { case (uri, live, dead) =>
+        val file = DeltaLakeRead.normFile(uri)
         val matched = dead.toArray.sorted
         if (matched.length == live) {
           // every remaining live row dies -> bare remove, no DV
@@ -373,8 +380,8 @@ object DeltaLakeDml {
     val fileLines = written.toSeq.flatMap {
       case (abs, dvPath, dvOff, dvSize, dvCard, _) =>
         val f = byAbs.getOrElse(abs, throw new IllegalStateException(
-          s"matched file $abs not in the snapshot — path normalization " +
-          "drift between snapshotMeta and state"))
+          s"matched file $abs not in the snapshot — normFile disagrees " +
+          "with the log's decoded path"))
         val rm = DeltaLakeWrite.removeJson(f.rawPath, f.partitionValues,
           Some(f.size), now, dataChange = true, f.dv)
         if (dvPath.isEmpty) Seq(rm)
@@ -449,6 +456,11 @@ object DeltaLakeDml {
     * the window) are testable deterministically. One-shot semantics
     * are the caller's responsibility; production leaves it a no-op. */
   private[graft] var testBeforeCommit: () => Unit = () => ()
+
+  /** Spec seam: runs between a mutation's log replay and its scan, so
+    * a commit landing there is testable deterministically. Same
+    * one-shot convention as [[testBeforeCommit]]. */
+  private[graft] var testAfterReplay: () => Unit = () => ()
 
   /** The table gained a conflicting commit between this mutation's
     * snapshot read and its commit attempt — recompute against the new

@@ -1,7 +1,6 @@
 package graft.ingest
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions.col
 import java.io.File
 
 /** Table maintenance for REAL Delta tables — the OPTIMIZE/VACUUM half
@@ -37,10 +36,13 @@ object DeltaLakeMaintain {
     * write can improve it); partitions whose qualifying set is one
     * DV-bearing file still rewrite (the point is dropping the DV).
     *
-    * Scale shape: one pruned read of the qualifying files only — the
+    * Scale shape: one read of the qualifying files only, at the
+    * replayed version (the scan is built from the replayed state's
+    * victim subset — no second replay, no per-row path filter) — the
     * repartition count is `ceil(bytes / targetFileBytes)` so output
-    * files land near target size; untouched files are never read.
-    * The commit is O(files touched).
+    * files land near target size; untouched files, and files
+    * appended after the replay, are never read. The commit is
+    * O(files touched).
     *
     * Concurrency: the same optimistic posture as [[DeltaLakeDml]] —
     * the commit claims exactly readVersion+1, slides past benign
@@ -74,6 +76,9 @@ object DeltaLakeMaintain {
     * semantics are the caller's; production leaves it a no-op. */
   private[graft] var testBeforeCommit: () => Unit = () => ()
 
+  /** Spec seam: runs between the log replay and the victim scan. */
+  private[graft] var testAfterReplay: () => Unit = () => ()
+
   /** One optimistic attempt; None = conflicting commit landed in the
     * window (staged files already rolled back) — recompute. */
   private def compactOnce(spark: SparkSession, tablePath: String,
@@ -96,14 +101,12 @@ object DeltaLakeMaintain {
     if (victims.isEmpty)
       return Some(CompactResult(st.version, 0, 0, 0L))
 
-    val rootAbs = new File(tablePath).getAbsolutePath
-    val victimPaths = victims.map(f => s"$rootAbs/${f.path}").toSet
+    testAfterReplay()
     val dvRowsDropped = victims.flatMap(_.dv).map(_.cardinality).sum
     // live rows of the victim files only — DV masks applied by the
     // reader, so the rewrite materializes them away for free
-    val live = DeltaLakeRead.snapshotMeta(spark, tablePath)
-      .filter(col("__file").isin(victimPaths.toSeq: _*))
-      .drop("__file", "__pos")
+    val live = DeltaLakeRead.read(spark, tablePath,
+      st.copy(files = victims), withMeta = false)
     val nOut = math.max(1,
       math.ceil(victims.map(_.size).sum.toDouble / targetFileBytes).toInt)
     val phys = DeltaLakeWrite.toPhysical(live.repartition(nOut), st)

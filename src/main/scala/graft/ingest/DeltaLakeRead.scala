@@ -3,7 +3,7 @@ package graft.ingest
 import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions.{coalesce, col, concat, expr, lit, row_number, struct, to_json, udf, when}
+import org.apache.spark.sql.functions.{coalesce, col, concat, lit, row_number, struct, to_json, udf, when}
 import org.apache.spark.sql.types.{ArrayType, BooleanType, DataType, IntegerType, LongType, MapType, Metadata, MetadataBuilder, StringType, StructField, StructType}
 import java.io.File
 import java.nio.charset.StandardCharsets
@@ -42,12 +42,15 @@ import scala.jdk.CollectionConverters._
   * and in `id` mode (resolution by parquet field id: the physical
   * read schema carries `parquet.field.id` metadata from
   * `delta.columnMapping.id` and the scan runs with Spark's native
-  * field-id matching, `spark.sql.parquet.fieldId.read.enabled`);
+  * field-id matching, `spark.sql.parquet.fieldId.read.enabled`,
+  * which [[graft.core.SessionFactory]] turns on for every session);
   * deletion vectors (`u`/`p`/`i` storage, decoded by
   * [[DeletionVectors]] — rows at deleted positions are filtered IN
   * THE SCAN: each task binary-searches `_metadata.row_index` against
   * its file's executor-cached bitmap, so DV masking never shuffles
-  * data rows at any cardinality).
+  * data rows at any cardinality; the mask is keyed on the raw
+  * `_metadata.file_path` URI and resolved to its descriptor once per
+  * file by [[normFile]], never by a per-row decoding expression).
   *
   * Log replay reconciles file actions by `(path, dvId)` — the
   * protocol's reconciliation key — not by path alone: a DV update
@@ -404,31 +407,34 @@ object DeltaLakeRead {
       pathFilter = Some(wanted))
   }
 
-  /** Snapshot plus row provenance: every row carries `__file` (the
-    * normalized absolute path of its data file, comparable to
-    * `tableRoot/addFile.path`) and `__pos` (its parquet row index) —
-    * the handles [[DeltaLakeDml]] needs to turn matched rows into
-    * deletion vectors. DV-deleted rows are already subtracted. */
-  private[ingest] def snapshotMeta(spark: SparkSession, tablePath: String,
-      versionAsOf: Option[Long] = None): DataFrame =
-    snapshotImpl(spark, tablePath, versionAsOf, withMeta = true)
+  /** The rows of an already-replayed state `st` plus row provenance:
+    * every row carries `__file` (the RAW `_metadata.file_path` URI of
+    * its data file — [[normFile]] maps it to `tableRoot/addFile.path`,
+    * once per file, where a caller needs the file's identity) and
+    * `__pos` (its parquet row index) — the handles [[DeltaLakeDml]]
+    * needs to turn matched rows into deletion vectors. DV-deleted
+    * rows are already subtracted. Reading `st` rather than the head
+    * keeps the scan on the version the caller replayed. */
+  private[graft] def snapshotMeta(spark: SparkSession, tablePath: String,
+      st: Snapshot): DataFrame =
+    read(spark, tablePath, st, withMeta = true)
 
   private def snapshotImpl(spark: SparkSession, tablePath: String,
       versionAsOf: Option[Long], withMeta: Boolean,
-      pathFilter: Option[Set[String]] = None): DataFrame = {
+      pathFilter: Option[Set[String]] = None): DataFrame =
     // the filter flows into the state read itself: distributed-mode
     // tables prune BEFORE the collect (batch-size rows to the driver)
-    val st = stateImpl(spark, tablePath, versionAsOf, pathFilter)
+    read(spark, tablePath,
+      stateImpl(spark, tablePath, versionAsOf, pathFilter), withMeta)
+
+  /** Read the active files of `st` (column mapping, partitions and DV
+    * masking resolved) — no log replay, so a caller holding a state
+    * can scan exactly it, or a subset of its files. */
+  private[ingest] def read(spark: SparkSession, tablePath: String,
+      st: Snapshot, withMeta: Boolean): DataFrame = {
     val root = new File(tablePath).getAbsolutePath
     val cmMode = st.config.getOrElse("delta.columnMapping.mode", "none")
     val cm = cmMode != "none"
-    if (cmMode == "id") {
-      // Spark's field-id matching only engages when this session conf
-      // is on AND the read schema carries parquet.field.id metadata —
-      // which only this reader's id-mode schemas do, so leaving it set
-      // cannot change any other read's behavior.
-      spark.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
-    }
     def physName(f: StructField): String =
       if (cm) physFieldName(f) else f.name
     val fieldMeta: StructField => Metadata =
@@ -514,11 +520,8 @@ object DeltaLakeRead {
 
     val (dvFiles, cleanFiles) = st.files.partition(_.dv.isDefined)
     val parts = Seq(
-      Option.when(cleanFiles.nonEmpty) {
-        val df = readFiles(cleanFiles, meta = withMeta)
-        if (withMeta) df.withColumn("__file", normFileExpr("__file"))
-        else df
-      },
+      Option.when(cleanFiles.nonEmpty)(
+        readFiles(cleanFiles, meta = withMeta)),
       Option.when(dvFiles.nonEmpty)(
         subtractDeleted(spark, root, readFiles(dvFiles, meta = true),
           dvFiles, keepMeta = withMeta))).flatten
@@ -534,14 +537,19 @@ object DeltaLakeRead {
     } else parts.reduce(_ unionByName _)
   }
 
-  /** `_metadata.file_path` is a URI ("file:///..."): strip the scheme
-    * and percent-decode — pre-escaping any literal `+` first, because
-    * `url_decode` is FORM decoding where a bare `+` means space (the
-    * same pitfall [[decode]] handles for log paths). A miss here
-    * would fail OPEN (anti-join keeps the row → deleted rows
-    * resurrect), so the decode convention must match exactly. */
-  private def normFileExpr(c: String): Column = expr(
-    s"url_decode(regexp_replace(replace($c, '+', '%2B'), '^[a-z]+:/+', '/'))")
+  private val UriScheme = java.util.regex.Pattern.compile("^[a-z]+:/+")
+
+  /** A data file's identity from its `_metadata.file_path` URI
+    * ("file:///..."): strip the scheme and percent-decode with
+    * [[decode]] (so a literal `+` stays a `+`), giving the
+    * `tableRoot/addFile.path` form the DV descriptor map and DML's
+    * file lookup are keyed by. Called once per FILE — by
+    * [[DvLiveHelper]] when the scanned file changes and by
+    * [[DeltaLakeDml]]'s per-file DV step — never per row. A miss here
+    * fails OPEN (no bitmap found → deleted rows resurrect), which is
+    * why every consumer goes through this one function. */
+  private[graft] def normFile(uri: String): String =
+    decode(UriScheme.matcher(uri).replaceFirst("/"))
 
   /** Executor-side DV bitmap cache: each task tests its rows against
     * the (sorted) position array of ITS file, loaded once per
@@ -589,50 +597,41 @@ object DeltaLakeRead {
     * Only the descriptor MAP broadcasts (one small entry per file),
     * never position sets.
     *
+    * The filter is keyed on the RAW `_metadata.file_path` URI: the
+    * row's file is resolved to its descriptor by [[normFile]] once
+    * per file, inside [[DvLiveHelper]]'s memo, so no per-row decoding
+    * expression enters the plan.
+    *
     * With `spark.graft.dv.checkCardinality=true`, every decoded DV
-    * position must find its row (one extra semi-join job over
-    * executor-decoded positions) — turning any silent fail-open path
-    * mismatch into a loud error. */
+    * position must find its row: one extra counting job over the same
+    * scan and the same resolution asserts that the masked rows number
+    * exactly the descriptors' total cardinality — turning any silent
+    * fail-open path mismatch (or a truncated data file) into a loud
+    * error. */
   private def subtractDeleted(spark: SparkSession, root: String,
       df: DataFrame, dvFiles: Seq[AddFile],
       keepMeta: Boolean = false): DataFrame = {
-    val descs = dvFiles.map(f => (s"$root/${f.path}", f.dv.get))
-    val rootStr = root
-    val withN = df.withColumn("__nfile", normFileExpr("__file"))
-    if (spark.conf.getOption("spark.graft.dv.checkCardinality")
-        .contains("true")) {
-      val totalCard = descs.map(_._2.cardinality).sum
-      val posRdd = spark.sparkContext
-        .parallelize(descs, math.max(1, math.min(descs.size, 32)))
-        .flatMap { case (p, d) =>
-          DeletionVectors.positions(new File(rootStr), d)
-            .map(pos => Row(p, pos))
-        }
-      val posSchema = StructType(Seq(
-        StructField("__dfile", org.apache.spark.sql.types.StringType),
-        StructField("__dpos", org.apache.spark.sql.types.LongType)))
-      val hit = spark.createDataFrame(posRdd, posSchema).join(
-        withN.select(col("__nfile"), col("__pos")),
-        col("__dfile") === col("__nfile") && col("__dpos") === col("__pos"),
-        "left_semi").count()
-      require(hit == totalCard,
-        s"deletion-vector positions matched $hit of $totalCard rows — " +
-        "path normalization mismatch or truncated data file; refusing " +
-        "to fail open")
-    }
-    val bcDesc = spark.sparkContext.broadcast(descs.toMap)
+    val descs = dvFiles.map(f => (s"$root/${f.path}", f.dv.get)).toMap
+    val bcDesc = spark.sparkContext.broadcast(descs)
     // native codegen'd expression, not a Scala UDF: the DV filter
     // compiles into the scan's WholeStageCodegen span (one virtual
     // call per row, no catalyst↔scala marshaling)
     import org.apache.spark.sql.graft.ColumnBridge
     val live = ColumnBridge.column(DvLiveExpr(
-      ColumnBridge.expression(col("__nfile")),
+      ColumnBridge.expression(col("__file")),
       ColumnBridge.expression(col("__pos")),
-      new DvLiveHelper(bcDesc, rootStr)))
-    val filtered = withN.filter(live)
-    if (keepMeta)
-      filtered.withColumn("__file", col("__nfile")).drop("__nfile")
-    else filtered.drop("__file", "__pos", "__nfile")
+      new DvLiveHelper(bcDesc, root)))
+    if (spark.conf.getOption("spark.graft.dv.checkCardinality")
+        .contains("true")) {
+      val totalCard = descs.values.map(_.cardinality).sum
+      val hit = df.filter(!live).count()
+      require(hit == totalCard,
+        s"deletion-vector positions matched $hit of $totalCard rows — " +
+        "path normalization mismatch or truncated data file; refusing " +
+        "to fail open")
+    }
+    val filtered = df.filter(live)
+    if (keepMeta) filtered else filtered.drop("__file", "__pos")
   }
 
   /** Replay the log to `versionAsOf` (default latest) and return the
@@ -1010,7 +1009,7 @@ object DeltaLakeRead {
   /** Percent-decode a log path. URLDecoder would also turn a literal
     * `+` into a space — the protocol's encoding is URI-style percent
     * escaping where `+` means `+`, so it is pre-escaped. */
-  private[ingest] def decode(p: String): String =
+  private[graft] def decode(p: String): String =
     java.net.URLDecoder.decode(p.replace("+", "%2B"), "UTF-8")
 
   /** Read `(relPath, partitionValues)` files of table `root` against
@@ -1027,8 +1026,6 @@ object DeltaLakeRead {
       extras: Seq[String] = Nil): DataFrame = {
     val cmMode = st.config.getOrElse("delta.columnMapping.mode", "none")
     val cm = cmMode != "none"
-    if (cmMode == "id")
-      spark.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
     def physName(f: StructField): String =
       if (cm) physFieldName(f) else f.name
     val fieldMeta: StructField => Metadata =

@@ -6,12 +6,14 @@ import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.types.{BooleanType, DataType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Per-task runtime of [[DvLiveExpr]]: resolves a row's file to its
-  * deletion-vector bitmap (broadcast descriptor map → executor-cached
-  * decoded positions, [[DeltaLakeRead.dvPositionsCached]]) and
-  * binary-searches the row index. Rows arrive file-clustered, so a
-  * one-entry memo turns the map lookup + cache probe into a pointer
-  * compare for all but the first row of each file. One instance is
+/** Per-task runtime of [[DvLiveExpr]]: resolves a row's file — its
+  * raw `_metadata.file_path` URI, normalized by
+  * [[DeltaLakeRead.normFile]] — to its deletion-vector bitmap
+  * (broadcast descriptor map → executor-cached decoded positions,
+  * [[DeltaLakeRead.dvPositionsCached]]) and binary-searches the row
+  * index. Rows arrive file-clustered, so a one-entry memo turns the
+  * URI decoding, map lookup and cache probe into one string compare
+  * for all but the first row of each file. One instance is
   * deserialized per task (it rides the plan), so the memo needs no
   * synchronization; the broadcast keeps the descriptor map out of
   * every task binary. */
@@ -26,7 +28,7 @@ final class DvLiveHelper(
       // the scanner may reuse the UTF8String's backing buffer between
       // rows — memoize a stable copy
       lastFile = file.clone()
-      lastPositions = bc.value.get(file.toString)
+      lastPositions = bc.value.get(DeltaLakeRead.normFile(file.toString))
         .map(d => DeltaLakeRead.dvPositionsCached(root, d)).orNull
     }
     lastPositions == null ||
@@ -34,7 +36,7 @@ final class DvLiveHelper(
   }
 }
 
-/** `dv_live(file, row_index)` — TRUE when the row is NOT masked by
+/** `dv_live(file_uri, row_index)` — TRUE when the row is NOT masked by
   * its file's deletion vector. A native Catalyst expression with real
   * codegen (the [[graft.functions.RollingHashExpr]] pattern): the
   * whole DV subtraction stays inside the scan's WholeStageCodegen

@@ -3,8 +3,10 @@ package graft.tools
 import org.apache.spark.sql.functions._
 
 /** Round-14 measurement tool: wall-clock per phase of the q209 CDF
-  * cycle (append, delete, upsert, cdf read, snapshot read) so the
-  * Delta-family driver overhead can be attributed. Measurement only.
+  * cycle (append, delete, upsert, log replay, cdf read, snapshot read)
+  * so the Delta-family driver overhead can be attributed: `state` is
+  * the driver-side log replay alone, `snapshot+noop` the replay plus
+  * the DV-masked scan. Measurement only.
   * Usage: runMain graft.tools.DeltaPhases [sfDir]
   */
 object DeltaPhases {
@@ -35,6 +37,7 @@ object DeltaPhases {
           .withColumn("o_orderkey", col("o_orderkey") + 1000000000L))
       t("upsert") { graft.ingest.DeltaLakeDml.upsert(spark, t0, src,
         Seq("o_orderkey")) }
+      t("state") { graft.ingest.DeltaLakeRead.state(spark, t0) }
       t("cdf-read+noop") {
         graft.ingest.DeltaLakeCdf.changes(spark, t0, 1L)
           .write.format("noop").mode("overwrite").save()

@@ -435,4 +435,88 @@ class DeltaDmlSpec extends AnyFunSuite {
     }
     assert(e.getMessage.contains("appendOnly"))
   }
+
+  test("DML scans the version it replayed: an append landing between " +
+      "the replay and the scan is slid past, never matched") {
+    val t = newTable()
+    DeltaLakeWrite.append((0L until 10L).map(i => (i, s"v$i"))
+      .toDF("id", "v").repartition(1), t)
+    // one-shot hook: the appended rows MATCH the condition, so a scan
+    // of the head (a second replay) would find a file the replayed
+    // state does not hold
+    DeltaLakeDml.testAfterReplay = () => {
+      DeltaLakeDml.testAfterReplay = () => ()
+      DeltaLakeWrite.append(Seq((100L, "x"), (101L, "y"))
+        .toDF("id", "v").repartition(1), t); ()
+    }
+    try {
+      val r = DeltaLakeDml.delete(spark, t, "id = 0 OR id >= 100")
+      assert(r.version === 2L,
+        "slot 1 was the append's; the DELETE must take the next slot")
+      assert(r.rowsDeleted === 1L, "only the pre-append row is deleted")
+      assert(r.filesChanged === 1)
+    } finally DeltaLakeDml.testAfterReplay = () => ()
+    assert(ids(t) === ((1L until 10L) ++ Seq(100L, 101L)))
+  }
+
+  test("DV masking and DML stay exact under a table root that is " +
+      "percent-encoded in the file URI (space, literal %, +), with " +
+      "checkCardinality off and on") {
+    Seq(false, true).foreach { check =>
+      val d = Files.createTempDirectory("dv root %41 a+b").toFile
+      d.deleteOnExit()
+      val t = d.getPath
+      if (check) spark.conf.set("spark.graft.dv.checkCardinality", "true")
+      try {
+        DeltaLakeWrite.append((0L until 20L).map(i => (i, s"v$i"))
+          .toDF("id", "v").repartition(2), t)
+        val uris = DeltaLakeRead.snapshotMeta(spark, t,
+          DeltaLakeRead.state(spark, t))
+          .select("__file").distinct().as[String].collect()
+        assert(uris.nonEmpty && uris.forall(u =>
+          u.contains("%20") && u.contains("%2541") && u.contains("+")),
+          s"the URI must carry the encoded root: ${uris.toSeq}")
+        assert(DeltaLakeDml.delete(spark, t, "id % 4 = 0")
+          .rowsDeleted === 5L)
+        assert(ids(t) === (0L until 20L).filterNot(_ % 4 == 0))
+        // the second DELETE reads DV-bearing files: a missed mask
+        // would re-match the masked rows or resurrect them
+        assert(DeltaLakeDml.delete(spark, t, "id % 4 = 1")
+          .rowsDeleted === 5L)
+        assert(ids(t) === (0L until 20L).filter(_ % 4 >= 2))
+        val u = DeltaLakeDml.upsert(spark, t,
+          Seq((2L, "new"), (4L, "back"), (100L, "ins")).toDF("id", "v"),
+          Seq("id"))
+        assert(u.rowsDeleted === 1L && u.rowsInserted === 3L)
+        val got = DeltaLakeRead.snapshot(spark, t).as[(Long, String)]
+          .collect().sorted.toSeq
+        val want = ((0L until 20L).filter(_ % 4 >= 2).map(i =>
+          i -> (if (i == 2L) "new" else s"v$i")) ++
+          Seq(4L -> "back", 100L -> "ins")).sorted
+        assert(got === want, s"checkCardinality=$check")
+      } finally spark.conf.unset("spark.graft.dv.checkCardinality")
+    }
+  }
+
+  test("no per-row path decoding: the optimized plans of a DV-bearing " +
+      "snapshot and of snapshotMeta carry no url_decode/regexp_replace") {
+    val t = newTable()
+    DeltaLakeWrite.append((0L until 10L).map(i => (i, s"v$i"))
+      .toDF("id", "v").repartition(1), t)
+    DeltaLakeWrite.append((10L until 20L).map(i => (i, s"v$i"))
+      .toDF("id", "v").repartition(1), t)
+    DeltaLakeDml.delete(spark, t, "id = 3")
+    val st = DeltaLakeRead.state(spark, t)
+    assert(st.files.count(_.dv.isDefined) === 1 &&
+      st.files.count(_.dv.isEmpty) === 1)
+    Seq("snapshot" -> DeltaLakeRead.snapshot(spark, t),
+      "snapshotMeta" -> DeltaLakeRead.snapshotMeta(spark, t, st))
+      .foreach { case (name, df) =>
+        val plan = df.queryExecution.optimizedPlan.toString
+        assert(plan.contains("dv_live"), s"$name: no DV filter\n$plan")
+        Seq("url_decode", "regexp_replace").foreach(f =>
+          assert(!plan.contains(f), s"$name decodes per row: $f\n$plan"))
+      }
+    assert(ids(t) === (0L until 20L).filterNot(_ == 3L))
+  }
 }

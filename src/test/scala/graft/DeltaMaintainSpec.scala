@@ -319,4 +319,100 @@ class DeltaMaintainSpec extends AnyFunSuite {
       "v1's ICT is in the future — mtime must not be consulted")
     assert(DeltaLakeRead.versionAtTimestamp(t, 900000000000001L) === 1L)
   }
+
+  /** The query executions `body` ran, as a QueryExecutionListener saw
+    * them (its events arrive asynchronously: wait until they settle). */
+  private def executions(body: => Unit)
+      : Seq[org.apache.spark.sql.execution.QueryExecution] = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[
+      org.apache.spark.sql.execution.QueryExecution]()
+    val l = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution,
+          ns: Long): Unit = { seen.add(qe); () }
+      override def onFailure(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution,
+          e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(l)
+    try {
+      body
+      var prev = -1; var spins = 0
+      while ((prev != seen.size || seen.isEmpty) && spins < 50) {
+        prev = seen.size; Thread.sleep(100); spins += 1
+      }
+    } finally spark.listenerManager.unregister(l)
+    seen.toArray(Array.empty[
+      org.apache.spark.sql.execution.QueryExecution]).toSeq
+  }
+
+  private object Aqe
+    extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+
+  test("compact reads ONLY its victim files, with no per-row path " +
+      "decoding or filtering in the rewrite plan") {
+    val t = newTable()
+    // one big clean file that does not qualify, three small ones that
+    // do (one of them DV-bearing)
+    DeltaLakeWrite.append((0L until 3000L).map(i => (i, s"big-$i"))
+      .toDF("id", "v").repartition(1), t)
+    (0 until 3).foreach { i =>
+      DeltaLakeWrite.append((10000L + i * 5 until 10000L + (i + 1) * 5)
+        .map(j => (j, s"s$j")).toDF("id", "v").repartition(1), t)
+    }
+    DeltaLakeDml.delete(spark, t, "id = 10001")
+    val st = DeltaLakeRead.state(spark, t)
+    val (big, small) = st.files.partition(_.path == st.files
+      .maxBy(_.size).path)
+    assert(big.size === 1 && small.size === 3)
+    assert(small.map(_.size).max < big.head.size)
+    val want = ids(t)
+    var r: DeltaLakeMaintain.CompactResult = null
+    val qes = executions {
+      r = DeltaLakeMaintain.compact(spark, t,
+        targetFileBytes = 1L << 20, smallFileBytes = big.head.size)
+    }
+    assert(r.filesRemoved === 3 && r.dvRowsDropped === 1L)
+    assert(ids(t) === want)
+    assert(DeltaLakeRead.state(spark, t).files.exists(
+      _.path == big.head.path), "the big file must stay untouched")
+    val scanned = qes.map(qe => Aqe.collect(qe.executedPlan) {
+      case s: org.apache.spark.sql.execution.FileSourceScanExec =>
+        s.metrics("numFiles").value
+    }.sum).sum
+    assert(scanned === 3L,
+      s"compaction scanned $scanned files for 3 victims")
+    qes.foreach { qe =>
+      val plan = qe.optimizedPlan.toString
+      Seq("url_decode", "regexp_replace", " IN (").foreach(f =>
+        assert(!plan.contains(f), s"per-row $f in the rewrite:\n$plan"))
+    }
+  }
+
+  test("an append landing between compaction's replay and its scan " +
+      "stays out of the rewrite; the commit slides past it") {
+    val t = newTable()
+    (0 until 3).foreach { i =>
+      DeltaLakeWrite.append((i * 5 until (i + 1) * 5)
+        .map(j => (j.toLong, s"v$j")).toDF("id", "v").repartition(1), t)
+    }
+    val before = DeltaLakeRead.state(spark, t)
+    DeltaLakeMaintain.testAfterReplay = () => {
+      DeltaLakeMaintain.testAfterReplay = () => ()
+      DeltaLakeWrite.append(Seq((1000L, "late")).toDF("id", "v")
+        .repartition(1), t); ()
+    }
+    val r = try DeltaLakeMaintain.compact(spark, t)
+      finally DeltaLakeMaintain.testAfterReplay = () => ()
+    assert(r.filesRemoved === 3)
+    assert(r.version === before.version + 2,
+      "the append took the next slot; compaction must slide past it")
+    val late = DeltaLakeRead.state(spark, t, Some(before.version + 1))
+      .files.map(_.path).toSet -- before.files.map(_.path)
+    assert(late.size === 1)
+    assert(late.subsetOf(DeltaLakeRead.state(spark, t).files
+      .map(_.path).toSet), "the late file must stay active, unrewritten")
+    assert(ids(t) === ((0L until 15L) :+ 1000L),
+      "every row exactly once: the late row neither lost nor doubled")
+  }
 }

@@ -568,6 +568,23 @@ class DeltaReadSpec extends AnyFunSuite {
     assert(ids === Seq(9L))
   }
 
+  test("normFile agrees with decode on names a file URI percent-" +
+      "encodes (space, literal %, +)") {
+    val root = "/tmp/dv root %41 a+b"
+    Seq("plain.parquet", "a b.parquet", "100%41.parquet", "x+y.parquet",
+        "sp ace%25+plus.parquet").foreach { name =>
+      // the log's form: URI percent escaping, `+` left literal
+      val logPath = new java.net.URI(null, null, name, null).getRawPath
+      assert(DeltaLakeRead.decode(logPath) === name)
+      // the scan's form: Hadoop's qualified-path URI string
+      val uri = new org.apache.hadoop.fs.Path(s"file://$root/$name")
+        .toUri.toString
+      assert(uri.startsWith("file:") && uri.contains("%2541"), uri)
+      assert(DeltaLakeRead.normFile(uri) ===
+        s"$root/${DeltaLakeRead.decode(logPath)}", uri)
+    }
+  }
+
   // ---- column mapping (name mode) ----------------------------------------
 
   /** Logical schema whose fields map to UUID-ish physical parquet

@@ -35,6 +35,7 @@ class SessionFactorySpec extends AnyFunSuite {
   test("the suite runs on the factory session") {
     Seq("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning" -> "true",
       "spark.sql.codegen.cache.maxEntries" -> "4096",
+      "spark.sql.parquet.fieldId.read.enabled" -> "true",
       "spark.sql.shuffle.partitions" -> "4",
       "spark.sql.files.ignoreCorruptFiles" -> "false",
       "spark.sql.files.ignoreMissingFiles" -> "false")
