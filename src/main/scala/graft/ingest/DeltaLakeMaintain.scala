@@ -39,8 +39,9 @@ object DeltaLakeMaintain {
     * Scale shape: one read of the qualifying files only, at the
     * replayed version (the scan is built from the replayed state's
     * victim subset — no second replay, no per-row path filter) — the
-    * repartition count is `ceil(bytes / targetFileBytes)` so output
-    * files land near target size; untouched files, and files
+    * output file count is `ceil(bytes / targetFileBytes)` so files
+    * land near target size (a count of one coalesces: one job, no
+    * shuffle); untouched files, and files
     * appended after the replay, are never read. The commit is
     * O(files touched).
     *
@@ -109,7 +110,8 @@ object DeltaLakeMaintain {
       st.copy(files = victims), withMeta = false)
     val nOut = math.max(1,
       math.ceil(victims.map(_.size).sum.toDouble / targetFileBytes).toInt)
-    val phys = DeltaLakeWrite.toPhysical(live.repartition(nOut), st)
+    val phys = DeltaLakeWrite.toPhysical(
+      if (nOut == 1) live.coalesce(1) else live.repartition(nOut), st)
     val physParts = st.partitionColumns.map(c =>
       DeltaLakeRead.physFieldName(st.schema(c)))
     val staged = DeltaLakeWrite.withFieldIdWrite(spark, Some(st)) {

@@ -380,11 +380,14 @@ object DeltaLakeRead {
     * handling identical to [[snapshot]]). Loud when a requested path
     * is no longer in the snapshot (compacted or removed before the
     * stream drained it) — silently reading fewer files would be row
-    * loss. */
+    * loss. One replay, pruned to the wanted files: the checks and the
+    * read see the same state, so a DML landing after the replay
+    * cannot mask rows the checks passed. */
   private[graft] def readAppendedFiles(spark: SparkSession,
       tablePath: String, rawPaths: Set[String]): DataFrame = {
     val wanted = rawPaths.map(decode)
-    val st = state(spark, tablePath)
+    val st = stateImpl(spark, tablePath, None, Some(wanted))
+    testAfterReplay()
     val have = st.files.map(_.path).toSet
     val missing = wanted -- have
     require(missing.isEmpty,
@@ -397,15 +400,17 @@ object DeltaLakeRead {
     // durably commit short rows (r13 ADVICE: mirror appendsSince's DV
     // re-add rejection so the race fails loudly BEFORE the batch
     // commits, not on the next batch)
-    val masked = st.files.filter(f => wanted.contains(f.path) &&
-      f.dv.isDefined).map(_.path)
+    val masked = st.files.filter(_.dv.isDefined).map(_.path)
     require(masked.isEmpty,
       s"appended files ${masked.take(3).mkString(", ")} (${masked.size}" +
       s" total) gained deletion vectors in $tablePath before the stream " +
       "consumed them — not a pure append; resync from a fresh snapshot()")
-    snapshotImpl(spark, tablePath, None, withMeta = false,
-      pathFilter = Some(wanted))
+    read(spark, tablePath, st, withMeta = false)
   }
+
+  /** Spec seam mirroring [[DeltaLakeDml.testAfterReplay]]: runs
+    * between [[readAppendedFiles]]' log replay and its read. */
+  private[graft] var testAfterReplay: () => Unit = () => ()
 
   /** The rows of an already-replayed state `st` plus row provenance:
     * every row carries `__file` (the RAW `_metadata.file_path` URI of

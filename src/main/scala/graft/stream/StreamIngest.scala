@@ -25,14 +25,16 @@ object StreamIngest {
       io: TableIO, table: String, idCol: String,
       idOrderCols: Seq[String],
       schema: Option[org.apache.spark.sql.types.StructType] = None): Unit = {
-    // explicit schema is the production path — streaming CSV inference
-    // lands every column as STRING (so e.g. key ordering turns
-    // lexicographic); inference stays available for exploration
-    spark.conf.set("spark.sql.streaming.schemaInference", "true")
-    val reader = spark.readStream.options(Readers.Tolerant)
-      .option("header", "true")
-      .option("recursiveFileLookup", "true")
-    val stream = schema.fold(reader)(reader.schema).csv(sourceDir)
+    // explicit schema is the production path — CSV inference lands
+    // every column as STRING (so e.g. key ordering turns
+    // lexicographic); inference stays available for exploration, as a
+    // batch read over the same files with the same options, so the
+    // session's streaming confs stay as the caller set them
+    val opts = Readers.Tolerant ++
+      Map("header" -> "true", "recursiveFileLookup" -> "true")
+    val fixed = schema.getOrElse(
+      spark.read.options(opts).csv(sourceDir).schema)
+    val stream = spark.readStream.options(opts).schema(fixed).csv(sourceDir)
 
     Drain.drain(spark)(stream.writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>

@@ -285,24 +285,7 @@ class DeltaDmlSpec extends AnyFunSuite {
     val t = newTable()
     DeltaLakeWrite.append((0L until 100L).map(i => (i, i * 10L))
       .toDF("id", "amt").repartition(1), t)
-    def countJobs(body: => Unit): Int = {
-      val n = new java.util.concurrent.atomic.AtomicInteger(0)
-      val l = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-          n.incrementAndGet(); ()
-        }
-      }
-      spark.sparkContext.addSparkListener(l)
-      try {
-        body
-        var prev = -1; var spins = 0
-        while (prev != n.get() && spins < 20) {
-          prev = n.get(); Thread.sleep(100); spins += 1
-        }
-      } finally spark.sparkContext.removeSparkListener(l)
-      n.get()
-    }
+    def countJobs(body: => Unit): Int = JobLog.during(spark)(body).size
     // an UPDATE is exactly three Spark jobs: the matched-position
     // aggregation collect, the executor-side DV-write collect, and
     // the staging write of the rewritten rows. The old

@@ -180,6 +180,23 @@ class DeltaMaintainSpec extends AnyFunSuite {
     assert(e.getMessage.contains("compacted away"))
   }
 
+  test("readAppendedFiles reads the state its checks passed: a DELETE " +
+      "landing after its replay does not shrink the batch") {
+    val t = newTable()
+    DeltaLakeWrite.append((0L until 10L).map(i => (i, s"v$i"))
+      .toDF("id", "v").repartition(1), t)
+    val raw = DeltaLakeRead.state(spark, t).files.map(_.rawPath).toSet
+    DeltaLakeRead.testAfterReplay = () => {
+      DeltaLakeRead.testAfterReplay = () => ()
+      DeltaLakeDml.delete(spark, t, "id < 5"); ()
+    }
+    val batch = try DeltaLakeRead.readAppendedFiles(spark, t, raw)
+      finally DeltaLakeRead.testAfterReplay = () => ()
+    assert(batch.select("id").as[Long].collect().sorted.toSeq ===
+      (0L until 10L), "the batch is the file as appended")
+    assert(ids(t) === (5L until 10L), "the DELETE committed")
+  }
+
   test("appendsSince returns exactly the rows of later pure-append " +
       "commits; DML in the range rejects; vacuumed range rejects") {
     val t = newTable()
@@ -387,6 +404,33 @@ class DeltaMaintainSpec extends AnyFunSuite {
       Seq("url_decode", "regexp_replace", " IN (").foreach(f =>
         assert(!plan.contains(f), s"per-row $f in the rewrite:\n$plan"))
     }
+  }
+
+  test("a one-output-file compaction coalesces: no Exchange in its " +
+      "plans, one file per partition value") {
+    val t = newTable()
+    (0 until 6).foreach { i =>
+      DeltaLakeWrite.append((i * 10 until (i + 1) * 10)
+        .map(j => (j.toLong, if (j % 2 == 0) "en" else "de"))
+        .toDF("id", "lang").repartition(1), t, partitionBy = Seq("lang"))
+    }
+    DeltaLakeDml.delete(spark, t, "id % 10 = 3")
+    val want = DeltaLakeRead.snapshot(spark, t)
+      .as[(Long, String)].collect().sortBy(_._1).toSeq
+    var r: DeltaLakeMaintain.CompactResult = null
+    val qes = executions { r = DeltaLakeMaintain.compact(spark, t) }
+    assert(r.filesRemoved === 12 && r.filesWritten === 2)
+    qes.foreach { qe =>
+      val ex = Aqe.collect(qe.executedPlan) {
+        case e: org.apache.spark.sql.execution.exchange.Exchange => e
+      }
+      assert(ex.isEmpty, s"compaction shuffled:\n${qe.executedPlan}")
+    }
+    val files = DeltaLakeRead.state(spark, t).files
+    assert(files.groupBy(_.partitionValues("lang")).map { case (k, fs) =>
+      k -> fs.size } === Map(Some("de") -> 1, Some("en") -> 1))
+    assert(DeltaLakeRead.snapshot(spark, t)
+      .as[(Long, String)].collect().sortBy(_._1).toSeq === want)
   }
 
   test("an append landing between compaction's replay and its scan " +

@@ -105,4 +105,23 @@ class MedallionSpec extends AnyFunSuite {
       .agg(max("cd_bronze_id")).first().getLong(0) === 5L)
     assert(gold3.filter(col("Date") === "2026-01-02").count() === 1)
   }
+
+  test("a full DAG run submits no schema-inference job: every medallion " +
+      "read plans from the recorded schema") {
+    val src = Files.createTempDirectory("uber_src").toString
+    val ck = Files.createTempDirectory("uber_ck").toString
+    val io = new ParquetTableIO(Files.createTempDirectory("uber_wh").toString)
+    csvDay(src, "2026-01-01", Seq(
+      "2026-01-01,GEN-001,Completed,Bike,150,5.0",
+      "2026-01-01,GEN-002,Completed,Auto,300,10.0"))
+    var gold: Array[org.apache.spark.sql.Row] = null
+    val jobs = JobLog.during(spark) {
+      gold = runPipeline(src, ck, io).collect()
+    }
+    assert(gold.length === 2)
+    assert(jobs.nonEmpty)
+    val reads = jobs.filter(j => j.site.startsWith("parquet at TableIO") ||
+      j.stack.contains("ParquetTableIO.read("))
+    assert(reads.isEmpty, s"inference jobs: ${reads.map(_.site)}")
+  }
 }

@@ -166,26 +166,7 @@ class Round2OpsSpec extends AnyFunSuite {
       .toDF("id_a", "id_b").repartition(2)
     val expect = Clusters.connectedComponents(pairs, "id_a", "id_b")
       .as[(Long, Long)].collect().toMap
-    def countJobs(body: => Unit): Int = {
-      val n = new java.util.concurrent.atomic.AtomicInteger(0)
-      val l = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-          n.incrementAndGet(); ()
-        }
-      }
-      spark.sparkContext.addSparkListener(l)
-      try {
-        body
-        // listener delivery is async: poll until the count settles
-        var prev = -1
-        var spins = 0
-        while (prev != n.get() && spins < 20) {
-          prev = n.get(); Thread.sleep(100); spins += 1
-        }
-      } finally spark.sparkContext.removeSparkListener(l)
-      n.get()
-    }
+    def countJobs(body: => Unit): Int = JobLog.during(spark)(body).size
     // hinted-small and unhinted calls share the single bounded probe
     // collect (no separate count sizing pass), so their job counts are
     // IDENTICAL — the r7 count-then-collect pair would make the

@@ -80,6 +80,31 @@ class StreamingSpec extends AnyFunSuite {
     assert(got === Seq((1L, 1L), (2L, 2L), (3L, 3L)))
   }
 
+  test("schema-less ingest infers the CSV schema without touching the " +
+      "session's streaming schemaInference conf") {
+    val src = tmp("csv_infer"); val ck = tmp("ck_infer")
+    val io = new ParquetTableIO(tmp("tbl_infer"))
+    Files.writeString(java.nio.file.Paths.get(s"$src/f1.csv"),
+      "k,v\n2,b\n1,a\n")
+    val key = "spark.sql.streaming.schemaInference"
+    val saved = spark.conf.getOption(key)
+    // a value schema-less streaming reads would refuse: ingest must not
+    // depend on it, nor change it
+    spark.conf.set(key, "false")
+    try {
+      StreamIngest.ingestCsv(spark, src, ck, io, "t", "id", Seq("k"))
+      assert(spark.conf.getOption(key) === Some("false"))
+    } finally saved.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    val t = io.read(spark, "t")
+    // CSV inference without inferSchema: every column a string
+    assert(t.schema.map(f => f.name -> f.dataType) === Seq(
+      "id" -> org.apache.spark.sql.types.LongType,
+      "k" -> org.apache.spark.sql.types.StringType,
+      "v" -> org.apache.spark.sql.types.StringType))
+    assert(t.orderBy("id").as[(Long, String, String)].collect().toSeq ===
+      Seq((1L, "1", "a"), (2L, "2", "b")))
+  }
+
   test("streaming CDC apply: later batch overrides earlier; deletes drop keys; restart is a no-op") {
     val src = tmp("cdc_src"); val ck = tmp("cdc_ck"); val tbl = tmp("cdc_tbl")
     val io = new ParquetTableIO(tbl)

@@ -1,16 +1,19 @@
 package graft
 
 import graft.ingest.ParquetTableIO
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
+import java.io.File
 import java.nio.file.Files
 
 class TableIOSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   import spark.implicits._
 
-  private def newIO() = new ParquetTableIO(
-    Files.createTempDirectory("graft_io").toString)
+  private def newRoot() = Files.createTempDirectory("graft_io").toString
+  private def newIO() = new ParquetTableIO(newRoot())
 
   test("append accumulates; overwrite replaces") {
     val io = newIO()
@@ -100,5 +103,138 @@ class TableIOSpec extends AnyFunSuite {
     assert(got.orderBy("k").as[(Int, String, String)].collect().toSeq ===
       Seq((1, "a", "x"), (2, "b", "x"), (30, "c2", "y")))
     assert(xFiles === xBefore)
+  }
+
+  // ---- the recorded schema -----------------------------------------
+
+  private def inferred(dir: String): StructType =
+    spark.read.option("mergeSchema", "true").parquet(dir).schema
+
+  private def dataFiles(dir: File): Seq[String] =
+    Option(dir.listFiles()).getOrElse(Array.empty).toSeq.flatMap { f =>
+      if (f.isDirectory) dataFiles(f)
+      else if (f.getName.endsWith(".parquet")) Seq(f.getPath) else Nil
+    }.sorted
+
+  private def rows(df: DataFrame): Seq[String] =
+    df.collect().map(_.toString).sorted.toSeq
+
+  private final case class Case(name: String, build: ParquetTableIO => Unit)
+
+  test("read plans from the recorded schema: no Spark job, and the " +
+      "schema mergeSchema inference returns (names, order, types, " +
+      "nullability), partition types included") {
+    val typed = spark.range(6).select(
+      col("id").cast("int").as("k"),
+      (col("id") * 1.25).cast("decimal(12,2)").as("amt"),
+      date_add(lit("2026-01-01").cast("date"), col("id").cast("int")).as("d"),
+      timestamp_seconds(col("id") * 3600 + 1767261600L).as("ts"),
+      array(col("id"), col("id") + 1).as("arr"),
+      map(lit("n"), col("id")).as("m"),
+      struct(col("id").as("a"), lit("x").as("b")).as("st"),
+      lit("abc").cast("char(5)").as("c5"),
+      lit("abc").cast("varchar(10)").as("vc"))
+    val cases = Seq(
+      Case("plain", { io =>
+        io.append(Seq((1, "a"), (2, "b")).toDF("k", "v"), "t")
+        io.append(Seq((3, "c")).toDF("k", "v"), "t")
+      }),
+      Case("partitionBy, inferred int and date partition types", { io =>
+        io.append(Seq((1, "a", 7, "2026-01-01"), (2, "b", 8, "2026-01-02"))
+          .toDF("k", "v", "part", "day"), "t", Seq("part", "day"))
+      }),
+      Case("evolved by append", { io =>
+        io.append(Seq((1, "a")).toDF("k", "v"), "t")
+        io.append(Seq((2, "b", 9.5, Seq(1L))).toDF("k", "v", "x", "xs"), "t")
+        io.append(Seq((3, "c")).toDF("k", "v"), "t")
+      }),
+      Case("overwritePartitions adds a column", { io =>
+        io.overwrite(Seq((1, "a", "x"), (2, "b", "y")).toDF("k", "v", "part"),
+          "t", Seq("part"))
+        io.overwritePartitions(Seq((3, "c", 1.5, "y"))
+          .toDF("k", "v", "extra", "part"), "t", Seq("part"))
+      }),
+      Case("compact", { io =>
+        io.append(Seq((1, "a"), (2, "b")).toDF("k", "v"), "t")
+        io.append(Seq((3, "c", 2.5)).toDF("k", "v", "x"), "t")
+        io.compact(spark, "t", numFiles = 1)
+      }),
+      Case("compactClustered", { io =>
+        io.overwrite(spark.range(40).toDF("k").repartition(4), "t")
+        io.compactClustered(spark, "t", numFiles = 2, clusterCols = Seq("k"))
+      }),
+      Case("upsert", { io =>
+        io.upsert(spark, Seq((1, "a")).toDF("k", "v"), "t", Seq("k"))
+        io.upsert(spark, Seq((1, "b"), (2, "c")).toDF("k", "v"), "t", Seq("k"))
+      }),
+      Case("decimal, date, timestamp, array, map, struct, char/varchar " +
+        "casts", { io => io.overwrite(typed, "t"); io.append(typed, "t") }))
+    cases.foreach { case Case(name, build) =>
+      val root = newRoot()
+      val io = new ParquetTableIO(root)
+      build(io)
+      val tableDir = s"$root/t"
+      assert(new File(tableDir, ParquetTableIO.SchemaFile).isFile, name)
+      var got: StructType = null
+      val jobs = JobLog.during(spark) { got = io.read(spark, "t").schema }
+      assert(jobs.isEmpty, s"$name: read submitted ${jobs.map(_.site)}")
+      assert(got === inferred(tableDir), name)
+      // the rows read the same through either schema
+      assert(rows(io.read(spark, "t")) === rows(
+        spark.read.option("mergeSchema", "true").parquet(tableDir)
+          .select(got.fieldNames.map(col): _*)), name)
+    }
+  }
+
+  test("a directory written by plain df.write reads by inference, and " +
+      "an append keeps it on inference") {
+    val root = newRoot()
+    Seq((1, "a")).toDF("k", "v").write.parquet(s"$root/t")
+    val io = new ParquetTableIO(root)
+    var got: StructType = null
+    val jobs = JobLog.during(spark) { got = io.read(spark, "t").schema }
+    assert(jobs.nonEmpty, "the inference path runs a footer job")
+    assert(got === inferred(s"$root/t"))
+    io.append(Seq((2, "b", 1.5)).toDF("k", "v", "x"), "t")
+    assert(!new File(s"$root/t", ParquetTableIO.SchemaFile).exists())
+    assert(io.read(spark, "t").columns.toSeq === Seq("k", "v", "x"))
+    assert(io.read(spark, "t").count() === 2)
+  }
+
+  test("an incompatible append fails before any data file lands; the " +
+      "table stays readable and unchanged") {
+    val root = newRoot()
+    val io = new ParquetTableIO(root)
+    io.append(Seq((1, "a"), (2, "b")).toDF("k", "v"), "t")
+    val dir = new File(s"$root/t")
+    val schemaFile = new File(dir, ParquetTableIO.SchemaFile).toPath
+    val before = (Files.readAllBytes(schemaFile).toSeq, dataFiles(dir),
+      rows(io.read(spark, "t")))
+    // int k against string k: no merge, where inference would accept
+    // the append and fail the next read
+    intercept[Exception] {
+      io.append(Seq(("x", "c")).toDF("k", "v"), "t")
+    }
+    assert((Files.readAllBytes(schemaFile).toSeq, dataFiles(dir),
+      rows(io.read(spark, "t"))) === before)
+  }
+
+  test("an append whose write throws leaves the recorded schema, and " +
+      "for a new table the directory, as it was") {
+    val root = newRoot()
+    val io = new ParquetTableIO(root)
+    io.append(Seq((1, "a")).toDF("k", "v"), "t")
+    val dir = new File(s"$root/t")
+    val schemaFile = new File(dir, ParquetTableIO.SchemaFile).toPath
+    val before = Files.readAllBytes(schemaFile).toSeq
+    // widens the schema, then fails inside the write job
+    val failing = Seq((2, "b")).toDF("k", "v").withColumn("extra",
+      when(col("k") > 0, raise_error(lit("boom"))).otherwise(lit(1.5)))
+    intercept[Exception](io.append(failing, "t"))
+    assert(Files.readAllBytes(schemaFile).toSeq === before)
+    assert(io.read(spark, "t").columns.toSeq === Seq("k", "v"))
+    assert(rows(io.read(spark, "t")) === Seq("[1,a]"))
+    intercept[Exception](io.append(failing, "fresh"))
+    assert(!io.exists(spark, "fresh"))
   }
 }
