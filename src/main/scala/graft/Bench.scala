@@ -48,14 +48,12 @@ object Bench {
         spark.catalog.dropTempView(sinkName)
         (System.nanoTime() - t0) / 1e9
       }
-      // Both runs execute under the same Drain confs every real
-      // streaming query drains under since round 15 — the probe must
-      // measure the machinery those queries actually pay (the r14
-      // artifact keeps the pre-Drain figure, 0.93 s, for comparison).
-      graft.stream.Drain.withDrainConfs(spark) {
-        noopStream(0) // warm-up run absorbs the one-time classloading
-        streamOverheadSec = noopStream(1) // steady-state machinery cost
-      }
+      // Both runs execute under the drain confs the session factory
+      // sets for every streaming query, so the probe measures the
+      // machinery those queries pay (the r14 artifact keeps the
+      // pre-drain-conf figure, 0.93 s, for comparison).
+      noopStream(0) // warm-up run absorbs the one-time classloading
+      streamOverheadSec = noopStream(1) // steady-state machinery cost
       def rmTree(f: java.io.File): Unit = {
         if (f.isDirectory)
           Option(f.listFiles()).getOrElse(Array.empty).foreach(rmTree)

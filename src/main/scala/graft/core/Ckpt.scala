@@ -20,6 +20,8 @@ import org.apache.spark.sql.DataFrame
   * release early, and pin read-before-write ordering in the dedup
   * index paths — skipping them only degrades speed, not results, but
   * the degradation is the very thing the checkpoints were added for.
+  * It is a session conf because the tool runs ordinary query code, not
+  * a Ckpt call it could pass a flag to.
   */
 object Ckpt {
   def local(df: DataFrame, eager: Boolean = true): DataFrame =

@@ -23,7 +23,8 @@ import org.apache.spark.sql.types.DecimalType
   * count, merge order, and engine — THE fix a 100 TB deployment would
   * ship for money columns. The flag flips the ORACLE the same way, so
   * the DuckDB gate checks the decimal path end-to-end rather than
-  * special-casing it.
+  * special-casing it; that is why it is an environment variable, which
+  * the engine and the oracle script both read, not a constant.
   */
 object Money {
   val decimal: Boolean = sys.env.get("SPARK_GRAFT_DECIMAL_SUMS").contains("1")

@@ -4,6 +4,7 @@ import graft.functions.RollingHashExpr
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import scala.collection.concurrent.TrieMap
 
 /** The engine's one session constructor (SURVEY §7 core/): every main,
   * lakebench and the test suite build their session here, so
@@ -52,6 +53,47 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   *    and only that reader's id-mode schemas do, so every other read
   *    resolves by name exactly as before. A session conf, not a
   *    per-read switch, so no read changes the session it runs on.
+  *  - `spark.sql.parquet.fieldId.write.enabled=true`: the writer half
+  *    of the same handle. Staging writes for an id-mode table put
+  *    `parquet.field.id` into the file footers, which is what id-mode
+  *    readers resolve by ([[graft.ingest.DeltaLakeWrite.toPhysical]]).
+  *    Spark 4.1 already defaults it to true; pinning it here keeps the
+  *    guarantee without a save-and-restore around every id-mode write.
+  *    It engages only for write schemas that carry the metadata.
+  *  - `spark.sql.legacy.parquet.nanosAsLong=true`: `events.parquet`
+  *    has shipped with a TIMESTAMP(NANOS) `ts`, which Spark's
+  *    vectorized reader rejects outright; with this conf it surfaces
+  *    as LONG and [[Tables]] converts it. It affects only NANOS-typed
+  *    columns, and it must be live at physical-planning time, not only
+  *    while the frame is built, so it is a session conf.
+  *  - `spark.sql.streaming.noDataMicroBatches.enabled=false`,
+  *    `spark.sql.streaming.stateStore.maintenanceInterval=1h` and
+  *    `spark.sql.streaming.minBatchesToRetain=2`: every stream the
+  *    engine starts is a `Trigger.AvailableNow` drain (`.start()` then
+  *    `awaitTermination()`): start, consume the backlog, stop.
+  *    Three long-lived-query defaults are pure overhead in that shape
+  *    (measured with `tools/StreamOverhead`: stateful drain
+  *    0.92 → 0.64 s, watermarked complete shape 1.54 → 1.33 s):
+  *     - the trailing zero-row batch exists to let watermark-gated
+  *       operators emit or evict with no new data. Every operator the
+  *       engine drains emits its rows in DATA batches (foreachBatch
+  *       sinks guard on empty batches; complete-mode aggregation
+  *       re-emits the full result each batch; stream-stream inner
+  *       joins emit at match time; flatMapGroupsWithState and
+  *       dropDuplicatesWithinWatermark emit on first sight), so the
+  *       no-data batch only evicts state, which the next drain's first
+  *       data batch does identically from the persisted watermark. No
+  *       append-mode watermarked aggregation exists in the engine; that
+  *       shape would NOT be drain-safe, so one must not be added
+  *       without revisiting this conf;
+  *     - background snapshot and cleanup threads are for day-long
+  *       queries; a drain's state is final at its last commit, and the
+  *       next drain restores from the delta files;
+  *     - checkpoint GC breadth is not correctness: a restart only
+  *       needs the last committed batch (+1 in flight).
+  *
+  *    None of these is a local-mode tuning: they remove fixed
+  *    per-query machinery that costs the same on a 1000-core cluster.
   *  - `spark.sql.shuffle.partitions`, when given: callers size it to
   *    their core count so every core gets one shuffle task wave (the
   *    200 default made one curateV2 pass take 36 s on 4 cores).
@@ -65,24 +107,61 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   */
 object SessionFactory {
 
+  /** The three drain confs above; `tools/StreamOverhead` measures
+    * against them. */
+  private[graft] val drainConfs = Map(
+    "spark.sql.streaming.noDataMicroBatches.enabled" -> "false",
+    "spark.sql.streaming.stateStore.maintenanceInterval" -> "1h",
+    "spark.sql.streaming.minBatchesToRetain" -> "2")
+
+  /** The runtime SQL confs above. */
+  private val runtimeConfs = Map(
+    "spark.sql.session.timeZone" -> "UTC",
+    "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning" -> "true",
+    "spark.sql.parquet.fieldId.read.enabled" -> "true",
+    "spark.sql.parquet.fieldId.write.enabled" -> "true",
+    "spark.sql.legacy.parquet.nanosAsLong" -> "true") ++ drainConfs
+
   /** The factory's builder, for callers that must add static
     * deployment confs (warehouse dir, Hive catalog) before the session
     * exists. Runtime SQL confs a single tool needs go through
-    * `spark.conf.set` after [[build]] instead. */
+    * `spark.conf.set` after [[build]] instead; library code never sets
+    * one (it uses [[child]]). */
   def builder(master: String,
       shufflePartitions: Option[Int] = None): SparkSession.Builder = {
     val b = SparkSession.builder()
       .master(master)
       .withExtensions(new GraftExtensions)
-      .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
       .config("spark.sql.codegen.cache.maxEntries", "4096")
-      .config("spark.sql.parquet.fieldId.read.enabled", "true")
+    runtimeConfs.foreach { case (k, v) => b.config(k, v) }
     shufflePartitions.foreach(n =>
       b.config("spark.sql.shuffle.partitions", n.toString))
     b
+  }
+
+  /** Children by parent session, then by overrides. Weak in the parent,
+    * like [[Tables]]' memo; a child does not reference its parent. */
+  private val children = new java.util.WeakHashMap[SparkSession,
+    TrieMap[Map[String, String], SparkSession]]()
+
+  /** A session on `spark`'s context (shared cache and catalog of
+    * tables, its own temp views) running under `spark`'s runtime confs
+    * as they are now, then `overrides`. The one way library code runs a
+    * plan under different runtime confs without changing the caller's
+    * session. One child per parent and overrides, reused: each session
+    * that starts a stream adds a listener bus to the context for good. */
+  def child(spark: SparkSession,
+      overrides: Map[String, String]): SparkSession = {
+    val c = children.synchronized(
+      children.computeIfAbsent(spark, _ => TrieMap.empty))
+      .getOrElseUpdate(overrides, spark.newSession())
+    val want = spark.conf.getAll ++ overrides
+    (c.conf.getAll.keySet -- want.keySet).foreach(c.conf.unset)
+    want.foreach { case (k, v) =>
+      if (!c.conf.getOption(k).contains(v)) c.conf.set(k, v)
+    }
+    c
   }
 
   def build(master: String,

@@ -67,15 +67,13 @@ object Tables {
     // events.parquet's `ts` column has shipped as TIMESTAMP(NANOS) —
     // which Spark's vectorized reader rejects outright — and as plain
     // TIMESTAMP(MICROS). Handle both by inspecting the read schema:
-    // nanos surface as LONG (legacy.parquet.nanosAsLong) and convert
-    // with integral division (floor — matches DuckDB's ns→us
-    // truncation); micros surface as TIMESTAMP_NTZ and cast to
-    // session-tz TIMESTAMP (UTC everywhere here, so the instants are
-    // identical and downstream watermarks/windows see one type).
+    // nanos surface as LONG (legacy.parquet.nanosAsLong, a
+    // SessionFactory conf) and convert with integral division (floor —
+    // matches DuckDB's ns→us truncation); micros surface as
+    // TIMESTAMP_NTZ and cast to session-tz TIMESTAMP (UTC everywhere
+    // here, so the instants are identical and downstream
+    // watermarks/windows see one type).
     if (name == "events") {
-      // stays set for the session: only affects NANOS-typed columns,
-      // and must be live at physical-planning time, not just here.
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       val raw = spark.read.parquet(s"$dir/$name.parquet")
       raw.schema("ts").dataType match {
         case org.apache.spark.sql.types.LongType =>
@@ -90,21 +88,21 @@ object Tables {
     } else spark.read.parquet(s"$dir/$name.parquet")
   }
 
-  private val MarkerKey = "graft.tables.registeredDir"
+  /** The dir each session last registered, keyed weakly by session
+    * like [[resolved]]; a String value does not pin the session. */
+  private val registered = new java.util.WeakHashMap[SparkSession, String]()
 
   /** Register every table as a temp view so `spark.sql` works against
     * the same names the DuckDB oracle uses. Idempotent per (session,
-    * dir) via SESSION-scoped state (a conf marker + a catalog probe) —
-    * repeated callers pay the view-creation planning cost once, a
-    * fresh session (empty catalog, no marker) re-registers, and no
-    * global memo can outlive or collide across sessions. Synchronized
-    * so concurrent callers with different dirs cannot interleave view
-    * creation and leave a mixed catalog behind. */
+    * dir) — repeated callers pay the view-creation planning cost once,
+    * and a session whose views were dropped (catalog probe) or that
+    * registered another dir re-registers. Synchronized so concurrent
+    * callers with different dirs cannot interleave view creation and
+    * leave a mixed catalog behind. */
   def registerAll(spark: SparkSession, dir: String): Unit = synchronized {
-    val current = spark.conf.getOption(MarkerKey)
-    if (!current.contains(dir) || !spark.catalog.tableExists(names.last)) {
+    if (registered.get(spark) != dir || !spark.catalog.tableExists(names.last)) {
       names.foreach(n => load(spark, dir, n).createOrReplaceTempView(n))
-      spark.conf.set(MarkerKey, dir)
+      registered.put(spark, dir)
     }
   }
 }

@@ -55,14 +55,14 @@ object LocalLinkBackend extends CommitBackend {
     val dir = slot.getParentFile
     dir.mkdirs()
     val tmp = File.createTempFile(".commit", ".tmp", dir)
-    Files.write(tmp.toPath, content)
     try {
+      Files.write(tmp.toPath, content)
       Files.createLink(slot.toPath, tmp.toPath)
-      tmp.delete()
       true
     } catch {
-      case _: FileAlreadyExistsException =>
-        tmp.delete(); false
+      case _: FileAlreadyExistsException => false
+    } finally {
+      tmp.delete(); ()
     }
   }
 

@@ -54,7 +54,7 @@ import scala.jdk.CollectionConverters._
   * append to land under a concurrent DELETE). Any intervening
   * remove/DV re-add/metaData/protocol change rolls back this
   * attempt's staged files and DV bins and RECOMPUTES against the new
-  * head (up to `spark.graft.delta.dml.maxRetries`, default 5), so
+  * head (up to 5 times), so
   * racing mutators SERIALIZE — two disjoint DELETEs both land, two
   * overlapping ones apply one after the other — instead of the loser
   * silently dropping the winner's deletes. Sustained conflict aborts
@@ -77,7 +77,7 @@ object DeltaLakeDml {
   /** DELETE FROM table WHERE `condition` (a SQL boolean over the
     * table's logical columns). */
   def delete(spark: SparkSession, tablePath: String,
-      condition: String): DmlResult = withRetries(spark) {
+      condition: String): DmlResult = withRetries {
     val st = gated(spark, tablePath)
     val t = DeltaLakeRead.snapshotMeta(spark, tablePath, st)
     val cond = expr(condition)
@@ -94,7 +94,7 @@ object DeltaLakeDml {
     * assignments applied (expressions see the OLD row, standard
     * UPDATE semantics). */
   def update(spark: SparkSession, tablePath: String, condition: String,
-      set: Map[String, String]): DmlResult = withRetries(spark) {
+      set: Map[String, String]): DmlResult = withRetries {
     val st = gated(spark, tablePath)
     val unknown = set.keySet -- st.schema.fieldNames.toSet
     require(unknown.isEmpty,
@@ -126,7 +126,7 @@ object DeltaLakeDml {
     * matching n target rows DV-deletes n rows and lands n postimage
     * copies — the table's row count is preserved, not shrunk. */
   def upsert(spark: SparkSession, tablePath: String, source: DataFrame,
-      keys: Seq[String]): DmlResult = withRetries(spark) {
+      keys: Seq[String]): DmlResult = withRetries {
     val st = gated(spark, tablePath)
     require(keys.nonEmpty, "upsert needs at least one key column")
     val logical = st.schema.fieldNames.toSet
@@ -322,8 +322,7 @@ object DeltaLakeDml {
     // running two sequential write jobs per mutation. Both gate on the
     // same inputs computed above; the early no-op exit below deletes
     // whatever an overlapped stage landed.
-    val (staged, cdcStaged) = DeltaLakeWrite.withFieldIdWrite(spark,
-      Some(st)) {
+    val (staged, cdcStaged) =
       if (cdcEnabled && (forceInsert || rowsDeleted > 0)) {
         import scala.concurrent.{Await, Future}
         import scala.concurrent.duration.Duration
@@ -337,7 +336,6 @@ object DeltaLakeDml {
         val s = stageReplacement()
         (s, if (written.isEmpty && s.isEmpty) Nil else stageCdc())
       }
-    }
     // footer row counts of the just-staged files — the source plan
     // already ran once inside stageData; re-running it for a count
     // was a full second scan per DML call
@@ -472,26 +470,26 @@ object DeltaLakeDml {
       s"mutation computed against it (conflicting commit at " +
       s"$conflictVersion)")
 
+  /** Recomputes a mutation may spend on commit races before it gives
+    * up ([[withRetries]]). */
+  private val MaxRetries = 5
+
   /** Re-execute `op` from scratch on each commit race, up to
-    * `spark.graft.delta.dml.maxRetries` (default 5) recomputes —
+    * [[MaxRetries]] recomputes —
     * optimistic concurrency by full re-execution, the same pattern
     * [[VersionedTableIO]]'s concurrent-DV-delete path proves out.
     * Exhaustion aborts loudly: sustained conflict means the caller is
     * racing mutators faster than they can serialize. */
-  private def withRetries(spark: SparkSession)
-      (op: => DmlResult): DmlResult = {
-    val max = spark.conf.get("spark.graft.delta.dml.maxRetries", "5")
-      .toInt
+  private def withRetries(op: => DmlResult): DmlResult = {
     var tries = 0
     while (true) {
       try return op
       catch {
         case e: CommitRaceException =>
           tries += 1
-          if (tries > max) throw new IllegalStateException(
-            s"giving up after $max recomputes: ${e.getMessage} — " +
-            "serialize the racing mutators or raise " +
-            "spark.graft.delta.dml.maxRetries", e)
+          if (tries > MaxRetries) throw new IllegalStateException(
+            s"giving up after $MaxRetries recomputes: ${e.getMessage} " +
+            "— serialize the racing mutators", e)
       }
     }
     throw new IllegalStateException("unreachable")

@@ -114,9 +114,7 @@ object DeltaLakeMaintain {
       if (nOut == 1) live.coalesce(1) else live.repartition(nOut), st)
     val physParts = st.partitionColumns.map(c =>
       DeltaLakeRead.physFieldName(st.schema(c)))
-    val staged = DeltaLakeWrite.withFieldIdWrite(spark, Some(st)) {
-      DeltaLakeWrite.stageData(phys, new File(tablePath), physParts)
-    }
+    val staged = DeltaLakeWrite.stageData(phys, new File(tablePath), physParts)
 
     testBeforeCommit()
     val now = System.currentTimeMillis()

@@ -81,6 +81,10 @@ object DeltaLakeRead {
 
   private val mapper = new ObjectMapper()
 
+  /** Checkpoint bytes from which [[stateImpl]] reconciles file actions
+    * as a DataFrame instead of replaying them on the driver. */
+  private val DistributedStateMinBytes: Long = 8L * 1024 * 1024
+
   /** One active data file: table-relative decoded path, the raw
     * (log-encoded) path — kept verbatim for checkpoint re-emission —
     * the partition-column values the log assigns it (null = SQL
@@ -317,7 +321,13 @@ object DeltaLakeRead {
     * pruned multi-file read; cost is O(files added in range), never
     * O(table). */
   def appendsSince(spark: SparkSession, tablePath: String,
-      sinceVersion: Long): DataFrame = {
+      sinceVersion: Long): DataFrame =
+    appendsSince(spark, tablePath, sinceVersion, DistributedStateMinBytes)
+
+  /** [[appendsSince]] with the state path's size threshold given (see
+    * [[stateImpl]]). */
+  private[graft] def appendsSince(spark: SparkSession, tablePath: String,
+      sinceVersion: Long, minBytes: Long): DataFrame = {
     val (commits, checkpoints, v2cps) = listLog(tablePath)
     val latest = (commits.keySet ++ checkpoints.keySet ++ v2cps.keySet)
       .maxOption.getOrElse(throw new IllegalArgumentException(
@@ -369,7 +379,7 @@ object DeltaLakeRead {
         }
     }
     snapshotImpl(spark, tablePath, None, withMeta = false,
-      pathFilter = Some(added.toSet))
+      pathFilter = Some(added.toSet), minBytes)
   }
 
   /** Read a specific set of appended files (RAW log-encoded relative
@@ -426,11 +436,12 @@ object DeltaLakeRead {
 
   private def snapshotImpl(spark: SparkSession, tablePath: String,
       versionAsOf: Option[Long], withMeta: Boolean,
-      pathFilter: Option[Set[String]] = None): DataFrame =
+      pathFilter: Option[Set[String]] = None,
+      minBytes: Long = DistributedStateMinBytes): DataFrame =
     // the filter flows into the state read itself: distributed-mode
     // tables prune BEFORE the collect (batch-size rows to the driver)
-    read(spark, tablePath,
-      stateImpl(spark, tablePath, versionAsOf, pathFilter), withMeta)
+    read(spark, tablePath, stateImpl(spark, tablePath, versionAsOf,
+      pathFilter, minBytes), withMeta)
 
   /** Read the active files of `st` (column mapping, partitions and DV
     * masking resolved) — no log replay, so a caller holding a state
@@ -612,7 +623,9 @@ object DeltaLakeRead {
     * scan and the same resolution asserts that the masked rows number
     * exactly the descriptors' total cardinality — turning any silent
     * fail-open path mismatch (or a truncated data file) into a loud
-    * error. */
+    * error. It stays a session conf, unlike the engine's size guards,
+    * because it is a safety check rather than a tuning: the specs turn
+    * it on for a whole block of reads, and production leaves it off. */
   private def subtractDeleted(spark: SparkSession, root: String,
       df: DataFrame, dvFiles: Seq[AddFile],
       keepMeta: Boolean = false): DataFrame = {
@@ -657,10 +670,13 @@ object DeltaLakeRead {
     * Driver mode filters after replay (its cost is the replay
     * itself). Guarded to modest set sizes; larger sets fall back to
     * the post-collect filter rather than bloating the plan with a
-    * giant IN list. */
-  private[ingest] def stateImpl(spark: SparkSession, tablePath: String,
+    * giant IN list. Distributed mode engages from `minBytes` of
+    * checkpoint ([[DistributedStateMinBytes]]; specs pass 0 or
+    * `Long.MaxValue` to check the two paths agree). */
+  private[graft] def stateImpl(spark: SparkSession, tablePath: String,
       versionAsOf: Option[Long],
-      pathFilter: Option[Set[String]]): Snapshot = {
+      pathFilter: Option[Set[String]],
+      minBytes: Long = DistributedStateMinBytes): Snapshot = {
     val (commits, checkpoints, v2cps) = listLog(tablePath)
     val latest =
       (commits.keySet ++ checkpoints.keySet ++ v2cps.keySet).maxOption
@@ -704,14 +720,7 @@ object DeltaLakeRead {
     // algebra applyLine implements — and the driver receives exactly
     // one typed row per final file/tombstone. Non-file actions are a
     // handful of rows, collected via a pushed-down null filter through
-    // the SAME applyLine parser. `spark.graft.delta.distributedState`:
-    // auto (default, engages at distributedStateMinBytes of checkpoint
-    // bytes), force, off.
-    val distSetting =
-      spark.conf.get("spark.graft.delta.distributedState", "auto")
-    val distMinBytes = spark.conf.get(
-      "spark.graft.delta.distributedStateMinBytes",
-      (8L * 1024 * 1024).toString).toLong
+    // the SAME applyLine parser.
     val cpBytes: Long = cp.map { v =>
       if (cpClassic.contains(v)) checkpoints(v).map(_.length).sum
       else {
@@ -721,11 +730,7 @@ object DeltaLakeRead {
           .getOrElse(Array.empty[File]).map(_.length).sum
       }
     }.getOrElse(0L)
-    val distributed = distSetting match {
-      case "force" => true
-      case "off" => false
-      case _ => cpBytes >= distMinBytes
-    }
+    val distributed = cpBytes >= minBytes
     // commit-line file actions (bounded by appends since the
     // checkpoint) and checkpoint/sidecar file-action frames, merged in
     // one reconciliation pass after replay

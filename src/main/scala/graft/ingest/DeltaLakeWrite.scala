@@ -254,9 +254,7 @@ object DeltaLakeWrite {
         col(DeltaLakeRead.quoted(f.name))): _*)
     }
 
-    val staged = withFieldIdWrite(df.sparkSession, stOpt) {
-      stageData(physDf, root, physPartitionBy)
-    }
+    val staged = stageData(physDf, root, physPartitionBy)
     val now = System.currentTimeMillis()
     // an identity allocation moves the column's high watermark: the
     // SAME commit carries the updated metaData, so a crashed append
@@ -522,7 +520,8 @@ object DeltaLakeWrite {
     * included) ALSO carries `parquet.field.id` from the log schema's
     * `delta.columnMapping.id`, which Spark's parquet writer emits
     * into the file footer (`spark.sql.parquet.fieldId.write.enabled`,
-    * on by default) — the resolution handle id-mode readers match by.
+    * a [[graft.core.SessionFactory]] conf) — the resolution handle
+    * id-mode readers match by.
     * Identity for unmapped tables. */
   private[ingest] def toPhysical(df: DataFrame,
       st: DeltaLakeRead.Snapshot,
@@ -531,10 +530,7 @@ object DeltaLakeWrite {
     if (cm == "none") df
     else {
       // parquet.field.id footers need spark.sql.parquet.fieldId.write
-      // .enabled at WRITE time — pinned by [[withFieldIdWrite]] around
-      // the staging write (save/restore, not a permanent session
-      // mutation: a session that disabled it for unrelated writes gets
-      // it back — round-14 ADVICE fix)
+      // .enabled at WRITE time — a SessionFactory conf
       val fieldMeta: org.apache.spark.sql.types.StructField =>
           org.apache.spark.sql.types.Metadata =
         if (cm == "id") { f =>
@@ -554,30 +550,6 @@ object DeltaLakeWrite {
       } ++ passthrough.map(c => col(DeltaLakeRead.quoted(c))): _*)
     }
   }
-
-  /** Pin `spark.sql.parquet.fieldId.write.enabled=true` around a
-    * staging write for an id-mode table, restoring the caller's value
-    * after — the footer ids are what id-mode readers resolve by, but
-    * the pin must not leak into the session (a session that disabled
-    * the flag for unrelated writes keeps its setting). Serialized so
-    * concurrent staging writes on one session cannot interleave
-    * set/restore. No-op for unmapped and name-mode tables (the flag
-    * only engages when the write schema carries parquet.field.id). */
-  private[ingest] def withFieldIdWrite[T](
-      spark: org.apache.spark.sql.SparkSession,
-      st: Option[DeltaLakeRead.Snapshot])(body: => T): T = {
-    val idMode = st.exists(
-      _.config.get("delta.columnMapping.mode").contains("id"))
-    if (!idMode) body
-    else fieldIdLock.synchronized {
-      val key = "spark.sql.parquet.fieldId.write.enabled"
-      val prev = spark.conf.getOption(key)
-      spark.conf.set(key, "true")
-      try body
-      finally prev.fold(spark.conf.unset(key))(v => spark.conf.set(key, v))
-    }
-  }
-  private val fieldIdLock = new Object
 
   /** Stage `df` as parquet under a dot-dir inside `root` (Delta
     * readers only trust the log, and Spark/parquet listings skip
@@ -736,19 +708,9 @@ object DeltaLakeWrite {
     * advances blindly (sound only for commutative appends). */
   private[ingest] def commitSlotAt(log: File, body: Array[Byte],
       slot: Long, ict: Boolean = false,
-      ictFloor: Option[Long] = None): Boolean = {
-    val tmp = Files.createTempFile(log.toPath, ".commit", ".tmp")
-    Files.write(tmp,
+      ictFloor: Option[Long] = None): Boolean =
+    LocalLinkBackend.putIfAbsent(new File(log, f"$slot%020d.json"),
       if (ict) withIctLine(log, slot, body, ictFloor) else body)
-    try {
-      Files.createLink(new File(log, f"$slot%020d.json").toPath, tmp)
-      true
-    } catch {
-      case _: java.nio.file.FileAlreadyExistsException => false
-    } finally {
-      Files.deleteIfExists(tmp); ()
-    }
-  }
 
   // ---- JSON action emitters (shared with DeltaLakeDml) ---------------------
 

@@ -1,6 +1,7 @@
 package graft.ingest
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.SchemaBridge
 import org.apache.spark.sql.types.{DataType, StructType}
@@ -187,9 +188,10 @@ final class ParquetTableIO(root: String) extends TableIO {
 
   /** Compaction (the BASELINE "read/write + compaction" op): rewrite a
     * table to `numFiles` files — repartition(numFiles) rewrite, the
-    * parquet stand-in for Delta OPTIMIZE. */
+    * parquet stand-in for Delta OPTIMIZE. A partitioned table keeps its
+    * partition directories. */
   def compact(spark: SparkSession, table: String, numFiles: Int): Unit =
-    overwrite(read(spark, table).repartition(numFiles), table)
+    rewrite(spark, table)(_.repartition(numFiles))
 
   /** Clustered compaction — the OPTIMIZE ZORDER analog: range-partition
     * + sort on `clusterCols` so each output file covers a narrow value
@@ -197,13 +199,22 @@ final class ParquetTableIO(root: String) extends TableIO {
     * skip whole files (data skipping without an index). */
   def compactClustered(spark: SparkSession, table: String, numFiles: Int,
       clusterCols: Seq[String]): Unit = {
-    import org.apache.spark.sql.functions.col
     val cols = clusterCols.map(col)
-    overwrite(
-      read(spark, table)
-        .repartitionByRange(numFiles, cols: _*)
-        .sortWithinPartitions(cols: _*),
-      table)
+    rewrite(spark, table)(
+      _.repartitionByRange(numFiles, cols: _*).sortWithinPartitions(cols: _*))
+  }
+
+  /** Overwrite `table` with `f` of its rows, partitioned by the
+    * columns its read discovered in directory names (for a recorded
+    * table, the read columns the recorded schema lacks). */
+  private def rewrite(spark: SparkSession, table: String)(
+      f: DataFrame => DataFrame): Unit = {
+    val df = read(spark, table)
+    val partitionBy = df.queryExecution.analyzed.collectFirst {
+      case LogicalRelation(h: HadoopFsRelation, _, _, _, _) =>
+        h.partitionSchema.fieldNames.toSeq
+    }.getOrElse(Nil)
+    overwrite(f(df), table, partitionBy)
   }
 }
 

@@ -6,7 +6,9 @@ import scala.util.control.NonFatal
 
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.module.scala.DefaultScalaModule
+import graft.core.Metrics
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.types.{NumericType, StringType, StructType}
 import org.apache.spark.sql.functions.{broadcast, coalesce, col, concat, count, expr, floor, greatest, least, lit, max, min, shiftleft, shiftrightunsigned, struct, substring_index, sum, when}
 
 /** One committed snapshot of a versioned table: the ordered list of
@@ -62,9 +64,12 @@ final case class Manifest(
   * the atomic claim is pluggable ([[CommitBackend]]) — hard link
   * locally, conditional put (S3 if-none-match) on a store.
   */
-final class VersionedTableIO(root: String,
-    backend: CommitBackend = LocalLinkBackend) extends TableIO {
+final class VersionedTableIO private[graft] (root: String,
+    backend: CommitBackend, dvBroadcastMaxRows: Long) extends TableIO {
   import VersionedTableIO._
+
+  def this(root: String, backend: CommitBackend = LocalLinkBackend) =
+    this(root, backend, VersionedTableIO.DvBroadcastMaxRows)
 
   private def tableDir(table: String) = s"$root/$table"
   private def logDir(table: String) = s"${tableDir(table)}/_graft_log"
@@ -230,7 +235,7 @@ final class VersionedTableIO(root: String,
     * with no shuffle of the table. A MASS delete (say 1B masked rows
     * at 100 TB) would make that broadcast a driver/executor OOM, so
     * the plan is size-guarded from the manifest's per-DV-dir count
-    * stats: above `spark.graft.dv.broadcastMaxRows` (default 2^20) —
+    * stats: above `dvBroadcastMaxRows` ([[DvBroadcastMaxRows]]) —
     * or when any DV dir predates count stats — the anti-join runs as
     * a shuffled hash join on (file, pos) instead: both sides hash-
     * partition on the position key, the per-partition build side is
@@ -245,9 +250,7 @@ final class VersionedTableIO(root: String,
         m.stats.get(d).flatMap(_.get(CountStat)).map(_.head.toLong))
       if (per.forall(_.isDefined)) Some(per.flatten.sum) else None
     }
-    val maxBroadcast = spark.conf
-      .get(DvBroadcastMaxRowsKey, DvBroadcastMaxRowsDefault.toString).toLong
-    if (dvRows.exists(_ <= maxBroadcast))
+    if (dvRows.exists(_ <= dvBroadcastMaxRows))
       withKeys.join(broadcast(dv), Seq(DvPath, DvPos), "left_anti")
     else
       withKeys.join(dv.hint("shuffle_hash"), Seq(DvPath, DvPos), "left_anti")
@@ -368,132 +371,66 @@ final class VersionedTableIO(root: String,
       .foldLeft(df) { case (d, (name, sql)) =>
         if (d.columns.contains(name)) d else d.withColumn(name, expr(sql))
       }
-    // ZERO stats jobs (round-15, guide §1.2/§2.6): the per-column
-    // min/max/count rides the WRITE job itself via Dataset.observe —
-    // the observed aggregates run over the exact rows the writer lands
-    // (same Spark aggregate semantics the post-write scan used;
-    // parquet round-trips numeric and string values losslessly, so the
-    // values are identical), and the r14 "one stats job, not two" pass
-    // disappears entirely. Every versioned write — including every
-    // streaming micro-batch sink append — saves one job. If the
-    // observation does not surface (defensive: V1 write command paths
-    // have historically varied in listener delivery), fall back to the
-    // r14 post-write scan, never to missing stats.
-    val numCols = withGen.schema.fields.collect {
-      case f if f.dataType.isInstanceOf[org.apache.spark.sql.types.NumericType] => f.name
-    }.toSeq
-    val strCols = withGen.schema.fields.collect {
-      case f if f.dataType == org.apache.spark.sql.types.StringType => f.name
-    }.toSeq
-    val statCols = numCols ++ strCols
-    val obsName = s"__graft_stats_${java.util.UUID.randomUUID()}"
-    val aggs = count(lit(1)).as("__n") +: statCols.zipWithIndex.flatMap {
-      case (c, i) => Seq(min(col(c)).as(s"__mn_$i"), max(col(c)).as(s"__mx_$i"))
-    }
-    val spark = df.sparkSession
-    val observed =
-      observedAction(withGen, obsName, aggs)(_.write.parquet(abs))
-    validateWrite(spark, table, abs)
-    val (num, str) = observed match {
-      case Some(row) =>
-        val n = row.getAs[java.lang.Number]("__n").doubleValue()
-        val countStat = Map(VersionedTableIO.CountStat -> Seq(n, n))
-        val numStats = countStat ++ numCols.zipWithIndex.flatMap {
-          case (c, i) =>
-            (row.getAs[Any](s"__mn_$i"), row.getAs[Any](s"__mx_$i")) match {
-              case (mn: java.lang.Number, mx: java.lang.Number) =>
-                Some(c -> Seq(mn.doubleValue(), mx.doubleValue()))
-              case _ => None // all-null column: no usable bound
-            }
-        }.toMap
-        val off = numCols.length
-        val strStats = strCols.zipWithIndex.flatMap { case (c, i) =>
-          (row.getAs[Any](s"__mn_${off + i}"),
-            row.getAs[Any](s"__mx_${off + i}")) match {
-            case (mn: String, mx: String) => Some(c -> Seq(mn, mx))
-            case _ => None
-          }
-        }.toMap
-        (numStats, strStats)
-      case None => collectAllStats(spark, abs)
-    }
+    // ZERO stats jobs (round-15, guide §1.2/§2.6): the row count and
+    // per-column min/max ride the WRITE job itself via Dataset.observe
+    // — the observed aggregates run over the exact rows the writer
+    // lands (parquet round-trips numeric and string values losslessly,
+    // so the values are those a post-write scan would read). Every
+    // versioned write — including every streaming micro-batch sink
+    // append — saves a stats job.
+    val (numCols, strCols) = statCols(withGen.schema)
+    val aggs = statAggs(numCols, strCols)
+    val (observed, obs) = Metrics.observed(withGen,
+      s"__graft_stats_${java.util.UUID.randomUUID()}", aggs.head, aggs.tail: _*)
+    observed.write.parquet(abs)
+    val (num, str) = statsOf(obs.get, numCols, strCols)
+    validateWrite(df.sparkSession, table, abs)
     if (str.nonEmpty) pendingStrStats.put(rel, str)
     (rel, num)
   }
 
-  /** Run `action` on `df.observe(name, aggs)` and capture the observed
-    * row (round-15, guide §1.2/§2.6: metrics ride the action's job —
-    * zero extra jobs). The execution listener bus is async, so the
-    * capture waits a bounded grace, never an unbounded block; None →
-    * the metrics did not surface and the caller falls back to its
-    * post-action scan. */
-  private def observedAction(df: DataFrame, obsName: String,
-      aggs: Seq[org.apache.spark.sql.Column])(
-      action: DataFrame => Unit): Option[org.apache.spark.sql.Row] = {
-    val spark = df.sparkSession
-    val latch = new java.util.concurrent.CountDownLatch(1)
-    @volatile var observed: Option[org.apache.spark.sql.Row] = None
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          durationNs: Long): Unit =
-        qe.observedMetrics.get(obsName).foreach { row =>
-          observed = Some(row); latch.countDown()
-        }
-      override def onFailure(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          exception: Exception): Unit = ()
-    }
-    spark.listenerManager.register(listener)
-    try {
-      action(df.observe(obsName, aggs.head, aggs.tail: _*))
-      latch.await(2, java.util.concurrent.TimeUnit.SECONDS)
-      ()
-    } finally spark.listenerManager.unregister(listener)
-    observed
+  /** Parquet-write `df` to `abs` with the row count riding the write
+    * job. One fewer job for every DV mask write. */
+  private def writeCounted(df: DataFrame, abs: String): Long = {
+    val (observed, obs) = Metrics.observed(df,
+      s"__graft_n_${java.util.UUID.randomUUID()}", "__n" -> count(lit(1)))
+    observed.write.parquet(abs)
+    obs.get("__n").asInstanceOf[Number].longValue()
   }
 
-  /** Parquet-write `df` to `abs` with the row count riding the write
-    * job (fallback: read-back count — the pre-r15 shape). One fewer
-    * job for every DV mask write. */
-  private def writeCounted(df: DataFrame, abs: String): Long =
-    observedAction(df, s"__graft_n_${java.util.UUID.randomUUID()}",
-      Seq(count(lit(1)).as("__n")))(_.write.parquet(abs))
-      .map(_.getAs[java.lang.Number]("__n").longValue())
-      .getOrElse(df.sparkSession.read.parquet(abs).count())
+  /** The numeric and the string columns of `schema`: the columns a
+    * data dir records [min, max] stats for. */
+  private def statCols(schema: StructType): (Seq[String], Seq[String]) = (
+    schema.fields.toSeq.collect { case f if f.dataType.isInstanceOf[NumericType] => f.name },
+    schema.fields.toSeq.collect { case f if f.dataType == StringType => f.name })
 
-  /** Numeric + string [min, max] of a written dir in the fewest jobs:
-    * one combined data-scan aggregate when string columns force a scan
-    * anyway, the footer-only pushdown pass ([[collectStats]]) when the
-    * schema is numeric-only. */
-  private def collectAllStats(spark: SparkSession, absDir: String)
-      : (Map[String, Seq[Double]], Map[String, Seq[String]]) = {
-    val df = spark.read.parquet(absDir)
-    val numCols = df.schema.fields.collect {
-      case f if f.dataType.isInstanceOf[org.apache.spark.sql.types.NumericType] => f.name
-    }.toSeq
-    val strCols = df.schema.fields.collect {
-      case f if f.dataType == org.apache.spark.sql.types.StringType => f.name
-    }.toSeq
-    if (strCols.isEmpty) return (collectStats(spark, absDir), Map.empty)
-    val aggs = count(lit(1)) +:
-      (numCols.flatMap(c => Seq(min(col(c)), max(col(c)))) ++
-        strCols.flatMap(c => Seq(min(col(c)), max(col(c)))))
-    val row = df.agg(aggs.head, aggs.tail: _*).first()
-    val n = row.getLong(0).toDouble
-    val countStat = Map(VersionedTableIO.CountStat -> Seq(n, n))
-    val num = countStat ++ numCols.zipWithIndex.flatMap { case (c, i) =>
-      (row.get(2 * i + 1), row.get(2 * i + 2)) match {
-        case (mn: java.lang.Number, mx: java.lang.Number) =>
-          Some(c -> Seq(mn.doubleValue(), mx.doubleValue()))
-        case _ => None // all-null column: no usable bound
+  /** The aggregates behind a data dir's stats, named for [[statsOf]]:
+    * the row count, then the min and max of each column. */
+  private def statAggs(numCols: Seq[String],
+      strCols: Seq[String]): Seq[(String, Column)] =
+    ("__n" -> count(lit(1))) +: (numCols ++ strCols).zipWithIndex.flatMap {
+      case (c, i) => Seq(s"__mn_$i" -> min(col(c)), s"__mx_$i" -> max(col(c)))
+    }
+
+  /** Numeric stats (with the row count — an EMPTY dir is prunable for
+    * every predicate, where "no stats" would force a conservative
+    * scan) and string stats from the values of [[statAggs]]. An
+    * all-null column has no usable bound and records none. */
+  private def statsOf(value: String => Any, numCols: Seq[String],
+      strCols: Seq[String]): (Map[String, Seq[Double]], Map[String, Seq[String]]) = {
+    val num = countStatOf(value("__n").asInstanceOf[Number].longValue()) ++
+      numCols.zipWithIndex.flatMap { case (c, i) =>
+        (value(s"__mn_$i"), value(s"__mx_$i")) match {
+          case (mn: Number, mx: Number) =>
+            Some(c -> Seq(mn.doubleValue(), mx.doubleValue()))
+          case _ => None
+        }
       }
-    }.toMap
-    val off = 1 + 2 * numCols.length
+    val off = numCols.length
     val str = strCols.zipWithIndex.flatMap { case (c, i) =>
-      (row.get(off + 2 * i), row.get(off + 2 * i + 1)) match {
+      (value(s"__mn_${off + i}"), value(s"__mx_${off + i}")) match {
         case (mn: String, mx: String) => Some(c -> Seq(mn, mx))
-        case _ => None // all-null or empty dir: no usable bound
+        case _ => None
       }
     }.toMap
     (num, str)
@@ -548,46 +485,6 @@ final class VersionedTableIO(root: String,
     }
   }
 
-  /** Per-column [min, max] of every numeric column in a written dir —
-    * the write-side stats pass Delta performs inline. Reading the
-    * FILES (not re-running the input plan) with parquet aggregate
-    * pushdown enabled answers MIN/MAX from footers alone, so the pass
-    * costs metadata I/O, not a data scan. */
-  private def collectStats(spark: SparkSession,
-      absDir: String): Map[String, Seq[Double]] = {
-    val df = spark.read.parquet(absDir)
-    val numCols = df.schema.fields.collect {
-      case f if f.dataType.isInstanceOf[org.apache.spark.sql.types.NumericType] => f.name
-    }.toSeq
-    // the pushdown flag is session state: serialize set→plan→restore so
-    // concurrent writers on one session can't interleave and leak the
-    // flag into (or clobber it for) unrelated queries
-    VersionedTableIO.statsLock.synchronized {
-      val key = "spark.sql.parquet.aggregatePushDown"
-      val prev = spark.conf.getOption(key)
-      spark.conf.set(key, "true")
-      try {
-        val aggs = count(lit(1)) +:
-          numCols.flatMap(c => Seq(min(col(c)), max(col(c))))
-        val row = df.agg(aggs.head, aggs.tail: _*).first()
-        val n = row.getLong(0).toDouble
-        // row count always recorded — an EMPTY commit dir (a backfill
-        // slice with no rows at this scale) is prunable for EVERY
-        // predicate, where "no stats" would force a conservative scan
-        val countStat = Map(VersionedTableIO.CountStat -> Seq(n, n))
-        countStat ++ numCols.zipWithIndex.flatMap { case (c, i) =>
-          (row.get(2 * i + 1), row.get(2 * i + 2)) match {
-            case (mn: java.lang.Number, mx: java.lang.Number) =>
-              Some(c -> Seq(mn.doubleValue(), mx.doubleValue()))
-            case _ => None // all-null column: no usable bound
-          }
-        }.toMap
-      } finally {
-        prev.fold(spark.conf.unset(key))(v => spark.conf.set(key, v))
-      }
-    }
-  }
-
   /** Side channel rel-dir → string-column [min,max], consumed by
     * [[commitLoopEx]] (rel names are UUIDs, so entries never collide
     * across concurrent writers; stale entries from aborted writes are
@@ -604,7 +501,7 @@ final class VersionedTableIO(root: String,
     FsOps.deleteRecursively(new File(s"${tableDir(table)}/$rel"))
   }
 
-  /** A [n, n] count-stat entry — what [[collectStats]] records for
+  /** A [n, n] count-stat entry — what [[statsOf]] records for
     * data dirs; DV writers record the same for their sidecar dirs so
     * reads can size-guard the DV plan from the manifest alone. */
   private def countStatOf(n: Long): Map[String, Seq[Double]] =
@@ -881,9 +778,26 @@ final class VersionedTableIO(root: String,
       // an all-rows-masked snapshot still writes an empty staging root
       // (or none at all): drop it; empty rels → rewriteSnapshotEx no-op
       if (rels.isEmpty) FsOps.deleteRecursively(new File(abs))
-      (rels, rels.map(r => r -> collectStats(spark, s"${tableDir(table)}/$r")).toMap)
+      (rels, zOrderStats(spark, abs, rel, rels, cur.schema))
     }
   }
+
+  /** Numeric stats of each `rel/__zb=k` dir a z-order rewrite wrote
+    * under `abs`, in one grouped scan rather than one scan per dir. */
+  private def zOrderStats(spark: SparkSession, abs: String, rel: String,
+      rels: Seq[String],
+      schema: StructType): Map[String, Map[String, Seq[Double]]] =
+    if (rels.isEmpty) Map.empty
+    else {
+      val numCols = statCols(schema)._1
+      val aggs = statAggs(numCols, Nil).map { case (n, c) => c.as(n) }
+      val byDir = spark.read.parquet(abs)
+        .groupBy(col("__zb").cast("int").as("__zb"))
+        .agg(aggs.head, aggs.tail: _*)
+        .collect().map(r => s"$rel/__zb=${r.getInt(0)}" ->
+          statsOf(n => r.getAs[Any](n), numCols, Nil)._1).toMap
+      rels.map(r => r -> byDir.getOrElse(r, countStatOf(0))).toMap
+    }
 
   /** CLONE (Delta `CREATE TABLE ... CLONE src` analog): materialize
     * `dst` as a new table whose first commit is `src`'s snapshot at
@@ -1633,13 +1547,10 @@ object VersionedTableIO {
     * index within that file. */
   val DvPath = "__dv_path"
   val DvPos = "__dv_pos"
-  /** Conf key: max deletion-vector positions to BROADCAST on read;
-    * larger (or unknown-size) vectors anti-join via shuffled hash
-    * join instead (see [[VersionedTableIO.dvSubtract]]). */
-  val DvBroadcastMaxRowsKey = "spark.graft.dv.broadcastMaxRows"
-  val DvBroadcastMaxRowsDefault: Long = 1L << 20
-  /** Guards the session-conf mutation in stats collection. */
-  private[ingest] val statsLock = new Object
+  /** Max deletion-vector positions to BROADCAST on read; larger (or
+    * unknown-size) vectors anti-join via shuffled hash join instead
+    * (see [[VersionedTableIO.dvSubtract]]). */
+  val DvBroadcastMaxRows: Long = 1L << 20
   private val mapper: ObjectMapper = {
     val m = new ObjectMapper()
     m.registerModule(DefaultScalaModule)

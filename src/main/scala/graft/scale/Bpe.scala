@@ -39,10 +39,10 @@ import org.apache.spark.sql.functions._
   * beyond-reference LLM-pipeline surface. */
 object Bpe {
 
-  /** Conf key: max DISTINCT-WORD rows [[train]] will collect and solve
+  /** Max DISTINCT-WORD rows [[train]] will collect and solve
     * driver-side before falling back to the distributed per-merge
-    * loop. 0 disables the local path. Rationale (the
-    * [[graft.scale.Clusters.CcLocalMaxEdgesKey]] pattern): the
+    * loop. Specs pass 0 to disable the local path. Rationale (the
+    * [[graft.scale.Clusters.CcLocalMaxEdgesDefault]] pattern): the
     * distributed loop costs ~3 Spark jobs per merge — pure fixed
     * overhead when the vocab is small — while a bounded collect of
     * ≤2^20 (word, count) rows (tens of MB) is the same driver budget a
@@ -53,7 +53,6 @@ object Bpe {
     * left-to-right non-overlapping `String.replace` IS Spark's
     * `replace` semantics — so the learned table is bit-equal
     * (BpeSpec pins the identity). */
-  val LocalMaxVocabKey = "spark.graft.bpe.localMaxVocab"
   val LocalMaxVocabDefault: Long = 1L << 20
 
   /** Symbol separator — any char outside the [a-z] token alphabet. */
@@ -179,15 +178,18 @@ object Bpe {
     learned.toSeq
   }
 
-  def train(df: DataFrame, textCol: String, merges: Int): DataFrame = {
+  def train(df: DataFrame, textCol: String, merges: Int): DataFrame =
+    train(df, textCol, merges, LocalMaxVocabDefault)
+
+  /** [[train]] with the local-path cap as a parameter. */
+  private[graft] def train(df: DataFrame, textCol: String, merges: Int,
+      maxLocal: Long): DataFrame = {
     require(merges >= 1, "need at least one merge step")
     val spark = df.sparkSession
-    // size-guarded local path (scaladoc at [[LocalMaxVocabKey]]): ONE
-    // bounded job decides the path AND fetches the vocab (the
+    // size-guarded local path (scaladoc at [[LocalMaxVocabDefault]]):
+    // ONE bounded job decides the path AND fetches the vocab (the
     // Clusters.connectedComponents limit(cap+1) pattern — an overflow
     // falls through to the distributed loop, never a wrong answer)
-    val maxLocal = spark.conf.get(LocalMaxVocabKey,
-      LocalMaxVocabDefault.toString).toLong
     if (maxLocal > 0 && maxLocal < Int.MaxValue) {
       val probe = wordFreq(df, textCol).limit(maxLocal.toInt + 1).collect()
       if (probe.length <= maxLocal) {

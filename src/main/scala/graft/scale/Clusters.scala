@@ -17,7 +17,7 @@ import org.apache.spark.sql.functions._
   * rounds even at corpus scale).
   *
   * Scale design: two paths behind a size guard
-  * (`spark.graft.cc.localMaxEdges`). Small edge lists — the contracted
+  * ([[CcLocalMaxEdgesDefault]]). Small edge lists — the contracted
   * per-batch graphs of the incremental/streaming paths, bounded by
   * batch size — are solved by driver union-find in one bounded collect
   * (the O(diameter)-jobs loop would be pure fixed overhead there).
@@ -39,23 +39,21 @@ import org.apache.spark.sql.functions._
   */
 object Clusters {
 
-  /** Conf key: max contracted-label-map rows [[updateClusters]] will
-    * BROADCAST for the relabel join; larger maps fall back to a
-    * shuffled join (same result, no single-JVM copy). */
-  val CcBroadcastMaxNodesKey = "spark.graft.cc.broadcastMaxNodes"
+  /** Max contracted-label-map rows [[updateClusters]] will BROADCAST
+    * for the relabel join; larger maps fall back to a shuffled join
+    * (same result, no single-JVM copy). */
   val CcBroadcastMaxNodesDefault: Long = 1L << 22
 
-  /** Conf key: max pair rows [[connectedComponents]] solves DRIVER-SIDE
+  /** Max pair rows [[connectedComponents]] solves DRIVER-SIDE
     * (union-find) before falling back to distributed label propagation.
-    * 0 disables the local path. Rationale: the label-propagation loop
-    * costs O(diameter) Spark jobs (a checkpoint + a convergence scan
+    * Specs pass 0 to disable the local path. Rationale: the
+    * label-propagation loop costs O(diameter) Spark jobs (a checkpoint + a convergence scan
     * per round) — for the contracted per-batch graphs the incremental/
     * streaming paths feed it (bounded by BATCH pairs, typically
     * thousands), that fixed job overhead dwarfs the work, while a
     * bounded collect of ≤2^20 edge rows (~16 MB) is the same driver
     * budget a broadcast join already spends. Full-corpus pair lists at
     * 100 TB exceed the cap and take the distributed loop unchanged. */
-  val CcLocalMaxEdgesKey = "spark.graft.cc.localMaxEdges"
   val CcLocalMaxEdgesDefault: Long = 1L << 20
 
   /** Driver-side union-find over an edge list: (node → min id of its
@@ -99,14 +97,19 @@ object Clusters {
     * lying hint safe: the overflow falls through to the distributed
     * loop, never a wrong answer. */
   def connectedComponents(pairs: DataFrame, aCol: String, bCol: String,
-      maxIter: Int = 25, edgeCountHint: Option[Long] = None): DataFrame = {
+      maxIter: Int = 25, edgeCountHint: Option[Long] = None): DataFrame =
+    connectedComponents(pairs, aCol, bCol, maxIter, edgeCountHint,
+      CcLocalMaxEdgesDefault)
+
+  /** [[connectedComponents]] with the local-path cap as a parameter. */
+  private[graft] def connectedComponents(pairs: DataFrame, aCol: String,
+      bCol: String, maxIter: Int, edgeCountHint: Option[Long],
+      maxLocal: Long): DataFrame = {
     val spark = pairs.sparkSession
     import spark.implicits._
     // size-guarded local path: a tiny graph (the per-batch contracted
     // case) is solved on the driver, anything larger falls through to
     // the distributed loop below having paid at most a count probe
-    val maxLocal = spark.conf.get(CcLocalMaxEdgesKey,
-      CcLocalMaxEdgesDefault.toString).toLong
     if (maxLocal > 0 && maxLocal < Int.MaxValue &&
         edgeCountHint.forall(_ <= maxLocal)) {
       val ab = pairs.select(col(aCol).cast("long"), col(bCol).cast("long"))
@@ -182,7 +185,7 @@ object Clusters {
     * history). The touched-label map is bounded by the batch's
     * DISTINCT labels, so it is normally broadcast; an initial
     * mega-batch could exceed the broadcast limit, so the plan is
-    * size-guarded (`spark.graft.cc.broadcastMaxNodes`, default 2^22):
+    * size-guarded ([[CcBroadcastMaxNodesDefault]], 2^22):
     * above it the relabel runs as a shuffled join — same result,
     * no single-JVM copy of the map. The count that decides is cheap:
     * the map is already localCheckpoint-materialized by
@@ -190,7 +193,14 @@ object Clusters {
     */
   def updateClusters(labels: DataFrame, newPairs: DataFrame,
       aCol: String = "id_a", bCol: String = "id_b",
-      maxIter: Int = 25, edgeCountHint: Option[Long] = None): DataFrame = {
+      maxIter: Int = 25, edgeCountHint: Option[Long] = None): DataFrame =
+    updateClusters(labels, newPairs, aCol, bCol, maxIter, edgeCountHint,
+      CcBroadcastMaxNodesDefault)
+
+  /** [[updateClusters]] with the broadcast cap as a parameter. */
+  private[graft] def updateClusters(labels: DataFrame, newPairs: DataFrame,
+      aCol: String, bCol: String, maxIter: Int,
+      edgeCountHint: Option[Long], maxBroadcast: Long): DataFrame = {
     val lab = labels.select(col("node"), col("cluster_id"))
     // each endpoint → its current label; previously-unseen ids label
     // themselves (coalesce after the left joins)
@@ -212,10 +222,6 @@ object Clusters {
     // size guard: broadcast the contracted-label map only while it
     // fits; a giant first batch falls back to a shuffled join (the
     // count is metadata-cheap — merged is checkpoint-materialized)
-    val spark = newPairs.sparkSession
-    val maxBroadcast = spark.conf
-      .get(Clusters.CcBroadcastMaxNodesKey,
-        Clusters.CcBroadcastMaxNodesDefault.toString).toLong
     val mergedSized =
       if (merged.count() <= maxBroadcast) broadcast(merged) else merged
     // relabel the existing table (labels untouched by the batch keep

@@ -43,8 +43,12 @@ object Quantiles {
       "fractions must be in (0, 1]")
     require(bins >= 1, "need at least one value bin")
     val W = org.apache.spark.sql.expressions.Window
-    val base = df.select(col(valueCol).cast("double").as("__v"))
-      .filter(col("__v").isNotNull).persist()
+    // shared by every branch below: a lazy local checkpoint, not a
+    // persist — the result is returned lazily, so nothing could release
+    // a cache entry, while the checkpoint's blocks go with the frame
+    val base = graft.core.Ckpt.local(
+      df.select(col(valueCol).cast("double").as("__v"))
+        .filter(col("__v").isNotNull), eager = false)
     val pArr = array(ps.map(lit(_)): _*)
     val stats = base.agg(min(col("__v")).as("__lo"),
       max(col("__v")).as("__hi"), count(lit(1)).as("__N"),
@@ -121,8 +125,9 @@ object Quantiles {
       "fractions must be in (0, 1]")
     require(bins >= 1, "need at least one value bin")
     val W = org.apache.spark.sql.expressions.Window
-    val base = df.select(col(groupCol), col(valueCol).cast("double").as("__v"))
-      .filter(col("__v").isNotNull).persist()
+    val base = graft.core.Ckpt.local(
+      df.select(col(groupCol), col(valueCol).cast("double").as("__v"))
+        .filter(col("__v").isNotNull), eager = false) // see exactQuantiles
     val stats = base.groupBy(col(groupCol)).agg(min(col("__v")).as("__lo"),
       max(col("__v")).as("__hi"), count(lit(1)).as("__N"))
     val targets = stats

@@ -52,7 +52,7 @@ object ChangeFeedGold {
     val manifests = spark.readStream
       .option("wholetext", "true")
       .text(s"${io.logPath(table)}/*.json")
-    Drain.drain(spark)(manifests.writeStream
+    manifests.writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         // bounded collect: one version number per commit in this batch
         val versions = batch
@@ -95,6 +95,6 @@ object ChangeFeedGold {
       }
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
-      .start())
+      .start().awaitTermination()
   }
 }

@@ -61,7 +61,7 @@ object IncrementalGold {
     // the naive `batchId <= applied` guard would silently drop every new
     // batch forever. Detect the mismatch and fail loudly instead.
     val runId = new java.io.File(checkpointDir).getAbsolutePath
-    Drain.drain(spark)(stream.writeStream
+    stream.writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val existing =
           if (io.exists(spark, table)) Some(io.read(spark, table)) else None
@@ -100,6 +100,6 @@ object IncrementalGold {
       }
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
-      .start())
+      .start().awaitTermination()
   }
 }

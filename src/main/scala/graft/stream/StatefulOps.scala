@@ -42,12 +42,12 @@ object StatefulOps {
       .schema(org.apache.spark.sql.Encoders.product[Keyed].schema)
       .parquet(sourceDir)
       .as[Keyed]
-    Drain.drain(spark)(firstSeen(src).writeStream
+    firstSeen(src).writeStream
       .outputMode("append")
       .format("memory")
       .queryName(queryName)
       .trigger(Trigger.AvailableNow())
-      .start())
+      .start().awaitTermination()
     spark.table(queryName)
   }
 
@@ -63,12 +63,12 @@ object StatefulOps {
     // keeps — the dedup state is evicted once the watermark passes it.
     val src = project(spark.readStream.schema(schema).parquet(sourceDir))
       .dropDuplicatesWithinWatermark()
-    Drain.drain(spark)(src.writeStream
+    src.writeStream
       .outputMode("append")
       .format("memory")
       .queryName(queryName)
       .trigger(Trigger.AvailableNow())
-      .start())
+      .start().awaitTermination()
     spark.table(queryName)
   }
 }

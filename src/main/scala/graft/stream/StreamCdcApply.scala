@@ -44,7 +44,7 @@ object StreamCdcApply {
     val reader = maxFilesPerTrigger
       .foldLeft(spark.readStream)((r, m) => r.option("maxFilesPerTrigger", m))
       .schema(schema)
-    Drain.drain(spark)(reader.parquet(sourceDir).writeStream
+    reader.parquet(sourceDir).writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
         if (!batch.isEmpty) {
           // agg-based latest-wins (round-15, the q101/q64 shape): hash
@@ -69,6 +69,6 @@ object StreamCdcApply {
       }
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
-      .start())
+      .start().awaitTermination()
   }
 }

@@ -42,7 +42,7 @@ object StreamClusters {
     val reader = maxFilesPerTrigger
       .foldLeft(spark.readStream)((r, m) => r.option("maxFilesPerTrigger", m))
       .schema(schema)
-    Drain.drain(spark)(reader.parquet(sourceDir).writeStream
+    reader.parquet(sourceDir).writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
         // count doubles as the emptiness check AND the edge-count hint
         // (the contracted graph has at most one edge per batch pair),
@@ -64,6 +64,6 @@ object StreamClusters {
       }
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
-      .start())
+      .start().awaitTermination()
   }
 }

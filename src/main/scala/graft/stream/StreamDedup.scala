@@ -45,7 +45,7 @@ object StreamDedup {
     val reader = maxFilesPerTrigger
       .foldLeft(spark.readStream)((r, m) => r.option("maxFilesPerTrigger", m))
       .schema(schema)
-    Drain.drain(spark)(reader.parquet(sourceDir).writeStream
+    reader.parquet(sourceDir).writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         if (!batch.isEmpty) {
           // sigs computed ONCE per batch (the expensive stage): shared
@@ -69,6 +69,6 @@ object StreamDedup {
       }
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
-      .start())
+      .start().awaitTermination()
   }
 }

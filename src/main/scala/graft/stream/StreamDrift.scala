@@ -40,7 +40,7 @@ object StreamDrift {
     val reader = maxFilesPerTrigger
       .foldLeft(spark.readStream)((r, m) => r.option("maxFilesPerTrigger", m))
       .schema(schema)
-    Drain.drain(spark)(reader.parquet(sourceDir).writeStream
+    reader.parquet(sourceDir).writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         if (!batch.isEmpty) {
           io.appendIdempotent(countDelta(batch, textCol, isA),
@@ -50,7 +50,7 @@ object StreamDrift {
       }
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
-      .start())
+      .start().awaitTermination()
   }
 
   /** The monitor side: the q195 report from the maintained table. */

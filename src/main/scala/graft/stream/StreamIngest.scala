@@ -36,7 +36,7 @@ object StreamIngest {
       spark.read.options(opts).csv(sourceDir).schema)
     val stream = spark.readStream.options(opts).schema(fixed).csv(sourceDir)
 
-    Drain.drain(spark)(stream.writeStream
+    stream.writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
         if (!batch.isEmpty) {
           val startAfter: Long =
@@ -52,7 +52,7 @@ object StreamIngest {
       }
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
-      .start())
+      .start().awaitTermination()
   }
 
   /** Exactly-once streaming append into a VERSIONED table: foreachBatch
@@ -70,7 +70,7 @@ object StreamIngest {
     val writerId = new java.io.File(checkpointDir).getAbsolutePath
     val stream = spark.readStream.options(Readers.Tolerant).schema(schema)
       .parquet(sourceDir)
-    Drain.drain(spark)(stream.writeStream
+    stream.writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         if (!batch.isEmpty) {
           io.appendIdempotent(batch, table, writerId, batchId)
@@ -79,7 +79,7 @@ object StreamIngest {
       }
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
-      .start())
+      .start().awaitTermination()
   }
 
   /** Stream a REAL Delta table's APPENDS into a versioned table — the
@@ -123,7 +123,7 @@ object StreamIngest {
       .option("pathGlobFilter", "*.json")
       .text(logDir)
       .select(col("value"), col("_metadata.file_path").as("__src"))
-    Drain.drain(spark)(stream.writeStream
+    stream.writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val lines = batch.collect().flatMap { r =>
           r.getString(1) match {
@@ -165,7 +165,7 @@ object StreamIngest {
       }
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
-      .start())
+      .start().awaitTermination()
   }
 
   /** Streaming CDC apply — the MERGE-with-deletes sink: each
@@ -187,7 +187,7 @@ object StreamIngest {
       schema: org.apache.spark.sql.types.StructType): Unit = {
     val stream = spark.readStream.options(Readers.Tolerant).schema(schema)
       .parquet(sourceDir)
-    Drain.drain(spark)(stream.writeStream
+    stream.writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
         if (!batch.isEmpty) {
           val base =
@@ -200,6 +200,6 @@ object StreamIngest {
       }
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
-      .start())
+      .start().awaitTermination()
   }
 }

@@ -1,5 +1,6 @@
 package graft.stream
 
+import graft.core.SessionFactory
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -24,18 +25,10 @@ object StreamJoins {
     // a join: two sides × key-to-numValues/keyWithIndex stores), each
     // with its own checkpoint dir + maintenance thread. For bounded
     // local runs a handful is plenty; on a cluster leave the default.
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    statePartitions.foreach(n =>
-      spark.conf.set("spark.sql.shuffle.partitions", n))
-    try runViewPurchaseInner(spark, sourceDir, schema, queryName,
-      watermarkDelay)
-    finally spark.conf.set("spark.sql.shuffle.partitions", prev)
-  }
-
-  private def runViewPurchaseInner(spark: SparkSession, sourceDir: String,
-      schema: StructType, queryName: String,
-      watermarkDelay: String): DataFrame = {
-    def src = spark.readStream.schema(schema).parquet(sourceDir)
+    // The width applies to a child session, never the caller's.
+    val s = statePartitions.fold(spark)(n => SessionFactory.child(spark,
+      Map("spark.sql.shuffle.partitions" -> n.toString)))
+    def src = s.readStream.schema(schema).parquet(sourceDir)
     val views = src.filter(col("event_type") === "view")
       .select(col("event_id").as("view_id"), col("user_id"),
         col("ts").as("view_ts"))
@@ -50,12 +43,12 @@ object StreamJoins {
               purchase_ts <= view_ts + interval 30 minutes"""))
       .select(col("view_id"), col("purchase_id"), col("user_id"),
         col("view_ts"), col("purchase_ts"))
-    Drain.drain(spark)(joined.writeStream
+    joined.writeStream
       .outputMode("append")
       .format("memory")
       .queryName(queryName)
       .trigger(Trigger.AvailableNow())
-      .start())
-    spark.table(queryName)
+      .start().awaitTermination()
+    s.table(queryName)
   }
 }

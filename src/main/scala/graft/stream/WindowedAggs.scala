@@ -50,12 +50,12 @@ object WindowedAggs {
       queryName: String)(agg: DataFrame => DataFrame): DataFrame = {
     val src = spark.readStream.schema(schema).parquet(sourceDir)
       .withWatermark(watermarkCol, watermarkDelay)
-    Drain.drain(spark)(agg(src).writeStream
+    agg(src).writeStream
       .outputMode("complete")
       .format("memory")
       .queryName(queryName)
       .trigger(Trigger.AvailableNow())
-      .start())
+      .start().awaitTermination()
     spark.table(queryName)
   }
 }

@@ -17,6 +17,10 @@ object StreamOverhead {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val spark = graft.core.SessionFactory.build(s"local[$cpus]", Some(cpus))
     spark.sparkContext.setLogLevel("ERROR")
+    val combo = graft.core.SessionFactory.drainConfs
+    // the factory sets these drain confs; the "default" runs measure
+    // Spark's own defaults, so the session starts without them
+    combo.keys.foreach(spark.conf.unset)
     val tmp = java.nio.file.Files.createTempDirectory("so").toString
     spark.range(10).toDF("v").write.parquet(s"$tmp/in")
     val schema = org.apache.spark.sql.types.StructType(Seq(
@@ -117,10 +121,6 @@ object StreamOverhead {
     runWm("watermark complete, noDataBatches=off (again)", confs = noNoData)
     run("stateful, noDataMicroBatches=false", stateful = true,
       confs = noNoData, breakdown = true)
-    val combo = Map(
-      "spark.sql.streaming.noDataMicroBatches.enabled" -> "false",
-      "spark.sql.streaming.stateStore.maintenanceInterval" -> "1h",
-      "spark.sql.streaming.minBatchesToRetain" -> "2")
     run("stateful, combo confs", stateful = true, confs = combo)
     run("stateful, combo confs (again)", stateful = true, confs = combo)
     runWm("watermark complete, combo", confs = combo)

@@ -257,19 +257,16 @@ class BpeSpec extends AnyFunSuite {
     val local = Bpe.train(docs, "text", 12).orderBy("step")
       .collect().map(_.toSeq)
     // force the distributed loop by disabling the local path
-    spark.conf.set(Bpe.LocalMaxVocabKey, "0")
-    try {
-      val dist = Bpe.train(docs, "text", 12).orderBy("step")
-        .collect().map(_.toSeq)
-      assert(local.toSeq === dist.toSeq,
-        "driver-side BPE must reproduce the distributed loop exactly")
-      // fail-fast parity on exhaustion through BOTH paths
-      val tiny2 = Seq((1L, "ab ab")).toDF("doc_id", "text")
-      val exD = intercept[IllegalArgumentException] {
-        Bpe.train(tiny2, "text", 3)
-      }
-      assert(exD.getMessage.contains("exhausted"))
-    } finally spark.conf.unset(Bpe.LocalMaxVocabKey)
+    val dist = Bpe.train(docs, "text", 12, 0L).orderBy("step")
+      .collect().map(_.toSeq)
+    assert(local.toSeq === dist.toSeq,
+      "driver-side BPE must reproduce the distributed loop exactly")
+    // fail-fast parity on exhaustion through BOTH paths
+    val tiny2 = Seq((1L, "ab ab")).toDF("doc_id", "text")
+    val exD = intercept[IllegalArgumentException] {
+      Bpe.train(tiny2, "text", 3, 0L)
+    }
+    assert(exD.getMessage.contains("exhausted"))
     val exL = intercept[IllegalArgumentException] {
       Bpe.train(Seq((1L, "ab ab")).toDF("doc_id", "text"), "text", 3)
     }

@@ -369,21 +369,25 @@ class DeltaDmlSpec extends AnyFunSuite {
       "both the window mutation and the recomputed one must apply")
     assert(DeltaLakeRead.state(spark, t).files
       .map(_.dv.get.cardinality).sum === 2L)
-    // loud abort: same shape, zero retries
-    spark.conf.set("spark.graft.delta.dml.maxRetries", "0")
-    DeltaLakeDml.testBeforeCommit = () => {
+    // loud abort: the same race in every commit window until the 5
+    // recomputes are spent — a delete of id=4 first, then updates that
+    // rewrite id=5 to the value it already holds (each a DV re-add)
+    var windows = 0
+    def arm(): Unit = DeltaLakeDml.testBeforeCommit = () => {
       DeltaLakeDml.testBeforeCommit = () => ()
-      DeltaLakeDml.delete(spark, t, "id = 4"); ()
+      windows += 1
+      if (windows == 1) DeltaLakeDml.delete(spark, t, "id = 4")
+      else DeltaLakeDml.update(spark, t, "id = 5", Map("v" -> "'v5'"))
+      arm()
     }
+    arm()
     try {
       val e = intercept[IllegalStateException] {
         DeltaLakeDml.delete(spark, t, "id = 3")
       }
-      assert(e.getMessage.contains("giving up after 0 recomputes"))
-    } finally {
-      DeltaLakeDml.testBeforeCommit = () => ()
-      spark.conf.unset("spark.graft.delta.dml.maxRetries")
-    }
+      assert(e.getMessage.contains("giving up after 5 recomputes"))
+      assert(windows === 6)
+    } finally DeltaLakeDml.testBeforeCommit = () => ()
     // the window's delete DID land; the aborted one did not
     assert(ids(t) === Seq(0L, 3L, 5L, 6L, 7L, 8L, 9L))
     // the aborted attempt left no stray DV bin: every .bin on disk is

@@ -167,11 +167,9 @@ class DeltaMaintainSpec extends AnyFunSuite {
       (10L until 15L).toSeq)
     // same pruned read through the DISTRIBUTED state path: the path
     // filter pushes into the reconciliation frame before the collect
-    spark.conf.set("spark.graft.delta.distributedState", "force")
-    try assert(DeltaLakeRead.appendsSince(spark, t, 2L)
+    assert(DeltaLakeRead.appendsSince(spark, t, 2L, minBytes = 0L)
       .select("id").as[Long].collect().sorted.toSeq ===
       (10L until 15L).toSeq)
-    finally spark.conf.unset("spark.graft.delta.distributedState")
     // v1's file was compacted away INSIDE the range — its rows are
     // now mixed with v0's; silence would be row loss
     val e = intercept[IllegalArgumentException] {

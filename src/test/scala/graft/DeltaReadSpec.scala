@@ -98,13 +98,10 @@ class DeltaReadSpec extends AnyFunSuite {
     * metadata (file/tombstone ORDER is insertion- vs sort-based, so
     * compare order-normalized). */
   private def assertStateParity(tablePath: String): Unit = {
-    def stateWith(mode: String) = {
-      spark.conf.set("spark.graft.delta.distributedState", mode)
-      try DeltaLakeRead.state(spark, tablePath)
-      finally spark.conf.unset("spark.graft.delta.distributedState")
-    }
-    val a = stateWith("off")
-    val b = stateWith("force")
+    def stateWith(minBytes: Long) =
+      DeltaLakeRead.stateImpl(spark, tablePath, None, None, minBytes)
+    val a = stateWith(Long.MaxValue)
+    val b = stateWith(0L)
     def norm(s: DeltaLakeRead.Snapshot) = s.copy(
       files = s.files.sortBy(f => (f.path, f.dv.toString)),
       tombstones = s.tombstones.sortBy(t => (t.path, t.dv.toString)))
@@ -724,12 +721,9 @@ class DeltaReadSpec extends AnyFunSuite {
       removeJson("lang=l1/f1.parquet"),
       addJson("lang=l1/f1.parquet", Map("lang" -> Some("l1")),
         dv = true)))
-    def stateWith(mode: String) = {
-      spark.conf.set("spark.graft.delta.distributedState", mode)
-      try DeltaLakeRead.state(spark, t.getPath)
-      finally spark.conf.unset("spark.graft.delta.distributedState")
-    }
-    val dist = stateWith("force")
+    def stateWith(minBytes: Long) =
+      DeltaLakeRead.stateImpl(spark, t.getPath, None, None, minBytes)
+    val dist = stateWith(0L)
     assert(dist.files.size === n + 1,
       "20k checkpoint adds + 1 fresh - the DV re-add replaces in place")
     assert(dist.tombstones.size === 1)
@@ -745,9 +739,7 @@ class DeltaReadSpec extends AnyFunSuite {
     assert(spot.partitionValues === Map("lang" -> Some("l3")))
     // full parity against driver replay
     assertStateParity(t.getPath)
-    // auto mode engages purely on checkpoint bytes
-    spark.conf.set("spark.graft.delta.distributedStateMinBytes", "1")
-    try assert(stateWith("auto").files.size === n + 1)
-    finally spark.conf.unset("spark.graft.delta.distributedStateMinBytes")
+    // the automatic choice engages purely on checkpoint bytes
+    assert(stateWith(1L).files.size === n + 1)
   }
 }

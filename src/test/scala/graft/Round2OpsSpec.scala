@@ -57,11 +57,8 @@ class Round2OpsSpec extends AnyFunSuite {
     val labels = (0L until 2000L).map(i => (i, i)).toDF("node", "cluster_id")
     val batch = (0L until 1000L).map(i => (2 * i, 2 * i + 1))
       .toDF("id_a", "id_b") // 1000 disjoint merges → 2000 touched labels
-    spark.conf.set(Clusters.CcBroadcastMaxNodesKey, "100")
-    val got =
-      try Clusters.updateClusters(labels, batch).as[(Long, Long)]
-        .collect().toMap
-      finally spark.conf.unset(Clusters.CcBroadcastMaxNodesKey)
+    val got = Clusters.updateClusters(labels, batch, "id_a", "id_b", 25,
+      None, maxBroadcast = 100L).as[(Long, Long)].collect().toMap
     val scratch = Clusters.connectedComponents(batch, "id_a", "id_b")
       .as[(Long, Long)].collect().toMap
     assert(got.size == 2000 && got === scratch)
@@ -126,10 +123,10 @@ class Round2OpsSpec extends AnyFunSuite {
     // chain 0-1-2-...-9 has diameter 9; 2 rounds cannot converge.
     // Local path disabled: maxIter only governs the distributed loop.
     val pairs = (0L until 9L).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    spark.conf.set(Clusters.CcLocalMaxEdgesKey, "0")
-    try intercept[IllegalStateException] {
-      Clusters.connectedComponents(pairs, "id_a", "id_b", maxIter = 2)
-    } finally spark.conf.unset(Clusters.CcLocalMaxEdgesKey)
+    intercept[IllegalStateException] {
+      Clusters.connectedComponents(pairs, "id_a", "id_b", 2, None,
+        maxLocal = 0L)
+    }
   }
 
   test("connectedComponents: local union-find path equals the distributed " +
@@ -140,19 +137,13 @@ class Round2OpsSpec extends AnyFunSuite {
       (100L until 115L).map(i => (i, i + 1))).toDF("id_a", "id_b")
     val local = Clusters.connectedComponents(pairs, "id_a", "id_b")
       .as[(Long, Long)].collect().toMap
-    spark.conf.set(Clusters.CcLocalMaxEdgesKey, "0")
-    val dist =
-      try Clusters.connectedComponents(pairs, "id_a", "id_b")
-        .as[(Long, Long)].collect().toMap
-      finally spark.conf.unset(Clusters.CcLocalMaxEdgesKey)
+    val dist = Clusters.connectedComponents(pairs, "id_a", "id_b", 25,
+      None, maxLocal = 0L).as[(Long, Long)].collect().toMap
     assert(local === dist)
     // cap smaller than the edge list: the probe overflows and the
     // distributed loop answers — labels identical either way
-    spark.conf.set(Clusters.CcLocalMaxEdgesKey, "4")
-    val fallback =
-      try Clusters.connectedComponents(pairs, "id_a", "id_b")
-        .as[(Long, Long)].collect().toMap
-      finally spark.conf.unset(Clusters.CcLocalMaxEdgesKey)
+    val fallback = Clusters.connectedComponents(pairs, "id_a", "id_b", 25,
+      None, maxLocal = 4L).as[(Long, Long)].collect().toMap
     assert(fallback === dist)
   }
 
@@ -194,11 +185,8 @@ class Round2OpsSpec extends AnyFunSuite {
     assert(big.as[(Long, Long)].collect().toMap === expect)
     // lying small hint with a tiny cap: the limit(cap+1) overflow falls
     // through to the distributed loop — never a wrong answer
-    spark.conf.set(Clusters.CcLocalMaxEdgesKey, "2")
-    val lied =
-      try Clusters.connectedComponents(pairs, "id_a", "id_b",
-        edgeCountHint = Some(1L)).as[(Long, Long)].collect().toMap
-      finally spark.conf.unset(Clusters.CcLocalMaxEdgesKey)
+    val lied = Clusters.connectedComponents(pairs, "id_a", "id_b", 25,
+      Some(1L), maxLocal = 2L).as[(Long, Long)].collect().toMap
     assert(lied === expect)
   }
 
@@ -307,12 +295,9 @@ class Round2OpsSpec extends AnyFunSuite {
     // diameter 2 ⇒ must converge well inside 4 rounds — a skew-induced
     // stall (or silent wrong labels) would throw here. Local path off:
     // this test pins the DISTRIBUTED loop's skew behavior.
-    spark.conf.set(Clusters.CcLocalMaxEdgesKey, "0")
-    val labels =
-      try graft.scale.Clusters
-        .connectedComponents(pairs, "id_a", "id_b", maxIter = 4)
-        .as[(Long, Long)].collect().toMap
-      finally spark.conf.unset(Clusters.CcLocalMaxEdgesKey)
+    val labels = graft.scale.Clusters
+      .connectedComponents(pairs, "id_a", "id_b", 4, None, maxLocal = 0L)
+      .as[(Long, Long)].collect().toMap
     assert(labels.size === 10004)
     assert(labels(10000L) === 0L && labels(1L) === 0L && labels(2L) === 0L)
     assert(labels(20003L) === 20001L)

@@ -4,6 +4,8 @@ import graft.ingest.{DeltaLakeRead, DeltaLakeWrite, Readers}
 import java.io.File
 import java.nio.file.Files
 import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.Row
+import org.apache.spark.sql.graft.CacheProbe
 import org.apache.spark.sql.types.{IntegerType, StringType, StructType}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -87,16 +89,126 @@ class SessionFactorySpec extends AnyFunSuite {
     assert(passes(2) < passes(0) / 10.0, passes)
   }
 
+  private def scalaFiles(f: File): Seq[File] =
+    if (f.isDirectory) f.listFiles().toSeq.flatMap(scalaFiles)
+    else if (f.getName.endsWith(".scala")) Seq(f) else Nil
+
   test("only the factory builds sessions") {
     val call = "SparkSession" + ".builder"
-    def scala(f: File): Seq[File] =
-      if (f.isDirectory) f.listFiles().toSeq.flatMap(scala)
-      else if (f.getName.endsWith(".scala")) Seq(f) else Nil
     val sites = Seq("src/main/scala", "src/test/scala")
-      .flatMap(d => scala(new File(d)))
+      .flatMap(d => scalaFiles(new File(d)))
       .filter(f => Files.readString(f.toPath).contains(call))
       .map(_.getPath)
     assert(sites === Seq("src/main/scala/graft/core/SessionFactory.scala"))
+  }
+
+  // a runtime conf is set in the factory (or on a SessionFactory.child);
+  // only tool mains configure the session they built
+  test("library code sets no session conf and reads no tuning knob") {
+    val main = new File("src/main/scala/graft")
+    val sources = scalaFiles(main).map(f =>
+      main.toPath.relativize(f.toPath).toString -> Files.readString(f.toPath))
+    val setters = sources.collect {
+      case (f, src) if "conf\\.(set|unset)\\(".r.findFirstIn(src).nonEmpty => f
+    }.toSet
+    val allowed = Set("core/SessionFactory.scala", "Explain.scala",
+      "GenScale.scala", "ShuffleAudit.scala", "tools/StreamOverhead.scala")
+    assert(setters.subsetOf(allowed), setters -- allowed)
+    val keys = sources.flatMap { case (_, src) =>
+      "\"spark\\.graft\\.[A-Za-z0-9_.]*".r.findAllIn(src).map(_.drop(1))
+    }.toSet
+    assert(keys === Set("spark.graft.dv.checkCardinality",
+      "spark.graft.explain.noCheckpoint"))
+  }
+
+  // each op runs on a fresh session of the suite's context, so a conf
+  // an earlier suite left behind cannot hide a write
+  test("library ops leave the session's confs and cache as they found them") {
+    import graft.ingest.{DeltaLakeDml, ParquetTableIO, VersionedTableIO}
+    import org.apache.spark.sql.types._
+    val s = spark.newSession()
+    import s.implicits._
+    def unchanged(what: String)(op: => Unit): Unit = {
+      val (confs, cached) = (s.conf.getAll, CacheProbe.entries(s))
+      op
+      assert(s.conf.getAll === confs, what)
+      assert(CacheProbe.entries(s) === cached, what)
+    }
+    def dir(p: String) = Files.createTempDirectory(p).toString
+
+    val csv = dir("graft_inv_csv")
+    Files.writeString(new File(csv, "a.csv").toPath, "k,v\n1,a\n2,b\n")
+    unchanged("StreamIngest.ingestCsv")(graft.stream.StreamIngest.ingestCsv(
+      s, csv, dir("graft_inv_ck"), new ParquetTableIO(dir("graft_inv_t")),
+      "t", "id", Seq("k"),
+      Some(new StructType().add("k", LongType).add("v", StringType))))
+
+    val events = dir("graft_inv_ev")
+    val evSchema = new StructType().add("event_id", LongType)
+      .add("ts", TimestampType).add("user_id", LongType)
+      .add("event_type", StringType)
+    s.createDataFrame(s.sparkContext.parallelize(Seq(
+      Row(1L, java.sql.Timestamp.valueOf("2024-01-01 10:00:00"), 7L, "view"),
+      Row(2L, java.sql.Timestamp.valueOf("2024-01-01 10:10:00"), 7L,
+        "purchase"))), evSchema).write.mode("overwrite").parquet(events)
+    unchanged("StreamJoins.runViewPurchase")(assert(
+      graft.stream.StreamJoins.runViewPurchase(s, events, evSchema,
+        "inv_ssj", statePartitions = Some(2)).count() === 1L))
+
+    val delta = dir("graft_inv_delta")
+    val log = new File(delta, "_delta_log"); log.mkdirs()
+    def field(n: String, dt: DataType, id: Long) = StructField(n, dt,
+      nullable = true, new MetadataBuilder()
+        .putString("delta.columnMapping.physicalName", s"col-$id")
+        .putLong("delta.columnMapping.id", id).build())
+    val schemaStr = new com.fasterxml.jackson.databind.ObjectMapper()
+      .writeValueAsString(StructType(Seq(field("id", LongType, 1L),
+        field("v", StringType, 2L))).json)
+    Files.writeString(new File(log, "00000000000000000000.json").toPath,
+      Seq("""{"protocol":{"minReaderVersion":2,"minWriterVersion":5}}""",
+        s"""{"metaData":{"id":"inv","format":{"provider":"parquet","options":{}},"schemaString":$schemaStr,"partitionColumns":[],"configuration":{"delta.columnMapping.mode":"id"}}}""")
+        .mkString("\n"))
+    unchanged("id-mode DeltaLakeWrite.append")(DeltaLakeWrite.append(
+      Seq((1L, "a"), (2L, "b")).toDF("id", "v"), delta))
+    unchanged("id-mode DeltaLakeDml.delete")(
+      DeltaLakeDml.delete(s, delta, "id = 1"))
+    assert(DeltaLakeRead.snapshot(s, delta).count() === 1L)
+
+    unchanged("VersionedTableIO.append")(new VersionedTableIO(
+      dir("graft_inv_v")).append(Seq((1L, "a")).toDF("id", "v"), "t"))
+
+    unchanged("Tables.load events")(
+      graft.core.Tables.load(s, SparkTestSession.sfDir, "events").count())
+    unchanged("Tables.registerAll")(
+      graft.core.Tables.registerAll(s, SparkTestSession.sfDir))
+
+    val docs = Seq((1L, "the cat sat on the mat", "en"),
+      (2L, "der hund lief schnell", "de")).toDF("doc_id", "text", "lang")
+    unchanged("DatasetCard.card")(graft.scale.DatasetCard.card(
+      docs, "doc_id", "text", "lang").collect())
+    unchanged("Bpe.train")(graft.scale.Bpe.train(docs, "text", 3).collect())
+  }
+
+  // a child runs under its caller's runtime confs as they are at each
+  // call, and repeated calls reuse one child rather than add sessions
+  test("a child session mirrors its caller's confs and is reused") {
+    import graft.core.SessionFactory
+    val s = spark.newSession()
+    val width = Map("spark.sql.shuffle.partitions" -> "2")
+    val c = SessionFactory.child(s, width)
+    assert(c ne s)
+    assert(c.conf.get("spark.sql.shuffle.partitions") === "2")
+    assert(s.conf.get("spark.sql.shuffle.partitions") === "4")
+    s.conf.set("spark.sql.files.maxPartitionBytes", "1m")
+    s.conf.set("spark.graft.dv.checkCardinality", "true")
+    assert(SessionFactory.child(s, width) eq c)
+    assert(c.conf.get("spark.sql.files.maxPartitionBytes") === "1m")
+    assert(c.conf.get("spark.graft.dv.checkCardinality") === "true")
+    s.conf.unset("spark.graft.dv.checkCardinality")
+    SessionFactory.child(s, width)
+    assert(c.conf.getOption("spark.graft.dv.checkCardinality").isEmpty)
+    assert(c.conf.get("spark.sql.streaming.minBatchesToRetain") === "2")
+    assert(SessionFactory.child(s, Map.empty) ne c)
   }
 
   /** A 1,000-row Delta table in four data files; returns the table dir

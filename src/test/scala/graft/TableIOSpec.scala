@@ -87,6 +87,39 @@ class TableIOSpec extends AnyFunSuite {
     assert(got.filter(col("part") === "x").count() === 1)
   }
 
+  test("compaction keeps a partitioned table's partition directories " +
+      "and its partition pruning") {
+    val rows = (0 until 40).map(i => (i, if (i % 2 == 0) "x" else "y"))
+    val recorded = newIO()
+    recorded.append(rows.toDF("k", "part").repartition(4), "t",
+      partitionBy = Seq("part"))
+    // a directory written by plain df.write reads by inference
+    val plainRoot = newRoot()
+    rows.toDF("k", "part").write.partitionBy("part")
+      .parquet(s"$plainRoot/t")
+    val plain = new ParquetTableIO(plainRoot)
+    val compactions: Seq[(String, ParquetTableIO => Unit)] = Seq(
+      "compact" -> (_.compact(spark, "t", numFiles = 1)),
+      "compactClustered" -> (_.compactClustered(spark, "t", numFiles = 2,
+        clusterCols = Seq("k"))))
+    for ((io, root) <- Seq(recorded -> None, plain -> Some(plainRoot));
+         (name, run) <- compactions) {
+      run(io)
+      val t = io.read(spark, "t")
+      val dir = new File(new java.net.URI(t.inputFiles.head))
+        .getParentFile.getParentFile
+      assert(dir.listFiles().filter(_.isDirectory).map(_.getName).sorted
+        .toSeq === Seq("part=x", "part=y"), s"$name $root")
+      val filtered = t.filter(col("part") === "x")
+      val scan = filtered.queryExecution.sparkPlan.collectFirst {
+        case f: org.apache.spark.sql.execution.FileSourceScanExec => f
+      }.get
+      assert(scan.partitionFilters.nonEmpty, s"$name $root")
+      assert(filtered.count() === 20L)
+      assert(t.agg(sum("k")).first().getLong(0) === 780L)
+    }
+  }
+
   test("dynamic partition overwrite replaces only the written partitions") {
     val io = newIO()
     io.overwrite(Seq((1, "a", "x"), (2, "b", "x"), (3, "c", "y"))

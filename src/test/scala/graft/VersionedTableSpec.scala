@@ -693,22 +693,19 @@ class VersionedTableSpec extends AnyFunSuite {
       "applies as a SHUFFLED hash join — no broadcast of the full " +
       "position set, content identical") {
     import org.apache.spark.sql.functions.col
-    val (io, _) = freshIo()
+    val (io, root) = freshIo()
     io.overwrite(spark.range(0, 50000).toDF("id"), "t")
     // mask half the table — with the guard forced low, the read plan
     // must NOT broadcast (a 1B-row mask at 100 TB would OOM the driver)
     io.deleteWhereVectors(spark, "t", col("id") % 2 === 0)
-    val key = graft.ingest.VersionedTableIO.DvBroadcastMaxRowsKey
-    spark.conf.set(key, "1000")
-    try {
-      val df = io.read(spark, "t")
-      val plan = df.queryExecution.executedPlan.toString
-      assert(!plan.contains("BroadcastHashJoin"), plan.take(2000))
-      assert(plan.contains("LeftAnti"), plan.take(2000))
-      assert(df.count() == 25000)
-      // pruned reads route through the same guarded subtract
-      assert(io.readPruned(spark, "t", "id", 0, 99).count() == 50)
-    } finally spark.conf.unset(key)
+    val low = new VersionedTableIO(root, graft.ingest.LocalLinkBackend, 1000L)
+    val df = low.read(spark, "t")
+    val plan = df.queryExecution.executedPlan.toString
+    assert(!plan.contains("BroadcastHashJoin"), plan.take(2000))
+    assert(plan.contains("LeftAnti"), plan.take(2000))
+    assert(df.count() == 25000)
+    // pruned reads route through the same guarded subtract
+    assert(low.readPruned(spark, "t", "id", 0, 99).count() == 50)
     // with the default threshold the same table broadcasts again
     val plan2 = io.read(spark, "t").queryExecution.executedPlan.toString
     assert(plan2.contains("BroadcastHashJoin"), plan2.take(2000))
