@@ -1,11 +1,8 @@
 package graft.ingest
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions.{col, lit}
-import java.nio.charset.StandardCharsets
-import java.nio.file.Files
-import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.{LongType, StringType, StructField}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Change Data Feed READER for real Delta tables (PROTOCOL.md § Add
   * CDC File): row-level changes between two versions — what
@@ -31,7 +28,11 @@ import scala.jdk.CollectionConverters._
   * commits contribute nothing.
   *
   * Scale shape: one driver-side parse of the commits in range, then
-  * one pruned parquet read per commit (cdc or added files only) —
+  * at most two relations for the whole range through
+  * [[DeltaLakeRead.scan]] — the change-data files (their stored
+  * `_change_type`) and the added files of pure-append commits (tagged
+  * `insert`), each file carrying its `_commit_version` as a per-file
+  * value of the log-backed index. Only those files are read —
   * O(rows changed in range), never O(table). Output columns: the
   * table's logical schema + `_change_type` + `_commit_version`. */
 object DeltaLakeCdf {
@@ -50,78 +51,46 @@ object DeltaLakeCdf {
     require(st.config.get("delta.enableChangeDataFeed").contains("true"),
       "delta.enableChangeDataFeed is not set on this table — no writer " +
       "was obliged to record change data; use snapshot()/appendsSince()")
-    val (commits, checkpoints, v2cps) = DeltaLakeRead.listLog(tablePath)
-    val latest = (commits.keySet ++ checkpoints.keySet ++ v2cps.keySet)
-      .maxOption.getOrElse(throw new IllegalArgumentException(
-        s"$tablePath/_delta_log holds no commits — not a Delta table"))
+    val log = DeltaLakeRead.listLog(tablePath)
+    val latest = DeltaLakeRead.latestIn(tablePath, log)
     val to = toVersion.getOrElse(latest)
     require(fromVersion >= 0 && fromVersion <= to && to <= latest,
       s"bad version range [$fromVersion, $to] (latest $latest)")
     val root = new java.io.File(tablePath).getAbsolutePath
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
 
-    val frames = (fromVersion to to).flatMap { v =>
-      val f = commits.getOrElse(v, throw new IllegalArgumentException(
-        s"commit $v is missing (vacuumed past a checkpoint?) — cannot " +
-        "enumerate changes; resync with snapshot()"))
-      val cdc = scala.collection.mutable
-        .ArrayBuffer[(String, Map[String, Option[String]])]()
-      val adds = scala.collection.mutable
-        .ArrayBuffer[(String, Map[String, Option[String]])]()
-      var removedOrRewrote = false
-      Files.readAllLines(f.toPath, StandardCharsets.UTF_8).asScala
-        .filter(_.nonEmpty).foreach { line =>
-          val n = mapper.readTree(line)
-          def node(k: String) = Option(n.get(k)).filterNot(_.isNull)
-          def pv(a: com.fasterxml.jackson.databind.JsonNode) =
-            Option(a.get("partitionValues")).filterNot(_.isNull)
-              .map(_.properties().asScala.map(e => e.getKey ->
-                (if (e.getValue.isNull) None
-                 else Some(e.getValue.asText()))).toMap)
-              .getOrElse(Map.empty[String, Option[String]])
-          node("cdc").foreach { a =>
-            cdc += ((DeltaLakeRead.decode(a.get("path").asText()), pv(a)))
-            ()
-          }
-          node("add").foreach { a =>
-            if (Option(a.get("dataChange")).forall(_.asBoolean(true))) {
-              adds += ((DeltaLakeRead.decode(a.get("path").asText()),
-                pv(a)))
-              if (!Option(a.get("deletionVector")).forall(_.isNull))
-                removedOrRewrote = true
-            }
-            ()
-          }
-          node("remove").foreach { r =>
-            if (Option(r.get("dataChange")).forall(_.asBoolean(true)))
-              removedOrRewrote = true
-            ()
-          }
-        }
-      if (cdc.nonEmpty)
-        Some(DeltaLakeRead.readLogical(spark, root, st, cdc.toSeq,
-          Seq(ChangeTypeCol))
-          .withColumn(CommitVersionCol, lit(v)))
-      else if (removedOrRewrote)
+    // every change-data and every derived-insert file of the range,
+    // each with its per-file values
+    val (cdc, adds) = (fromVersion to to).map { v =>
+      val acts = DeltaLakeRead.commitActions(log._1, v, "changes")
+      def all(k: String) =
+        acts.flatMap(n => Option(n.get(k)).filterNot(_.isNull))
+      val changed = all("cdc").map(DeltaLakeRead.fileAction)
+      val added = all("add").filter(DeltaLakeRead.dataChange)
+        .map(DeltaLakeRead.fileAction)
+      // cdc actions are authoritative: the commit's adds derive nothing
+      if (changed.nonEmpty) (changed.map(_ -> Seq[Any](v)), Nil)
+      else if (added.exists(_.dv.isDefined) ||
+          all("remove").exists(DeltaLakeRead.dataChange))
         throw new IllegalArgumentException(
           s"commit $v removed or rewrote rows without change-data " +
           "files (written before delta.enableChangeDataFeed, or by a " +
           "non-CDF writer) — its row-level changes cannot be derived; " +
           "resync with snapshot()")
-      else if (adds.nonEmpty)
-        Some(DeltaLakeRead.readLogical(spark, root, st, adds.toSeq)
-          .withColumn(ChangeTypeCol, lit("insert"))
-          .withColumn(CommitVersionCol, lit(v)))
-      else None // metadata-only commit
-    }
-    frames.reduceOption(_ unionByName _).getOrElse {
-      import org.apache.spark.sql.types._
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(st.schema.fields.map(f => StructField(f.name,
-          DeltaLakeRead.stripType(f.dataType), f.nullable)) ++ Seq(
-          StructField(ChangeTypeCol, StringType),
-          StructField(CommitVersionCol, LongType))))
+      else (Nil, added.map(_ -> Seq[Any](Insert, v)))
+    }.unzip match { case (c, a) => (c.flatten, a.flatten) }
+    // at most two relations for the whole range: the commit version,
+    // and an add-derived row's change type, are per-file values
+    val changeType = StructField(ChangeTypeCol, StringType)
+    val version = StructField(CommitVersionCol, LongType)
+    val inserts = DeltaLakeRead.scan(spark, root, st, adds,
+      meta = false, extraPart = Seq(changeType, version))
+    if (cdc.isEmpty) inserts
+    else {
+      val changed = DeltaLakeRead.scan(spark, root, st, cdc,
+        meta = false, extraData = Seq(changeType), extraPart = Seq(version))
+      if (adds.isEmpty) changed else changed.unionByName(inserts)
     }
   }
+
+  private val Insert = UTF8String.fromString("insert")
 }

@@ -1,9 +1,13 @@
 package graft.ingest
 
-import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Cast, Literal}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions.{coalesce, col, concat, lit, row_number, struct, to_json, udf, when}
+import org.apache.spark.sql.functions.{col, concat, lit, row_number, struct, to_json, udf, when}
+import org.apache.spark.sql.graft.PlanBridge
 import org.apache.spark.sql.types.{ArrayType, BooleanType, DataType, IntegerType, LongType, MapType, Metadata, MetadataBuilder, StringType, StructField, StructType}
 import java.io.File
 import java.nio.charset.StandardCharsets
@@ -28,12 +32,12 @@ import scala.jdk.CollectionConverters._
   * parquet files.
   *
   * Supported: snapshot reads at the latest or a `versionAsOf`
-  * version; partitioned tables (hive-style directory layouts read
-  * natively via `basePath` so partition pruning still works;
-  * non-hive layouts fall back to a per-partition-value union);
-  * classic single- and multi-part checkpoints; V2 (UUID-named)
-  * checkpoints, json or parquet, with their `_sidecars/` file-action
-  * parts; percent-encoded file paths; reader protocol versions 1-3
+  * version; partitioned tables in any directory layout (each file's
+  * partition values come from its add action, not its path, so hive
+  * and non-hive layouts are one relation and partition filters prune
+  * files in either); classic single- and multi-part checkpoints;
+  * V2 (UUID-named) checkpoints, json or parquet, with their
+  * `_sidecars/` file-action parts; percent-encoded file paths; reader protocol versions 1-3
   * where every table feature is in the supported set; column mapping
   * in `name` mode (each logical field carries
   * `delta.columnMapping.physicalName` metadata naming the parquet
@@ -68,15 +72,18 @@ import scala.jdk.CollectionConverters._
   *
   * Scale shape: log replay is driver-side (list + parse the JSON
   * commits after the newest checkpoint ≤ target — the same work
-  * delta-spark's own Snapshot does), and the data read hands Spark
-  * the full active-file list in ONE `spark.read.parquet(files*)`
-  * call, so scan parallelism, column pruning, and row-group pushdown
-  * are untouched. DV-bearing files read as a SECOND relation whose
-  * bitmaps are decoded lazily INSIDE the scan tasks ([[DvCache]] —
-  * the driver never holds position sets, only descriptors). Driver
-  * memory is bounded by the active-file COUNT (path strings), not
-  * data size — the delta-spark caveat at million-file tables applies
-  * here identically. */
+  * delta-spark's own Snapshot does), and the data read plans from
+  * the replayed file list itself: [[scan]] wraps it in a
+  * [[LogFileIndex]] (paths, sizes and partition values from the log)
+  * under ONE `HadoopFsRelation`, so planning makes no filesystem call
+  * — no existence check, glob or listing job at any file count —
+  * while scan parallelism, column pruning, partition pruning and
+  * row-group pushdown are Spark's own. DV-bearing files read as a
+  * SECOND relation whose bitmaps are decoded lazily INSIDE the scan
+  * tasks ([[DvCache]] — the driver never holds position sets, only
+  * descriptors). Driver memory is bounded by the active-file COUNT
+  * (path strings), not data size — the delta-spark caveat at
+  * million-file tables applies here identically. */
 object DeltaLakeRead {
 
   private val mapper = new ObjectMapper()
@@ -150,20 +157,36 @@ object DeltaLakeRead {
       f.metadata.getString(PhysicalNameKey)
     else f.name
 
-  /** Rename logical field names to physical ones recursively;
-    * `fieldMeta` decides what metadata each renamed field carries
-    * (empty for name mode; `parquet.field.id` for id mode). */
-  private[ingest] def physicalizeType(dt: DataType,
-      fieldMeta: StructField => Metadata): DataType = dt match {
-    case s: StructType => StructType(s.fields.map(f =>
-      StructField(physFieldName(f), physicalizeType(f.dataType, fieldMeta),
-        f.nullable, fieldMeta(f))))
-    case a: ArrayType =>
-      a.copy(elementType = physicalizeType(a.elementType, fieldMeta))
-    case m: MapType => m.copy(
-      keyType = physicalizeType(m.keyType, fieldMeta),
-      valueType = physicalizeType(m.valueType, fieldMeta))
-    case o => o
+  /** Logical field `f` as `st`'s parquet files store it: physical
+    * names at every nesting level under column mapping, each field
+    * carrying `parquet.field.id` from its `delta.columnMapping.id` in
+    * id mode (a field without one is refused, never guessed); the
+    * metadata-free field when the table is unmapped. One definition
+    * for the reader's scan schema and the writer's rename. */
+  private[ingest] def physicalField(st: Snapshot,
+      f: StructField): StructField = {
+    val mode = st.config.getOrElse("delta.columnMapping.mode", "none")
+    def meta(f: StructField): Metadata =
+      if (mode != "id") Metadata.empty
+      else {
+        require(f.metadata.contains(FieldIdKey),
+          s"column mapping is 'id' but field ${f.name} carries no " +
+          s"$FieldIdKey metadata — refusing to guess")
+        new MetadataBuilder()
+          .putLong(ParquetFieldIdKey, f.metadata.getLong(FieldIdKey))
+          .build()
+      }
+    def physType(dt: DataType): DataType = dt match {
+      case s: StructType => StructType(s.fields.map(field))
+      case a: ArrayType => a.copy(elementType = physType(a.elementType))
+      case m: MapType => m.copy(keyType = physType(m.keyType),
+        valueType = physType(m.valueType))
+      case o => o
+    }
+    def field(f: StructField): StructField =
+      StructField(physFieldName(f), physType(f.dataType), f.nullable, meta(f))
+    if (mode == "none") StructField(f.name, stripType(f.dataType), f.nullable)
+    else field(f)
   }
 
   /** The metadata-free logical type (for rename casts and schema
@@ -255,12 +278,30 @@ object DeltaLakeRead {
 
   /** Latest committed version of the table (max commit/checkpoint
     * number in `_delta_log`). */
-  def latestVersion(tablePath: String): Long = {
-    val (commits, checkpoints, v2) = listLog(tablePath)
-    (commits.keySet ++ checkpoints.keySet ++ v2.keySet).maxOption.getOrElse(
+  def latestVersion(tablePath: String): Long =
+    latestIn(tablePath, listLog(tablePath))
+
+  /** The newest version in a [[listLog]] listing of `tablePath`. */
+  private[ingest] def latestIn(tablePath: String, log: (Map[Long, File],
+      Map[Long, Seq[File]], Map[Long, File])): Long =
+    (log._1.keySet ++ log._2.keySet ++ log._3.keySet).maxOption.getOrElse(
       throw new IllegalArgumentException(
         s"$tablePath/_delta_log holds no commits — not a Delta table"))
+
+  /** Commit `v`'s actions, one node per line; loud when the commit
+    * file is gone, since `what` can then not be enumerated. */
+  private[ingest] def commitActions(commits: Map[Long, File], v: Long,
+      what: String): Seq[JsonNode] = {
+    val f = commits.getOrElse(v, throw new IllegalArgumentException(
+      s"commit $v is missing (vacuumed past a checkpoint?) — cannot " +
+      s"enumerate $what; resync with snapshot()"))
+    Files.readAllLines(f.toPath, StandardCharsets.UTF_8).asScala.toSeq
+      .filter(_.nonEmpty).map(mapper.readTree)
   }
+
+  /** An add/remove action's `dataChange` flag (absent means true). */
+  private[graft] def dataChange(a: JsonNode): Boolean =
+    Option(a.get("dataChange")).forall(_.asBoolean(true))
 
   /** Snapshot the table as a DataFrame at `versionAsOf` (default:
     * latest). */
@@ -318,7 +359,7 @@ object DeltaLakeRead {
     * changing logical content, so it is a no-op for an appends
     * consumer, and rejecting it would permanently break every
     * watermark-based reader of a compacted table. One replay + one
-    * pruned multi-file read; cost is O(files added in range), never
+    * scan of the added files; cost is O(files added in range), never
     * O(table). */
   def appendsSince(spark: SparkSession, tablePath: String,
       sinceVersion: Long): DataFrame =
@@ -328,24 +369,15 @@ object DeltaLakeRead {
     * [[stateImpl]]). */
   private[graft] def appendsSince(spark: SparkSession, tablePath: String,
       sinceVersion: Long, minBytes: Long): DataFrame = {
-    val (commits, checkpoints, v2cps) = listLog(tablePath)
-    val latest = (commits.keySet ++ checkpoints.keySet ++ v2cps.keySet)
-      .maxOption.getOrElse(throw new IllegalArgumentException(
-        s"$tablePath/_delta_log holds no commits — not a Delta table"))
+    val log = listLog(tablePath)
+    val latest = latestIn(tablePath, log)
     require(sinceVersion <= latest,
       s"sinceVersion $sinceVersion > latest committed version $latest")
     val added = scala.collection.mutable.LinkedHashSet[String]()
     ((sinceVersion + 1) to latest).foreach { v =>
-      val f = commits.getOrElse(v, throw new IllegalArgumentException(
-        s"commit $v is missing (vacuumed past a checkpoint?) — cannot " +
-        s"enumerate appends since $sinceVersion; resync with snapshot()"))
-      Files.readAllLines(f.toPath, StandardCharsets.UTF_8).asScala
-        .filter(_.nonEmpty).foreach { line =>
-          val n = mapper.readTree(line)
+      commitActions(log._1, v, s"appends since $sinceVersion")
+        .foreach { n =>
           def node(k: String) = Option(n.get(k)).filterNot(_.isNull)
-          def dataChange(a: com.fasterxml.jackson.databind.JsonNode) =
-            Option(a.get("dataChange")).filterNot(_.isNull)
-              .forall(_.asBoolean(true))
           node("remove").foreach { r =>
             if (dataChange(r))
               throw new IllegalArgumentException(
@@ -445,26 +477,41 @@ object DeltaLakeRead {
 
   /** Read the active files of `st` (column mapping, partitions and DV
     * masking resolved) — no log replay, so a caller holding a state
-    * can scan exactly it, or a subset of its files. */
+    * can scan exactly it, or a subset of its files. Clean and
+    * DV-bearing files are two relations: only the DV relation reads
+    * `_metadata.file_path`/`row_index`, which cost a clean scan ≈9%. */
   private[ingest] def read(spark: SparkSession, tablePath: String,
       st: Snapshot, withMeta: Boolean): DataFrame = {
     val root = new File(tablePath).getAbsolutePath
-    val cmMode = st.config.getOrElse("delta.columnMapping.mode", "none")
-    val cm = cmMode != "none"
-    def physName(f: StructField): String =
-      if (cm) physFieldName(f) else f.name
-    val fieldMeta: StructField => Metadata =
-      if (cmMode == "id") { f =>
-        require(f.metadata.contains(FieldIdKey),
-          s"column mapping is 'id' but field ${f.name} carries no " +
-          s"$FieldIdKey metadata — refusing to guess")
-        new MetadataBuilder()
-          .putLong(ParquetFieldIdKey, f.metadata.getLong(FieldIdKey))
-          .build()
-      } else _ => Metadata.empty
-    def physicalize(dt: DataType): DataType =
-      if (cm) physicalizeType(dt, fieldMeta) else stripType(dt)
+    val (dvFiles, cleanFiles) = st.files.partition(_.dv.isDefined)
+    def rel(files: Seq[AddFile], meta: Boolean): DataFrame =
+      scan(spark, root, st, files.map((_, Nil)), meta)
+    (Option.when(cleanFiles.nonEmpty || dvFiles.isEmpty)(
+        rel(cleanFiles, withMeta)) ++
+      Option.when(dvFiles.nonEmpty)(subtractDeleted(spark, root,
+        rel(dvFiles, meta = true), dvFiles, keepMeta = withMeta)))
+      .reduce(_ unionByName _)
+  }
 
+  /** The one relation builder every Delta read goes through: `files`
+    * of table `root` as ONE `HadoopFsRelation` over a [[LogFileIndex]]
+    * read against `st`'s schema — data columns by physical name (or
+    * parquet field id), partition columns cast from each file's
+    * `partitionValues` (physical-keyed under column mapping, logical
+    * accepted defensively; null is SQL NULL), logical names and types
+    * restored by a final projection. `extraData` are columns stored in
+    * the files themselves beyond the table's (a change-data file's
+    * `_change_type`, exempt from column mapping per the protocol);
+    * `extraPart` are per-file constants, each file's values given
+    * beside it in `files`. With `meta`, rows also carry `__file` (the
+    * raw `_metadata.file_path` URI) and `__pos` (the parquet row
+    * index). Output: the logical columns, then `extraData`, then
+    * `extraPart`, then the meta columns. */
+  private[ingest] def scan(spark: SparkSession, root: String, st: Snapshot,
+      files: Seq[(AddFile, Seq[Any])], meta: Boolean,
+      extraData: Seq[StructField] = Nil,
+      extraPart: Seq[StructField] = Nil): DataFrame = {
+    def physName(f: StructField): String = physicalField(st, f).name
     // resolve a metaData.partitionColumns entry (logical per the
     // protocol; physical accepted defensively) to its schema field
     def partField(name: String): StructField =
@@ -473,84 +520,37 @@ object DeltaLakeRead {
         .getOrElse(throw new IllegalArgumentException(
           s"partition column $name not in the table schema"))
     val partFields = st.partitionColumns.map(partField)
-    val physPartNames = partFields.map(physName)
-    val dataFieldsPhys = st.schema.fields
+    val dataSchema = StructType(st.schema.fields
       .filterNot(f => partFields.exists(_.name == f.name))
-      .map(f => StructField(physName(f), physicalize(f.dataType),
-        f.nullable, fieldMeta(f)))
-    val dataSchemaPhys = StructType(dataFieldsPhys)
-    // final projection: physical columns back to logical names/types
-    // (cast between structs matches POSITIONALLY, renaming nested
-    // fields; types are identical so it is a rename-only no-op)
-    def logicalSelect(extra: Seq[Column]): Seq[Column] =
-      st.schema.fields.toSeq.map(f =>
-        col(quoted(physName(f))).cast(stripType(f.dataType)).as(f.name)) ++
-        extra
+      .map(physicalField(st, _)) ++ extraData)
+    val partSchema = StructType(partFields.map(f =>
+      StructField(physName(f), stripType(f.dataType))) ++ extraPart)
 
-    def hiveLayout(files: Seq[AddFile]): Boolean =
-      files.forall(f => physPartNames.forall(k =>
-        f.path.split('/').exists(_.startsWith(s"$k="))))
-
-    /** Read a subset of active files, optionally carrying
-      * `__file`/`__pos` parquet metadata columns (raw `__file`; the
-      * caller normalizes). */
-    def readFiles(files: Seq[AddFile], meta: Boolean): DataFrame = {
-      val metaCols =
-        if (meta) Seq(col("_metadata.file_path").as("__file"),
-          col("_metadata.row_index").as("__pos"))
-        else Nil
-      val paths = files.map(f => s"$root/${f.path}")
-      if (st.partitionColumns.isEmpty) {
-        spark.read.schema(dataSchemaPhys).parquet(paths: _*)
-          .select(logicalSelect(metaCols): _*)
-      } else if (hiveLayout(files)) {
-        // hive-style dirs: partition columns come back from the path
-        // via basePath inference — ONE scan relation, pruning intact.
-        // Cast to the log schema's types in its column order
-        // (inference may pick narrower types than schemaString
-        // declares).
-        spark.read.option("basePath", root).schema(
-          StructType(dataFieldsPhys ++ partFields.map(f =>
-            StructField(physName(f), physicalize(f.dataType), f.nullable,
-              fieldMeta(f)))))
-          .parquet(paths: _*)
-          .select(logicalSelect(metaCols): _*)
-      } else {
-        // non-hive layout: per-distinct-partition-value reads unioned.
-        // Fine at catalog-sized partition counts; a table that is BOTH
-        // non-hive and hugely partitioned needs a custom FileIndex.
-        files.groupBy(_.partitionValues).map { case (pv, fs) =>
-          val base = spark.read.schema(dataSchemaPhys)
-            .parquet(fs.map(f => s"$root/${f.path}"): _*)
-          partFields.foldLeft(base) { (df, f) =>
-            val t = stripType(f.dataType)
-            // partitionValues are keyed by PHYSICAL name under column
-            // mapping (logical accepted defensively)
-            val v = pv.get(physName(f)).orElse(pv.get(f.name)).flatten
-            df.withColumn(physName(f),
-              v.map(s => lit(s).cast(t)).getOrElse(lit(null).cast(t)))
-          }.select(logicalSelect(metaCols): _*)
-        }.reduce(_ unionByName _)
-      }
-    }
-
-    val (dvFiles, cleanFiles) = st.files.partition(_.dv.isDefined)
-    val parts = Seq(
-      Option.when(cleanFiles.nonEmpty)(
-        readFiles(cleanFiles, meta = withMeta)),
-      Option.when(dvFiles.nonEmpty)(
-        subtractDeleted(spark, root, readFiles(dvFiles, meta = true),
-          dvFiles, keepMeta = withMeta))).flatten
-    if (parts.isEmpty) {
-      val base = StructType(st.schema.fields.map(f =>
-        StructField(f.name, stripType(f.dataType), f.nullable)))
-      val s2 =
-        if (withMeta) StructType(base.fields ++ Seq(
-          StructField("__file", org.apache.spark.sql.types.StringType),
-          StructField("__pos", org.apache.spark.sql.types.LongType)))
-        else base
-      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], s2)
-    } else parts.reduce(_ unionByName _)
+    // partition values cast as the session casts a string literal
+    val tz = Some(spark.conf.get("spark.sql.session.timeZone"))
+    val ansi = spark.conf.get("spark.sql.ansi.enabled").toBoolean
+    def partRow(f: AddFile, extra: Seq[Any]): InternalRow =
+      InternalRow.fromSeq(partFields.map { p =>
+        f.partitionValues.get(physName(p)).orElse(f.partitionValues
+          .get(p.name)).flatten.map(v => Cast(Literal(v),
+            stripType(p.dataType), tz, ansi).eval()).orNull
+      } ++ extra)
+    val index = LogFileIndex(root, partSchema,
+      files.map { case (f, extra) => (f, partRow(f, extra)) })
+    val relation = HadoopFsRelation(index, partSchema, dataSchema,
+      None, new LogParquetFormat(), Map.empty)(spark)
+    val metaCols =
+      if (meta) Seq(col("_metadata.file_path").as("__file"),
+        col("_metadata.row_index").as("__pos"))
+      else Nil
+    // physical columns back to logical names/types (cast between
+    // structs matches POSITIONALLY, renaming nested fields; types are
+    // identical so it is a rename-only no-op)
+    PlanBridge.ofRows(spark, LogicalRelation(relation)).select(
+      st.schema.fields.toSeq.map(f => col(quoted(physName(f)))
+        .cast(stripType(f.dataType)).as(f.name)) ++
+        (extraData ++ extraPart).map(f => col(quoted(f.name))) ++
+        metaCols: _*)
   }
 
   private val UriScheme = java.util.regex.Pattern.compile("^[a-z]+:/+")
@@ -678,10 +678,7 @@ object DeltaLakeRead {
       pathFilter: Option[Set[String]],
       minBytes: Long = DistributedStateMinBytes): Snapshot = {
     val (commits, checkpoints, v2cps) = listLog(tablePath)
-    val latest =
-      (commits.keySet ++ checkpoints.keySet ++ v2cps.keySet).maxOption
-        .getOrElse(throw new IllegalArgumentException(
-          s"$tablePath/_delta_log holds no commits — not a Delta table"))
+    val latest = latestIn(tablePath, (commits, checkpoints, v2cps))
     val target = versionAsOf.getOrElse(latest)
     require(target <= latest,
       s"versionAsOf $target > latest committed version $latest")
@@ -739,23 +736,6 @@ object DeltaLakeRead {
     var curVer = 0L
     var curIdx = 0L
 
-    def parseDv(d: com.fasterxml.jackson.databind.JsonNode)
-        : DeletionVectors.Descriptor =
-      DeletionVectors.Descriptor(
-        d.get("storageType").asText(),
-        d.get("pathOrInlineDv").asText(),
-        Option(d.get("offset")).filterNot(_.isNull).map(_.asInt()),
-        d.get("sizeInBytes").asInt(),
-        d.get("cardinality").asLong())
-
-    def parsePv(n: com.fasterxml.jackson.databind.JsonNode)
-        : Map[String, Option[String]] =
-      Option(n).filterNot(_.isNull).map(pv =>
-        pv.properties().asScala.map(e => e.getKey ->
-          (if (e.getValue.isNull) None
-           else Some(e.getValue.asText()))).toMap)
-        .getOrElse(Map.empty)
-
     /** ONE parser for every log surface: JSON commits, v2 json
       * checkpoints, and (via a to_json re-encode) classic/v2/sidecar
       * checkpoint parquet rows. */
@@ -788,56 +768,41 @@ object DeltaLakeRead {
         readerFeatures = feats("readerFeatures")
         writerFeatures = feats("writerFeatures")
       }
-      def optL(n: com.fasterxml.jackson.databind.JsonNode,
-          k: String): Option[Long] =
-        Option(n.get(k)).filterNot(_.isNull).map(_.asLong())
       def dvRowFields(dv: Option[DeletionVectors.Descriptor]) = Seq(
         dv.map(_.storageType).orNull, dv.map(_.pathOrInlineDv).orNull,
         dv.flatMap(_.offset).map(Int.box).orNull,
         dv.map(d => Int.box(d.sizeInBytes)).orNull,
         dv.map(d => Long.box(d.cardinality)).orNull)
       node("add").foreach { a =>
-        val dv = Option(a.get("deletionVector")).filterNot(_.isNull)
-          .map(parseDv)
-        val raw = a.get("path").asText()
+        val f = fileAction(a)
         if (distributed) {
-          fileRows += Row.fromSeq(Seq(true, curVer, curIdx, raw,
-            parsePv(a.get("partitionValues"))
-              .map { case (k, v) => k -> v.orNull },
+          fileRows += Row.fromSeq(Seq(true, curVer, curIdx, f.rawPath,
+            f.partitionValues.map { case (k, v) => k -> v.orNull },
             optL(a, "size").map(Long.box).orNull,
             optL(a, "modificationTime").map(Long.box).orNull,
-            null) ++ dvRowFields(dv))
+            null) ++ dvRowFields(f.dv))
         } else {
-          val p = decode(raw)
-          val key = (p, dvUid(dv))
+          val key = (f.path, dvUid(f.dv))
           tombs.remove(key)
           active.remove(key)
-          active.put(key,
-            AddFile(p, raw, parsePv(a.get("partitionValues")),
-              optL(a, "size").getOrElse(0L),
-              optL(a, "modificationTime").getOrElse(0L), dv))
+          active.put(key, f)
         }
         ()
       }
       node("remove").foreach { r =>
-        val dv = Option(r.get("deletionVector")).filterNot(_.isNull)
-          .map(parseDv)
-        val raw = r.get("path").asText()
+        val f = fileAction(r)
         if (distributed) {
-          fileRows += Row.fromSeq(Seq(false, curVer, curIdx, raw,
-            parsePv(r.get("partitionValues"))
-              .map { case (k, v) => k -> v.orNull },
+          fileRows += Row.fromSeq(Seq(false, curVer, curIdx, f.rawPath,
+            f.partitionValues.map { case (k, v) => k -> v.orNull },
             optL(r, "size").map(Long.box).orNull, null,
             optL(r, "deletionTimestamp").map(Long.box).orNull) ++
-            dvRowFields(dv))
+            dvRowFields(f.dv))
         } else {
-          val p = decode(raw)
-          val key = (p, dvUid(dv))
+          val key = (f.path, dvUid(f.dv))
           active.remove(key)
-          tombs.put(key, RemoveTombstone(raw, p,
-            optL(r, "deletionTimestamp"),
-            parsePv(r.get("partitionValues")),
-            optL(r, "size"), dv))
+          tombs.put(key, RemoveTombstone(f.rawPath, f.path,
+            optL(r, "deletionTimestamp"), f.partitionValues,
+            optL(r, "size"), f.dv))
         }
         ()
       }
@@ -1016,63 +981,32 @@ object DeltaLakeRead {
 
   private[ingest] def quoted(name: String): String = s"`$name`"
 
+  private def optL(n: JsonNode, k: String): Option[Long] =
+    Option(n.get(k)).filterNot(_.isNull).map(_.asLong())
+
+  /** The file an add, remove or cdc action names: decoded and raw
+    * path, partition values, logged size and modificationTime (0 when
+    * absent), and its deletion vector. */
+  private[ingest] def fileAction(a: JsonNode): AddFile = {
+    val raw = a.get("path").asText()
+    val pv = Option(a.get("partitionValues")).filterNot(_.isNull)
+      .map(_.properties().asScala.map(e => e.getKey ->
+        Option.when(!e.getValue.isNull)(e.getValue.asText())).toMap)
+      .getOrElse(Map.empty[String, Option[String]])
+    val dv = Option(a.get("deletionVector")).filterNot(_.isNull).map(d =>
+      DeletionVectors.Descriptor(d.get("storageType").asText(),
+        d.get("pathOrInlineDv").asText(),
+        Option(d.get("offset")).filterNot(_.isNull).map(_.asInt()),
+        d.get("sizeInBytes").asInt(), d.get("cardinality").asLong()))
+    AddFile(decode(raw), raw, pv, optL(a, "size").getOrElse(0L),
+      optL(a, "modificationTime").getOrElse(0L), dv)
+  }
+
   /** Percent-decode a log path. URLDecoder would also turn a literal
     * `+` into a space — the protocol's encoding is URI-style percent
     * escaping where `+` means `+`, so it is pre-escaped. */
   private[graft] def decode(p: String): String =
     java.net.URLDecoder.decode(p.replace("+", "%2B"), "UTF-8")
-
-  /** Read `(relPath, partitionValues)` files of table `root` against
-    * `st`'s schema — partition columns attached from the action's
-    * partitionValues (physical-keyed under column mapping), logical
-    * names restored, column mapping name/id handled like [[snapshot]].
-    * `extras` are passthrough STRING columns stored in the files
-    * themselves (e.g. `_change_type` in change-data files — exempt
-    * from column mapping per the protocol). The per-partition-value
-    * union shape: right for bounded file lists (CDC reads one
-    * commit's files at a time), not for full-table scans. */
-  private[ingest] def readLogical(spark: SparkSession, root: String,
-      st: Snapshot, files: Seq[(String, Map[String, Option[String]])],
-      extras: Seq[String] = Nil): DataFrame = {
-    val cmMode = st.config.getOrElse("delta.columnMapping.mode", "none")
-    val cm = cmMode != "none"
-    def physName(f: StructField): String =
-      if (cm) physFieldName(f) else f.name
-    val fieldMeta: StructField => Metadata =
-      if (cmMode == "id") { f =>
-        new MetadataBuilder()
-          .putLong(ParquetFieldIdKey, f.metadata.getLong(FieldIdKey))
-          .build()
-      } else _ => Metadata.empty
-    def physicalize(dt: DataType): DataType =
-      if (cm) physicalizeType(dt, fieldMeta) else stripType(dt)
-    val partFields = st.partitionColumns.map(c => st.schema(c))
-    val dataFields = st.schema.fields
-      .filterNot(f => partFields.exists(_.name == f.name))
-      .map(f => StructField(physName(f), physicalize(f.dataType),
-        f.nullable, fieldMeta(f)))
-    val extraFields = extras.map(e =>
-      StructField(e, org.apache.spark.sql.types.StringType))
-    val readSchema = StructType(dataFields ++ extraFields)
-    val out = st.schema.fields.toSeq.map(f =>
-      col(quoted(physName(f))).cast(stripType(f.dataType)).as(f.name)) ++
-      extras.map(e => col(quoted(e)))
-    files.groupBy(_._2).map { case (pv, fs) =>
-      val base = spark.read.schema(readSchema)
-        .parquet(fs.map(f => s"$root/${f._1}"): _*)
-      partFields.foldLeft(base) { (df, f) =>
-        val t = stripType(f.dataType)
-        val v = pv.get(physName(f)).orElse(pv.get(f.name)).flatten
-        df.withColumn(physName(f),
-          v.map(s => lit(s).cast(t)).getOrElse(lit(null).cast(t)))
-      }.select(out: _*)
-    }.reduceOption(_ unionByName _).getOrElse {
-      spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
-        StructType(st.schema.fields.map(f =>
-          StructField(f.name, stripType(f.dataType), f.nullable)) ++
-          extraFields))
-    }
-  }
 
   /** (commit version → file, classic checkpoint version → part files,
     * v2 checkpoint version → file).

@@ -531,22 +531,12 @@ object DeltaLakeWrite {
     else {
       // parquet.field.id footers need spark.sql.parquet.fieldId.write
       // .enabled at WRITE time — a SessionFactory conf
-      val fieldMeta: org.apache.spark.sql.types.StructField =>
-          org.apache.spark.sql.types.Metadata =
-        if (cm == "id") { f =>
-          require(f.metadata.contains(DeltaLakeRead.FieldIdKey),
-            s"column mapping is 'id' but field ${f.name} carries no " +
-            s"${DeltaLakeRead.FieldIdKey} metadata — refusing to guess")
-          new org.apache.spark.sql.types.MetadataBuilder()
-            .putLong(DeltaLakeRead.ParquetFieldIdKey,
-              f.metadata.getLong(DeltaLakeRead.FieldIdKey)).build()
-        } else _ => org.apache.spark.sql.types.Metadata.empty
       df.select(st.schema.fields.toSeq.map { f =>
-        val physType = DeltaLakeRead.physicalizeType(f.dataType, fieldMeta)
+        val p = DeltaLakeRead.physicalField(st, f)
         // the cast carries nested field ids in its target type; the
         // top-level field's own id rides the alias metadata
-        col(DeltaLakeRead.quoted(f.name)).cast(physType)
-          .as(DeltaLakeRead.physFieldName(f), fieldMeta(f))
+        col(DeltaLakeRead.quoted(f.name)).cast(p.dataType)
+          .as(p.name, p.metadata)
       } ++ passthrough.map(c => col(DeltaLakeRead.quoted(c))): _*)
     }
   }

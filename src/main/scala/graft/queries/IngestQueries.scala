@@ -260,12 +260,13 @@ object IngestQueries {
       .writeValueAsString(docs.schema.json)
     val meta = s"""{"metaData":{"id":"q176","format":{"provider":"parquet","options":{}},"schemaString":$schemaStr,"partitionColumns":[],"configuration":{}}}"""
     val log = new java.io.File(t, "_delta_log"); log.mkdirs()
+    def size(rel: String) = new java.io.File(t, rel).length()
     java.nio.file.Files.write(
       new java.io.File(log, "00000000000000000000.json").toPath,
       Seq("""{"protocol":{"minReaderVersion":1,"minWriterVersion":2}}""",
         meta,
-        """{"add":{"path":"part-en.parquet","partitionValues":{},"size":1,"modificationTime":0,"dataChange":true}}""",
-        """{"add":{"path":"part-rest.parquet","partitionValues":{},"size":1,"modificationTime":0,"dataChange":true}}""")
+        s"""{"add":{"path":"part-en.parquet","partitionValues":{},"size":${size("part-en.parquet")},"modificationTime":0,"dataChange":true}}""",
+        s"""{"add":{"path":"part-rest.parquet","partitionValues":{},"size":${size("part-rest.parquet")},"modificationTime":0,"dataChange":true}}""")
         .mkString("\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
     java.nio.file.Files.write(
       new java.io.File(log, "00000000000000000001.json").toPath,
@@ -357,7 +358,8 @@ object IngestQueries {
     val add = {
       val node = om.createObjectNode(); val a = node.putObject("add")
       a.put("path", "part-all.parquet"); a.putObject("partitionValues")
-      a.put("size", 1L); a.put("modificationTime", 0L)
+      a.put("size", new java.io.File(t, "part-all.parquet").length())
+      a.put("modificationTime", 0L)
       a.put("dataChange", true)
       val j = a.putObject("deletionVector")
       j.put("storageType", d.storageType)
@@ -434,7 +436,7 @@ object IngestQueries {
       """{"protocol":{"minReaderVersion":2,"minWriterVersion":5}}""",
       deltaMeta(logical,
         """{"delta.columnMapping.mode":"name","delta.columnMapping.maxColumnId":"3"}"""),
-      """{"add":{"path":"part-rest.parquet","partitionValues":{},"size":1,"modificationTime":0,"dataChange":true}}"""))
+      s"""{"add":{"path":"part-rest.parquet","partitionValues":{},"size":${new java.io.File(t, "part-rest.parquet").length()},"modificationTime":0,"dataChange":true}}"""))
     graft.ingest.DeltaLakeWrite.append(docs.filter(col("lang") === "en"), t)
     graft.ingest.DeltaLakeRead.snapshot(s, t)
   }

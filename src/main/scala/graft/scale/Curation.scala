@@ -216,10 +216,10 @@ object Curation {
     *
     * Scale shape: each stage inherits its component's audited plan
     * (q173's zero exchanges, q166/q170's 8-byte span-hash windows,
-    * q171's bin-decomposed prefix, q167's pure Generate). `cls` and
-    * `excised` back two consumers each and are persisted
-    * MEMORY_AND_DISK (LRU-evictable — the [[Selection.budgetSelect]]
-    * lifecycle argument); both frames are narrow (ids + counts + the
+    * q171's bin-decomposed prefix, q167's pure Generate). `kept` and
+    * `excised` back two consumers each and are lazy local checkpoints
+    * (the [[Selection.budgetSelect]] lifecycle: released with the
+    * returned frame); both frames are narrow (ids + counts + the
     * already-excised text), never the raw corpus. */
   def curateV3(docs: DataFrame, idCol: String, textCol: String,
       buckets: Int = 1024, spanN: Int = 8, spanStride: Int = 4,
@@ -230,24 +230,26 @@ object Curation {
     // projection, so gating costs zero data movement; the
     // score-ids-then-semi-join-back form re-keys the corpus text on
     // id and measured 4.3× source at sf1
-    // persist: the classifier battery (two md5-60 evaluations per
+    // pinned: the classifier battery (two md5-60 evaluations per
     // gram) is the pipeline's dominant CPU; downstream, excision
     // alone reads `kept` from two subtrees (span pass + reassembly
-    // pass), so an unpersisted gate re-runs the whole battery per
-    // consumer (measured 95 s vs ~45 s at sf1). Corpus-text-sized,
-    // MEMORY_AND_DISK, LRU-evictable — the curateV2 `exact` lifecycle.
+    // pass), so an unpinned gate re-runs the whole battery per
+    // consumer (measured 95 s vs ~45 s at sf1). A lazy local
+    // checkpoint, not a persist: the chunks are returned lazily, so
+    // nothing could release a cache entry, while the checkpoint's
+    // blocks go with the frame.
     val kept = Selection
       .classifierScoreAll(docs, idCol, textCol, buckets)
       .filter(col("keep") === 1)
       .select(col(idCol), col(textCol), col("w_mean"))
-      .persist()
+      .graftCheckpoint(eager = false)
     val cls = kept.select(col(idCol), col("w_mean"))
     // 2. span excision WITHIN the kept corpus (losers are decided
     // against surviving docs only — a rejected doc cannot "win" a span)
     val excised = Spans
       .exciseRepeatedSpans(kept.select(col(idCol), col(textCol)),
         idCol, textCol, spanN, spanStride)
-      .persist()
+      .graftCheckpoint(eager = false)
     // 3. budget selection on tokens that remain after excision — all
     // frames here are narrow (id, double, long) rows
     val scored = excised
@@ -259,8 +261,8 @@ object Curation {
       .filter(col("selected") === 1)
       .select(col(idCol))
     // 4. chunk the selected docs' clean text. The semi join's non-id
-    // side is the narrow selected-id frame; the persisted excised
-    // frame re-reads from cache. Re-tokenizing the normalized
+    // side is the narrow selected-id frame; the checkpointed excised
+    // frame re-reads its blocks. Re-tokenizing the normalized
     // clean_text is the identity on its token list.
     Spans.chunk(
       excised.join(sel, Seq(idCol), "left_semi")

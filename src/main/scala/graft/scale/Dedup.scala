@@ -1,5 +1,6 @@
 package graft.scale
 
+import graft.core.Ckpt
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -530,13 +531,16 @@ object Dedup {
   def guardRecallPairs(df: DataFrame, idCol: String, textCol: String,
       minJaccard: Double, p: MinHashParams = MinHashParams(),
       maxBucket: Int = 1000): DataFrame = {
-    val sets = df
+    // lazy local checkpoints, not persists: the pairs are returned
+    // lazily, so nothing could release a cache entry, while the
+    // checkpoints' blocks go with the frame
+    val sets = Ckpt.local(df
       .select(col(idCol).as("__id"),
         shinglesFromTokens(TextStats.tokens(col(textCol)), p.shingle)
-          .as("__set")).persist()
+          .as("__set")), eager = false)
     val sigs = signaturesFromSets(
       sets.select(col("__id").as(idCol), col("__set")), idCol, p)
-    val banded = bandedBuckets(sigs, idCol, p).persist()
+    val banded = Ckpt.local(bandedBuckets(sigs, idCol, p), eager = false)
     def pairsOf(b: DataFrame): DataFrame = {
       val l = b.select(col(idCol).as("id_a"), col("band"), col("bucket"))
       val r = b.select(col(idCol).as("id_b"), col("band"), col("bucket"))

@@ -1,5 +1,6 @@
 package graft.scale
 
+import graft.core.Ckpt
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -75,15 +76,15 @@ object Selection {
       "budgetFraction must be in (0, 1]")
     require(bins >= 1, "need at least one score bin")
     val W = org.apache.spark.sql.expressions.Window
-    // persist the scored projection: the stats reduce, the bin-sum
+    // pin the scored projection: the stats reduce, the bin-sum
     // aggregate, and the final prefix pass all read it, and the
     // caller's scoring expressions (typically a regex battery) must
-    // run ONCE, not once per consumer. ~24 B/doc narrow rows,
-    // MEMORY_AND_DISK, LRU-evictable (the Curation.scala lifecycle
-    // argument).
-    val base = df.select(col(idCol),
+    // run ONCE, not once per consumer. A lazy local checkpoint, not a
+    // persist: the result is returned lazily, so nothing could release
+    // a cache entry, while the checkpoint's blocks go with the frame.
+    val base = Ckpt.local(df.select(col(idCol),
       col(scoreCol).cast("double").as("__s"),
-      col(ntokCol).cast("long").as("__n")).persist()
+      col(ntokCol).cast("long").as("__n")), eager = false)
     val stats = base.agg(min(col("__s")).as("__lo"),
       max(col("__s")).as("__hi"), sum(col("__n")).as("__tot"))
     val binned = base.crossJoin(broadcast(stats))
@@ -141,9 +142,10 @@ object Selection {
       "budgetFraction must be in (0, 1]")
     require(bins >= 1, "need at least one score bin")
     val W = org.apache.spark.sql.expressions.Window
-    val base = df.select(col(groupCol), col(idCol),
+    val base = Ckpt.local(df.select(col(groupCol), col(idCol),
       col(scoreCol).cast("double").as("__s"),
-      col(ntokCol).cast("long").as("__n")).persist()
+      col(ntokCol).cast("long").as("__n")),
+      eager = false) // see budgetSelect
     val stats = base.groupBy(col(groupCol)).agg(min(col("__s")).as("__lo"),
       max(col("__s")).as("__hi"), sum(col("__n")).as("__tot"))
     val binned = base.join(broadcast(stats), Seq(groupCol))
@@ -200,8 +202,9 @@ object Selection {
     require(stages >= 1, "need at least one stage")
     require(bins >= 1, "need at least one score bin")
     val W = org.apache.spark.sql.expressions.Window
-    val base = df.select(col(idCol),
-      col(scoreCol).cast("double").as("__s")).persist()
+    val base = Ckpt.local(df.select(col(idCol),
+      col(scoreCol).cast("double").as("__s")),
+      eager = false) // see budgetSelect
     val stats = base.agg(min(col("__s")).as("__lo"),
       max(col("__s")).as("__hi"), count(lit(1)).as("__N"))
     val binned = base.crossJoin(broadcast(stats))
@@ -280,10 +283,10 @@ object Selection {
     require(bins >= 1, "need at least one layout bin")
     val W = org.apache.spark.sql.expressions.Window
     val ties = tieCols.map(col)
-    val base = df.select(
+    val base = Ckpt.local(df.select(
       (col(layoutCol).cast("long").as("__id") +: ties) :+
         col(ntokCol).cast("long").as("__n"): _*)
-      .filter(col("__n") > 0).persist()
+      .filter(col("__n") > 0), eager = false) // see budgetSelect
     val stats = base.agg(min(col("__id")).as("__lo"),
       max(col("__id")).as("__hi"))
     // overflow-safe range binning: width-divide, never value-multiply

@@ -137,9 +137,7 @@ object StreamIngest {
         lines.sortBy(_._1).foreach { case (v, line) =>
           val n = mapper.readTree(line)
           def act(k: String) = Option(n.get(k)).filterNot(_.isNull)
-          def dataChange(a: com.fasterxml.jackson.databind.JsonNode) =
-            Option(a.get("dataChange")).filterNot(_.isNull)
-              .forall(_.asBoolean(true))
+          import graft.ingest.DeltaLakeRead.dataChange
           act("remove").foreach { r =>
             if (dataChange(r)) throw new IllegalArgumentException(
               s"commit $v of $deltaTablePath is not a pure append " +

@@ -167,11 +167,12 @@ class DeletionVectorSpec extends AnyFunSuite {
     """"readerFeatures":["deletionVectors"],""" +
     """"writerFeatures":["deletionVectors"]}}"""
 
-  private def addJson(path: String,
+  private def addJson(table: File, path: String,
       dv: Option[DeletionVectors.Descriptor]): String = {
     val n = om.createObjectNode(); val a = n.putObject("add")
     a.put("path", path); a.putObject("partitionValues")
-    a.put("size", 1L); a.put("modificationTime", 0L)
+    a.put("size", new File(table, path).length())
+    a.put("modificationTime", 0L)
     a.put("dataChange", true)
     dv.foreach { d =>
       val j = a.putObject("deletionVector")
@@ -201,11 +202,11 @@ class DeletionVectorSpec extends AnyFunSuite {
     writeOne(rows.toDF("id", "v")
       .repartition(1).sortWithinPartitions("id"), t, "part-a.parquet")
     commit(t, 0, Seq(dvProtocol, metaDataJson(flatSchema),
-      addJson("part-a.parquet", None)))
+      addJson(t, "part-a.parquet", None)))
     // positions 1, 3, 8 deleted (file row order == id order)
     val d = DeletionVectors.writeFile(t, Array(1L, 3L, 8L))
     commit(t, 1, Seq(removeJson("part-a.parquet"),
-      addJson("part-a.parquet", Some(d))))
+      addJson(t, "part-a.parquet", Some(d))))
     val got = DeltaLakeRead.snapshot(spark, t.getPath)
       .select("id").as[Long].collect().sorted.toSeq
     assert(got === Seq(0L, 2L, 4L, 5L, 6L, 7L, 9L))
@@ -227,9 +228,9 @@ class DeletionVectorSpec extends AnyFunSuite {
     val dInline = DeletionVectors.Descriptor("i",
       DeletionVectors.z85Encode(inlineData), None, inlineData.length, 1L)
     commit(t, 0, Seq(dvProtocol, metaDataJson(flatSchema),
-      addJson("part-a.parquet", None),
-      addJson("part-b.parquet", Some(dFile)),
-      addJson("part-c.parquet", Some(dInline))))
+      addJson(t, "part-a.parquet", None),
+      addJson(t, "part-b.parquet", Some(dFile)),
+      addJson(t, "part-c.parquet", Some(dInline))))
     val got = DeltaLakeRead.snapshot(spark, t.getPath)
       .select("id").as[Long].collect().sorted.toSeq
     assert(got === Seq(0L, 1L, 2L, 3L, 4L, 11L, 12L, 13L,
@@ -245,7 +246,7 @@ class DeletionVectorSpec extends AnyFunSuite {
       .repartition(1).sortWithinPartitions("id"), t, "part-a.parquet")
     val d = DeletionVectors.writeFile(t, Array(2L, 5L))
     commit(t, 0, Seq(dvProtocol, metaDataJson(flatSchema),
-      addJson("part-a.parquet", Some(d))))
+      addJson(t, "part-a.parquet", Some(d))))
     // ten engine appends → checkpoint lands at version 10
     (100L until 110L).foreach { i =>
       graft.ingest.DeltaLakeWrite.append(
@@ -275,8 +276,8 @@ class DeletionVectorSpec extends AnyFunSuite {
     writeOne(Seq((2L, "y")).toDF("id", "v"), t, "part-b.parquet")
     val d = DeletionVectors.writeFile(t, Array(0L))
     commit(t, 0, Seq(dvProtocol, metaDataJson(flatSchema),
-      addJson("part-a.parquet", Some(d)),
-      addJson("part-b.parquet", None)))
+      addJson(t, "part-a.parquet", Some(d)),
+      addJson(t, "part-b.parquet", None)))
     assert(DeltaLakeRead.snapshot(spark, t.getPath)
       .select("id").as[Long].collect().toSeq === Seq(2L))
   }

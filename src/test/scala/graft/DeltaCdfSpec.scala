@@ -3,6 +3,7 @@ package graft
 import graft.ingest.{DeltaLakeCdf, DeltaLakeDml, DeltaLakeRead, DeltaLakeWrite}
 import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 /** Change Data Feed: [[DeltaLakeDml]] writes `_change_data` files +
   * cdc actions when `delta.enableChangeDataFeed=true`;
@@ -163,5 +164,85 @@ class DeltaCdfSpec extends AnyFunSuite {
       DeltaLakeCdf.changes(spark, t, 1L)
     }
     assert(e.getMessage.contains("missing"))
+  }
+  /** Write `df` as ONE parquet file at `table`/`rel`; its length. */
+  private def writeOne(df: org.apache.spark.sql.DataFrame, table: String,
+      rel: String): Long = {
+    val tmp = Files.createTempDirectory("cdf_stage").toFile
+    df.coalesce(1).write.mode("overwrite").parquet(tmp.getPath)
+    val part = tmp.listFiles().find(f => f.getName.startsWith("part-") &&
+      f.getName.endsWith(".parquet")).get
+    val dest = new java.io.File(table, rel)
+    dest.getParentFile.mkdirs()
+    Files.move(part.toPath, dest.toPath)
+    dest.length()
+  }
+
+  private def commit(table: String, v: Long, lines: Seq[String]): Unit = {
+    val log = new java.io.File(table, "_delta_log"); log.mkdirs()
+    Files.write(new java.io.File(log, f"$v%020d.json").toPath,
+      lines.mkString("\n").getBytes("UTF-8"))
+    ()
+  }
+
+  private def metaData(schema: org.apache.spark.sql.types.StructType,
+      partCols: Seq[String], conf: Map[String, String]): String = {
+    val om = new com.fasterxml.jackson.databind.ObjectMapper()
+    s"""{"metaData":{"id":"cdf","format":{"provider":"parquet","options":{}},"schemaString":${om.writeValueAsString(schema.json)},"partitionColumns":${om.writeValueAsString(partCols.toArray)},"configuration":${om.writeValueAsString(conf.asJava)}}}"""
+  }
+
+  test("CDF on a NON-HIVE partitioned table: partition values come " +
+      "from each action's partitionValues, null included") {
+    import org.apache.spark.sql.types._
+    val t = newTable()
+    val schema = StructType(Seq(StructField("id", LongType),
+      StructField("v", StringType), StructField("lang", StringType)))
+    val a = writeOne(Seq((1L, "a")).toDF("id", "v"), t, "f-a.parquet")
+    val b = writeOne(Seq((2L, "b")).toDF("id", "v"), t, "f-b.parquet")
+    val c = writeOne(Seq((1L, "a", "delete")).toDF("id", "v",
+      DeltaLakeCdf.ChangeTypeCol), t, "_change_data/c-1.parquet")
+    commit(t, 0, Seq(
+      """{"protocol":{"minReaderVersion":1,"minWriterVersion":4}}""",
+      metaData(schema, Seq("lang"), Cdf),
+      s"""{"add":{"path":"f-a.parquet","partitionValues":{"lang":"en"},"size":$a,"modificationTime":0,"dataChange":true}}""",
+      s"""{"add":{"path":"f-b.parquet","partitionValues":{"lang":null},"size":$b,"modificationTime":0,"dataChange":true}}"""))
+    commit(t, 1, Seq(
+      """{"remove":{"path":"f-a.parquet","deletionTimestamp":0,"dataChange":true}}""",
+      s"""{"cdc":{"path":"_change_data/c-1.parquet","partitionValues":{"lang":"en"},"size":$c,"dataChange":false}}"""))
+    val ch = DeltaLakeCdf.changes(spark, t, 0L)
+      .select("id", "lang", DeltaLakeCdf.ChangeTypeCol,
+        DeltaLakeCdf.CommitVersionCol)
+      .as[(Long, Option[String], String, Long)].collect().toSet
+    assert(ch === Set((1L, Some("en"), "insert", 0L),
+      (2L, None, "insert", 0L), (1L, Some("en"), "delete", 1L)))
+    assert(DeltaLakeRead.snapshot(spark, t).as[(Long, String, String)]
+      .collect().toSeq === Seq((2L, "b", null)))
+  }
+
+  test("CDF on an id-mode table whose nested field carries no field " +
+      "id refuses with the reader's message") {
+    import org.apache.spark.sql.types._
+    val t = newTable()
+    def meta(phys: String, id: Option[Long]) = {
+      val m = new MetadataBuilder()
+        .putString("delta.columnMapping.physicalName", phys)
+      id.foreach(m.putLong("delta.columnMapping.id", _))
+      m.build()
+    }
+    val schema = StructType(Seq(
+      StructField("id", LongType, nullable = true, meta("col-1", Some(1L))),
+      StructField("s", StructType(Seq(
+        StructField("x", LongType, nullable = true, meta("col-3", None)))),
+        nullable = true, meta("col-2", Some(2L)))))
+    val size = writeOne(Seq(Tuple1(1L)).toDF("col-1"), t, "f.parquet")
+    commit(t, 0, Seq(
+      """{"protocol":{"minReaderVersion":2,"minWriterVersion":5}}""",
+      metaData(schema, Nil, Cdf + ("delta.columnMapping.mode" -> "id")),
+      s"""{"add":{"path":"f.parquet","partitionValues":{},"size":$size,"modificationTime":0,"dataChange":true}}"""))
+    val e = intercept[IllegalArgumentException] {
+      DeltaLakeCdf.changes(spark, t, 0L)
+    }
+    assert(e.getMessage.contains("field x carries no " +
+      "delta.columnMapping.id metadata — refusing to guess"), e.getMessage)
   }
 }

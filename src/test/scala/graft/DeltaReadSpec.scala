@@ -66,14 +66,19 @@ class DeltaReadSpec extends AnyFunSuite {
     om.writeValueAsString(n)
   }
 
-  private def addJson(path: String, pv: Map[String, Option[String]] =
-      Map.empty, dv: Boolean = false): String = {
+  /** The logged size of `table`'s file at log path `path`. */
+  private def size(table: File, path: String): Long =
+    new File(table, DeltaLakeRead.decode(path)).length()
+
+  private def addJson(table: File, path: String,
+      pv: Map[String, Option[String]] = Map.empty,
+      dv: Boolean = false): String = {
     val n = om.createObjectNode(); val a = n.putObject("add")
     a.put("path", path)
     val p = a.putObject("partitionValues")
     pv.foreach { case (k, v) =>
       v.fold { p.putNull(k); () } { s => p.put(k, s); () } }
-    a.put("size", 1L); a.put("modificationTime", 0L)
+    a.put("size", size(table, path)); a.put("modificationTime", 0L)
     a.put("dataChange", true)
     if (dv) {
       val d = a.putObject("deletionVector")
@@ -115,8 +120,8 @@ class DeltaReadSpec extends AnyFunSuite {
     writeOne(Seq((1L, "a"), (2L, "b")).toDF("id", "v"), t, "part-a.parquet")
     writeOne(Seq((3L, "c")).toDF("id", "v"), t, "part-b.parquet")
     commit(t, 0, Seq(protocolJson(1, 2), metaDataJson(flatSchema, Nil),
-      addJson("part-a.parquet")))
-    commit(t, 1, Seq(addJson("part-b.parquet")))
+      addJson(t, "part-a.parquet")))
+    commit(t, 1, Seq(addJson(t, "part-b.parquet")))
     commit(t, 2, Seq(removeJson("part-a.parquet")))
 
     assert(DeltaLakeRead.latestVersion(t.getPath) === 2L)
@@ -137,8 +142,8 @@ class DeltaReadSpec extends AnyFunSuite {
     writeOne(Seq((2L, "b")).toDF("id", "v"), t, "lang=de/part-b.parquet")
     commit(t, 0, Seq(protocolJson(1, 2),
       metaDataJson(schema, Seq("lang")),
-      addJson("lang=en/part-a.parquet", Map("lang" -> Some("en"))),
-      addJson("lang=de/part-b.parquet", Map("lang" -> Some("de")))))
+      addJson(t, "lang=en/part-a.parquet", Map("lang" -> Some("en"))),
+      addJson(t, "lang=de/part-b.parquet", Map("lang" -> Some("de")))))
     val got = DeltaLakeRead.snapshot(spark, t.getPath)
       .select("id", "lang").as[(Long, String)].collect().sorted.toSeq
     assert(got === Seq((1L, "en"), (2L, "de")).sorted)
@@ -147,7 +152,7 @@ class DeltaReadSpec extends AnyFunSuite {
       Seq("id", "v", "lang"))
   }
 
-  test("non-hive layout falls back to per-partition-value union; null " +
+  test("non-hive layout takes partition values from the log; null " +
       "partition value surfaces as SQL NULL") {
     val t = newTable()
     val schema = StructType(flatSchema :+ StructField("lang", StringType))
@@ -155,8 +160,8 @@ class DeltaReadSpec extends AnyFunSuite {
     writeOne(Seq((2L, "b")).toDF("id", "v"), t, "pb.parquet")
     commit(t, 0, Seq(protocolJson(1, 2),
       metaDataJson(schema, Seq("lang")),
-      addJson("pa.parquet", Map("lang" -> Some("en"))),
-      addJson("pb.parquet", Map("lang" -> None))))
+      addJson(t, "pa.parquet", Map("lang" -> Some("en"))),
+      addJson(t, "pb.parquet", Map("lang" -> None))))
     val got = DeltaLakeRead.snapshot(spark, t.getPath)
       .select("id", "lang").collect()
       .map(r => (r.getLong(0), Option(r.getString(1)))).sorted.toSeq
@@ -184,7 +189,8 @@ class DeltaReadSpec extends AnyFunSuite {
         StructField("minReaderVersion", IntegerType),
         StructField("minWriterVersion", IntegerType))))))
     val cpRows = Seq(
-      Row(Row("part-a.parquet", Map.empty[String, String], 1L, 0L, true),
+      Row(Row("part-a.parquet", Map.empty[String, String],
+        size(t, "part-a.parquet"), 0L, true),
         null, null),
       Row(null, Row(flatSchema.json, Seq.empty[String],
         Map.empty[String, String]), null),
@@ -194,7 +200,7 @@ class DeltaReadSpec extends AnyFunSuite {
     writeOne(cpDf, t,
       "_delta_log/00000000000000000001.checkpoint.parquet")
     // only the post-checkpoint commit exists (0/1 vacuumed)
-    commit(t, 2, Seq(addJson("part-b.parquet")))
+    commit(t, 2, Seq(addJson(t, "part-b.parquet")))
     val ids = DeltaLakeRead.snapshot(spark, t.getPath)
       .select("id").as[Long].collect().sorted.toSeq
     assert(ids === Seq(1L, 2L))
@@ -223,7 +229,8 @@ class DeltaReadSpec extends AnyFunSuite {
       spark.sparkContext.parallelize(rows, 1), addSchema)
     // part 1 of 2: metaData + protocol + add(part-a)
     writeOne(cpDf(Seq(
-      Row(Row("part-a.parquet", Map.empty[String, String], 1L, 0L, true),
+      Row(Row("part-a.parquet", Map.empty[String, String],
+        size(t, "part-a.parquet"), 0L, true),
         null, null),
       Row(null, Row(flatSchema.json, Seq.empty[String],
         Map.empty[String, String]), null),
@@ -231,7 +238,8 @@ class DeltaReadSpec extends AnyFunSuite {
       "_delta_log/00000000000000000003.checkpoint.0000000001.0000000002.parquet")
     // part 2 of 2: add(part-b) only
     writeOne(cpDf(Seq(
-      Row(Row("part-b.parquet", Map.empty[String, String], 1L, 0L, true),
+      Row(Row("part-b.parquet", Map.empty[String, String],
+        size(t, "part-b.parquet"), 0L, true),
         null, null))), t,
       "_delta_log/00000000000000000003.checkpoint.0000000002.0000000002.parquet")
     // no JSON commits at all — state comes entirely from the parts
@@ -277,38 +285,38 @@ class DeltaReadSpec extends AnyFunSuite {
 
   test("unsupported protocol/table features are rejected loudly, " +
       "never misread") {
-    def tableWith(lines: Seq[String]): String = {
+    def tableWith(lines: File => Seq[String]): String = {
       val t = newTable()
       writeOne(Seq((1L, "a")).toDF("id", "v"), t, "part-a.parquet")
-      commit(t, 0, lines); t.getPath
+      commit(t, 0, lines(t)); t.getPath
     }
     // unknown reader feature
     val e2 = intercept[IllegalArgumentException] {
-      DeltaLakeRead.state(spark, tableWith(Seq(protocolJson(3, 7,
+      DeltaLakeRead.state(spark, tableWith(t => Seq(protocolJson(3, 7,
         Seq("someFutureFeature")), metaDataJson(flatSchema, Nil),
-        addJson("part-a.parquet"))))
+        addJson(t, "part-a.parquet"))))
     }
     assert(e2.getMessage.contains("unsupported Delta reader features"))
     // id mode without field-id metadata must refuse, not guess
     val e3 = intercept[IllegalArgumentException] {
-      DeltaLakeRead.state(spark, tableWith(Seq(protocolJson(2, 5),
+      DeltaLakeRead.state(spark, tableWith(t => Seq(protocolJson(2, 5),
         metaDataJson(flatSchema, Nil,
           Map("delta.columnMapping.mode" -> "id")),
-        addJson("part-a.parquet"))))
+        addJson(t, "part-a.parquet"))))
     }
     assert(e3.getMessage.contains("delta.columnMapping.id"))
     // name mode without physicalName metadata must refuse, not guess
     val e5 = intercept[IllegalArgumentException] {
-      DeltaLakeRead.state(spark, tableWith(Seq(protocolJson(2, 5),
+      DeltaLakeRead.state(spark, tableWith(t => Seq(protocolJson(2, 5),
         metaDataJson(flatSchema, Nil,
           Map("delta.columnMapping.mode" -> "name")),
-        addJson("part-a.parquet"))))
+        addJson(t, "part-a.parquet"))))
     }
     assert(e5.getMessage.contains("physicalName"))
     // supported reader-3 feature set passes (v2Checkpoint included)
-    val ok = DeltaLakeRead.state(spark, tableWith(Seq(protocolJson(3, 7,
-      Seq("timestampNtz", "v2Checkpoint")), metaDataJson(flatSchema, Nil),
-      addJson("part-a.parquet"))))
+    val ok = DeltaLakeRead.state(spark, tableWith(t => Seq(
+      protocolJson(3, 7, Seq("timestampNtz", "v2Checkpoint")),
+      metaDataJson(flatSchema, Nil), addJson(t, "part-a.parquet"))))
     assert(ok.files.map(_.path) === Seq("part-a.parquet"))
   }
 
@@ -329,7 +337,7 @@ class DeltaReadSpec extends AnyFunSuite {
       om.writeValueAsString(n)
     }
     def addDv(d: graft.ingest.DeletionVectors.Descriptor): String =
-      s"""{"add":{"path":"part-a.parquet","partitionValues":{},"size":1,"modificationTime":0,"dataChange":true,"deletionVector":${dvJson(d)}}}"""
+      s"""{"add":{"path":"part-a.parquet","partitionValues":{},"size":${size(t, "part-a.parquet")},"modificationTime":0,"dataChange":true,"deletionVector":${dvJson(d)}}}"""
     def removeDv(d: graft.ingest.DeletionVectors.Descriptor): String =
       s"""{"remove":{"path":"part-a.parquet","deletionTimestamp":0,"dataChange":true,"deletionVector":${dvJson(d)}}}"""
     commit(t, 0, Seq(
@@ -354,7 +362,7 @@ class DeltaReadSpec extends AnyFunSuite {
     val t = newTable()
     writeOne(Seq((1L, "a")).toDF("id", "v"), t, "part-a.parquet")
     commit(t, 0, Seq(protocolJson(1, 2), metaDataJson(flatSchema, Nil),
-      addJson("part-a.parquet"),
+      addJson(t, "part-a.parquet"),
       """{"txn":{"appId":"stream-1","version":7}}""",
       """{"domainMetadata":{"domain":"d1","configuration":"{\"k\":1}","removed":false}}"""))
     commit(t, 1, Seq(removeJson("part-a.parquet"),
@@ -365,7 +373,7 @@ class DeltaReadSpec extends AnyFunSuite {
     assert(st1.txns === Map("stream-1" -> 8L))
     assert(st1.domains ===
       Seq(DeltaLakeRead.DomainMetadata("d1", "{\"k\":1}", false)))
-    commit(t, 2, Seq(addJson("part-a.parquet")))
+    commit(t, 2, Seq(addJson(t, "part-a.parquet")))
     val st2 = DeltaLakeRead.state(spark, t.getPath)
     assert(st2.files.map(_.path) === Seq("part-a.parquet"))
     assert(st2.tombstones.isEmpty,
@@ -375,7 +383,8 @@ class DeltaReadSpec extends AnyFunSuite {
 
   // ---- v2 (UUID-named) checkpoints ----------------------------------------
 
-  private def v2AddRowsParquet(dest: File, paths: Seq[String]): Unit = {
+  private def v2AddRowsParquet(t: File, dest: File,
+      paths: Seq[String]): Unit = {
     val addSchema = StructType(Seq(
       StructField("add", StructType(Seq(
         StructField("path", StringType),
@@ -384,7 +393,7 @@ class DeltaReadSpec extends AnyFunSuite {
         StructField("modificationTime", LongType),
         StructField("dataChange", BooleanType))))))
     val rows = paths.map(p =>
-      Row(Row(p, Map.empty[String, String], 1L, 0L, true)))
+      Row(Row(p, Map.empty[String, String], size(t, p), 0L, true)))
     val df = spark.createDataFrame(
       spark.sparkContext.parallelize(rows, 1), addSchema)
     val tmp = Files.createTempDirectory("v2sc").toFile
@@ -403,9 +412,9 @@ class DeltaReadSpec extends AnyFunSuite {
     writeOne(Seq((2L, "b")).toDF("id", "v"), t, "part-b.parquet")
     writeOne(Seq((3L, "c")).toDF("id", "v"), t, "part-c.parquet")
     // sidecars carry the file actions (PROTOCOL.md § V2 spec files)
-    v2AddRowsParquet(new File(t, "_delta_log/_sidecars/sc-1.parquet"),
+    v2AddRowsParquet(t, new File(t, "_delta_log/_sidecars/sc-1.parquet"),
       Seq("part-a.parquet"))
-    v2AddRowsParquet(new File(t, "_delta_log/_sidecars/sc-2.parquet"),
+    v2AddRowsParquet(t, new File(t, "_delta_log/_sidecars/sc-2.parquet"),
       Seq("part-b.parquet"))
     val cpLines = Seq(
       protocolJson(3, 7, Seq("v2Checkpoint")),
@@ -418,7 +427,7 @@ class DeltaReadSpec extends AnyFunSuite {
       "81be-64bd76c43a11.json").toPath,
       cpLines.mkString("\n").getBytes(StandardCharsets.UTF_8))
     // only the post-checkpoint commit survives
-    commit(t, 2, Seq(addJson("part-c.parquet")))
+    commit(t, 2, Seq(addJson(t, "part-c.parquet")))
     val ids = DeltaLakeRead.snapshot(spark, t.getPath)
       .select("id").as[Long].collect().sorted.toSeq
     assert(ids === Seq(1L, 2L, 3L))
@@ -447,7 +456,8 @@ class DeltaReadSpec extends AnyFunSuite {
         StructField("readerFeatures", ArrayType(StringType)),
         StructField("writerFeatures", ArrayType(StringType)))))))
     val rows = Seq(
-      Row(Row("part-a.parquet", Map.empty[String, String], 1L, 0L, true),
+      Row(Row("part-a.parquet", Map.empty[String, String],
+        size(t, "part-a.parquet"), 0L, true),
         null, null),
       Row(null, Row(flatSchema.json, Seq.empty[String],
         Map.empty[String, String]), null),
@@ -492,7 +502,7 @@ class DeltaReadSpec extends AnyFunSuite {
       metaDataJson(logical, Nil,
         Map("delta.columnMapping.mode" -> "id",
             "delta.columnMapping.maxColumnId" -> "2")),
-      addJson("part-a.parquet")))
+      addJson(t, "part-a.parquet")))
     val df = DeltaLakeRead.snapshot(spark, t.getPath)
     assert(df.columns.toSeq === Seq("id", "v"))
     val got = df.as[(Long, String)].collect().sortBy(_._1).toSeq
@@ -509,7 +519,7 @@ class DeltaReadSpec extends AnyFunSuite {
     val addLine = {
       val n = om.createObjectNode(); val a = n.putObject("add")
       a.put("path", "part+x.parquet"); a.putObject("partitionValues")
-      a.put("size", 1L); a.put("modificationTime", 0L)
+      a.put("size", size(t, "part+x.parquet")); a.put("modificationTime", 0L)
       a.put("dataChange", true)
       val d = a.putObject("deletionVector")
       d.put("storageType", dv.storageType)
@@ -536,7 +546,7 @@ class DeltaReadSpec extends AnyFunSuite {
     val t = newTable()
     writeOne(Seq((1L, "a")).toDF("id", "v"), t, "part-a.parquet")
     commit(t, 0, Seq(protocolJson(1, 2), metaDataJson(flatSchema, Nil),
-      addJson("part-a.parquet")))
+      addJson(t, "part-a.parquet")))
     commit(t, 1, Seq(removeJson("part-a.parquet")))
     val df = DeltaLakeRead.snapshot(spark, t.getPath)
     assert(df.columns.toSeq === Seq("id", "v"))
@@ -547,7 +557,7 @@ class DeltaReadSpec extends AnyFunSuite {
     val t = newTable()
     writeOne(Seq((7L, "x")).toDF("id", "v"), t, "part a.parquet")
     commit(t, 0, Seq(protocolJson(1, 2), metaDataJson(flatSchema, Nil),
-      addJson("part%20a.parquet")))
+      addJson(t, "part%20a.parquet")))
     val ids = DeltaLakeRead.snapshot(spark, t.getPath)
       .select("id").as[Long].collect().toSeq
     assert(ids === Seq(7L))
@@ -559,7 +569,7 @@ class DeltaReadSpec extends AnyFunSuite {
     val t = newTable()
     writeOne(Seq((9L, "p")).toDF("id", "v"), t, "part+a.parquet")
     commit(t, 0, Seq(protocolJson(1, 2), metaDataJson(flatSchema, Nil),
-      addJson("part+a.parquet")))
+      addJson(t, "part+a.parquet")))
     val ids = DeltaLakeRead.snapshot(spark, t.getPath)
       .select("id").as[Long].collect().toSeq
     assert(ids === Seq(9L))
@@ -618,7 +628,7 @@ class DeltaReadSpec extends AnyFunSuite {
       metaDataJson(logical, Nil,
         Map("delta.columnMapping.mode" -> "name",
             "delta.columnMapping.maxColumnId" -> "5")),
-      addJson("part-a.parquet")))
+      addJson(t, "part-a.parquet")))
     val df = DeltaLakeRead.snapshot(spark, t.getPath)
     assert(df.columns.toSeq === Seq("id", "name", "loc"))
     assert(df.select("loc.lat").as[Double].collect().sorted.toSeq ===
@@ -642,9 +652,9 @@ class DeltaReadSpec extends AnyFunSuite {
     commit(t, 0, Seq(protocolJson(2, 5),
       metaDataJson(logical, Seq("day"),
         Map("delta.columnMapping.mode" -> "name")),
-      addJson("col-x2=2024-01-01/part-a.parquet",
+      addJson(t, "col-x2=2024-01-01/part-a.parquet",
         Map("col-x2" -> Some("2024-01-01"))),
-      addJson("col-x2=2024-01-02/part-b.parquet",
+      addJson(t, "col-x2=2024-01-02/part-b.parquet",
         Map("col-x2" -> Some("2024-01-02")))))
     val df = DeltaLakeRead.snapshot(spark, t.getPath)
     assert(df.columns.toSeq === Seq("id", "day"))
@@ -655,7 +665,7 @@ class DeltaReadSpec extends AnyFunSuite {
       .select("id").as[Long].collect().toSeq === Seq(2L))
   }
 
-  test("column mapping name mode: non-hive layout unions with " +
+  test("column mapping name mode: non-hive layout reads " +
       "physical-keyed partitionValues (null included)") {
     val t = newTable()
     val logical = StructType(Seq(
@@ -666,8 +676,8 @@ class DeltaReadSpec extends AnyFunSuite {
     commit(t, 0, Seq(protocolJson(2, 5),
       metaDataJson(logical, Seq("src"),
         Map("delta.columnMapping.mode" -> "name")),
-      addJson("blob1.parquet", Map("col-y2" -> Some("api"))),
-      addJson("blob2.parquet", Map("col-y2" -> None))))
+      addJson(t, "blob1.parquet", Map("col-y2" -> Some("api"))),
+      addJson(t, "blob2.parquet", Map("col-y2" -> None))))
     val got = DeltaLakeRead.snapshot(spark, t.getPath)
       .as[(Long, Option[String])].collect().sortBy(_._1).toSeq
     assert(got === Seq((1L, Some("api")), (2L, None)))
@@ -715,11 +725,11 @@ class DeltaReadSpec extends AnyFunSuite {
       "00000000000000000000.checkpoint.parquet").toPath,
       StandardCopyOption.REPLACE_EXISTING)
     // post-checkpoint commits: an append and a DML-shaped DV update
-    commit(t, 1, Seq(addJson("lang=l0/fresh.parquet",
+    commit(t, 1, Seq(addJson(t, "lang=l0/fresh.parquet",
       Map("lang" -> Some("l0")))))
     commit(t, 2, Seq(
       removeJson("lang=l1/f1.parquet"),
-      addJson("lang=l1/f1.parquet", Map("lang" -> Some("l1")),
+      addJson(t, "lang=l1/f1.parquet", Map("lang" -> Some("l1")),
         dv = true)))
     def stateWith(minBytes: Long) =
       DeltaLakeRead.stateImpl(spark, t.getPath, None, None, minBytes)
@@ -741,5 +751,86 @@ class DeltaReadSpec extends AnyFunSuite {
     assertStateParity(t.getPath)
     // the automatic choice engages purely on checkpoint bytes
     assert(stateWith(1L).files.size === n + 1)
+  }
+  // ---- scans planned from the log -----------------------------------------
+
+  test("a logged size that disagrees with the data file fails the " +
+      "read, never returns fewer rows") {
+    val t = newTable()
+    writeOne((0L until 100L).map(i => (i, s"v$i")).toDF("id", "v"), t,
+      "part-a.parquet")
+    val real = size(t, "part-a.parquet")
+    Seq(0L, real / 2, real - 1, real + 1, 2 * real).foreach { logged =>
+      val line = addJson(t, "part-a.parquet")
+        .replace(s""""size":$real""", s""""size":$logged""")
+      commit(t, 0, Seq(protocolJson(1, 2), metaDataJson(flatSchema, Nil),
+        line))
+      val got = scala.util.Try(
+        DeltaLakeRead.snapshot(spark, t.getPath).count())
+      assert(got.isFailure, s"size $logged of $real read $got rows")
+    }
+  }
+
+  test("a partition filter scans only the matching files on hive, " +
+      "non-hive and column-mapped (name) layouts") {
+    def scanned(df: DataFrame): Long = {
+      df.collect()
+      df.queryExecution.executedPlan.collect {
+        case s: org.apache.spark.sql.execution.FileSourceScanExec =>
+          s.metrics("numFiles").value
+      }.sum
+    }
+    // three files, two of them lang=en; `cm` maps id/lang to col-i/col-l
+    def layout(hive: Boolean, cm: Boolean): File = {
+      val t = newTable()
+      def phys(c: String) = if (cm) s"col-${c.head}" else c
+      val schema =
+        if (cm) StructType(Seq(cmField("id", LongType, phys("id")),
+          cmField("lang", StringType, phys("lang"))))
+        else StructType(Seq(StructField("id", LongType),
+          StructField("lang", StringType)))
+      val files = Seq(("a", 1L, "en"), ("b", 2L, "en"), ("c", 3L, "de"))
+        .map { case (n, id, lang) =>
+          val rel = (if (hive) s"${phys("lang")}=$lang/" else "") +
+            s"$n.parquet"
+          writeOne(Seq(Tuple1(id)).toDF(phys("id")), t, rel)
+          addJson(t, rel, Map(phys("lang") -> Some(lang)))
+        }
+      commit(t, 0, Seq(protocolJson(2, 5), metaDataJson(schema,
+        Seq("lang"), if (cm) Map("delta.columnMapping.mode" -> "name")
+        else Map.empty)) ++ files)
+      t
+    }
+    Seq("hive" -> layout(hive = true, cm = false),
+        "non-hive" -> layout(hive = false, cm = false),
+        "column-mapped" -> layout(hive = true, cm = true))
+      .foreach { case (name, t) =>
+        val df = DeltaLakeRead.snapshot(spark, t.getPath)
+        val en = df.filter(col("lang") === "en")
+        assert(en.select("id").as[Long].collect().sorted.toSeq ===
+          Seq(1L, 2L), name)
+        assert(scanned(en) === 2L, name)
+        assert(scanned(df.filter(col("lang") === "fr")) === 0L, name)
+        assert(scanned(df) === 3L, name)
+      }
+  }
+
+  test("Delta data reads plan from the log: no spark.read in " +
+      "ingest/DeltaLake*.scala but the two log-parquet readers") {
+    import scala.jdk.CollectionConverters._
+    val dir = new File("src/main/scala/graft/ingest")
+    val reads = dir.listFiles().toSeq
+      .filter(f => f.getName.matches("DeltaLake.*\\.scala"))
+      .sortBy(_.getName).flatMap { f =>
+        Files.readAllLines(f.toPath).asScala.map(_.trim)
+          .filterNot(l => l.startsWith("*") || l.startsWith("//"))
+          .filter(_.contains("spark.read")).map(f.getName -> _)
+      }
+    assert(reads === Seq(
+      // checkpoint and sidecar parquet
+      "DeltaLakeRead.scala" ->
+        "val df = spark.read.parquet(files.map(_.getPath): _*)",
+      // the prior v2 checkpoint manifest
+      "DeltaLakeWrite.scala" -> "spark.read.parquet(mf.getPath)"))
   }
 }

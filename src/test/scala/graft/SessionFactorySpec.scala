@@ -187,6 +187,23 @@ class SessionFactorySpec extends AnyFunSuite {
     unchanged("DatasetCard.card")(graft.scale.DatasetCard.card(
       docs, "doc_id", "text", "lang").collect())
     unchanged("Bpe.train")(graft.scale.Bpe.train(docs, "text", 3).collect())
+
+    import graft.scale.{Curation, Dedup, Selection}
+    import org.apache.spark.sql.functions.{length, size, split}
+    val scored = docs.withColumn("s", length($"text").cast("double"))
+      .withColumn("n", size(split($"text", " ")))
+    unchanged("Selection.budgetSelect")(Selection.budgetSelect(
+      scored, "doc_id", "s", "n", 0.5).collect())
+    unchanged("Selection.budgetSelectBy")(Selection.budgetSelectBy(
+      scored, "lang", "doc_id", "s", "n", 0.5).collect())
+    unchanged("Selection.curriculumOrder")(Selection.curriculumOrder(
+      scored, "doc_id", "s", 2).collect())
+    unchanged("Selection.packSequencesBy")(Selection.packSequencesBy(
+      scored, "doc_id", Nil, "n", 4L).collect())
+    unchanged("Curation.curateV3")(
+      Curation.curateV3(docs, "doc_id", "text").collect())
+    unchanged("Dedup.guardRecallPairs")(
+      Dedup.guardRecallPairs(docs, "doc_id", "text", 0.5).collect())
   }
 
   // a child runs under its caller's runtime confs as they are at each
@@ -237,6 +254,14 @@ class SessionFactorySpec extends AnyFunSuite {
     val (t, files) = fourFileTable()
     val snap = DeltaLakeRead.snapshot(spark, t)
     files.head.delete()
+    failsToRead(snap.count())
+  }
+
+  test("a data file deleted before snapshot() fails the read, not the " +
+      "planning") {
+    val (t, files) = fourFileTable()
+    files.head.delete()
+    val snap = DeltaLakeRead.snapshot(spark, t)
     failsToRead(snap.count())
   }
 
