@@ -46,6 +46,26 @@ import scala.collection.concurrent.TrieMap
   *    20 MB more metaspace. The conf is static and the cache
   *    is sized once, when `CodeGenerator` first loads, so it is set
   *    here, before the first session exists.
+  *  - `spark.hadoop.fs.file.impl` and
+  *    `spark.hadoop.fs.AbstractFileSystem.file.impl`: `file:` resolves
+  *    to [[LocalFs]], Hadoop's checksummed local filesystem for the
+  *    `FileSystem` and the `FileContext` API with its two forking calls
+  *    answered through `java.nio`. Without libhadoop (none ships with
+  *    the Spark distribution), stock Hadoop starts a `chmod` process for
+  *    every mkdir and file create, `.crc` side files included, and two
+  *    `readlink`s for every `FileContext.rename`, which is how Spark's
+  *    checkpoint file manager commits each offset, commit, source and
+  *    state file. One 18 s `lakehouse_dag_dml` lakebench run started
+  *    632 processes with the stock classes (480 `chmod`, 136
+  *    `readlink`) and 17 with these, all Spark's own: `rm -rf` of its
+  *    temp dirs at stop, one `setsid` probe and one `getconf`
+  *    (`tools/bench_local_fs.json`). Modes, `.crc` files and rename
+  *    semantics are stock (`LocalFsSpec` compares them call for call);
+  *    other schemes keep their own filesystems. Caveat: Hadoop caches
+  *    one `file:` `FileSystem` per JVM, keyed without its conf, so one
+  *    resolved before the first session exists (a `FileSystem.get`
+  *    over a bare `Configuration`) stays the stock class for that
+  *    JVM's life; `FileContext` resolves per call and always binds.
   *  - `spark.sql.parquet.fieldId.read.enabled=true`: Delta tables in
   *    column-mapping `id` mode resolve parquet columns by field id
   *    ([[graft.ingest.DeltaLakeRead]]). Spark's field-id matching only
@@ -134,6 +154,9 @@ object SessionFactory {
       .withExtensions(new GraftExtensions)
       .config("spark.ui.enabled", "false")
       .config("spark.sql.codegen.cache.maxEntries", "4096")
+      .config("spark.hadoop.fs.file.impl", classOf[LocalFs].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
+        classOf[LocalFs.Context].getName)
     runtimeConfs.foreach { case (k, v) => b.config(k, v) }
     shufflePartitions.foreach(n =>
       b.config("spark.sql.shuffle.partitions", n.toString))

@@ -550,6 +550,7 @@ object DeltaLakeWrite {
       partitionBy: Seq[String], destPrefix: String = ""): Seq[Staged] = {
     val stage = new File(root, s".stage-${java.util.UUID.randomUUID()}")
     df.write.partitionBy(partitionBy: _*).parquet(stage.getPath)
+    val conf = df.sparkSession.sparkContext.hadoopConfiguration
     def walk(dir: File, relDir: String,
         pv: Map[String, String]): Seq[Staged] =
       Option(dir.listFiles()).getOrElse(Array.empty).toSeq.flatMap {
@@ -566,7 +567,7 @@ object DeltaLakeWrite {
           dest.getParentFile.mkdirs()
           Files.move(f.toPath, dest.toPath,
             StandardCopyOption.ATOMIC_MOVE)
-          Seq(Staged(rel, pv, dest.length(), footerRows(dest)))
+          Seq(Staged(rel, pv, dest.length(), footerRows(dest, conf)))
         case _ => Nil
       }
     val staged = walk(stage, "", Map.empty)
@@ -576,11 +577,13 @@ object DeltaLakeWrite {
 
   /** Row count from the parquet footer — one metadata read, no scan.
     * Lets DML report rowsInserted without re-running the source plan
-    * (the footer is authoritative: the file was just written). */
-  private def footerRows(f: File): Long = {
+    * (the footer is authoritative: the file was just written). `conf`
+    * is the session's Hadoop conf: a fresh `Configuration` re-parses
+    * the default resources per file and lacks the session's bindings. */
+  private def footerRows(f: File,
+      conf: org.apache.hadoop.conf.Configuration): Long = {
     val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-      new org.apache.hadoop.fs.Path(f.getPath),
-      new org.apache.hadoop.conf.Configuration())
+      new org.apache.hadoop.fs.Path(f.getPath), conf)
     val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
     try r.getRecordCount finally r.close()
   }

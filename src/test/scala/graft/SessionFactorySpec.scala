@@ -206,6 +206,42 @@ class SessionFactorySpec extends AnyFunSuite {
       Dedup.guardRecallPairs(docs, "doc_id", "text", 0.5).collect())
   }
 
+  // with no libhadoop, Hadoop's stock local filesystem forks a chmod per
+  // mkdir and file create and two readlinks per checkpoint rename
+  test("local table writes, a stream drain and Delta DML start no process") {
+    import graft.ingest.{DeltaLakeDml, ParquetTableIO}
+    import org.apache.spark.sql.types.{LongType, StringType}
+    def dir(p: String) = Files.createTempDirectory(p).toString
+    val started = Seq.newBuilder[(String, Seq[ForkLog.Start])]
+    def noProcess(what: String)(op: => Unit): Unit =
+      started += what -> ForkLog.during(op)
+    val io = new ParquetTableIO(dir("graft_fork_t"))
+    val rows = Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "v")
+    noProcess("ParquetTableIO.append")(io.append(rows, "t"))
+    noProcess("ParquetTableIO.overwrite")(io.overwrite(rows, "t"))
+
+    val csv = dir("graft_fork_csv")
+    Files.writeString(new File(csv, "a.csv").toPath, "k,v\n1,a\n2,b\n")
+    noProcess("StreamIngest.ingestCsv")(graft.stream.StreamIngest.ingestCsv(
+      spark, csv, dir("graft_fork_ck"), new ParquetTableIO(dir("graft_fork_s")),
+      "s", "id", Seq("k"),
+      Some(new StructType().add("k", LongType).add("v", StringType))))
+
+    val t = dir("graft_fork_delta")
+    noProcess("DeltaLakeWrite.append")(DeltaLakeWrite.append(rows, t,
+      tableConfig = Map("delta.enableChangeDataFeed" -> "true")))
+    noProcess("DeltaLakeDml.delete")(DeltaLakeDml.delete(spark, t, "id = 2"))
+    noProcess("DeltaLakeDml.upsert")(DeltaLakeDml.upsert(spark, t,
+      Seq((1L, "A"), (9L, "n")).toDF("id", "v"), Seq("id")))
+    assert(DeltaLakeRead.snapshot(spark, t).as[(Long, String)].collect()
+      .toSet === Set((1L, "A"), (3L, "c"), (9L, "n")))
+    val forked = started.result().collect { case (what, s) if s.nonEmpty =>
+      s"$what started ${s.size}, first ${s.head.command} at " +
+        s.head.stack.take(12).mkString(" < ")
+    }
+    if (forked.nonEmpty) fail(forked.mkString("\n"))
+  }
+
   // a child runs under its caller's runtime confs as they are at each
   // call, and repeated calls reuse one child rather than add sessions
   test("a child session mirrors its caller's confs and is reused") {
