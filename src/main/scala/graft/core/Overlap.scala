@@ -1,11 +1,11 @@
 package graft.core
 
-/** Tiny shared daemon pool for overlapping INDEPENDENT driver actions
-  * (guide §2.6: concurrent jobs back-fill each other's task tails —
-  * "2-3 jobs in flight is plenty"). The DML staging overlap
-  * ([[graft.ingest.DeltaLakeDml]]) proved the pattern; query setups
-  * with two independent writes share this pool instead of growing one
-  * pool per call site. */
+/** The one shared daemon pool for overlapping INDEPENDENT driver
+  * actions (concurrent jobs back-fill each other's task tails; two or
+  * three jobs in flight are plenty); call sites share it rather
+  * than grow a pool each. A task run here must never wait on another
+  * task of this pool (two such waits would hold both threads while
+  * the awaited tasks sit queued): callers wait from their own thread. */
 object Overlap {
   lazy val ec: scala.concurrent.ExecutionContext =
     scala.concurrent.ExecutionContext.fromExecutorService(

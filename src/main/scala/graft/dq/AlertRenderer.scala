@@ -62,32 +62,43 @@ object AlertRenderer {
        |</table></div>""".stripMargin
   }
 
+  /** Spark's string order: unsigned UTF-8 bytes (code point order),
+    * which `String.compareTo`'s UTF-16 order breaks for supplementary
+    * characters against U+E000-U+FFFF. */
+  private val Utf8: Ordering[String] = Ordering.by(
+    (_: String).getBytes(java.nio.charset.StandardCharsets.UTF_8))(
+    (a: Array[Byte], b: Array[Byte]) => java.util.Arrays.compareUnsigned(a, b))
+
   /** Build the full alert (email body + attachment) from the violation
-    * fact frame in ONE pass over the data: a single grouped collect
-    * (bounded by `maxAttachmentRows` pk samples per config — the fact
-    * rows are already a capped SAMPLE of each config's violations, so
-    * the driver-side materialization is bounded by config count, not
-    * table size). `generatedAt` is caller-supplied so rendering is
+    * fact frame in ONE Spark job: the failing fact rows are collected
+    * as they are (already a capped SAMPLE per config, so the driver
+    * holds at most configs × sample cap rows, as a grouped collect
+    * would) and grouped on the driver: sections in (dimension, config)
+    * order, nulls first, each section's non-null pks in `sort_array`'s
+    * order. `generatedAt` is caller-supplied so rendering is
     * deterministic/testable — stamping wall-clock time inside would
     * make the report unreproducible. */
   def renderReport(violations: DataFrame, previewRows: Int = 5,
       maxAttachmentRows: Int = 10000,
       generatedAt: String = ""): AlertReport = {
-    val grouped = violations
+    val failing = violations
       .filter(col("nr_status") =!= AuditStatus.Pass)
-      .groupBy(col("ds_dimension"), col("cd_configuration"),
-        col("schema_name"), col("table_name"), col("rule"),
-        col("n_violations"))
-      .agg(sort_array(collect_list(col("violated_pk"))).as("pks"))
-      .orderBy(col("ds_dimension"), col("cd_configuration"))
+      .select("ds_dimension", "cd_configuration", "schema_name",
+        "table_name", "rule", "n_violations", "violated_pk")
       .collect()
-    val sections = grouped.toSeq.map { r =>
-      Section(r.getAs[String]("ds_dimension"),
-        r.getAs[Long]("cd_configuration"), r.getAs[String]("schema_name"),
-        r.getAs[String]("table_name"), r.getAs[String]("rule"),
-        r.getAs[Long]("n_violations"),
-        r.getSeq[String](r.fieldIndex("pks")).toList)
-    }
+    // a null config or count reads 0, as Row.getAs[Long] gives it
+    def long(v: Any): Long = Option(v).fold(0L)(_.asInstanceOf[Long])
+    val sections = failing.toSeq.groupBy(r => (0 until 6).map(r.get)).toSeq
+      .sortBy { case (k, _) =>
+        (Option(k(0).asInstanceOf[String]), Option(k(1)).map(long))
+      }(Ordering.Tuple2(Ordering.Option(Utf8),
+        Ordering.Option(Ordering.Long)))
+      .map { case (k, rows) =>
+        Section(k(0).asInstanceOf[String], long(k(1)),
+          k(2).asInstanceOf[String], k(3).asInstanceOf[String],
+          k(4).asInstanceOf[String], long(k(5)),
+          rows.flatMap(r => Option(r.getString(6))).sorted(Utf8).toList)
+      }
     val totalViolations = sections.map(_.total).sum
     val configCount = sections.size.toLong
     val dimensionCount = sections.map(_.dimension).distinct.size.toLong

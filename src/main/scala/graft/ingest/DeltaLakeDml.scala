@@ -2,9 +2,13 @@ package graft.ingest
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.PlanBridge
 import java.io.File
 import java.nio.file.Files
-import scala.jdk.CollectionConverters._
+import scala.collection.mutable
+import scala.concurrent.{Await, Future}
+import scala.concurrent.duration.Duration
+import scala.util.{Failure, Try}
 
 /** Row-level DML on REAL Delta tables — DELETE / UPDATE / MERGE-style
   * upsert emitted as deletion vectors plus add/remove actions, per the
@@ -23,23 +27,35 @@ import scala.jdk.CollectionConverters._
   *     replayed state the mutation computes against (the version it
   *     commits after) with `(__file, __pos)` provenance
   *     (already-deleted positions subtracted, column mapping resolved
-  *     — conditions are written against LOGICAL columns). `__file` is
-  *     the raw `_metadata.file_path` URI until step 3.
-  *  2. ONE aggregation computes, per data file, the matched row
-  *     positions AND the live row count — so fully-emptied files are
-  *     detected in the same scan (they get a bare `remove`; no
-  *     degenerate all-rows DV is left behind to poison later scans).
-  *  3. Each affected file's URI is normalized to its table path
-  *     ([[DeltaLakeRead.normFile]], once per file) and its new DV
-  *     (existing DV positions ∪ matched positions — descriptors are
-  *     ABSOLUTE, not deltas) is serialized and written ON AN EXECUTOR
-  *     by [[DeletionVectors.writeFile]]; the driver only ever holds
+  *     — conditions are written against LOGICAL columns). ONE scan
+  *     keeps only the MATCHED rows (the condition, or the upsert's
+  *     semi-join on the source keys) and pins them: `(__file, __pos)`,
+  *     the key columns, and the full logical row only when UPDATE's
+  *     rewrite or the change data feed needs it. The DV positions,
+  *     the upsert's multiplicities and the CDF preimages all read this
+  *     pin, so the target is scanned once. `__file` is the raw
+  *     `_metadata.file_path` URI until step 3.
+  *  2. One job groups the pinned positions by data file; each affected
+  *     file's live row count comes from metadata — its parquet
+  *     footer's row count minus its old DV's cardinality, read on the
+  *     executor — so fully-emptied files get a bare `remove` (no
+  *     degenerate all-rows DV is left behind to poison later scans)
+  *     without counting a single unmatched row. A footer holding fewer
+  *     rows than the old DV and the new matches account for fails the
+  *     mutation instead of retiring the file.
+  *  3. On that executor, each affected file's URI is normalized to its
+  *     table path ([[DeltaLakeRead.normFile]], once per file) and its
+  *     new DV (existing DV positions ∪ matched positions — descriptors
+  *     are ABSOLUTE, not deltas) is serialized and written by
+  *     [[DeletionVectors.writeFile]]; the driver only ever holds
   *     one small descriptor row per file, never position sets.
-  *     (Executor-side `.bin` writes assume a shared filesystem — the
-  *     same deployment posture as every staged write in this engine.)
+  *     (Executor-side `.bin` writes and footer reads assume a shared
+  *     filesystem — the same deployment posture as every staged write
+  *     in this engine.)
   *  4. Replacement/new rows (UPDATE's rewrites, upsert's source)
   *     stage as ordinary parquet via [[DeltaLakeWrite.stageData]],
-  *     physical-named under column mapping.
+  *     physical-named under column mapping; the change-data rows stage
+  *     beside them on [[graft.core.Overlap]].
   *  5. One commit claims the next version slot: a protocol upgrade to
   *     (3, 7) + `deletionVectors` features when the table does not
   *     carry them yet (legacy-implied features preserved per the
@@ -61,10 +77,12 @@ import scala.jdk.CollectionConverters._
   * loudly. Appends remain freely concurrent ([[DeltaLakeWrite
   * .commitSlot]] advances blindly; adds are commutative).
   *
-  * Scale shape: the matched-position aggregation is one shuffle keyed
-  * by data file; DV encoding parallelizes per file across executors;
-  * the commit is O(affected files). A DELETE touching k of N files
-  * does work proportional to k, never N. */
+  * Scale shape: one filtered scan of the target; everything after it
+  * reads the pinned matched rows. The per-file grouping is one shuffle
+  * of the matched positions; DV encoding parallelizes per file across
+  * executors; the commit is O(affected files). Past the scan, a
+  * mutation matching k rows in f of N files does work proportional to
+  * k and f, never N. */
 object DeltaLakeDml {
 
   /** What one mutation did: the committed version (or the unchanged
@@ -77,42 +95,47 @@ object DeltaLakeDml {
   /** DELETE FROM table WHERE `condition` (a SQL boolean over the
     * table's logical columns). */
   def delete(spark: SparkSession, tablePath: String,
-      condition: String): DmlResult = withRetries {
+      condition: String): DmlResult = withRetries { pin =>
     val st = gated(spark, tablePath)
-    val t = DeltaLakeRead.snapshotMeta(spark, tablePath, st)
-    val cond = expr(condition)
-    val cdc = t.filter(cond).select(logicalCols(st): _*)
-      .withColumn(DeltaLakeCdf.ChangeTypeCol, lit("delete"))
-    mutate(spark, tablePath, st, t, cond, None, cdcRows = Some(cdc))
+    val matched = pin(DeltaLakeRead.snapshotMeta(spark, tablePath, st)
+      .filter(expr(condition))
+      .select((if (cdfOn(st)) logicalCols(st) else Nil) ++ provenance: _*))
+    mutate(spark, tablePath, st, matched, None,
+      matched.select(logicalCols(st): _*)
+        .withColumn(DeltaLakeCdf.ChangeTypeCol, lit("delete")))
   }
 
   private def logicalCols(st: DeltaLakeRead.Snapshot) =
     st.schema.fieldNames.toSeq.map(c => col(DeltaLakeRead.quoted(c)))
+
+  private val provenance = Seq(col("__file"), col("__pos"))
+
+  private def cdfOn(st: DeltaLakeRead.Snapshot): Boolean =
+    st.config.get("delta.enableChangeDataFeed").contains("true")
 
   /** UPDATE table SET col = sqlExpr, ... WHERE `condition`. Matched
     * rows are DV-deleted and re-landed in new files with the
     * assignments applied (expressions see the OLD row, standard
     * UPDATE semantics). */
   def update(spark: SparkSession, tablePath: String, condition: String,
-      set: Map[String, String]): DmlResult = withRetries {
+      set: Map[String, String]): DmlResult = withRetries { pin =>
     val st = gated(spark, tablePath)
     val unknown = set.keySet -- st.schema.fieldNames.toSet
     require(unknown.isEmpty,
       s"SET targets ${unknown.mkString(", ")} not in the table schema")
-    val t = DeltaLakeRead.snapshotMeta(spark, tablePath, st)
-    val cond = expr(condition)
-    val rewritten = t.filter(cond).select(st.schema.fields.toSeq.map { f =>
+    val matched = pin(DeltaLakeRead.snapshotMeta(spark, tablePath, st)
+      .filter(expr(condition)).select(logicalCols(st) ++ provenance: _*))
+    val rewritten = matched.select(st.schema.fields.toSeq.map { f =>
       set.get(f.name)
         .map(e => expr(e).cast(DeltaLakeRead.stripType(f.dataType))
           .as(f.name))
         .getOrElse(col(DeltaLakeRead.quoted(f.name)))
     }: _*)
-    val cdc = t.filter(cond).select(logicalCols(st): _*)
-      .withColumn(DeltaLakeCdf.ChangeTypeCol, lit("update_preimage"))
-      .unionByName(rewritten.withColumn(DeltaLakeCdf.ChangeTypeCol,
-        lit("update_postimage")))
-    mutate(spark, tablePath, st, t, cond, Some(rewritten),
-      cdcRows = Some(cdc))
+    mutate(spark, tablePath, st, matched, Some(rewritten),
+      matched.select(logicalCols(st): _*)
+        .withColumn(DeltaLakeCdf.ChangeTypeCol, lit("update_preimage"))
+        .unionByName(rewritten.withColumn(DeltaLakeCdf.ChangeTypeCol,
+          lit("update_postimage"))))
   }
 
   /** MERGE-style upsert: WHEN MATCHED on `keys` UPDATE ALL, WHEN NOT
@@ -126,96 +149,61 @@ object DeltaLakeDml {
     * matching n target rows DV-deletes n rows and lands n postimage
     * copies — the table's row count is preserved, not shrunk. */
   def upsert(spark: SparkSession, tablePath: String, source: DataFrame,
-      keys: Seq[String]): DmlResult = withRetries {
+      keys: Seq[String]): DmlResult = withRetries { pin =>
     val st = gated(spark, tablePath)
     require(keys.nonEmpty, "upsert needs at least one key column")
     val logical = st.schema.fieldNames.toSet
-    // the source batch feeds THREE consumers (dup-key check, the match
-    // keys, the insert staging) — pin it once or the caller's frame
-    // recomputes per consumer
-    val src = source.localCheckpoint()
-    require(src.columns.toSet == logical,
+    require(source.columns.toSet == logical,
       s"source columns ${source.columns.sorted.mkString(",")} != table " +
       s"columns ${logical.toSeq.sorted.mkString(",")} (update-all/" +
       "insert-all upsert needs the full column set)")
-    // precondition probe overlapped with the matched-counts probe
-    // below (guide §2.6) — both are read-only jobs over the
-    // checkpointed source/narrow target; the require still fires
-    // BEFORE mutate() lands any side effect
-    val dupKeysF = scala.concurrent.Future(
-      src.groupBy(keys.map(c => col(DeltaLakeRead.quoted(c))): _*)
-        .count().filter(col("count") > 1).limit(1).count())(
-      graft.core.Overlap.ec)
-    val newRows = src.select(st.schema.fields.toSeq.map(f =>
+    val keyCols = keys.map(c => col(DeltaLakeRead.quoted(c)))
+    // the source feeds the match join and the per-key aggregate: pinned,
+    // so the caller's frame runs once
+    val src = pin(source.select(st.schema.fields.toSeq.map(f =>
       col(DeltaLakeRead.quoted(f.name))
-        .cast(DeltaLakeRead.stripType(f.dataType)).as(f.name)): _*)
-    val t = DeltaLakeRead.snapshotMeta(spark, tablePath, st)
-    val srcKeys = src
-      .select(keys.map(c => col(DeltaLakeRead.quoted(c))): _*)
-      .distinct().withColumn("__matched", lit(1))
-    // project the target to (keys, __file, __pos) BEFORE the match
-    // join: once srcKeys outgrows broadcast this join shuffles the
-    // target on the keys, and the sf10 audit measured the full-width
-    // snapshot paying 15x the bytes the match actually needs.
-    // PERSISTED (round-14): the narrow frame feeds the multiplicity
-    // aggregate AND the DV-position scan inside mutate — unpersisted,
-    // each re-ran the snapshot parquet scan (5 full table scans per
-    // upsert profiled at sf0.1; 2 after the two caches below).
-    val narrow = t.select((keys.map(c => col(DeltaLakeRead.quoted(c))) ++
-      Seq(col("__file"), col("__pos"))): _*).persist()
-    val joined = narrow.join(srcKeys, keys, "left")
-    val srcKeyOnly = srcKeys.drop("__matched")
-    // per-key target multiplicity: a source key matching n target
-    // rows must land n postimage copies (all n were DV-deleted) —
-    // collapsing to one would shrink the table vs delta-spark MERGE.
-    // The multiplicity aggregate is scoped to keys PRESENT IN THE
-    // SOURCE (semi-join on the narrow projection before the groupBy),
-    // so its shuffle is O(matched rows), never O(target keys); a
-    // LIMIT-1 probe of it decides the shape: duplicate-free targets
-    // (the overwhelmingly common case) insert the source batch
-    // VERBATIM — zero joins in the staging path — while duplicated
-    // targets pay the explode-join that preserves row count.
-    // PERSISTED: three consumers (the probe, the matched semi, the
-    // fresh-insert anti) — the probe fills the cache, and the frame
-    // is matched-keys-sized (≤ batch), the broadcast-join budget.
-    val matchedCounts = narrow
-      .join(srcKeyOnly, keys, "left_semi")
-      .groupBy(keys.map(c => col(DeltaLakeRead.quoted(c))): _*)
-      .agg(count(lit(1)).as("__tn")).persist()
-    try {
-      val hasDupTargets =
-        matchedCounts.filter(col("__tn") > 1).limit(1).count() > 0
-      require(scala.concurrent.Await.result(dupKeysF,
-          scala.concurrent.duration.Duration.Inf) == 0L,
-        "source carries duplicate keys — one target row would receive " +
-        "two conflicting updates")
-      val (replacement, matchedRepl, freshIns) =
-        if (!hasDupTargets) {
-          (newRows,
-            newRows.join(matchedCounts, keys, "left_semi"),
-            newRows.join(matchedCounts, keys, "left_anti"))
-        } else {
-          val m = newRows.join(matchedCounts, keys, "inner")
-            .withColumn("__i", explode(sequence(lit(1L), col("__tn"))))
-            .select(logicalCols(st): _*)
-          val a = newRows.join(matchedCounts, keys, "left_anti")
-          (m.unionByName(a), m, a)
-        }
-      val cdc = t.join(srcKeyOnly, keys, "left_semi")
-        .select(logicalCols(st): _*)
+        .cast(DeltaLakeRead.stripType(f.dataType)).as(f.name)): _*))
+    // the target projects to (keys, __file, __pos) BEFORE the match
+    // join unless CDF needs the preimages: once the source keys outgrow
+    // broadcast this join shuffles the target, and the sf10 audit
+    // measured the full-width snapshot paying 15x the bytes the match
+    // needs
+    val matched = pin(DeltaLakeRead.snapshotMeta(spark, tablePath, st)
+      .select((if (cdfOn(st)) logicalCols(st) else keyCols) ++
+        provenance: _*)
+      .join(src.select(keyCols: _*), keys, "left_semi"))
+    // ONE aggregate per source key over the keys alone: its source rows
+    // (__sn, which must be 1) and its matched target rows (__tn), joined
+    // back to each source row (null-safe: a null key groups like
+    // GROUP BY does, so duplicated null keys reject too) and pinned. A
+    // key matching n target rows lands n postimage copies (all n were
+    // DV-deleted) — collapsing to one would shrink the table vs
+    // delta-spark MERGE; an unmatched key lands its row once, as an
+    // insert. Source-keys-sized: the unmatched target never enters.
+    val perKey = src.select(keyCols ++ Seq(lit(1).as("__sn"),
+        lit(0).as("__tn")): _*)
+      .unionByName(matched.select(keyCols ++ Seq(lit(0).as("__sn"),
+        lit(1).as("__tn")): _*))
+      .groupBy(keyCols: _*)
+      .agg(sum(col("__sn")).as("__sn"), sum(col("__tn")).as("__tn"))
+      .toDF(keys.indices.map(i => s"__k$i") ++ Seq("__sn", "__tn"): _*)
+    val counted = pin(src.join(perKey, keys.indices.map(i =>
+      src(DeltaLakeRead.quoted(keys(i))) <=> perKey(s"__k$i")).reduce(_ && _))
+      .select(logicalCols(st) ++ Seq(col("__sn"), col("__tn")): _*))
+    // checked BEFORE mutate() lands any side effect
+    require(counted.coalesce(1).filter(col("__sn") > 1).isEmpty,
+      "source carries duplicate keys — one target row would receive " +
+      "two conflicting updates")
+    val landed = counted.withColumn("__i",
+      explode(sequence(lit(1L), greatest(col("__tn"), lit(1L)))))
+    mutate(spark, tablePath, st, matched,
+      Some(landed.select(logicalCols(st): _*)),
+      matched.select(logicalCols(st): _*)
         .withColumn(DeltaLakeCdf.ChangeTypeCol, lit("update_preimage"))
-        .unionByName(matchedRepl
-          .withColumn(DeltaLakeCdf.ChangeTypeCol, lit("update_postimage")))
-        .unionByName(freshIns
-          .withColumn(DeltaLakeCdf.ChangeTypeCol, lit("insert")))
-      mutate(spark, tablePath, st, joined, col("__matched") === 1,
-        Some(replacement), forceInsert = true, cdcRows = Some(cdc))
-    } finally {
-      // per-attempt caches: a commit race re-executes the whole body
-      // (withRetries), so nothing may outlive the attempt
-      matchedCounts.unpersist()
-      narrow.unpersist()
-    }
+        .unionByName(landed.select(logicalCols(st) :+
+          when(col("__tn") > 0, lit("update_postimage"))
+            .otherwise(lit("insert")).as(DeltaLakeCdf.ChangeTypeCol): _*)),
+      forceInsert = true)
   }
 
   private def gated(spark: SparkSession,
@@ -243,110 +231,99 @@ object DeltaLakeDml {
   private def impliedReader(minReader: Int): Seq[String] =
     if (minReader >= 2) Seq("columnMapping") else Nil
 
-  /** The shared engine: DV-delete every row of `withCond` matching
-    * `cond`, land `newRows` as fresh files, commit atomically.
-    * `withCond` must be a [[DeltaLakeRead.snapshotMeta]] frame
-    * (possibly decorated with extra join columns — only `__file`/
-    * `__pos` and the condition's inputs are read here). */
+  /** The shared engine: DV-delete every row of `matched` — the pinned
+    * matched rows of a [[DeltaLakeRead.snapshotMeta]] frame of `st`,
+    * `__file`/`__pos` and whatever columns `newRows`/`cdcRows` read —
+    * land `newRows` as fresh files, commit atomically. `cdcRows` is
+    * built only when the table has CDF on. */
   private def mutate(spark: SparkSession, tablePath: String,
-      st: DeltaLakeRead.Snapshot, withCond: DataFrame,
-      cond: org.apache.spark.sql.Column, newRows: Option[DataFrame],
-      forceInsert: Boolean = false,
-      cdcRows: Option[DataFrame] = None): DmlResult = {
+      st: DeltaLakeRead.Snapshot, matched: DataFrame,
+      newRows: Option[DataFrame], cdcRows: => DataFrame,
+      forceInsert: Boolean = false): DmlResult = {
     import spark.implicits._
-    val rootAbs = new File(tablePath).getAbsolutePath
-
-    // one scan: per file, live row count + matched positions
-    // (collect_list skips the nulls the `when` leaves on non-matches;
-    // positions of one parquet file fit one executor by construction)
-    // grouped by the raw file URI: one string per file, so the
-    // normalization below runs once per affected file, not per row
-    val perFile = withCond.groupBy(col("__file"))
-      .agg(count(lit(1)).as("__live"),
-        collect_list(when(cond, col("__pos"))).as("__dead"))
-      .filter(size(col("__dead")) > 0)
-      .select(col("__file"), col("__live"), col("__dead"))
-      .as[(String, Long, Seq[Long])]
-
+    val root = new File(tablePath).getAbsoluteFile
     val oldDvs: Map[String, DeletionVectors.Descriptor] =
-      st.files.flatMap(f => f.dv.map(d => s"$rootAbs/${f.path}" -> d)).toMap
+      st.files.flatMap(f => f.dv.map(d => s"$root/${f.path}" -> d)).toMap
     val bcOld = spark.sparkContext.broadcast(oldDvs)
 
-    // DV serialization + .bin writes happen ON EXECUTORS; only the
-    // descriptor tuple (one short row per affected file) is collected
-    val written = perFile.mapPartitions { it =>
-      val root = new File(rootAbs)
-      it.map { case (uri, live, dead) =>
-        val file = DeltaLakeRead.normFile(uri)
-        val matched = dead.toArray.sorted
-        if (matched.length == live) {
-          // every remaining live row dies -> bare remove, no DV
-          (file, "", -1, 0, 0L, matched.length.toLong)
-        } else {
-          val oldPos = bcOld.value.get(file)
-            .map(d => DeletionVectors.positions(root, d))
-            .getOrElse(Array.empty[Long])
-          val d = DeletionVectors.writeFile(root, oldPos ++ matched)
-          (file, d.pathOrInlineDv, d.offset.getOrElse(1), d.sizeInBytes,
-            d.cardinality, matched.length.toLong)
+    // one job: the matched positions grouped by raw file URI (so the
+    // normalization runs once per affected file; one file's positions
+    // fit one executor), then per file ON AN EXECUTOR the live count
+    // and the DV write — only one short descriptor row per file returns
+    val written = matched.select(provenance: _*).as[(String, Long)].rdd
+      .mapPartitions { it =>
+        // one record per file per task crosses the shuffle
+        val byFile = mutable.HashMap.empty[String, mutable.ArrayBuilder.ofLong]
+        it.foreach { case (uri, p) =>
+          byFile.getOrElseUpdate(uri, new mutable.ArrayBuilder.ofLong) += p
         }
+        byFile.iterator.map { case (uri, b) => uri -> b.result() }
       }
-    }.collect()
+      .reduceByKey(_ ++ _)
+      .map { case (uri, pos) =>
+        val file = DeltaLakeRead.normFile(uri)
+        val matchedPos = pos.sorted
+        val old = bcOld.value.get(file)
+        val rows = DeltaLakeWrite.footerRows(new File(file))
+        val oldCard = old.fold(0L)(_.cardinality)
+        if (rows - oldCard < matchedPos.length)
+          throw new IllegalStateException(s"data file $file: its footer " +
+            s"holds $rows rows, fewer than the $oldCard its deletion " +
+            s"vector masks plus the ${matchedPos.length} this mutation " +
+            "matched — refusing to retire or re-mask it")
+        if (matchedPos.length == rows - oldCard) {
+          // every remaining live row dies -> bare remove, no DV
+          (file, "", -1, 0, 0L, matchedPos.length.toLong)
+        } else {
+          val d = DeletionVectors.writeFile(root, old.fold(Array.empty[Long])(
+            DeletionVectors.positions(root, _)) ++ matchedPos)
+          (file, d.pathOrInlineDv, d.offset.getOrElse(1), d.sizeInBytes,
+            d.cardinality, matchedPos.length.toLong)
+        }
+      }.collect()
 
     val rowsDeleted = written.map(_._6).sum
+    // nothing matched and nothing to insert: no staging, no commit
+    if (written.isEmpty && !forceInsert)
+      return DmlResult(st.version, 0L, 0L, 0)
+    def drop(files: Seq[DeltaLakeWrite.Staged]): Unit =
+      files.foreach(s => Files.deleteIfExists(new File(root, s.rel).toPath))
     val physParts = st.partitionColumns.map(c =>
       DeltaLakeRead.physFieldName(st.schema(c)))
-    val cdcEnabled =
-      st.config.get("delta.enableChangeDataFeed").contains("true")
-    def stageReplacement(): Seq[DeltaLakeWrite.Staged] =
-      newRows.filter(_ => forceInsert || rowsDeleted > 0).map { df =>
-        val phys = DeltaLakeWrite.toPhysical(df, st)
-        DeltaLakeWrite.stageData(phys, new File(tablePath), physParts)
-      }.getOrElse(Nil)
+    def stage(df: DataFrame, passthrough: Seq[String], prefix: String) =
+      DeltaLakeWrite.stageData(DeltaLakeWrite.toPhysical(df, st,
+        passthrough), root, physParts, destPrefix = prefix)
     // change data feed: when the table asks for it, the SAME commit
     // must carry the changed rows as _change_data files + cdc actions
     // (authoritative for CDF readers; delta-spark's table_changes and
-    // [[DeltaLakeCdf.changes]] both consume them)
-    def stageCdc(): Seq[DeltaLakeWrite.Staged] =
-      if (cdcEnabled) {
-        val rows = cdcRows.getOrElse(throw new IllegalStateException(
-          "CDF is enabled but this mutation built no change rows"))
-        DeltaLakeWrite.stageData(
-          DeltaLakeWrite.toPhysical(rows, st,
-            passthrough = Seq(DeltaLakeCdf.ChangeTypeCol)),
-          new File(tablePath), physParts, destPrefix = "_change_data/")
-      } else Nil
-    // round-14: the replacement staging and the CDF staging are
-    // independent Spark jobs — overlap them (guide §2.6: concurrent
-    // driver actions back-fill each other's task tails) instead of
-    // running two sequential write jobs per mutation. Both gate on the
-    // same inputs computed above; the early no-op exit below deletes
-    // whatever an overlapped stage landed.
-    val (staged, cdcStaged) =
-      if (cdcEnabled && (forceInsert || rowsDeleted > 0)) {
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.duration.Duration
-        val fCdc = Future(stageCdc())(stagingEc)
-        val s = stageReplacement()
-        (s, Await.result(fCdc, Duration.Inf))
-      } else {
-        // sequential path preserves the original no-op short-circuit:
-        // a mutation that deleted nothing and stages nothing must not
-        // run the cdc write job either
-        val s = stageReplacement()
-        (s, if (written.isEmpty && s.isEmpty) Nil else stageCdc())
-      }
+    // [[DeltaLakeCdf.changes]] both consume them). The CDF staging and
+    // the replacement staging are independent jobs — overlapped
+    // (concurrent driver actions back-fill each other's task tails)
+    // instead of running two sequential write jobs per mutation.
+    val cdc = Option.when(cdfOn(st))(cdcRows)
+    val fCdc = Future(cdc.toSeq.flatMap(
+      stage(_, Seq(DeltaLakeCdf.ChangeTypeCol), "_change_data/")))(
+      graft.core.Overlap.ec)
+    val stages = Seq(Try(newRows.toSeq.flatMap(stage(_, Nil, ""))),
+      Try(Await.result(fCdc, Duration.Inf)))
+    // a failed stage fails the mutation once both have ended (the
+    // overlapped one reads this attempt's pins), taking back what the
+    // other landed
+    stages.collectFirst { case Failure(e) =>
+      drop(stages.flatMap(_.toOption).flatten); throw e
+    }
+    val (staged, cdcStaged) = (stages(0).get, stages(1).get)
     // footer row counts of the just-staged files — the source plan
     // already ran once inside stageData; re-running it for a count
     // was a full second scan per DML call
     val rowsInserted = staged.map(_.rows).sum
 
     if (written.isEmpty && staged.isEmpty) {
-      // no-op mutation: nothing may be referenced by a commit — drop
-      // any cdc files an overlapped stage landed (an empty change
-      // frame normally stages nothing; defensive regardless)
-      cdcStaged.foreach(s =>
-        Files.deleteIfExists(new File(tablePath, s.rel).toPath))
+      // an upsert of an empty source: nothing may be referenced by a
+      // commit — drop any cdc files the overlapped stage landed (an
+      // empty change frame normally stages nothing; defensive
+      // regardless)
+      drop(cdcStaged)
       return DmlResult(st.version, 0L, 0L, 0)
     }
 
@@ -374,7 +351,7 @@ object DeltaLakeDml {
         st.config + ("delta.enableDeletionVectors" -> "true"),
         st.createdTime))
 
-    val byAbs = st.files.map(f => s"$rootAbs/${f.path}" -> f).toMap
+    val byAbs = st.files.map(f => s"$root/${f.path}" -> f).toMap
     val fileLines = written.toSeq.flatMap {
       case (abs, dvPath, dvOff, dvSize, dvCard, _) =>
         val f = byAbs.getOrElse(abs, throw new IllegalStateException(
@@ -399,7 +376,7 @@ object DeltaLakeDml {
     val body = (protoLine.toSeq ++ metaLine.toSeq ++ fileLines ++
       addLines ++ cdcLines)
       .mkString("\n").getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    val log = new File(new File(tablePath), "_delta_log")
+    val log = new File(root, "_delta_log")
 
     // Optimistic concurrency (WriteSerializable-shaped): this
     // mutation computed against st.version, so it may commit ONLY at
@@ -421,12 +398,11 @@ object DeltaLakeDml {
       if (DeltaLakeWrite.benignCommit(f)) slot += 1
       else {
         // roll back everything this attempt physically landed
-        (staged ++ cdcStaged).foreach(s =>
-          Files.deleteIfExists(new File(tablePath, s.rel).toPath))
+        drop(staged ++ cdcStaged)
         written.foreach { case (_, dvPath, dvOff, dvSize, dvCard, _) =>
           if (dvPath.nonEmpty)
             Files.deleteIfExists(DeletionVectors.resolvePath(
-              new File(tablePath), DeletionVectors.Descriptor("u",
+              root, DeletionVectors.Descriptor("u",
                 dvPath, Some(dvOff), dvSize, dvCard)).toPath)
         }
         throw new CommitRaceException(tablePath, st.version, slot)
@@ -434,20 +410,6 @@ object DeltaLakeDml {
     }
     DmlResult(slot, rowsDeleted, rowsInserted, written.length)
   }
-
-  /** Two daemon threads for the overlapped staging writes (mutate):
-    * at most one mutation stages at a time per JVM in practice, and
-    * each overlaps exactly two jobs, so a fixed tiny pool suffices. */
-  private lazy val stagingEc: scala.concurrent.ExecutionContext =
-    scala.concurrent.ExecutionContext.fromExecutorService(
-      java.util.concurrent.Executors.newFixedThreadPool(2,
-        (r: Runnable) => {
-          val t = new Thread(r, "graft-dml-staging")
-          t.setDaemon(true)
-          t
-        }))
-
-  private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
 
   /** Spec seam: runs between a mutation's computation and its commit
     * claim, so races (an append or a conflicting mutation landing in
@@ -479,19 +441,36 @@ object DeltaLakeDml {
     * optimistic concurrency by full re-execution, the same pattern
     * [[VersionedTableIO]]'s concurrent-DV-delete path proves out.
     * Exhaustion aborts loudly: sustained conflict means the caller is
-    * racing mutators faster than they can serialize. */
-  private def withRetries(op: => DmlResult): DmlResult = {
+    * racing mutators faster than they can serialize. Each attempt pins
+    * through its own [[Pins]], released when the attempt ends, however
+    * it ends. */
+  private def withRetries(op: Pins => DmlResult): DmlResult = {
     var tries = 0
     while (true) {
-      try return op
+      val pins = new Pins
+      try return op(pins)
       catch {
         case e: CommitRaceException =>
           tries += 1
           if (tries > MaxRetries) throw new IllegalStateException(
             s"giving up after $MaxRetries recomputes: ${e.getMessage} " +
             "— serialize the racing mutators", e)
-      }
+      } finally pins.release()
     }
     throw new IllegalStateException("unreachable")
+  }
+
+  /** The frames one mutation attempt computes once and reads many
+    * times: `apply` materializes a frame eagerly (one job,
+    * `localCheckpoint`) and every later plan reads its blocks instead
+    * of re-running it; `release` drops the blocks, which would
+    * otherwise stay until the driver's GC reaches the RDD. */
+  private final class Pins {
+    private var pinned = List.empty[DataFrame]
+    def apply(df: DataFrame): DataFrame = {
+      pinned ::= df.localCheckpoint()
+      pinned.head
+    }
+    def release(): Unit = pinned.foreach(PlanBridge.release)
   }
 }

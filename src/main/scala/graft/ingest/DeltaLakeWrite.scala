@@ -550,7 +550,6 @@ object DeltaLakeWrite {
       partitionBy: Seq[String], destPrefix: String = ""): Seq[Staged] = {
     val stage = new File(root, s".stage-${java.util.UUID.randomUUID()}")
     df.write.partitionBy(partitionBy: _*).parquet(stage.getPath)
-    val conf = df.sparkSession.sparkContext.hadoopConfiguration
     def walk(dir: File, relDir: String,
         pv: Map[String, String]): Seq[Staged] =
       Option(dir.listFiles()).getOrElse(Array.empty).toSeq.flatMap {
@@ -567,7 +566,7 @@ object DeltaLakeWrite {
           dest.getParentFile.mkdirs()
           Files.move(f.toPath, dest.toPath,
             StandardCopyOption.ATOMIC_MOVE)
-          Seq(Staged(rel, pv, dest.length(), footerRows(dest, conf)))
+          Seq(Staged(rel, pv, dest.length(), footerRows(dest)))
         case _ => Nil
       }
     val staged = walk(stage, "", Map.empty)
@@ -575,16 +574,14 @@ object DeltaLakeWrite {
     staged
   }
 
-  /** Row count from the parquet footer — one metadata read, no scan.
-    * Lets DML report rowsInserted without re-running the source plan
-    * (the footer is authoritative: the file was just written). `conf`
-    * is the session's Hadoop conf: a fresh `Configuration` re-parses
-    * the default resources per file and lacks the session's bindings. */
-  private def footerRows(f: File,
-      conf: org.apache.hadoop.conf.Configuration): Long = {
-    val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-      new org.apache.hadoop.fs.Path(f.getPath), conf)
-    val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+  /** Row count from the parquet footer — one metadata read, no scan,
+    * through `java.nio` (no Hadoop filesystem, so callable on an
+    * executor). Lets DML report rowsInserted without re-running the
+    * source plan, and take a data file's live rows without counting
+    * them. */
+  private[ingest] def footerRows(f: File): Long = {
+    val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+      new org.apache.parquet.io.LocalInputFile(f.toPath))
     try r.getRecordCount finally r.close()
   }
 

@@ -286,9 +286,9 @@ class DeltaDmlSpec extends AnyFunSuite {
     DeltaLakeWrite.append((0L until 100L).map(i => (i, i * 10L))
       .toDF("id", "amt").repartition(1), t)
     def countJobs(body: => Unit): Int = JobLog.during(spark)(body).size
-    // an UPDATE is exactly three Spark jobs: the matched-position
-    // aggregation collect, the executor-side DV-write collect, and
-    // the staging write of the rewritten rows. The old
+    // an UPDATE is exactly three Spark jobs: the pin of the matched
+    // rows, the executor-side DV-write collect, and the staging write
+    // of the rewritten rows. The old
     // `inserting.get.count()` re-ran the rewrite plan (snapshot scan
     // + filter) as a FOURTH job per DML call — pin it gone.
     val r = new java.util.concurrent.atomic.AtomicReference[
@@ -505,5 +505,166 @@ class DeltaDmlSpec extends AnyFunSuite {
           assert(!plan.contains(f), s"$name decodes per row: $f\n$plan"))
       }
     assert(ids(t) === (0L until 20L).filterNot(_ == 3L))
+  }
+
+  /** The parquet scans of `root`'s data files (change files excluded)
+    * in the physical plans of the queries `body` runs, adaptive stages
+    * and cached relations included. */
+  private def dataScans(root: String)(body: => Unit): Int = {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val l = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = {
+        plans.add(qe.executedPlan); ()
+      }
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    def scans(p: SparkPlan): Seq[FileSourceScanExec] = (p match {
+      case a: AdaptiveSparkPlanExec => scans(a.executedPlan)
+      case q: QueryStageExec => scans(q.plan)
+      case m: InMemoryTableScanExec => scans(m.relation.cachedPlan)
+      case s: FileSourceScanExec => Seq(s)
+      case _ => Nil
+    }) ++ p.children.flatMap(scans) ++ p.subqueries.flatMap(scans)
+    spark.listenerManager.register(l)
+    try {
+      body
+      var prev = -1; var spins = 0
+      while (prev != plans.size && spins < 20) {
+        prev = plans.size; Thread.sleep(100); spins += 1
+      }
+    } finally spark.listenerManager.unregister(l)
+    val dir = new java.io.File(root).getCanonicalPath
+    import scala.jdk.CollectionConverters._
+    plans.asScala.toSeq.flatMap(scans).count(s =>
+      s.relation.location.inputFiles.exists(f =>
+        f.contains(dir) && !f.contains("_change_data")))
+  }
+
+  test("an upsert computes from one pinned pass: at most 12 jobs and one " +
+      "scan of the target's data files (CDF on, half the keys hit)") {
+    val t = newTable()
+    DeltaLakeWrite.append((0L until 4000L).map(i => (i, i % 7, s"v$i"))
+      .toDF("id", "g", "v").repartition(2), t,
+      tableConfig = Map("delta.enableChangeDataFeed" -> "true"))
+    // 400 source keys: the even ones hit, the odd ones insert
+    val src = (0L until 400L).map(i =>
+      (if (i % 2 == 0) i * 9 else 10000L + i, -1L, s"u$i"))
+      .toDF("id", "g", "v")
+    val r = new java.util.concurrent.atomic.AtomicReference[
+      DeltaLakeDml.DmlResult]()
+    var jobs = Seq.empty[JobLog.Job]
+    val scans = dataScans(t) {
+      jobs = JobLog.during(spark) {
+        r.set(DeltaLakeDml.upsert(spark, t, src, Seq("id")))
+      }
+    }
+    assert(r.get().rowsDeleted === 200L && r.get().rowsInserted === 400L)
+    assert(jobs.size <= 12, jobs.map(_.site).mkString("\n"))
+    assert(scans === 1, "the target's data files must be scanned once")
+    val byType = graft.ingest.DeltaLakeCdf.changes(spark, t, 1L)
+      .groupBy(graft.ingest.DeltaLakeCdf.ChangeTypeCol).count()
+      .as[(String, Long)].collect().toMap
+    assert(byType === Map("update_preimage" -> 200L,
+      "update_postimage" -> 200L, "insert" -> 200L))
+    assert(DeltaLakeRead.snapshot(spark, t).count() === 4200L)
+  }
+
+  test("a CDF upsert hitting a duplicated target key and emptying a " +
+      "file, through one forced recompute, matches the hand model") {
+    val t = newTable()
+    val cdf = Map("delta.enableChangeDataFeed" -> "true")
+    // v0: file A = ids 1, 2, 2, 3; v1: file B = ids 4, 5, 6
+    DeltaLakeWrite.append(Seq((1L, "a"), (2L, "b"), (2L, "b2"), (3L, "c"))
+      .toDF("id", "v").repartition(1), t, tableConfig = cdf)
+    DeltaLakeWrite.append(Seq((4L, "d"), (5L, "e"), (6L, "f"))
+      .toDF("id", "v").repartition(1), t, tableConfig = cdf)
+    val fileB = DeltaLakeRead.state(spark, t, Some(1L)).files
+      .map(_.path).filterNot(DeltaLakeRead.state(spark, t, Some(0L))
+        .files.map(_.path).contains).head
+    // the first attempt masks ids 4, 5 in B with a DV; the delete of
+    // id 6 landing in its commit window leaves B with one live row
+    // per match, so the recompute must retire B with a bare remove
+    var windows = 0
+    DeltaLakeDml.testBeforeCommit = () => {
+      DeltaLakeDml.testBeforeCommit = () => ()
+      windows += 1
+      DeltaLakeDml.delete(spark, t, "id = 6"); ()
+    }
+    val pinned = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val r = try DeltaLakeDml.upsert(spark, t,
+      Seq((2L, "U"), (4L, "D"), (5L, "E"), (9L, "N")).toDF("id", "v"),
+      Seq("id"))
+    finally DeltaLakeDml.testBeforeCommit = () => ()
+    assert(windows === 1)
+    val left = spark.sparkContext.getPersistentRDDs.keySet.toSet -- pinned
+    assert(left.isEmpty, s"both attempts must release their pins: $left")
+    // model: A loses both id-2 rows (DV of 2), B loses 4, 5 and is
+    // empty (6 went in the window); 2 postimages of id 2, one each
+    // for 4 and 5, one insert of 9
+    assert(r.version === 3L && r.rowsDeleted === 4L &&
+      r.rowsInserted === 5L && r.filesChanged === 2)
+    val st = DeltaLakeRead.state(spark, t)
+    assert(!st.files.exists(_.path == fileB), "B must be retired")
+    assert(st.files.flatMap(_.dv).map(_.cardinality) === Seq(2L))
+    val log = new java.io.File(t, "_delta_log")
+    val commit = new String(Files.readAllBytes(
+      new java.io.File(log, f"${3L}%020d.json").toPath), "UTF-8")
+      .split("\n").toSeq
+    val om = new com.fasterxml.jackson.databind.ObjectMapper()
+    val removes = commit.map(om.readTree).filter(_.has("remove"))
+      .map(_.get("remove"))
+    val removedB = removes.filter(_.get("path").asText == fileB)
+    assert(removedB.size === 1 &&
+      removedB.head.get("deletionVector").get("cardinality").asLong === 1L,
+      "B leaves with its window DV, not with a new one")
+    assert(!commit.exists(l => l.contains("\"add\"") && l.contains(fileB)),
+      "a bare remove: no all-rows DV re-add of B")
+    def byType(v: Long) = graft.ingest.DeltaLakeCdf.changes(spark, t, v,
+      Some(v)).groupBy(graft.ingest.DeltaLakeCdf.ChangeTypeCol).count()
+      .as[(String, Long)].collect().toMap
+    assert(byType(2L) === Map("delete" -> 1L))
+    assert(byType(3L) === Map("update_preimage" -> 4L,
+      "update_postimage" -> 4L, "insert" -> 1L))
+    val pre = graft.ingest.DeltaLakeCdf.changes(spark, t, 3L, Some(3L))
+      .filter(org.apache.spark.sql.functions.col(
+        graft.ingest.DeltaLakeCdf.ChangeTypeCol) === "update_preimage")
+      .select("id", "v").as[(Long, String)].collect().sorted.toSeq
+    assert(pre === Seq((2L, "b"), (2L, "b2"), (4L, "d"), (5L, "e")))
+    val got = DeltaLakeRead.snapshot(spark, t).as[(Long, String)]
+      .collect().sorted.toSeq
+    assert(got === Seq((1L, "a"), (2L, "U"), (2L, "U"), (3L, "c"),
+      (4L, "D"), (5L, "E"), (9L, "N")))
+  }
+
+  test("a data file whose footer holds fewer rows than its old DV masks " +
+      "fails the mutation instead of being retired") {
+    val t = newTable()
+    val root = new java.io.File(t)
+    val tmp = new java.io.File(root, ".tmp")
+    Seq((0L, "a"), (1L, "b"), (2L, "c"), (3L, "d")).toDF("id", "v")
+      .coalesce(1).write.parquet(tmp.getPath)
+    val data = new java.io.File(root, "part-0.parquet")
+    Files.move(tmp.listFiles().find(_.getName.endsWith(".parquet")).get
+      .toPath, data.toPath)
+    // a 4-row file whose DV masks 8 positions: the log is corrupt
+    val dv = graft.ingest.DeletionVectors.writeFile(root,
+      (1L to 8L).toArray)
+    val schema = new com.fasterxml.jackson.databind.ObjectMapper()
+      .writeValueAsString(Seq((0L, "")).toDF("id", "v").schema.json)
+    val log = new java.io.File(root, "_delta_log"); log.mkdirs()
+    Files.write(new java.io.File(log, f"${0L}%020d.json").toPath, Seq(
+      """{"protocol":{"minReaderVersion":3,"minWriterVersion":7,"readerFeatures":["deletionVectors"],"writerFeatures":["deletionVectors"]}}""",
+      s"""{"metaData":{"id":"short","format":{"provider":"parquet","options":{}},"schemaString":$schema,"partitionColumns":[],"configuration":{"delta.enableDeletionVectors":"true"}}}""",
+      s"""{"add":{"path":"part-0.parquet","partitionValues":{},"size":${data.length},"modificationTime":0,"dataChange":true,"deletionVector":{"storageType":"u","pathOrInlineDv":"${dv.pathOrInlineDv}","offset":${dv.offset.get},"sizeInBytes":${dv.sizeInBytes},"cardinality":${dv.cardinality}}}}""")
+      .mkString("\n").getBytes("UTF-8"))
+    assert(ids(t) === Seq(0L))
+    val e = intercept[Exception](DeltaLakeDml.delete(spark, t, "id = 0"))
+    assert(e.getMessage.contains("fewer than the 8 its deletion vector"),
+      e.getMessage)
+    assert(DeltaLakeRead.latestVersion(t) === 0L)
+    assert(ids(t) === Seq(0L))
   }
 }

@@ -140,6 +140,48 @@ class DqSpec extends AnyFunSuite {
     assert(mail.contains(report.attachmentName))
   }
 
+  test("full report in one job: pks keep sort_array's UTF-8 order, a " +
+      "null-pk ERROR row keeps its section") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    // U+1F600 (a surrogate pair) sorts below U+E000 and U+FFFD in
+    // String.compareTo's UTF-16 order and above them in UTF-8's
+    val pks = Seq("b", "B", "a", "A", "\uE000x", "\uD83D\uDE00", "Z",
+      "\uFFFDy", "aa")
+    val schema = new StructType().add("cd_configuration", LongType)
+      .add("ds_dimension", StringType).add("schema_name", StringType)
+      .add("table_name", StringType).add("rule", StringType)
+      .add("n_violations", LongType).add("nr_status", IntegerType)
+      .add("violated_pk", StringType)
+    val rows = pks.map(pk => Row(7L, "validity", "s", "t", "v > 0",
+      pks.size.toLong, AuditStatus.Fail, pk)) ++ Seq(
+      Row(3L, "completeness", "s", "t", "broken", null, AuditStatus.Error,
+        null),
+      Row(5L, "completeness", "s", "t", "ok", 0L, AuditStatus.Pass, null))
+    val facts = spark.createDataFrame(spark.sparkContext.parallelize(rows),
+      schema)
+    val want = facts.filter(col("cd_configuration") === 7L)
+      .agg(sort_array(collect_list(col("violated_pk")))).head()
+      .getSeq[String](0)
+    assert(want !== pks.sorted, "the case must tell UTF-8 from UTF-16")
+    var report: AlertRenderer.AlertReport = null
+    val jobs = JobLog.during(spark) {
+      report = AlertRenderer.renderReport(facts, previewRows = 100)
+    }
+    assert(jobs.size === 1, jobs.map(_.site))
+    assert(report.configCount === 2L && report.dimensionCount === 2L)
+    assert(report.totalViolations === pks.size.toLong)
+    val shown = "<tr><td>(.*?)</td></tr>".r
+      .findAllMatchIn(report.attachment).map(_.group(1)).toSeq
+    assert(shown === want)
+    // completeness (the ERROR config, no pks) comes before validity
+    val configs = "Configuration #(\\d+)".r
+      .findAllMatchIn(report.attachment).map(_.group(1)).toSeq
+    assert(configs === Seq("3", "7"))
+    assert(report.attachment.contains("Rule: broken<br>\nTotal Violations: " +
+      "<span class=\"violation-count\">0</span>"))
+  }
+
   test("smtp round-trip: the assembled MIME message survives a real " +
     "socket SMTP session byte for byte") {
     // a report whose body exercises dot-stuffing (a CRLF line starting

@@ -102,6 +102,16 @@ class SessionFactorySpec extends AnyFunSuite {
     assert(sites === Seq("src/main/scala/graft/core/SessionFactory.scala"))
   }
 
+  // overlapped driver actions share one pool, so none can block on a
+  // task queued behind it in another
+  test("only core.Overlap starts a thread pool") {
+    val sites = scalaFiles(new File("src/main/scala"))
+      .filter(f => "Executors\\.new\\w*ThreadPool".r
+        .findFirstIn(Files.readString(f.toPath)).nonEmpty)
+      .map(_.getPath)
+    assert(sites === Seq("src/main/scala/graft/core/Overlap.scala"))
+  }
+
   // a runtime conf is set in the factory (or on a SessionFactory.child);
   // only tool mains configure the session they built
   test("library code sets no session conf and reads no tuning knob") {
@@ -174,6 +184,27 @@ class SessionFactorySpec extends AnyFunSuite {
       DeltaLakeDml.delete(s, delta, "id = 1"))
     assert(DeltaLakeRead.snapshot(s, delta).count() === 1L)
 
+    // DML pins its matched rows per attempt: the blocks go on every path
+    def released(what: String)(op: => Unit): Unit = {
+      val pinned = s.sparkContext.getPersistentRDDs.keySet.toSet
+      unchanged(what)(op)
+      val left = s.sparkContext.getPersistentRDDs.keySet.toSet -- pinned
+      assert(left.isEmpty, s"$what left RDDs $left persisted")
+    }
+    val cdf = dir("graft_inv_cdf")
+    DeltaLakeWrite.append(Seq((1L, "a"), (2L, "b"), (2L, "b2"), (3L, "c"))
+      .toDF("id", "v"), cdf,
+      tableConfig = Map("delta.enableChangeDataFeed" -> "true"))
+    released("CDF DeltaLakeDml.upsert on a duplicated target key")(
+      assert(DeltaLakeDml.upsert(s, cdf, Seq((2L, "U"), (9L, "N"))
+        .toDF("id", "v"), Seq("id")).rowsDeleted === 2L))
+    released("DeltaLakeDml.update")(assert(DeltaLakeDml.update(s, cdf,
+      "id = 1", Map("v" -> "'x'")).rowsInserted === 1L))
+    released("DeltaLakeDml.upsert failing its duplicate-key check")(
+      intercept[IllegalArgumentException](DeltaLakeDml.upsert(s, cdf,
+        Seq((5L, "a"), (5L, "b")).toDF("id", "v"), Seq("id"))))
+    assert(DeltaLakeRead.snapshot(s, cdf).count() === 5L)
+
     unchanged("VersionedTableIO.append")(new VersionedTableIO(
       dir("graft_inv_v")).append(Seq((1L, "a")).toDF("id", "v"), "t"))
 
@@ -213,8 +244,13 @@ class SessionFactorySpec extends AnyFunSuite {
     import org.apache.spark.sql.types.{LongType, StringType}
     def dir(p: String) = Files.createTempDirectory(p).toString
     val started = Seq.newBuilder[(String, Seq[ForkLog.Start])]
-    def noProcess(what: String)(op: => Unit): Unit =
+    // a session an earlier test dropped forks `rm -rf` of its artifact
+    // directory once the GC reaches it: collect such sessions and let
+    // their cleanup run before each op is recorded, not during it
+    def noProcess(what: String)(op: => Unit): Unit = {
+      System.gc(); Thread.sleep(300)
       started += what -> ForkLog.during(op)
+    }
     val io = new ParquetTableIO(dir("graft_fork_t"))
     val rows = Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "v")
     noProcess("ParquetTableIO.append")(io.append(rows, "t"))
