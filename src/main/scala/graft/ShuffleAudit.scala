@@ -288,14 +288,15 @@ object ShuffleAudit {
     val rows = audited.map { case (name, tables) =>
       val fn = SparkEntry.queries(name)
       val src = tables.map(tableBytes(sfDir, _)).sum
-      // Per-query isolation: the curation pipelines leave eagerly
-      // local-checkpointed blocks pinned in the block manager until a
-      // driver GC lets the ContextCleaner release them (unpersist()
-      // does not touch them — lineage is truncated, so the blocks are
-      // not evictable). Without this, whichever query FOLLOWS q100's
-      // multi-GB churn pays its memory pressure: q117 measured 149 s
-      // directly after q100 vs 31 s with distance, q110 183 s vs clean.
-      // Byte counts are unaffected either way; walls need isolation.
+      // Per-query isolation: a returned frame owns the local-checkpoint
+      // blocks it reads (graft.core.Ckpt, result-owned) until a driver
+      // GC lets the ContextCleaner release them — lineage is truncated,
+      // so the blocks are not evictable. Before the operators released
+      // their intermediates at scope end, whichever query FOLLOWED
+      // q100's multi-GB churn paid its memory pressure: q117 measured
+      // 149 s directly after q100 vs 31 s with distance, q110 183 s vs
+      // clean. Byte counts are unaffected either way; walls need
+      // isolation.
       spark.catalog.clearCache()
       System.gc()
       Thread.sleep(500)

@@ -20,7 +20,7 @@ import scala.collection.concurrent.TrieMap
   *  - [[GraftExtensions]]: `rolling_hash` in SQL and the AsOfJoin
   *    planner strategy, injected once at construction.
   *  - `spark.sql.optimizer.canChangeCachedPlanOutputPartitioning=true`:
-  *    applies AQE to plans under `.persist()`. Spark 4 defaults it to
+  *    applies AQE to cached plans. Spark 4 defaults it to
   *    false only for cached-partitioning stability, which nothing here
   *    relies on: [[graft.ingest.SurrogateId.attachDistributed]] (behind
   *    Delta identity columns) is the one partition-sensitive op, and it

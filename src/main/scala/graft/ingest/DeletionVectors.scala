@@ -4,14 +4,17 @@ import java.io.File
 import java.nio.{ByteBuffer, ByteOrder}
 import java.nio.file.Files
 import java.util.zip.CRC32
+import org.roaringbitmap.RoaringBitmap
 
 /** Delta Lake deletion-vector decoding, built from the PUBLIC protocol
   * documents only: the Delta transaction-log protocol
   * (https://github.com/delta-io/delta/blob/master/PROTOCOL.md, §
   * "Deletion Vectors") and the Roaring bitmap portable serialization
   * spec (https://github.com/RoaringBitmap/RoaringFormatSpec). No
-  * delta or RoaringBitmap jars — the harness classpath has neither,
-  * so both formats are implemented here from their specs.
+  * delta jar: the `.bin` framing, Z85 and the 64-bit bitmap array are
+  * implemented here from the protocol; each 32-bit bitmap in that
+  * array is `org.roaringbitmap.RoaringBitmap`'s portable form (the
+  * RoaringBitmap jar ships with Spark).
   *
   * A deletion vector marks row POSITIONS of one data file as deleted;
   * an `add` action carrying one means "this parquet file, minus these
@@ -102,117 +105,12 @@ object DeletionVectors {
     java.util.Arrays.copyOfRange(out, 0, outLen)
   }
 
-  // ---- Roaring portable ---------------------------------------------------
+  // ---- Roaring bitmap array ----------------------------------------------
 
-  private val SerialCookie = 12346 // with run containers
-  private val SerialCookieNoRun = 12347
-  private val NoOffsetThreshold = 4
   private val BitmapArrayMagic = 1681511377
 
-  /** Parse ONE standard 32-bit Roaring bitmap (portable spec) from
-    * `buf` (positioned at its cookie), returning its values as
-    * unsigned-32 sorted longs. Handles array, bitmap, and run
-    * containers and both cookies. */
-  def readRoaring32(buf: ByteBuffer): Array[Long] = {
-    buf.order(ByteOrder.LITTLE_ENDIAN)
-    val cookie = buf.getInt()
-    val (nContainers, runFlags) =
-      if ((cookie & 0xffff) == SerialCookie) {
-        val n = (cookie >>> 16) + 1
-        val flags = new Array[Byte]((n + 7) / 8)
-        buf.get(flags)
-        (n, Some(flags))
-      } else if (cookie == SerialCookieNoRun) {
-        (buf.getInt(), None)
-      } else {
-        throw new IllegalArgumentException(
-          s"not a portable Roaring bitmap: cookie $cookie")
-      }
-    def isRun(i: Int): Boolean =
-      runFlags.exists(f => (f(i / 8) & (1 << (i % 8))) != 0)
-    val keys = new Array[Int](nContainers)
-    val cards = new Array[Int](nContainers)
-    var i = 0
-    while (i < nContainers) {
-      keys(i) = buf.getShort() & 0xffff
-      cards(i) = (buf.getShort() & 0xffff) + 1
-      i += 1
-    }
-    // the offset header is redundant for a sequential parse — skip it
-    if (runFlags.isEmpty || nContainers >= NoOffsetThreshold)
-      buf.position(buf.position() + 4 * nContainers)
-    val out = Array.newBuilder[Long]
-    i = 0
-    while (i < nContainers) {
-      val hi = keys(i).toLong << 16
-      if (isRun(i)) {
-        val nRuns = buf.getShort() & 0xffff
-        var r = 0
-        while (r < nRuns) {
-          val start = buf.getShort() & 0xffff
-          val len = buf.getShort() & 0xffff
-          var v = start
-          while (v <= start + len) { out += (hi | v); v += 1 }
-          r += 1
-        }
-      } else if (cards(i) <= 4096) {
-        var c = 0
-        while (c < cards(i)) { out += (hi | (buf.getShort() & 0xffff)); c += 1 }
-      } else {
-        var w = 0
-        while (w < 1024) {
-          var word = buf.getLong()
-          val base = hi | (w.toLong << 6)
-          while (word != 0L) {
-            out += (base | java.lang.Long.numberOfTrailingZeros(word))
-            word &= word - 1
-          }
-          w += 1
-        }
-      }
-      i += 1
-    }
-    out.result()
-  }
-
-  /** Serialize sorted unsigned-32 values as ONE portable Roaring
-    * bitmap (no-run cookie; array or bitmap containers by
-    * cardinality) — used by the writer side of specs and by any
-    * future DV-emitting operation. */
-  def writeRoaring32(values: Array[Long]): Array[Byte] = {
-    val byKey = values.map { v =>
-      require(v >= 0 && v <= 0xffffffffL, s"not a u32: $v")
-      v
-    }.groupBy(v => (v >>> 16).toInt).toSeq.sortBy(_._1)
-    val n = byKey.size
-    val bodyLens = byKey.map { case (_, vs) =>
-      if (vs.length <= 4096) 2 * vs.length else 8192 }
-    val size = 8 + 4 * n + 4 * n + bodyLens.sum
-    val buf = ByteBuffer.allocate(size).order(ByteOrder.LITTLE_ENDIAN)
-    buf.putInt(SerialCookieNoRun)
-    buf.putInt(n)
-    byKey.foreach { case (k, vs) =>
-      buf.putShort(k.toShort); buf.putShort((vs.length - 1).toShort)
-    }
-    var off = 8 + 4 * n + 4 * n
-    bodyLens.foreach { len => buf.putInt(off); off += len }
-    byKey.foreach { case (_, vs) =>
-      if (vs.length <= 4096)
-        vs.sorted.foreach(v => buf.putShort((v & 0xffff).toShort))
-      else {
-        val words = new Array[Long](1024)
-        vs.foreach { v =>
-          val low = (v & 0xffff).toInt
-          words(low >>> 6) |= (1L << (low & 63))
-        }
-        words.foreach(buf.putLong)
-      }
-    }
-    buf.array()
-  }
-
   /** Serialize 64-bit positions as RoaringBitmapArray data (magic +
-    * count + per-high-word bitmaps). */
+    * count + per-high-word portable Roaring bitmaps). */
   def serialize(positions: Array[Long]): Array[Byte] = {
     val byHigh = positions.map { p =>
       require(p >= 0, s"negative row position $p"); p
@@ -221,14 +119,14 @@ object DeletionVectors {
     // one bitmap per high word 0..max — gaps serialize as EMPTY
     // bitmaps (the array is indexed positionally, not keyed)
     val parts = (0L until nBitmaps).map { i =>
-      writeRoaring32(byHigh.getOrElse(i, Array.empty[Long])
-        .map(_ & 0xffffffffL).sorted)
+      RoaringBitmap.bitmapOf(
+        byHigh.getOrElse(i, Array.empty[Long]).map(_.toInt): _*)
     }
-    val buf = ByteBuffer.allocate(12 + parts.map(_.length).sum)
+    val buf = ByteBuffer.allocate(12 + parts.map(_.serializedSizeInBytes).sum)
       .order(ByteOrder.LITTLE_ENDIAN)
     buf.putInt(BitmapArrayMagic)
     buf.putLong(nBitmaps)
-    parts.foreach(buf.put)
+    parts.foreach(_.serialize(buf))
     buf.array()
   }
 
@@ -239,9 +137,17 @@ object DeletionVectors {
     require(magic == BitmapArrayMagic,
       s"bad RoaringBitmapArray magic $magic (want $BitmapArrayMagic)")
     val n = buf.getLong()
-    (0L until n).flatMap { i =>
-      readRoaring32(buf).map(v => (i << 32) | v)
-    }.toArray
+    val out = Array.newBuilder[Long]
+    var i = 0L
+    while (i < n) {
+      val bm = new RoaringBitmap()
+      bm.deserialize(buf)
+      buf.position(buf.position() + bm.serializedSizeInBytes)
+      val high = i << 32
+      bm.forEach((v: Int) => { out += (high | (v & 0xffffffffL)); () })
+      i += 1
+    }
+    out.result()
   }
 
   // ---- descriptor + file IO -----------------------------------------------

@@ -1,8 +1,8 @@
 package graft.ingest
 
+import graft.core.Ckpt
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.PlanBridge
 import java.io.File
 import java.nio.file.Files
 import scala.collection.mutable
@@ -95,9 +95,10 @@ object DeltaLakeDml {
   /** DELETE FROM table WHERE `condition` (a SQL boolean over the
     * table's logical columns). */
   def delete(spark: SparkSession, tablePath: String,
-      condition: String): DmlResult = withRetries { pin =>
+      condition: String): DmlResult = withRetries { pins =>
     val st = gated(spark, tablePath)
-    val matched = pin(DeltaLakeRead.snapshotMeta(spark, tablePath, st)
+    val matched = pins.checkpoint(
+      DeltaLakeRead.snapshotMeta(spark, tablePath, st)
       .filter(expr(condition))
       .select((if (cdfOn(st)) logicalCols(st) else Nil) ++ provenance: _*))
     mutate(spark, tablePath, st, matched, None,
@@ -116,21 +117,25 @@ object DeltaLakeDml {
   /** UPDATE table SET col = sqlExpr, ... WHERE `condition`. Matched
     * rows are DV-deleted and re-landed in new files with the
     * assignments applied (expressions see the OLD row, standard
-    * UPDATE semantics). */
+    * UPDATE semantics). With CDF on, the rewritten rows are pinned
+    * too: the replacement files and the postimages read ONE evaluation
+    * of the SET expressions, so a nondeterministic one (`uuid()`) lands
+    * the same value in the table and in the change feed. */
   def update(spark: SparkSession, tablePath: String, condition: String,
-      set: Map[String, String]): DmlResult = withRetries { pin =>
+      set: Map[String, String]): DmlResult = withRetries { pins =>
     val st = gated(spark, tablePath)
     val unknown = set.keySet -- st.schema.fieldNames.toSet
     require(unknown.isEmpty,
       s"SET targets ${unknown.mkString(", ")} not in the table schema")
-    val matched = pin(DeltaLakeRead.snapshotMeta(spark, tablePath, st)
+    val matched = pins.checkpoint(
+      DeltaLakeRead.snapshotMeta(spark, tablePath, st)
       .filter(expr(condition)).select(logicalCols(st) ++ provenance: _*))
     val rewritten = matched.select(st.schema.fields.toSeq.map { f =>
       set.get(f.name)
         .map(e => expr(e).cast(DeltaLakeRead.stripType(f.dataType))
           .as(f.name))
         .getOrElse(col(DeltaLakeRead.quoted(f.name)))
-    }: _*)
+    }: _*).transform(r => if (cdfOn(st)) pins.checkpoint(r) else r)
     mutate(spark, tablePath, st, matched, Some(rewritten),
       matched.select(logicalCols(st): _*)
         .withColumn(DeltaLakeCdf.ChangeTypeCol, lit("update_preimage"))
@@ -149,7 +154,7 @@ object DeltaLakeDml {
     * matching n target rows DV-deletes n rows and lands n postimage
     * copies — the table's row count is preserved, not shrunk. */
   def upsert(spark: SparkSession, tablePath: String, source: DataFrame,
-      keys: Seq[String]): DmlResult = withRetries { pin =>
+      keys: Seq[String]): DmlResult = withRetries { pins =>
     val st = gated(spark, tablePath)
     require(keys.nonEmpty, "upsert needs at least one key column")
     val logical = st.schema.fieldNames.toSet
@@ -160,7 +165,7 @@ object DeltaLakeDml {
     val keyCols = keys.map(c => col(DeltaLakeRead.quoted(c)))
     // the source feeds the match join and the per-key aggregate: pinned,
     // so the caller's frame runs once
-    val src = pin(source.select(st.schema.fields.toSeq.map(f =>
+    val src = pins.checkpoint(source.select(st.schema.fields.toSeq.map(f =>
       col(DeltaLakeRead.quoted(f.name))
         .cast(DeltaLakeRead.stripType(f.dataType)).as(f.name)): _*))
     // the target projects to (keys, __file, __pos) BEFORE the match
@@ -168,7 +173,8 @@ object DeltaLakeDml {
     // broadcast this join shuffles the target, and the sf10 audit
     // measured the full-width snapshot paying 15x the bytes the match
     // needs
-    val matched = pin(DeltaLakeRead.snapshotMeta(spark, tablePath, st)
+    val matched = pins.checkpoint(
+      DeltaLakeRead.snapshotMeta(spark, tablePath, st)
       .select((if (cdfOn(st)) logicalCols(st) else keyCols) ++
         provenance: _*)
       .join(src.select(keyCols: _*), keys, "left_semi"))
@@ -187,7 +193,7 @@ object DeltaLakeDml {
       .groupBy(keyCols: _*)
       .agg(sum(col("__sn")).as("__sn"), sum(col("__tn")).as("__tn"))
       .toDF(keys.indices.map(i => s"__k$i") ++ Seq("__sn", "__tn"): _*)
-    val counted = pin(src.join(perKey, keys.indices.map(i =>
+    val counted = pins.checkpoint(src.join(perKey, keys.indices.map(i =>
       src(DeltaLakeRead.quoted(keys(i))) <=> perKey(s"__k$i")).reduce(_ && _))
       .select(logicalCols(st) ++ Seq(col("__sn"), col("__tn")): _*))
     // checked BEFORE mutate() lands any side effect
@@ -288,6 +294,17 @@ object DeltaLakeDml {
       return DmlResult(st.version, 0L, 0L, 0)
     def drop(files: Seq[DeltaLakeWrite.Staged]): Unit =
       files.foreach(s => Files.deleteIfExists(new File(root, s.rel).toPath))
+    // an attempt that fails after the DV step takes back everything it
+    // physically landed: its staged files and its new DV bins
+    def rollback(files: Seq[DeltaLakeWrite.Staged]): Unit = {
+      drop(files)
+      written.foreach { case (_, dvPath, dvOff, dvSize, dvCard, _) =>
+        if (dvPath.nonEmpty)
+          Files.deleteIfExists(DeletionVectors.resolvePath(
+            root, DeletionVectors.Descriptor("u",
+              dvPath, Some(dvOff), dvSize, dvCard)).toPath)
+      }
+    }
     val physParts = st.partitionColumns.map(c =>
       DeltaLakeRead.physFieldName(st.schema(c)))
     def stage(df: DataFrame, passthrough: Seq[String], prefix: String) =
@@ -308,9 +325,9 @@ object DeltaLakeDml {
       Try(Await.result(fCdc, Duration.Inf)))
     // a failed stage fails the mutation once both have ended (the
     // overlapped one reads this attempt's pins), taking back what the
-    // other landed
+    // other landed and the DV bins
     stages.collectFirst { case Failure(e) =>
-      drop(stages.flatMap(_.toOption).flatten); throw e
+      rollback(stages.flatMap(_.toOption).flatten); throw e
     }
     val (staged, cdcStaged) = (stages(0).get, stages(1).get)
     // footer row counts of the just-staged files — the source plan
@@ -397,14 +414,7 @@ object DeltaLakeDml {
       val f = new File(log, f"$slot%020d.json")
       if (DeltaLakeWrite.benignCommit(f)) slot += 1
       else {
-        // roll back everything this attempt physically landed
-        drop(staged ++ cdcStaged)
-        written.foreach { case (_, dvPath, dvOff, dvSize, dvCard, _) =>
-          if (dvPath.nonEmpty)
-            Files.deleteIfExists(DeletionVectors.resolvePath(
-              root, DeletionVectors.Descriptor("u",
-                dvPath, Some(dvOff), dvSize, dvCard)).toPath)
-        }
+        rollback(staged ++ cdcStaged)
         throw new CommitRaceException(tablePath, st.version, slot)
       }
     }
@@ -441,36 +451,23 @@ object DeltaLakeDml {
     * optimistic concurrency by full re-execution, the same pattern
     * [[VersionedTableIO]]'s concurrent-DV-delete path proves out.
     * Exhaustion aborts loudly: sustained conflict means the caller is
-    * racing mutators faster than they can serialize. Each attempt pins
-    * through its own [[Pins]], released when the attempt ends, however
-    * it ends. */
-  private def withRetries(op: Pins => DmlResult): DmlResult = {
+    * racing mutators faster than they can serialize. Each attempt is
+    * one [[Ckpt.scoped]] scope: the frames it computes once and reads
+    * many times (matched rows, upsert source and per-key counts, CDF
+    * postimages) are eager checkpoints released when the attempt ends,
+    * however it ends. */
+  private def withRetries(op: Ckpt.Pins => DmlResult): DmlResult = {
     var tries = 0
     while (true) {
-      val pins = new Pins
-      try return op(pins)
+      try return Ckpt.scoped(op)
       catch {
         case e: CommitRaceException =>
           tries += 1
           if (tries > MaxRetries) throw new IllegalStateException(
             s"giving up after $MaxRetries recomputes: ${e.getMessage} " +
             "— serialize the racing mutators", e)
-      } finally pins.release()
+      }
     }
     throw new IllegalStateException("unreachable")
-  }
-
-  /** The frames one mutation attempt computes once and reads many
-    * times: `apply` materializes a frame eagerly (one job,
-    * `localCheckpoint`) and every later plan reads its blocks instead
-    * of re-running it; `release` drops the blocks, which would
-    * otherwise stay until the driver's GC reaches the RDD. */
-  private final class Pins {
-    private var pinned = List.empty[DataFrame]
-    def apply(df: DataFrame): DataFrame = {
-      pinned ::= df.localCheckpoint()
-      pinned.head
-    }
-    def release(): Unit = pinned.foreach(PlanBridge.release)
   }
 }

@@ -68,8 +68,8 @@ object DeltaLakeWrite {
     var tries = 0
     while (true) {
       try {
-        return appendOnce(df, tablePath, partitionBy,
-          checkpointInterval, tableConfig)
+        return graft.core.Ckpt.scoped(appendOnce(df, tablePath,
+          partitionBy, checkpointInterval, tableConfig, _))
       } catch {
         case e: IdentityHwmRace =>
           tries += 1
@@ -205,7 +205,7 @@ object DeltaLakeWrite {
 
   private def appendOnce(df: DataFrame, tablePath: String,
       partitionBy: Seq[String], checkpointInterval: Int,
-      tableConfig: Map[String, String]): Long = {
+      tableConfig: Map[String, String], pins: graft.core.Ckpt.Pins): Long = {
     val root = new File(tablePath)
     val log = new File(root, "_delta_log")
     log.mkdirs()
@@ -230,7 +230,7 @@ object DeltaLakeWrite {
       require(st.partitionColumns == partitionBy,
         s"table is partitioned by ${st.partitionColumns.mkString(",")}, " +
         s"append requested ${partitionBy.mkString(",")}")
-      val (enforced, pending) = enforceColumnObligations(df, st.schema)
+      val (enforced, pending) = enforceColumnObligations(df, st.schema, pins)
       pendingIdentity = pending
       // obligations may have ADDED generated/identity columns —
       // reorder to the table schema before the drift check
@@ -248,7 +248,7 @@ object DeltaLakeWrite {
     } else {
       require(partitionBy.forall(df.columns.contains),
         s"partition columns ${partitionBy.mkString(",")} missing from df")
-      val (enforced, pending) = enforceColumnObligations(df, df.schema)
+      val (enforced, pending) = enforceColumnObligations(df, df.schema, pins)
       pendingIdentity = pending
       physDf = enforced.select(df.schema.fields.toSeq.map(f =>
         col(DeltaLakeRead.quoted(f.name))): _*)
@@ -364,11 +364,13 @@ object DeltaLakeWrite {
     *    distributed-offset pass as [[SurrogateId.attachDistributed]];
     *    an explicit column requires `allowExplicitInsert`.
     * Returns the (possibly augmented) frame plus the identity
-    * allocations whose high watermark the commit must advance.
-    * Validation scans are one pushed-down `LIMIT 1` probe each. */
+    * allocations whose high watermark the commit must advance; an
+    * identity allocation's frame reads a cache in `pins`, the append
+    * attempt's scope. Validation scans are one pushed-down `LIMIT 1`
+    * probe each. */
   private[ingest] def enforceColumnObligations(df0: DataFrame,
-      schema: org.apache.spark.sql.types.StructType)
-      : (DataFrame, Seq[PendingIdentity]) = {
+      schema: org.apache.spark.sql.types.StructType,
+      pins: graft.core.Ckpt.Pins): (DataFrame, Seq[PendingIdentity]) = {
     import org.apache.spark.sql.functions.{expr, lit, not}
     var df = df0
     val pending = scala.collection.mutable.ArrayBuffer[PendingIdentity]()
@@ -407,7 +409,7 @@ object DeltaLakeWrite {
           val nextStart =
             if (m.contains(IdentityHwmKey)) m.getLong(IdentityHwmKey) + step
             else start
-          val seqd = SurrogateId.attachDistributed(df, "__identity_seq")
+          val seqd = SurrogateId.attachDistributed(df, "__identity_seq", pins)
           df = seqd.withColumn(f.name,
             (lit(nextStart) + (col("__identity_seq") - 1L) * lit(step))
               .cast(DeltaLakeRead.stripType(f.dataType)))

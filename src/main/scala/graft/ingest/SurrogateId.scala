@@ -1,5 +1,6 @@
 package graft.ingest
 
+import graft.core.Ckpt
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -28,14 +29,16 @@ object SurrogateId {
     df.withColumn(idCol, row_number().over(w).cast("long") + lit(startAfter))
   }
 
-  def attachDistributed(df: DataFrame, idCol: String,
+  /** The returned frame reads an RDD cached in `pins`: consume it
+    * before that scope ends. */
+  def attachDistributed(df: DataFrame, idCol: String, pins: Ckpt.Pins,
       startAfter: Long = 0L): DataFrame = {
     val spark = df.sparkSession
     val schema = df.schema
-    // persist before the two passes (count + assign): without it the
+    // cached before the two passes (count + assign): without it the
     // upstream plan runs twice, and a nondeterministic upstream could
     // yield different partition sizes between passes → broken offsets
-    val rdd = df.rdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val rdd = pins.cache(df.rdd)
     val counts = rdd.mapPartitionsWithIndex { case (i, it) =>
       Iterator((i, it.size.toLong))
     }.collect().sortBy(_._1)

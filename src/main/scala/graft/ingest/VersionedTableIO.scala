@@ -975,40 +975,46 @@ final class VersionedTableIO private[graft] (root: String,
     requireWritable(table)
     var attempts = 0
     while (attempts < 10) {
-      val baseVersion = latestVersion(table)
-      val m = manifest(table, baseVersion)
-      val matched = scan(spark, table, m.copy(dvDirs = Nil))
-        .withColumn(DvPath, relFilePath)
-        .withColumn(DvPos, col("_metadata.row_index"))
-        .transform(df =>
-          if (Option(m.dvDirs).forall(_.isEmpty)) df
-          else dvSubtract(spark, table, m, df))
-        .filter(predicate)
-        .localCheckpoint()
-      val nDv = matched.count()
-      if (nDv == 0L) return
-      val dvRel = s"data/${java.util.UUID.randomUUID()}"
-      val dvAbs = s"${tableDir(table)}/$dvRel"
-      matched.select(col(DvPath), col(DvPos)).write.parquet(dvAbs)
-      val updated = assignments.foldLeft(matched.drop(DvPath, DvPos)) {
-        case (df, (c, e)) => df.withColumn(c, e)
-      }
-      val (rel, st) =
-        try writeDataDir(updated, table)
-        catch { case e: Throwable => // constraint violation: no orphan
-          discardDataDir(table, dvRel); throw e
+      // one scope per attempt: a lost race releases its matched set
+      val done = graft.core.Ckpt.scoped { pins =>
+        val baseVersion = latestVersion(table)
+        val m = manifest(table, baseVersion)
+        val matched = pins.checkpoint(scan(spark, table, m.copy(dvDirs = Nil))
+          .withColumn(DvPath, relFilePath)
+          .withColumn(DvPos, col("_metadata.row_index"))
+          .transform(df =>
+            if (Option(m.dvDirs).forall(_.isEmpty)) df
+            else dvSubtract(spark, table, m, df))
+          .filter(predicate))
+        val nDv = matched.count()
+        nDv == 0L || {
+          val dvRel = s"data/${java.util.UUID.randomUUID()}"
+          val dvAbs = s"${tableDir(table)}/$dvRel"
+          matched.select(col(DvPath), col(DvPos)).write.parquet(dvAbs)
+          val updated = assignments.foldLeft(matched.drop(DvPath, DvPos)) {
+            case (df, (c, e)) => df.withColumn(c, e)
+          }
+          val (rel, st) =
+            try writeDataDir(updated, table)
+            catch { case e: Throwable => // constraint violation: no orphan
+              discardDataDir(table, dvRel); throw e
+            }
+          val committed = commitLoopEx(table, "update",
+            dv = base => carryDv(base) :+ dvRel) { base =>
+            if (base.map(_.version).contains(baseVersion))
+              Some((m.dataDirs :+ rel,
+                Map(rel -> st, dvRel -> countStatOf(nDv)),
+                Map.empty[String, String]))
+            else None // head moved: matched set is stale, recompute
+          }
+          if (committed.isEmpty) {
+            discardDataDir(table, dvRel)
+            discardDataDir(table, rel)
+          }
+          committed.isDefined
         }
-      val committed = commitLoopEx(table, "update",
-        dv = base => carryDv(base) :+ dvRel) { base =>
-        if (base.map(_.version).contains(baseVersion))
-          Some((m.dataDirs :+ rel,
-            Map(rel -> st, dvRel -> countStatOf(nDv)),
-            Map.empty[String, String]))
-        else None // head moved: matched set is stale, recompute
       }
-      if (committed.isDefined) return
-      discardDataDir(table, dvRel)
-      discardDataDir(table, rel)
+      if (done) return
       attempts += 1
     }
     throw new IllegalStateException(

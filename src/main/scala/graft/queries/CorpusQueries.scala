@@ -903,16 +903,20 @@ object CorpusQueries {
     val corpus = docs.filter(col("doc_id") % 5 <= 2)
     val batch1 = docs.filter(col("doc_id") % 5 === 3)
     val batch2 = docs.filter(col("doc_id") % 5 === 4)
-    val index1 = Dedup.signatureIndex(corpus, "doc_id", "text", indexParams)
-      .localCheckpoint(true)
-    val b1Sigs = Dedup.signatures(batch1, "doc_id", "text", indexParams)
-      .localCheckpoint(true)
-    val kept1 = Dedup
-      .dedupAgainstIndexSigs(batch1.select("doc_id"), b1Sigs, index1,
-        "doc_id", 0.5, indexParams)
-      .filter(col("kept") === 1).select("doc_id")
-    val index2 = index1.unionByName(b1Sigs.join(kept1, Seq("doc_id")))
-      .localCheckpoint(true)
+    // index₁ and batch₁'s sigs are read only until index₂ is
+    // materialized: scope-owned; index₂ goes with the returned frame
+    val index2 = graft.core.Ckpt.scoped { pins =>
+      val index1 = pins.checkpoint(
+        Dedup.signatureIndex(corpus, "doc_id", "text", indexParams))
+      val b1Sigs = pins.checkpoint(
+        Dedup.signatures(batch1, "doc_id", "text", indexParams))
+      val kept1 = Dedup
+        .dedupAgainstIndexSigs(batch1.select("doc_id"), b1Sigs, index1,
+          "doc_id", 0.5, indexParams)
+        .filter(col("kept") === 1).select("doc_id")
+      graft.core.Ckpt.local(
+        index1.unionByName(b1Sigs.join(kept1, Seq("doc_id"))))
+    }
     Dedup.dedupAgainstIndex(batch2, index2, "doc_id", "text", 0.5, indexParams)
   }
 

@@ -1,6 +1,6 @@
 package graft.scale
 
-import graft.core.Ckpt.CkptOps
+import graft.core.Ckpt
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
@@ -208,24 +208,23 @@ object Bpe {
     // the PREVIOUS round's cached frame (persist is lazy — the next
     // round's argmax materializes it), so no plan re-execution either:
     // lineage depth grows by one cached layer per round, and the
-    // previous layer unpersists once its successor is materialized.
+    // previous layer is released once its successor is materialized.
     // Old shape: localCheckpoint(best) + isEmpty + broadcast-crossJoin
     // + localCheckpoint(vocab) ≈ 4 jobs/round; this shape: 1 job/round
     // + 1 trailing cache-fill (measured q188 44 → ~11 jobs).
-    var vocab = wordFreq(df, textCol).persist()
-    var prev: DataFrame = null
     val learned =
       scala.collection.mutable.ArrayBuffer[(Int, String, String, String, Long)]()
-    // try/finally (r14 ADVICE): the exhaustion throw below must not
-    // leak the live cached layers; unpersist is idempotent, so the
-    // success path just falls through to the same cleanup. (The final
-    // vocab layer was never materialized — unpersist is metadata-only.)
-    try {
+    // scoped: the exhaustion throw below releases the live layers too
+    // (the final vocab layer was never materialized — its release is
+    // metadata-only)
+    Ckpt.scoped { pins =>
+      var vocab = pins.cache(wordFreq(df, textCol))
+      var prev: DataFrame = null
       for (k <- 1 to merges) {
         val top = pairCounts(vocab)
           .orderBy(col("pc").desc, col("l").asc, col("r").asc).limit(1)
           .collect()
-        if (prev != null) { prev.unpersist(); prev = null }
+        if (prev != null) { pins.release(prev); prev = null }
         if (top.isEmpty)
           throw new IllegalArgumentException(
             s"BPE training exhausted the corpus at step $k of $merges: no " +
@@ -235,23 +234,19 @@ object Bpe {
           (top(0).getString(0), top(0).getString(1), top(0).getLong(2))
         learned += ((k, l, r, l + r, pc))
         prev = vocab
-        vocab = vocab
-          .select(applyMerge(col("w"), lit(l), lit(r)).as("w"), col("cnt"))
-          .persist()
+        vocab = pins.cache(vocab
+          .select(applyMerge(col("w"), lit(l), lit(r)).as("w"), col("cnt")))
         // periodic lineage truncation (r14 ADVICE): each layer is one
         // projection over the previous CACHED layer, so an evicted
         // cache mid-training would recompute through every earlier
-        // (already-unpersisted) layer; one checkpoint job per 16
+        // (already-released) layer; one checkpoint job per 16
         // rounds bounds that recompute depth
         if (k % 16 == 0 && k < merges) {
-          val truncated = vocab.graftCheckpoint(true)
-          vocab.unpersist()
+          val truncated = pins.checkpoint(vocab)
+          pins.release(vocab)
           vocab = truncated
         }
       }
-    } finally {
-      if (prev != null) prev.unpersist()
-      vocab.unpersist()
     }
     spark.createDataFrame(learned.toSeq)
       .toDF("step", "l", "r", "merged", "pair_count")
@@ -286,24 +281,24 @@ object Bpe {
     require(merges >= 1, "need at least one merge step")
     require(batch >= 1, "batch must be positive")
     val spark = df.sparkSession
-    // persist-chained like [[train]]: one job per round (the candidate
+    // cache-chained like [[train]]: one job per round (the candidate
     // collect), the previous vocab layer released once its successor
     // is materialized by that collect
-    var vocab = wordFreq(df, textCol).persist()
-    var prev: DataFrame = null
     val learned =
       scala.collection.mutable.ArrayBuffer[(Int, String, String, String, Long)]()
-    // try/finally + periodic truncation: the [[train]] cleanup/lineage
+    // scoped + periodic truncation: the [[train]] release/lineage
     // discipline (see there), one round ≈ `batch` merges here
     var rounds = 0
-    try {
+    Ckpt.scoped { pins =>
+      var vocab = pins.cache(wordFreq(df, textCol))
+      var prev: DataFrame = null
       while (learned.size < merges) {
         val want = math.min(batch, merges - learned.size)
         val top = pairCounts(vocab)
           .orderBy(col("pc").desc, col("l").asc, col("r").asc)
           .limit(math.max(4 * want, 32))
           .collect()
-        if (prev != null) { prev.unpersist(); prev = null }
+        if (prev != null) { pins.release(prev); prev = null }
         if (top.isEmpty)
           throw new IllegalArgumentException(
             s"BPE training exhausted the corpus at step ${learned.size + 1} " +
@@ -325,20 +320,17 @@ object Bpe {
           learned += ((learned.size + 1, l, r, l + r, pc))
         }
         prev = vocab
-        vocab = vocab.select(
+        vocab = pins.cache(vocab.select(
           accepted.foldLeft(col("w")) { case (w, (l, r, _)) =>
             applyMerge(w, lit(l), lit(r)) }.as("w"),
-          col("cnt")).persist()
+          col("cnt")))
         rounds += 1
         if (rounds % 16 == 0 && learned.size < merges) {
-          val truncated = vocab.graftCheckpoint(true)
-          vocab.unpersist()
+          val truncated = pins.checkpoint(vocab)
+          pins.release(vocab)
           vocab = truncated
         }
       }
-    } finally {
-      if (prev != null) prev.unpersist()
-      vocab.unpersist()
     }
     spark.createDataFrame(learned.toSeq)
       .toDF("step", "l", "r", "merged", "pair_count")
@@ -449,35 +441,27 @@ object Bpe {
     * INTEGER, so its value is order-free; `coverage` is one division
     * of exact longs, rounded once. */
   def vocabCoverage(docs: DataFrame, textCol: String, merges: DataFrame,
-      nMerges: Int, topV: Int = 256, dict: Boolean = true,
-      eager: Boolean = true): DataFrame = {
+      nMerges: Int, topV: Int = 256,
+      dict: Boolean = true): DataFrame = Ckpt.scoped { pins =>
     require(topV >= 1, "need at least one vocab slot")
-    val counts = withSubwords(docs, textCol, merges, nMerges, dict)
+    val counts = pins.cache(withSubwords(docs, textCol, merges, nMerges, dict)
       .select(explode(col("__flat")).as("subword"))
-      .groupBy(col("subword")).agg(count(lit(1)).as("cnt"))
-      .persist()
+      .groupBy(col("subword")).agg(count(lit(1)).as("cnt")))
     val total = counts.agg(sum(col("cnt")).as("__total"))
     val top = counts.orderBy(col("cnt").desc, col("subword").asc)
       .limit(topV)
     val w = org.apache.spark.sql.expressions.Window
       .orderBy(col("cnt").desc, col("subword").asc)
-    val result = top
+    // the ≤topV-row result is checkpointed so the vocab-sized cache
+    // goes with the scope: repeated coverage calls in one session never
+    // accumulate cached vocab frames
+    Ckpt.local(top
       .withColumn("rank", row_number().over(w))
       .withColumn("cum_cnt",
         sum(col("cnt")).over(w.rowsBetween(Long.MinValue, 0)))
       .crossJoin(broadcast(total))
       .select(col("rank"), col("subword"), col("cnt"), col("cum_cnt"),
         round(col("cum_cnt").cast("double") /
-          col("__total").cast("double"), 6).as("coverage"))
-    // eager (default): localCheckpoint the ≤topV-row result, then
-    // release the vocab-sized cache — repeated coverage calls in one
-    // session must not accumulate cached vocab frames. eager = false
-    // returns the lazy plan (for plan inspection / composition); the
-    // CALLER then owns the persisted counts' lifetime.
-    if (eager) {
-      val out = result.graftCheckpoint()
-      counts.unpersist()
-      out
-    } else result
+          col("__total").cast("double"), 6).as("coverage")))
   }
 }

@@ -1,6 +1,6 @@
 package graft.scale
 
-import graft.core.Ckpt.CkptOps
+import graft.core.Ckpt
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -125,41 +125,44 @@ object Clusters {
           .toSeq.toDF("node", "cluster_id")
       }
     }
-    val edges = pairs
-      .select(col(aCol).cast("long").as("src"), col(bCol).cast("long").as("dst"))
-      .unionByName(pairs.select(col(bCol).cast("long").as("src"),
-        col(aCol).cast("long").as("dst")))
-      .distinct()
-      .persist()
+    Ckpt.scoped { pins =>
+      val edges = pins.cache(pairs
+        .select(col(aCol).cast("long").as("src"), col(bCol).cast("long").as("dst"))
+        .unionByName(pairs.select(col(bCol).cast("long").as("src"),
+          col(aCol).cast("long").as("dst")))
+        .distinct())
 
-    var labels = edges.select(col("src").as("node")).distinct()
-      .withColumn("label", col("node"))
-      .graftCheckpoint()
+      // each round's labels are pinned until the next round's are
+      // materialized; the last round's go with the returned frame
+      var pinned = pins.checkpoint(edges.select(col("src").as("node"))
+        .distinct().withColumn("label", col("node")))
+      def labels = pinned.drop("__prev")
 
-    var converged = false
-    var iter = 0
-    while (!converged && iter < maxIter) {
-      val neighborLabels = edges
-        .join(labels.withColumnRenamed("node", "dst"), Seq("dst"))
-        .select(col("src").as("node"), col("label"))
-      // fused convergence check: the self row carries the previous
-      // label through the same groupBy (no second join per round)
-      val updated = labels.withColumn("__self", lit(true))
-        .unionByName(neighborLabels.withColumn("__self", lit(false)))
-        .groupBy("node")
-        .agg(min("label").as("label"),
-          min(when(col("__self"), col("label"))).as("__prev"))
-        .graftCheckpoint()
-      converged = updated.filter(col("label") =!= col("__prev")).isEmpty
-      labels = updated.drop("__prev")
-      iter += 1
+      var converged = false
+      var iter = 0
+      while (!converged && iter < maxIter) {
+        val neighborLabels = edges
+          .join(labels.withColumnRenamed("node", "dst"), Seq("dst"))
+          .select(col("src").as("node"), col("label"))
+        // fused convergence check: the self row carries the previous
+        // label through the same groupBy (no second join per round)
+        val updated = pins.checkpoint(labels.withColumn("__self", lit(true))
+          .unionByName(neighborLabels.withColumn("__self", lit(false)))
+          .groupBy("node")
+          .agg(min("label").as("label"),
+            min(when(col("__self"), col("label"))).as("__prev")))
+        converged = updated.filter(col("label") =!= col("__prev")).isEmpty
+        pins.release(pinned)
+        pinned = updated
+        iter += 1
+      }
+      if (!converged) throw new IllegalStateException(
+        s"connectedComponents did not converge in $maxIter rounds — " +
+          "a component's diameter exceeds maxIter; raise it (labels would " +
+          "be silently wrong otherwise)")
+      pins.keep(pinned)
+      labels.withColumnRenamed("label", "cluster_id")
     }
-    edges.unpersist()
-    if (!converged) throw new IllegalStateException(
-      s"connectedComponents did not converge in $maxIter rounds — " +
-        "a component's diameter exceeds maxIter; raise it (labels would " +
-        "be silently wrong otherwise)")
-    labels.withColumnRenamed("label", "cluster_id")
   }
 
   /** INCREMENTAL component maintenance — fold a new batch of pairs

@@ -1,6 +1,6 @@
 package graft.scale
 
-import graft.core.Ckpt.CkptOps
+import graft.core.Ckpt
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -29,42 +29,36 @@ object Curation {
   def curate(docs0: DataFrame, idCol: String, textCol: String,
       minQuality: Double, minJaccard: Double,
       p: Dedup.MinHashParams,
-      maxBucket: Option[Int] = None): DataFrame = {
+      maxBucket: Option[Int] = None): DataFrame = Ckpt.scoped { pins =>
     // guide §2.5: a few-file corpus caps the quality/tokenize battery
     // at the file count — widen to the cores first (no-op at
     // production file counts; see graft.core.Par)
     val docs = graft.core.Par.widen(docs0, col(idCol))
     val quality = docs
       .filter(TextStats.qualityScore(col(textCol)) >= minQuality)
-    // persist: the quality regex battery + dedup window feed THREE
+    // cached: the quality regex battery + dedup window feed THREE
     // consumers (signature explode, cluster assignment, split) — without
     // this the whole upstream recomputes per consumer
-    val exact = Dedup.exactDedup(quality, idCol, textCol)
-      .drop("fingerprint")
-      .persist()
+    val exact = pins.cache(Dedup.exactDedup(quality, idCol, textCol)
+      .drop("fingerprint"))
     val (ndups, releaseShingles) = Dedup
       .nearDuplicatesReleasable(exact, idCol, textCol, minJaccard, p,
         maxBucket)
     // materialize the (tiny) pair list ONCE: the undirected-edge union
     // and every label-propagation round would otherwise re-run the
     // whole candidate+verify chain per consumer
-    val pairs = ndups.select("id_a", "id_b").persist()
-    pairs.count()
-    releaseShingles()
-    val clustered = Clusters.dedupClusters(exact, pairs, idCol)
+    val pairs = pins.cache(ndups.select("id_a", "id_b"))
+    try pairs.count() finally releaseShingles()
+    val clustered = pins.adopt(Clusters.dedupClusters(exact, pairs, idCol))
     // cluster_id is the component's min id, so the representative is
     // the row whose own id equals it (singletons represent themselves)
     val reps = clustered.filter(col(idCol) === col("cluster_id"))
-    val out = Sampling.deterministicSplit(reps, textCol)
-      .select(col(idCol), col("cluster_id"), col("split"))
-      // eager localCheckpoint: materializes the (per-representative,
-      // i.e. small) result and truncates its lineage off `exact`, so the
-      // cache can be released HERE — repeated curate() calls in one
-      // session no longer accumulate cached shingle/dedup data
-      .graftCheckpoint(true)
-    exact.unpersist()
-    pairs.unpersist()
-    out
+    // eager: materializes the (per-representative, i.e. small) result
+    // and truncates its lineage off `exact`, so the scope's caches go
+    // HERE — repeated curate() calls in one session never accumulate
+    // cached shingle/dedup data
+    Ckpt.local(Sampling.deterministicSplit(reps, textCol)
+      .select(col(idCol), col("cluster_id"), col("split")))
   }
 
   /** The full training-data flagship: every corpus pass the library
@@ -89,9 +83,11 @@ object Curation {
     * Scale: the same shuffle discipline as the component operators —
     * fingerprint/band/hash keys only, the benchmark gram set and
     * k×dim centroids are the only broadcasts, per-row semantic work
-    * capped by semMaxNeighbors, packing windows are per-shard. Caches:
-    * `exact` and the pair list back the multi-consumer stages and are
-    * released before return (same discipline as [[curate]]). */
+    * capped by semMaxNeighbors, packing windows are per-shard. Working
+    * sets (the embedding quantization, `exact`, the pair list, the
+    * representatives, the unit frame, the k-means and component
+    * checkpoints) are scope-owned and released before return; the
+    * returned frame reads only the reassembled-text checkpoint. */
   def curateV2(corpus: DataFrame, bench: DataFrame, embeddings: DataFrame,
       idCol: String, textCol: String, langCol: String,
       minQuality: Double, minJaccard: Double, p: Dedup.MinHashParams,
@@ -99,44 +95,40 @@ object Curation {
       unitTokens: Int, decontamN: Int,
       tau: Double, budgetDocs: Long,
       packBudget: Long, packShards: Int, seed: Long = 42L,
-      maxBucket: Option[Int] = None): DataFrame = {
+      maxBucket: Option[Int] = None): DataFrame = Ckpt.scoped { pins =>
     // The embedding quantization branch is INDEPENDENT of the whole
     // quality/dedup/cluster chain until the semantic join consumes it —
     // materialize it concurrently (guide §2.6: overlapped jobs
     // back-fill the chain's barrier tails) instead of paying its scan
     // serially inside the k-means stage. Narrow frame (id + int8
-    // vector), unpersisted before return.
-    val embQ = embeddings
+    // vector).
+    val embQ = pins.cache(embeddings
       .select(col("vec_id"), col("embedding").cast("array<double>").as("__e"))
       .withColumn("__mx", array_max(transform(col("__e"), (x: Column) => abs(x))))
       .filter(col("__mx") > 0)
-      .select(col("vec_id"), Similarity.quantizeInt8(col("__e")).as("__q"))
-      .persist()
+      .select(col("vec_id"), Similarity.quantizeInt8(col("__e")).as("__q")))
     val embFill = scala.concurrent.Future(embQ.count())(graft.core.Overlap.ec)
-    try {
 
     // 1-3. quality gate, exact dedup, MinHash near-dup clusters
     // (corpus widened first — guide §2.5, see graft.core.Par)
     val quality = graft.core.Par.widen(corpus, col(idCol))
       .filter(TextStats.qualityScore(col(textCol)) >= minQuality)
-    val exact = Dedup.exactDedup(quality, idCol, textCol)
-      .drop("fingerprint")
-      .persist()
+    val exact = pins.cache(Dedup.exactDedup(quality, idCol, textCol)
+      .drop("fingerprint"))
     val (ndups, releaseShingles) = Dedup
       .nearDuplicatesReleasable(exact, idCol, textCol, minJaccard, p,
         maxBucket)
-    val pairs = ndups.select("id_a", "id_b").persist()
-    pairs.count()
-    releaseShingles()
-    val reps = Clusters.dedupClusters(exact, pairs, idCol)
-      .filter(col(idCol) === col("cluster_id"))
-      .select(col(idCol), col("cluster_id"), col(langCol), col(textCol))
-      // representatives are small (post-dedup); materializing here
-      // cuts the cluster pipeline off the FOUR downstream consumers
-      // (semantic join, unit dedup, decontamination, reassembly)
-      .graftCheckpoint(true)
-    exact.unpersist()
-    pairs.unpersist()
+    val pairs = pins.cache(ndups.select("id_a", "id_b"))
+    try pairs.count() finally releaseShingles()
+    // representatives are small (post-dedup); materializing here
+    // cuts the cluster pipeline off the FOUR downstream consumers
+    // (semantic join, unit dedup, decontamination, reassembly)
+    val reps = pins.checkpoint(
+      pins.adopt(Clusters.dedupClusters(exact, pairs, idCol))
+        .filter(col(idCol) === col("cluster_id"))
+        .select(col(idCol), col("cluster_id"), col(langCol), col(textCol)))
+    pins.release(exact)
+    pins.release(pairs)
 
     // 4. semantic dedup over reps that HAVE a usable embedding (zero
     // vectors and unembedded docs pass through — no cosine, no verdict)
@@ -145,8 +137,8 @@ object Curation {
     val withEmb = reps.select(col(idCol))
       .join(embQ, col(idCol) === col("vec_id"))
       .select(col(idCol), col("__q"))
-    val marks = KMeans.semanticDups(withEmb, idCol, "__q",
-      semK, semIters, semMinCosine, semMaxNeighbors)
+    val marks = pins.adopt(KMeans.semanticDups(withEmb, idCol, "__q",
+      semK, semIters, semMinCosine, semMaxNeighbors))
     val afterSem = reps
       .join(marks.select(col(idCol), col("is_dup")), Seq(idCol), "left")
       .filter(coalesce(col("is_dup"), lit(0)) === 0)
@@ -156,18 +148,19 @@ object Curation {
     // survivors reassembled; fully-duplicated docs (n_kept = 0) drop.
     // Fused ws_chunks: the composed split → filter → per-chunk
     // slice/join chain ran as two interpreted HOF projections
-    val units = afterSem
+    val units = pins.cache(afterSem // feeds unitDedup AND the reassembly join
       .select(col(idCol), col("cluster_id"), col(langCol),
         graft.functions.TextFns.wsChunksCol(col(textCol), unitTokens)
-          .as("__units"))
-      .persist() // feeds unitDedup AND the reassembly join
-    val reassembled = units.select(col(idCol), col("cluster_id"), col(langCol))
-      .join(Dedup.unitDedup(units.select(col(idCol), col("__units")),
-          idCol, "__units")
-        .filter(col("n_kept") > 0).select(col(idCol), col("dedup_text")),
-        Seq(idCol))
-      .graftCheckpoint(true) // feeds decontamination AND the final join
-    units.unpersist()
+          .as("__units")))
+    // result-owned: feeds decontamination AND the final join, and is
+    // all of the pipeline the returned frame reads
+    val reassembled = Ckpt.local(
+      units.select(col(idCol), col("cluster_id"), col(langCol))
+        .join(Dedup.unitDedup(units.select(col(idCol), col("__units")),
+            idCol, "__units")
+          .filter(col("n_kept") > 0).select(col(idCol), col("dedup_text")),
+          Seq(idCol)))
+    pins.release(units)
 
     // 6. benchmark decontamination on the text that would be trained on
     val cleanIds = Decontaminate.overlap(
@@ -187,10 +180,6 @@ object Curation {
       .select(col(idCol), col("cluster_id"), col(langCol), col("n_toks"),
         col("shard"), col("shard_pos"), col("pack_id"), col("pack_pos"),
         col("pack_fill"))
-    // embQ's only consumer (the k-means working-set checkpoint) is
-    // materialized by the reassembled checkpoint above; released even
-    // on a throw so repeated calls never accumulate cached vectors
-    } finally embQ.unpersist()
   }
 
   /** The ROUND-9 pipeline composed end to end — the four new operator
@@ -242,14 +231,14 @@ object Curation {
       .classifierScoreAll(docs, idCol, textCol, buckets)
       .filter(col("keep") === 1)
       .select(col(idCol), col(textCol), col("w_mean"))
-      .graftCheckpoint(eager = false)
+      .transform(Ckpt.local(_, eager = false))
     val cls = kept.select(col(idCol), col("w_mean"))
     // 2. span excision WITHIN the kept corpus (losers are decided
     // against surviving docs only — a rejected doc cannot "win" a span)
     val excised = Spans
       .exciseRepeatedSpans(kept.select(col(idCol), col(textCol)),
         idCol, textCol, spanN, spanStride)
-      .graftCheckpoint(eager = false)
+      .transform(Ckpt.local(_, eager = false))
     // 3. budget selection on tokens that remain after excision — all
     // frames here are narrow (id, double, long) rows
     val scored = excised

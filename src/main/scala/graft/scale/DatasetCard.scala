@@ -1,5 +1,7 @@
 package graft.scale
 
+import graft.core.Ckpt
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -30,7 +32,7 @@ object DatasetCard {
   // (tight spread) — the card's batteries are cheap per byte after the
   // r14/r15 fusions and the raw-text exchange dominates
   def card(df: DataFrame, idCol: String, textCol: String,
-      langCol: String): DataFrame = {
+      langCol: String): DataFrame = Ckpt.scoped { pins =>
     // ONE narrow projection scan shared by the volume aggregate and
     // the quantile kernel (round-14: the volumes and quantiles
     // passes each re-ran the tokenize/regex battery over the corpus;
@@ -40,12 +42,12 @@ object DatasetCard {
     // MEMORY_AND_DISK LRU budget the curation pipelines spend. The
     // novelty pass keeps its own scan: it explodes the shingle stream
     // and shares nothing but the tokenizer with the volume battery.
-    val narrow = df.select(
+    val narrow = pins.cache(df.select(
       size(TextStats.tokens(col(textCol))).cast("long").as("__ntok"),
       when(TextStats.qualityScore(col(textCol)) >= 0.5, 1L)
         .otherwise(0L).as("__keepf"),
       Dedup.fingerprint(col(textCol)).as("__fpv"),
-      col(langCol).as("__langv")).persist()
+      col(langCol).as("__langv")))
 
     val volumes = narrow.agg(
       count(lit(1)).as("__n"), sum(col("__ntok")).as("__tok"),
@@ -68,9 +70,11 @@ object DatasetCard {
         .as("__m"))
       .select(col("__m.metric"), col("__m.value"))
 
-    val quantiles = Quantiles.exactQuantiles(
+    // the quantile kernel's lazy checkpoint is consumed by the result
+    // checkpoint below: adopted, so it goes with the scope too
+    val quantiles = pins.adopt(Quantiles.exactQuantiles(
       narrow.select(col("__ntok").cast("double").as("__v")), "__v",
-      Seq(0.5, 0.95))
+      Seq(0.5, 0.95)))
       .select(concat(lit("p"), round(col("p") * 100).cast("int"),
         lit("_tokens")).as("metric"), col("value"))
 
@@ -81,14 +85,10 @@ object DatasetCard {
         round(col("__nn").cast("double") /
           greatest(col("__ns"), lit(1L)).cast("double"), 6).as("value"))
 
-    // materialize the handful of metric rows, then release the narrow
-    // cache HERE (r14 ADVICE: card() returned a lazy frame over the
-    // persisted projection with no cleanup hook, so every call pinned
-    // a session-lifetime cache entry) — the Curation discipline:
-    // checkpoint the small result, unpersist the working set
-    val out = graft.core.Ckpt.local(
-      volumes.unionByName(quantiles).unionByName(novelty))
-    narrow.unpersist()
-    out
+    // materialize the handful of metric rows, then the scope releases
+    // the narrow cache (r14 ADVICE: card() returned a lazy frame over
+    // the persisted projection with no cleanup hook, so every call
+    // pinned a session-lifetime cache entry)
+    Ckpt.local(volumes.unionByName(quantiles).unionByName(novelty))
   }
 }

@@ -435,12 +435,16 @@ object Dedup {
       minJaccard: Double,
       p: MinHashParams = MinHashParams(),
       maxBucket: Option[Int] = None): DataFrame =
-    nearDuplicatesReleasable(df, idCol, textCol, minJaccard, p, maxBucket)._1
+    nearDuplicatesPinned(df, idCol, textCol, minJaccard, p, maxBucket,
+      Ckpt.local(_, eager = false))
 
   /** [[nearDuplicates]] plus a release handle for the internal caches:
     * composed pipelines (Curation) call it after materializing the
     * pair list so repeated passes don't accumulate cached shingle
-    * sets. Callers of the plain form own the session-lifetime cache.
+    * sets. The plain form pins the same two frames as result-owned
+    * lazy local checkpoints ([[Ckpt]]): its pairs are returned lazily,
+    * so nothing could release a cache entry, while the checkpoints'
+    * blocks go with the frame.
     *
     * Verification never shuffles the corpus (the round-8 sf10 audit
     * lesson): a plain `cands ⋈ sets ⋈ sets` id-join plans as
@@ -452,9 +456,10 @@ object Dedup {
     * filtered to ids that appear in some candidate pair, so the
     * verify joins touch only candidate docs' sets — shuffle linear in
     * the PAIR count, independent of corpus size. Same rows out, so the
-    * q42/q100/q130 oracles are untouched. `cands` is persisted so the
+    * q42/q100/q130 oracles are untouched. `cands` is cached so the
     * LSH chain (signature agg + band self-join) runs once, not once
-    * per verify-join side; the release handle drops both caches.
+    * per verify-join side; the release handle ends the scope that
+    * owns both caches.
     *
     * The candidate-id semi join carries an EXPLICIT broadcast hint
     * ONLY when `maxBucket` is set: the hint overrides the size
@@ -469,17 +474,23 @@ object Dedup {
   def nearDuplicatesReleasable(df: DataFrame, idCol: String,
       textCol: String, minJaccard: Double,
       p: MinHashParams = MinHashParams(),
-      maxBucket: Option[Int] = None): (DataFrame, () => Unit) = {
-    // tokenize once: the cached set frame feeds both the signature
-    // explode and the verification joins (3 regex passes -> 1). The
-    // persist backs the returned (lazy) frame — callers running many
-    // nearDuplicates passes in one session should checkpoint/unpersist
-    // results between passes. Widened first (guide §2.5, Par.widen):
-    // the tokenize+shingle battery otherwise runs at the file count.
-    val sets = graft.core.Par.widen(df, col(idCol))
+      maxBucket: Option[Int] = None): (DataFrame, () => Unit) =
+    Ckpt.releasable(pins => nearDuplicatesPinned(df, idCol, textCol,
+      minJaccard, p, maxBucket, pins.cache(_: DataFrame)))
+
+  /** The near-dup chain with its two multi-consumer frames (the
+    * shingle sets, the candidate pairs) pinned by `pin`. */
+  private def nearDuplicatesPinned(df: DataFrame, idCol: String,
+      textCol: String, minJaccard: Double, p: MinHashParams,
+      maxBucket: Option[Int], pin: DataFrame => DataFrame): DataFrame = {
+    // tokenize once: the pinned set frame feeds both the signature
+    // explode and the verification joins (3 regex passes -> 1).
+    // Widened first (guide §2.5, Par.widen): the tokenize+shingle
+    // battery otherwise runs at the file count.
+    val sets = pin(graft.core.Par.widen(df, col(idCol))
       .select(col(idCol).as("__id"), TextStats.tokens(col(textCol)).as("__toks"))
       .select(col("__id"),
-        shinglesFromTokens(col("__toks"), p.shingle).as("__set")).persist()
+        shinglesFromTokens(col("__toks"), p.shingle).as("__set")))
     // Eager fill (round-14): the LSH chain fans `sets` into SEVERAL
     // independent AQE stages (the band self-join's two sides, the two
     // verify joins, the candidate-id semi filter) that materialize
@@ -491,13 +502,13 @@ object Dedup {
     sets.count()
     val sigs = signaturesFromSets(
       sets.select(col("__id").as(idCol), col("__set")), idCol, p)
-    val cands = candidatePairs(sigs, idCol, p, maxBucket).persist()
+    val cands = pin(candidatePairs(sigs, idCol, p, maxBucket))
     val candIds = cands
       .select(explode(array(col("id_a"), col("id_b"))).as("__id")).distinct()
     val candIdsHinted =
       if (maxBucket.isDefined) broadcast(candIds) else candIds
     val setsC = sets.join(candIdsHinted, Seq("__id"), "left_semi")
-    val result = cands
+    cands
       .join(setsC.withColumnRenamed("__id", "id_a")
         .withColumnRenamed("__set", "set_a"), Seq("id_a"))
       .join(setsC.withColumnRenamed("__id", "id_b")
@@ -505,7 +516,6 @@ object Dedup {
       .withColumn("jaccard", round(jaccard(col("set_a"), col("set_b")), 4))
       .filter(col("jaccard") >= minJaccard)
       .select("id_a", "id_b", "jaccard")
-    (result, () => { sets.unpersist(); cands.unpersist(); () })
   }
 
   /** Hot-bucket-guard recall measurement — the tuning companion to

@@ -1,6 +1,6 @@
 package graft.scale
 
-import graft.core.Ckpt.CkptOps
+import graft.core.Ckpt
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
@@ -53,18 +53,16 @@ object KMeans {
     // plus the seed scan re-reads it, so without this the upstream plan
     // (source scan + joins + quantization) re-runs iters+1 times — the
     // standard iterative-ML input cache, with lineage truncated so the
-    // per-round plans stay flat. Eager checkpoint blocks are freed by
-    // the ContextCleaner once the result is dereferenced (no
-    // session-lifetime cache entry to leak — same discipline as
-    // Curation's rep materialization).
+    // per-round plans stay flat. Result-owned ([[Ckpt]]): the returned
+    // frame reads it, so its blocks go with that frame (a caller that
+    // consumes the frame eagerly adopts it instead — curateV2).
     // Widened BEFORE the checkpoint (guide §2.5, Par.widen): the
     // embeddings source is few-file, so without this every Lloyd
     // round's cosine battery would run on the checkpoint's file-count
     // partitions, not the cores.
-    val v = graft.core.Par.widen(
+    val v = Ckpt.local(graft.core.Par.widen(
       df.select(col(idCol).cast("long").as("__id"),
-        col(vecCol).cast("array<double>").as("__q")), col("__id"))
-      .graftCheckpoint(true)
+        col(vecCol).cast("array<double>").as("__q")), col("__id")))
 
     // seed centroids: first k vectors by id (bounded collect, k rows)
     var centroids: Seq[(Long, Seq[Double])] = v.orderBy(col("__id"))

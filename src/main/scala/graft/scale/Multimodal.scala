@@ -1,6 +1,6 @@
 package graft.scale
 
-import graft.core.Ckpt.CkptOps
+import graft.core.Ckpt
 
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
@@ -301,12 +301,11 @@ object Multimodal {
     // the guarded fingerprint frame feeds THREE consumers (both join
     // sides + the size agg); localCheckpoint at this narrow point (two
     // longs per row) or the blob decode re-runs once per consumer
-    val guarded = h.withColumn("__n",
+    val guarded = Ckpt.local(h.withColumn("__n",
       count(lit(1)).over(org.apache.spark.sql.expressions.Window
         .partitionBy(col("chunk_hash"))))
       .filter(col("__n") <= chunkCap)
-      .drop("__n")
-      .graftCheckpoint()
+      .drop("__n"))
     val sizes = guarded.groupBy("media_id")
       .agg(count(lit(1)).as("sz"))
     val a = guarded.select(col("chunk_hash"),

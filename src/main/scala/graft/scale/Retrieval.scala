@@ -1,6 +1,6 @@
 package graft.scale
 
-import graft.core.Ckpt.CkptOps
+import graft.core.Ckpt
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
@@ -122,7 +122,7 @@ object Retrieval {
     val (in, st) = statsRows match {
       case None =>
         // lazy: the stats job materializes the blocks the scores read
-        val m = base.graftCheckpoint(false)
+        val m = Ckpt.local(base, eager = false)
         (m, corpusStats(m, slots))
       case Some(rows) => (base, foldStats(rows, slots))
     }

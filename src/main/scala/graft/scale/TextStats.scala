@@ -1,7 +1,5 @@
 package graft.scale
 
-import graft.core.Ckpt.CkptOps
-
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
@@ -292,31 +290,24 @@ object TextStats {
     * Consumers rank by per-term drift, which is what an alert keys on
     * anyway. */
   def tokenDrift(df: org.apache.spark.sql.DataFrame, textCol: String,
-      isA: Column, topK: Int = 64, eager: Boolean = true)
-      : org.apache.spark.sql.DataFrame = {
-    // persisted: the totals branch reads the cached vocab-sized frame
-    // instead of re-scanning the corpus (pre-materialization plans
-    // print the counts subtree once per consumer — the q181 note);
-    // outer explode + null filter per the generate-hygiene rule.
-    // eager (default): the ≤topK-row result is localCheckpointed so
-    // the vocab-sized cache can be released HERE — repeated drift
-    // calls in one session must not accumulate cached vocab frames.
-    // eager = false returns the lazy plan (for plan inspection); the
-    // CALLER then owns the persisted counts' lifetime.
-    val counts = df
-      .select(isA.as("__a"),
-        explode_outer(tokens(col(textCol))).as("__t"))
-      .filter(col("__t").isNotNull)
-      .groupBy(col("__t")).agg(
-        sum(when(col("__a"), 1L).otherwise(0L)).as("cnt_a"),
-        sum(when(!col("__a"), 1L).otherwise(0L)).as("cnt_b"))
-      .persist()
-    if (eager) {
-      val result = driftFromCounts(counts, topK).graftCheckpoint()
-      counts.unpersist()
-      result
-    } else driftFromCounts(counts, topK)
-  }
+      isA: Column, topK: Int = 64): org.apache.spark.sql.DataFrame =
+    graft.core.Ckpt.scoped { pins =>
+      // cached: the totals branch reads the cached vocab-sized frame
+      // instead of re-scanning the corpus (pre-materialization plans
+      // print the counts subtree once per consumer — the q181 note);
+      // outer explode + null filter per the generate-hygiene rule.
+      // The ≤topK-row result is checkpointed so the vocab-sized cache
+      // goes with the scope: repeated drift calls in one session never
+      // accumulate cached vocab frames.
+      val counts = pins.cache(df
+        .select(isA.as("__a"),
+          explode_outer(tokens(col(textCol))).as("__t"))
+        .filter(col("__t").isNotNull)
+        .groupBy(col("__t")).agg(
+          sum(when(col("__a"), 1L).otherwise(0L)).as("cnt_a"),
+          sum(when(!col("__a"), 1L).otherwise(0L)).as("cnt_b")))
+      graft.core.Ckpt.local(driftFromCounts(counts, topK))
+    }
 
   /** The comparison half of [[tokenDrift]], over an already-built
     * (term `__t`, cnt_a, cnt_b) count table — the entry point for

@@ -1,5 +1,6 @@
 package graft.stream
 
+import graft.core.Ckpt
 import graft.ingest.VersionedTableIO
 import graft.scale.Dedup
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -47,18 +48,17 @@ object StreamDedup {
       .schema(schema)
     reader.parquet(sourceDir).writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
+        // one scope per micro-batch: its pins go when the batch ends
+        if (!batch.isEmpty) Ckpt.scoped { pins =>
           // sigs computed ONCE per batch (the expensive stage): shared
           // by the verdicts and the index append
-          val bSigs = Dedup.signatures(batch, idCol, textCol, p)
-            .localCheckpoint(true)
+          val bSigs = pins.checkpoint(Dedup.signatures(batch, idCol, textCol, p))
           // eager: pin the verdicts to the index BEFORE this batch's
           // sigs land (io.read resolves the manifest at call time, but
           // materializing removes any recompute-after-append hazard)
-          val marks = Dedup.dedupAgainstIndexSigs(batch.select(col(idCol)),
-              bSigs, io.read(spark, indexTable), idCol, minAgree, p,
-              maxBucket)
-            .localCheckpoint(true)
+          val marks = pins.checkpoint(Dedup.dedupAgainstIndexSigs(
+            batch.select(col(idCol)), bSigs, io.read(spark, indexTable),
+            idCol, minAgree, p, maxBucket))
           io.appendIdempotent(marks, marksTable, s"$writerId#marks", batchId)
           io.appendIdempotent(
             bSigs.join(marks.filter(col("kept") === 1).select(idCol),

@@ -1,5 +1,6 @@
 package graft.tools
 
+import graft.core.Ckpt
 import org.apache.spark.sql.functions._
 
 /** Round-14 measurement tool: serial-CPU microbench of the text
@@ -12,11 +13,10 @@ object ExprBench {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val spark = graft.core.SessionFactory.build("local[1]", Some(1))
     spark.sparkContext.setLogLevel("ERROR")
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-      .select("doc_id", "text").localCheckpoint(true)
-    val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-      .localCheckpoint(true)
+    val docs = Ckpt.local(spark.read.parquet(s"$sfDir/documents.parquet")
+      .select("doc_id", "text"))
+    val emb = Ckpt.local(spark.read.parquet(s"$sfDir/embeddings.parquet")
+      .select(col("vec_id"), col("embedding").cast("array<double>").as("v")))
     println(s"docs=${docs.count()} emb=${emb.count()}")
     def t(label: String)(df: org.apache.spark.sql.DataFrame): Unit = {
       df.write.format("noop").mode("overwrite").save() // warm

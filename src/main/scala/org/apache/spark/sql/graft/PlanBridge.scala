@@ -1,5 +1,6 @@
 package org.apache.spark.sql.graft
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic.Dataset
@@ -15,7 +16,10 @@ object PlanBridge {
   /** `RDD.unpersist` of a frame `localCheckpoint` made, less its warning
     * that the dropped blocks cannot be recomputed. */
   def release(df: DataFrame): Unit = df.queryExecution.analyzed match {
-    case r: LogicalRDD =>
-      r.rdd.sparkContext.unpersistRDD(r.rdd.id, blocking = false)
+    case r: LogicalRDD => releaseRdd(r.rdd)
   }
+
+  /** [[release]] of the checkpointed RDD itself. */
+  def releaseRdd(rdd: RDD[_]): Unit =
+    rdd.sparkContext.unpersistRDD(rdd.id, blocking = false)
 }

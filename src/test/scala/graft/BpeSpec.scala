@@ -4,6 +4,7 @@ import graft.core.Tables
 import graft.scale.Bpe
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 class BpeSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
@@ -143,12 +144,14 @@ class BpeSpec extends AnyFunSuite {
     assert(cums.toSeq === cnts.scanLeft(0L)(_ + _).tail.toSeq,
       "cum_cnt must be the exact integer prefix sum")
     assert(rows.last.getDouble(4) <= 1.0 && rows.last.getDouble(4) > 0.0)
-    // plan inspected on the eager = false (lazy) form — the default
-    // eager path localCheckpoints the tiny result to release the
-    // vocab-sized cache, which hides the plan behind a Scan ExistingRDD
-    val plan = Bpe.vocabCoverage(docs, "text", merges, 2, topV = 16,
-      eager = false).queryExecution.executedPlan.toString
-    spark.sharedState.cacheManager.clearCache()
+    // plan inspected in plan-evidence mode: the tiny result is
+    // checkpointed to release the vocab-sized cache, which otherwise
+    // hides the plan behind a Scan ExistingRDD
+    val pe = SparkTestSession.planEvidence
+    val plan = Bpe.vocabCoverage(
+      Tables.load(pe, SparkTestSession.sfDir, "documents"), "text",
+      pe.createDataFrame(merges.collect().toSeq.asJava, merges.schema), 2,
+      topV = 16).queryExecution.executedPlan.toString
     assert(plan.contains("TakeOrderedAndProject"),
       s"the vocab must never be globally sorted:\n$plan")
   }

@@ -138,8 +138,10 @@ class CoreSpec extends AnyFunSuite {
 
   test("distributed surrogate ids: unique, dense, row count preserved") {
     val df = spark.range(1000).toDF("x").repartition(7)
-    val out = SurrogateId.attachDistributed(df, "id", startAfter = 10L)
-    val ids = out.select("id").as[Long].collect().sorted
+    val ids = graft.core.Ckpt.scoped { pins =>
+      SurrogateId.attachDistributed(df, "id", pins, startAfter = 10L)
+        .select("id").as[Long].collect().sorted
+    }
     assert(ids.length === 1000)
     assert(ids.head === 11L && ids.last === 1010L)
     assert(ids.distinct.length === 1000)

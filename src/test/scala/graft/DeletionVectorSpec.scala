@@ -13,7 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** [[DeletionVectors]] codec round-trips plus [[DeltaLakeRead]]
   * against hand-built DV-bearing `_delta_log` trees — the public
   * protocol (PROTOCOL.md "Deletion Vectors") and the Roaring portable
-  * spec, no delta or RoaringBitmap jars on either side. */
+  * spec, no delta jar on either side. */
 class DeletionVectorSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   import spark.implicits._
@@ -44,19 +44,22 @@ class DeletionVectorSpec extends AnyFunSuite {
       "(cardinality > 4096), and multiple keys") {
     val small = Array[Long](0L, 1L, 100L, 65535L)
     val dense = (0L until 5000L).map(_ * 2).toArray // one key, >4096
-    val multi = Array[Long](5L, 70000L, 70001L, 1000000L)
+    val multi = Array[Long](5L, 70000L, 70001L, 1000000L, 0xffffffffL)
     for (vs <- Seq(small, dense, multi)) {
-      val bytes = DeletionVectors.writeRoaring32(vs)
-      val got = DeletionVectors.readRoaring32(
-        ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN))
+      val got = DeletionVectors.deserialize(DeletionVectors.serialize(vs))
       assert(got.toSeq === vs.sorted.toSeq)
     }
   }
 
   test("roaring32 parses RUN containers (hand-crafted run cookie)") {
-    // one run container, key 0, values 10..14 and 20..21
+    // one 32-bit bitmap in a one-entry bitmap array: one run container,
+    // key 0, values 10..14 and 20..21
     val buf = ByteBuffer.allocate(64).order(ByteOrder.LITTLE_ENDIAN)
-    buf.putInt(12346 | (0 << 16)) // SERIAL_COOKIE, containerCount-1 = 0
+    buf.putInt(1681511377)        // RoaringBitmapArray magic
+    buf.putLong(1L)               // one bitmap (high word 0)
+    // SERIAL_COOKIE is 12347 (12346 is the no-run cookie, followed by
+    // a 4-byte container count); the high 16 bits: containerCount-1 = 0
+    buf.putInt(12347 | (0 << 16))
     buf.put(1.toByte)             // run flag bitset: container 0 is run
     buf.putShort(0)               // key
     buf.putShort((7 - 1).toShort) // cardinality-1
@@ -64,8 +67,8 @@ class DeletionVectorSpec extends AnyFunSuite {
     buf.putShort(2)               // nRuns
     buf.putShort(10); buf.putShort(4) // 10..14
     buf.putShort(20); buf.putShort(1) // 20..21
-    buf.flip()
-    val got = DeletionVectors.readRoaring32(buf)
+    val got = DeletionVectors.deserialize(
+      java.util.Arrays.copyOf(buf.array(), buf.position()))
     assert(got.toSeq === Seq(10L, 11L, 12L, 13L, 14L, 20L, 21L))
   }
 

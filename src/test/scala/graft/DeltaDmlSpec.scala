@@ -661,10 +661,63 @@ class DeltaDmlSpec extends AnyFunSuite {
       s"""{"add":{"path":"part-0.parquet","partitionValues":{},"size":${data.length},"modificationTime":0,"dataChange":true,"deletionVector":{"storageType":"u","pathOrInlineDv":"${dv.pathOrInlineDv}","offset":${dv.offset.get},"sizeInBytes":${dv.sizeInBytes},"cardinality":${dv.cardinality}}}}""")
       .mkString("\n").getBytes("UTF-8"))
     assert(ids(t) === Seq(0L))
+    val pinned = persisted
     val e = intercept[Exception](DeltaLakeDml.delete(spark, t, "id = 0"))
     assert(e.getMessage.contains("fewer than the 8 its deletion vector"),
       e.getMessage)
+    assert(persisted -- pinned === Set.empty, "the refusal left pins")
     assert(DeltaLakeRead.latestVersion(t) === 0L)
     assert(ids(t) === Seq(0L))
+  }
+
+  private def persisted: Set[Int] =
+    spark.sparkContext.getPersistentRDDs.keySet.toSet
+
+  private def dvBins(t: String): Set[String] =
+    new java.io.File(t).listFiles().map(_.getName)
+      .filter(_.endsWith(".bin")).toSet
+
+  test("UPDATE on a CDF table evaluates SET once: the table's new " +
+      "values are the change feed's postimages") {
+    import graft.ingest.DeltaLakeCdf
+    import org.apache.spark.sql.functions.col
+    val t = newTable()
+    DeltaLakeWrite.append((0L until 20L).map(i => (i, s"v$i"))
+      .toDF("id", "v").repartition(2), t,
+      tableConfig = Map("delta.enableChangeDataFeed" -> "true"))
+    val pinned = persisted
+    // uuid() draws from a seed fixed at analysis, so two evaluations of
+    // one plan agree; the timestamp is fixed per query, so the two
+    // stagings of an unpinned rewrite would not
+    val r = DeltaLakeDml.update(spark, t, "id % 2 = 0",
+      Map("v" -> "concat(uuid(), ' ', cast(current_timestamp() as string))"))
+    assert(persisted -- pinned === Set.empty)
+    assert(r.rowsDeleted === 10L && r.rowsInserted === 10L)
+    val table = DeltaLakeRead.snapshot(spark, t).filter("id % 2 = 0")
+      .as[(Long, String)].collect().toMap
+    val post = DeltaLakeCdf.changes(spark, t, r.version)
+      .filter(col(DeltaLakeCdf.ChangeTypeCol) === "update_postimage")
+      .select("id", "v").as[(Long, String)].collect().toMap
+    assert(table.size === 10 && table.values.forall(_.length > 36))
+    assert(post === table)
+  }
+
+  test("staging that fails after the DV step takes back the attempt's " +
+      "DV files, leaves the snapshot as it was and releases its pins") {
+    val t = newTable()
+    DeltaLakeWrite.append((0L until 10L).map(i => (i, s"v$i"))
+      .toDF("id", "v").repartition(1), t)
+    val bins = dvBins(t)
+    val (version, before) = (DeltaLakeRead.latestVersion(t), ids(t))
+    val pinned = persisted
+    // ids 0-2 of the one 10-row file: a DV is written, then the
+    // replacement rows fail to stage
+    val e = intercept[Exception](DeltaLakeDml.update(spark, t, "id < 3",
+      Map("v" -> "raise_error('boom')")))
+    assert(e.getMessage.contains("boom"), e.getMessage)
+    assert(dvBins(t) === bins, "the attempt's DV files must be deleted")
+    assert(DeltaLakeRead.latestVersion(t) === version)
+    assert(ids(t) === before)
+    assert(persisted -- pinned === Set.empty, "the failure left pins")
   }
 }

@@ -1288,14 +1288,13 @@ class ScaleSpec extends AnyFunSuite {
     assert(m("a") === ((2L, 1L, 0.666667, 0.5, 0.166667)))
     assert(m("b") === ((1L, 0L, 0.333333, 0.0, 0.333333)))
     assert(m("c") === ((0L, 1L, 0.0, 0.5, 0.5)))
-    val docs = Tables.load(spark, SparkTestSession.sfDir, "documents")
-    // plan inspected on the eager = false (lazy) form — the default
-    // eager path localCheckpoints the tiny result to release the
-    // vocab-sized cache, which hides the plan behind a Scan ExistingRDD
-    val plan = TextStats.tokenDrift(docs, "text",
-      col("doc_id") % 2 === 0, eager = false)
+    // plan inspected in plan-evidence mode: the tiny result is
+    // checkpointed to release the vocab-sized cache, which otherwise
+    // hides the plan behind a Scan ExistingRDD
+    val docs = Tables.load(SparkTestSession.planEvidence,
+      SparkTestSession.sfDir, "documents")
+    val plan = TextStats.tokenDrift(docs, "text", col("doc_id") % 2 === 0)
       .queryExecution.executedPlan.toString
-    spark.sharedState.cacheManager.clearCache()
     assert(plan.contains("TakeOrderedAndProject"),
       s"the term table must never be globally sorted:\n$plan")
     // the totals consumer prints the persisted counts subtree again

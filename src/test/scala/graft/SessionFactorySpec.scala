@@ -131,112 +131,6 @@ class SessionFactorySpec extends AnyFunSuite {
       "spark.graft.explain.noCheckpoint"))
   }
 
-  // each op runs on a fresh session of the suite's context, so a conf
-  // an earlier suite left behind cannot hide a write
-  test("library ops leave the session's confs and cache as they found them") {
-    import graft.ingest.{DeltaLakeDml, ParquetTableIO, VersionedTableIO}
-    import org.apache.spark.sql.types._
-    val s = spark.newSession()
-    import s.implicits._
-    def unchanged(what: String)(op: => Unit): Unit = {
-      val (confs, cached) = (s.conf.getAll, CacheProbe.entries(s))
-      op
-      assert(s.conf.getAll === confs, what)
-      assert(CacheProbe.entries(s) === cached, what)
-    }
-    def dir(p: String) = Files.createTempDirectory(p).toString
-
-    val csv = dir("graft_inv_csv")
-    Files.writeString(new File(csv, "a.csv").toPath, "k,v\n1,a\n2,b\n")
-    unchanged("StreamIngest.ingestCsv")(graft.stream.StreamIngest.ingestCsv(
-      s, csv, dir("graft_inv_ck"), new ParquetTableIO(dir("graft_inv_t")),
-      "t", "id", Seq("k"),
-      Some(new StructType().add("k", LongType).add("v", StringType))))
-
-    val events = dir("graft_inv_ev")
-    val evSchema = new StructType().add("event_id", LongType)
-      .add("ts", TimestampType).add("user_id", LongType)
-      .add("event_type", StringType)
-    s.createDataFrame(s.sparkContext.parallelize(Seq(
-      Row(1L, java.sql.Timestamp.valueOf("2024-01-01 10:00:00"), 7L, "view"),
-      Row(2L, java.sql.Timestamp.valueOf("2024-01-01 10:10:00"), 7L,
-        "purchase"))), evSchema).write.mode("overwrite").parquet(events)
-    unchanged("StreamJoins.runViewPurchase")(assert(
-      graft.stream.StreamJoins.runViewPurchase(s, events, evSchema,
-        "inv_ssj", statePartitions = Some(2)).count() === 1L))
-
-    val delta = dir("graft_inv_delta")
-    val log = new File(delta, "_delta_log"); log.mkdirs()
-    def field(n: String, dt: DataType, id: Long) = StructField(n, dt,
-      nullable = true, new MetadataBuilder()
-        .putString("delta.columnMapping.physicalName", s"col-$id")
-        .putLong("delta.columnMapping.id", id).build())
-    val schemaStr = new com.fasterxml.jackson.databind.ObjectMapper()
-      .writeValueAsString(StructType(Seq(field("id", LongType, 1L),
-        field("v", StringType, 2L))).json)
-    Files.writeString(new File(log, "00000000000000000000.json").toPath,
-      Seq("""{"protocol":{"minReaderVersion":2,"minWriterVersion":5}}""",
-        s"""{"metaData":{"id":"inv","format":{"provider":"parquet","options":{}},"schemaString":$schemaStr,"partitionColumns":[],"configuration":{"delta.columnMapping.mode":"id"}}}""")
-        .mkString("\n"))
-    unchanged("id-mode DeltaLakeWrite.append")(DeltaLakeWrite.append(
-      Seq((1L, "a"), (2L, "b")).toDF("id", "v"), delta))
-    unchanged("id-mode DeltaLakeDml.delete")(
-      DeltaLakeDml.delete(s, delta, "id = 1"))
-    assert(DeltaLakeRead.snapshot(s, delta).count() === 1L)
-
-    // DML pins its matched rows per attempt: the blocks go on every path
-    def released(what: String)(op: => Unit): Unit = {
-      val pinned = s.sparkContext.getPersistentRDDs.keySet.toSet
-      unchanged(what)(op)
-      val left = s.sparkContext.getPersistentRDDs.keySet.toSet -- pinned
-      assert(left.isEmpty, s"$what left RDDs $left persisted")
-    }
-    val cdf = dir("graft_inv_cdf")
-    DeltaLakeWrite.append(Seq((1L, "a"), (2L, "b"), (2L, "b2"), (3L, "c"))
-      .toDF("id", "v"), cdf,
-      tableConfig = Map("delta.enableChangeDataFeed" -> "true"))
-    released("CDF DeltaLakeDml.upsert on a duplicated target key")(
-      assert(DeltaLakeDml.upsert(s, cdf, Seq((2L, "U"), (9L, "N"))
-        .toDF("id", "v"), Seq("id")).rowsDeleted === 2L))
-    released("DeltaLakeDml.update")(assert(DeltaLakeDml.update(s, cdf,
-      "id = 1", Map("v" -> "'x'")).rowsInserted === 1L))
-    released("DeltaLakeDml.upsert failing its duplicate-key check")(
-      intercept[IllegalArgumentException](DeltaLakeDml.upsert(s, cdf,
-        Seq((5L, "a"), (5L, "b")).toDF("id", "v"), Seq("id"))))
-    assert(DeltaLakeRead.snapshot(s, cdf).count() === 5L)
-
-    unchanged("VersionedTableIO.append")(new VersionedTableIO(
-      dir("graft_inv_v")).append(Seq((1L, "a")).toDF("id", "v"), "t"))
-
-    unchanged("Tables.load events")(
-      graft.core.Tables.load(s, SparkTestSession.sfDir, "events").count())
-    unchanged("Tables.registerAll")(
-      graft.core.Tables.registerAll(s, SparkTestSession.sfDir))
-
-    val docs = Seq((1L, "the cat sat on the mat", "en"),
-      (2L, "der hund lief schnell", "de")).toDF("doc_id", "text", "lang")
-    unchanged("DatasetCard.card")(graft.scale.DatasetCard.card(
-      docs, "doc_id", "text", "lang").collect())
-    unchanged("Bpe.train")(graft.scale.Bpe.train(docs, "text", 3).collect())
-
-    import graft.scale.{Curation, Dedup, Selection}
-    import org.apache.spark.sql.functions.{length, size, split}
-    val scored = docs.withColumn("s", length($"text").cast("double"))
-      .withColumn("n", size(split($"text", " ")))
-    unchanged("Selection.budgetSelect")(Selection.budgetSelect(
-      scored, "doc_id", "s", "n", 0.5).collect())
-    unchanged("Selection.budgetSelectBy")(Selection.budgetSelectBy(
-      scored, "lang", "doc_id", "s", "n", 0.5).collect())
-    unchanged("Selection.curriculumOrder")(Selection.curriculumOrder(
-      scored, "doc_id", "s", 2).collect())
-    unchanged("Selection.packSequencesBy")(Selection.packSequencesBy(
-      scored, "doc_id", Nil, "n", 4L).collect())
-    unchanged("Curation.curateV3")(
-      Curation.curateV3(docs, "doc_id", "text").collect())
-    unchanged("Dedup.guardRecallPairs")(
-      Dedup.guardRecallPairs(docs, "doc_id", "text", 0.5).collect())
-  }
-
   // with no libhadoop, Hadoop's stock local filesystem forks a chmod per
   // mkdir and file create and two readlinks per checkpoint rename
   test("local table writes, a stream drain and Delta DML start no process") {
@@ -276,6 +170,228 @@ class SessionFactorySpec extends AnyFunSuite {
         s.head.stack.take(12).mkString(" < ")
     }
     if (forked.nonEmpty) fail(forked.mkString("\n"))
+  }
+
+  // each op runs on a fresh session of the suite's context, so a conf
+  // an earlier suite left behind cannot hide a write. Pins: an RDD an
+  // op leaves persisted must be one the frame it returned reads (its
+  // plan's RDDs and their lineage), and that frame must still read; an
+  // op that returns no frame, or throws, leaves none
+  test("library ops leave the session's confs and cache as they found them") {
+    import graft.ingest.{DeltaLakeDml, ParquetTableIO, VersionedTableIO}
+    import org.apache.spark.rdd.RDD
+    import org.apache.spark.sql.Dataset
+    import org.apache.spark.sql.execution.LogicalRDD
+    import org.apache.spark.sql.types._
+    val s = spark.newSession()
+    import s.implicits._
+    def unchanged[T](what: String)(op: => T): T = {
+      val (confs, cached) = (s.conf.getAll, CacheProbe.entries(s))
+      val out = op
+      assert(s.conf.getAll === confs, what)
+      assert(CacheProbe.entries(s) === cached, what)
+      out
+    }
+    def lineage(r: RDD[_]): Seq[Int] =
+      r.id +: r.dependencies.flatMap(d => lineage(d.rdd))
+    def persisted = s.sparkContext.getPersistentRDDs.keySet.toSet
+    def owned(what: String, throws: Boolean = false)(op: => Any): Unit = {
+      val before = persisted
+      val out = unchanged(what)(scala.util.Try(op))
+      assert(out.isFailure === throws, s"$what: $out")
+      val reads = out.toOption.collect { case df: Dataset[_] =>
+        df.queryExecution.analyzed.collectLeaves()
+          .collect { case r: LogicalRDD => lineage(r.rdd) }.flatten
+      }.toSeq.flatten.toSet
+      val left = persisted -- before -- reads
+      assert(left.isEmpty, s"$what left RDDs ${left.toSeq.sorted} persisted")
+      out.foreach { case df: Dataset[_] => df.collect(); case _ => }
+    }
+    def dir(p: String) = Files.createTempDirectory(p).toString
+
+    val csv = dir("graft_inv_csv")
+    Files.writeString(new File(csv, "a.csv").toPath, "k,v\n1,a\n2,b\n")
+    owned("StreamIngest.ingestCsv")(graft.stream.StreamIngest.ingestCsv(
+      s, csv, dir("graft_inv_ck"), new ParquetTableIO(dir("graft_inv_t")),
+      "t", "id", Seq("k"),
+      Some(new StructType().add("k", LongType).add("v", StringType))))
+
+    val events = dir("graft_inv_ev")
+    val evSchema = new StructType().add("event_id", LongType)
+      .add("ts", TimestampType).add("user_id", LongType)
+      .add("event_type", StringType)
+    s.createDataFrame(s.sparkContext.parallelize(Seq(
+      Row(1L, java.sql.Timestamp.valueOf("2024-01-01 10:00:00"), 7L, "view"),
+      Row(2L, java.sql.Timestamp.valueOf("2024-01-01 10:10:00"), 7L,
+        "purchase"))), evSchema).write.mode("overwrite").parquet(events)
+    owned("StreamJoins.runViewPurchase")(assert(
+      graft.stream.StreamJoins.runViewPurchase(s, events, evSchema,
+        "inv_ssj", statePartitions = Some(2)).count() === 1L))
+
+    val delta = dir("graft_inv_delta")
+    val log = new File(delta, "_delta_log"); log.mkdirs()
+    def field(n: String, dt: DataType, id: Long) = StructField(n, dt,
+      nullable = true, new MetadataBuilder()
+        .putString("delta.columnMapping.physicalName", s"col-$id")
+        .putLong("delta.columnMapping.id", id).build())
+    val om = new com.fasterxml.jackson.databind.ObjectMapper()
+    val schemaStr = om.writeValueAsString(StructType(Seq(
+      field("id", LongType, 1L), field("v", StringType, 2L))).json)
+    Files.writeString(new File(log, "00000000000000000000.json").toPath,
+      Seq("""{"protocol":{"minReaderVersion":2,"minWriterVersion":5}}""",
+        s"""{"metaData":{"id":"inv","format":{"provider":"parquet","options":{}},"schemaString":$schemaStr,"partitionColumns":[],"configuration":{"delta.columnMapping.mode":"id"}}}""")
+        .mkString("\n"))
+    owned("id-mode DeltaLakeWrite.append")(DeltaLakeWrite.append(
+      Seq((1L, "a"), (2L, "b")).toDF("id", "v"), delta))
+    owned("id-mode DeltaLakeDml.delete")(
+      DeltaLakeDml.delete(s, delta, "id = 1"))
+    assert(DeltaLakeRead.snapshot(s, delta).count() === 1L)
+
+    // an identity column allocates through a cached RDD
+    val ident = dir("graft_inv_ident")
+    val identLog = new File(ident, "_delta_log"); identLog.mkdirs()
+    val identSchema = om.writeValueAsString(StructType(Seq(
+      StructField("rid", LongType, nullable = true, new MetadataBuilder()
+        .putLong("delta.identity.start", 1L).build()),
+      StructField("v", StringType))).json)
+    Files.writeString(new File(identLog, "00000000000000000000.json").toPath,
+      Seq("""{"protocol":{"minReaderVersion":1,"minWriterVersion":6}}""",
+        s"""{"metaData":{"id":"ident","format":{"provider":"parquet","options":{}},"schemaString":$identSchema,"partitionColumns":[],"configuration":{}}}""")
+        .mkString("\n"))
+    owned("identity-column DeltaLakeWrite.append")(DeltaLakeWrite.append(
+      Seq("a", "b", "c").toDF("v"), ident))
+    assert(DeltaLakeRead.snapshot(s, ident).select("rid").as[Long]
+      .collect().sorted.toSeq === Seq(1L, 2L, 3L))
+
+    // DML pins its matched rows per attempt: the blocks go on every path
+    val cdf = dir("graft_inv_cdf")
+    DeltaLakeWrite.append(Seq((1L, "a"), (2L, "b"), (2L, "b2"), (3L, "c"))
+      .toDF("id", "v"), cdf,
+      tableConfig = Map("delta.enableChangeDataFeed" -> "true"))
+    owned("CDF DeltaLakeDml.upsert on a duplicated target key")(
+      assert(DeltaLakeDml.upsert(s, cdf, Seq((2L, "U"), (9L, "N"))
+        .toDF("id", "v"), Seq("id")).rowsDeleted === 2L))
+    owned("DeltaLakeDml.update")(assert(DeltaLakeDml.update(s, cdf,
+      "id = 1", Map("v" -> "'x'")).rowsInserted === 1L))
+    owned("DeltaLakeDml.upsert failing its duplicate-key check",
+        throws = true)(DeltaLakeDml.upsert(s, cdf,
+      Seq((5L, "a"), (5L, "b")).toDF("id", "v"), Seq("id")))
+    assert(DeltaLakeRead.snapshot(s, cdf).count() === 5L)
+
+    owned("VersionedTableIO.append")(new VersionedTableIO(
+      dir("graft_inv_v")).append(Seq((1L, "a")).toDF("id", "v"), "t"))
+
+    owned("Tables.load events")(
+      graft.core.Tables.load(s, SparkTestSession.sfDir, "events").count())
+    owned("Tables.registerAll")(
+      graft.core.Tables.registerAll(s, SparkTestSession.sfDir))
+
+    // StreamDedup: two eager checkpoints per micro-batch
+    {
+      val p = graft.scale.Dedup.MinHashParams(k = 16, bands = 8, shingle = 2)
+      val io = new VersionedTableIO(dir("graft_inv_sd"))
+      val corpus = Seq((1L, "alpha beta gamma delta epsilon zeta eta"))
+        .toDF("doc_id", "text")
+      io.append(graft.scale.Dedup.signatureIndex(corpus, "doc_id", "text", p),
+        "sig_index")
+      val src = dir("graft_inv_sd_src")
+      Seq((2L, "alpha beta gamma delta epsilon zeta eta"),
+        (3L, "an entirely different text about something else"))
+        .toDF("doc_id", "text").coalesce(1).write.mode("append").parquet(src)
+      owned("StreamDedup.run")(graft.stream.StreamDedup.run(s, src,
+        dir("graft_inv_sd_ck"), io, "sig_index", "marks", "doc_id", "text",
+        0.5, p, corpus.schema))
+      assert(io.read(s, "marks").count() === 2L)
+    }
+
+    val docs = Seq((1L, "the cat sat on the mat", "en"),
+      (2L, "der hund lief schnell", "de")).toDF("doc_id", "text", "lang")
+    owned("DatasetCard.card")(graft.scale.DatasetCard.card(
+      docs, "doc_id", "text", "lang"))
+    owned("Bpe.train")(graft.scale.Bpe.train(docs, "text", 3))
+
+    import graft.scale.{Bpe, Clusters, Curation, Dedup, Selection, TextStats}
+    import org.apache.spark.sql.functions.{col, length, size, split}
+    // the distributed trainer: one cached layer per round, a truncating
+    // checkpoint every 16th
+    val words = Seq((1L, "alpha beta gamma delta epsilon zeta eta theta " +
+      "iota kappa lambda omicron sigma upsilon omega")).toDF("doc_id", "text")
+    owned("distributed Bpe.train")(Bpe.train(words, "text", 18, 0L))
+    owned("Bpe.train exhausting the corpus", throws = true)(
+      Bpe.train(Seq((1L, "ab ab")).toDF("doc_id", "text"), "text", 2, 0L))
+    owned("Bpe.vocabCoverage")(Bpe.vocabCoverage(docs, "text",
+      Seq((1, "t", "h", "th", 2L)).toDF("step", "l", "r", "merged",
+        "pair_count"), 1, topV = 4))
+    owned("TextStats.tokenDrift")(
+      TextStats.tokenDrift(docs, "text", col("doc_id") === 1L))
+
+    // distributed label propagation: a checkpoint per round
+    val chain = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (7L, 8L))
+      .toDF("a", "b")
+    owned("distributed Clusters.connectedComponents")(
+      Clusters.connectedComponents(chain, "a", "b", 25, None, 0L))
+    owned("Clusters.connectedComponents not converging", throws = true)(
+      Clusters.connectedComponents(chain, "a", "b", 1, None, 0L))
+
+    val scored = docs.withColumn("s", length($"text").cast("double"))
+      .withColumn("n", size(split($"text", " ")))
+    owned("Selection.budgetSelect")(Selection.budgetSelect(
+      scored, "doc_id", "s", "n", 0.5))
+    owned("Selection.budgetSelectBy")(Selection.budgetSelectBy(
+      scored, "lang", "doc_id", "s", "n", 0.5))
+    owned("Selection.curriculumOrder")(Selection.curriculumOrder(
+      scored, "doc_id", "s", 2))
+    owned("Selection.packSequencesBy")(Selection.packSequencesBy(
+      scored, "doc_id", Nil, "n", 4L))
+    owned("Curation.curateV3")(Curation.curateV3(docs, "doc_id", "text"))
+    owned("Dedup.guardRecallPairs")(
+      Dedup.guardRecallPairs(docs, "doc_id", "text", 0.5))
+
+    // near-dup detection and the curation pipelines over a corpus with
+    // planted copies
+    val rnd = new scala.util.Random(11)
+    val vocab = (1 to 40).map(i => s"w${('a' + i % 26).toChar}$i")
+    val texts = (0 until 24).map(_ =>
+      Seq.fill(30)(vocab(rnd.nextInt(vocab.size))).mkString(" "))
+    val corpus = (0 until 32).map(i =>
+      (i.toLong, texts(i % 24), if (i % 2 == 0) "en" else "de"))
+      .toDF("doc_id", "text", "lang")
+    val mh = Dedup.MinHashParams(k = 32, bands = 8, shingle = 2,
+      reproducible = true)
+    owned("Dedup.nearDuplicates")(
+      Dedup.nearDuplicates(corpus, "doc_id", "text", 0.5, mh, Some(1000)))
+    owned("Dedup.nearDuplicatesReleasable, released") {
+      val (pairs, release) = Dedup.nearDuplicatesReleasable(
+        corpus, "doc_id", "text", 0.5, mh, Some(1000))
+      assert(pairs.count() >= 8L)
+      release()
+    }
+    owned("Curation.curate")(Curation.curate(corpus, "doc_id", "text",
+      0.0, 0.5, mh, Some(1000)))
+    val emb = (0 until 32).map(i =>
+      (i.toLong, Seq.fill(4)(rnd.nextFloat() - 0.5f)))
+      .toDF("vec_id", "embedding")
+    owned("Curation.curateV2")(Curation.curateV2(
+      corpus = corpus.filter($"doc_id" % 8 =!= 0),
+      bench = corpus.filter($"doc_id" % 8 === 0), embeddings = emb,
+      idCol = "doc_id", textCol = "text", langCol = "lang",
+      minQuality = 0.0, minJaccard = 0.5, p = mh,
+      semK = 2, semIters = 2, semMinCosine = 0.9, semMaxNeighbors = 8,
+      unitTokens = 3, decontamN = 5, tau = 0.7, budgetDocs = 20L,
+      packBudget = 256L, packShards = 2, maxBucket = Some(1000)))
+  }
+
+  // cache lifetimes have one owner: core.Ckpt (and the checkpoint
+  // release in PlanBridge)
+  test("only core.Ckpt pins or releases a cache or checkpoint") {
+    val main = new File("src/main/scala")
+    val pinning = "\\.persist\\(|\\.cache\\(\\)|\\.unpersist\\(|" +
+      "\\.localCheckpoint\\(|unpersistRDD"
+    val sites = scalaFiles(main)
+      .filter(f => pinning.r.findFirstIn(Files.readString(f.toPath)).nonEmpty)
+      .map(f => main.toPath.relativize(f.toPath).toString).sorted
+    assert(sites === Seq("graft/core/Ckpt.scala",
+      "org/apache/spark/sql/graft/PlanBridge.scala"))
   }
 
   // a child runs under its caller's runtime confs as they are at each

@@ -17,4 +17,10 @@ object SparkTestSession {
     s
   }
   val sfDir = "/root/testdata/sf0.001"
+
+  /** A child of [[spark]] in plan-evidence mode ([[graft.core.Ckpt]]):
+    * checkpoints are skipped, so a returned frame's plan shows the
+    * whole lineage instead of a `Scan ExistingRDD` stub. */
+  lazy val planEvidence: SparkSession = graft.core.SessionFactory.child(
+    spark, Map("spark.graft.explain.noCheckpoint" -> "true"))
 }
