@@ -5,14 +5,16 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
-    // optional 3rd arg: comma-separated query names (dev loop filter)
-    val only: Option[Set[String]] =
-      if (args.length > 2) Some(args(2).split(",").toSet) else None
+    // optional 3rd arg: comma-separated query names (dev loop filter),
+    // run in the listed order — the same list reversed checks that the
+    // outputs do not depend on which query ran first
+    val only: Option[Seq[String]] =
+      if (args.length > 2) Some(args(2).split(",").toSeq) else None
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
     val spark = graft.core.SessionFactory.build(s"local[$cpus]", Some(cpus))
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
+    only.fold(SparkEntry.queries.toSeq)(_.flatMap(n =>
+        SparkEntry.queries.get(n).map(n -> _)))
       .foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")

@@ -30,9 +30,7 @@ import org.roaringbitmap.RoaringBitmap
   *  - `offset`: byte position of this DV's length-prefixed block
   *    inside the file (absent for inline).
   *  - `sizeInBytes`: size of the serialized bitmap data.
-  *  - `cardinality`: number of deleted rows (used here as the
-  *    broadcast-vs-shuffle size guard, same as
-  *    [[VersionedTableIO]]'s DV reads).
+  *  - `cardinality`: number of deleted rows.
   *
   * On-disk `.bin` layout (protocol "Deletion Vector File Storage
   * Format"): one format-version byte (= 1), then per stored DV a
@@ -202,9 +200,10 @@ object DeletionVectors {
     pos
   }
 
-  /** Write one DV into a fresh `.bin` file under `tableRoot` and
-    * return the `"u"`-style descriptor — the writer half used by
-    * specs (and available to future delete operations). */
+  /** Write one DV into a fresh `.bin` file directly under `tableRoot`
+    * and return the `"u"`-style descriptor without a prefix —
+    * [[DeltaLakeDml]] writes into its attempt's prefix directory and
+    * prepends the prefix itself. */
   def writeFile(tableRoot: File, positionsArr: Array[Long]): Descriptor = {
     val data = serialize(positionsArr)
     val uuid = java.util.UUID.randomUUID()

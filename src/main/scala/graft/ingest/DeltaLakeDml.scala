@@ -47,8 +47,9 @@ import scala.util.{Failure, Try}
   *     table path ([[DeltaLakeRead.normFile]], once per file) and its
   *     new DV (existing DV positions ∪ matched positions — descriptors
   *     are ABSOLUTE, not deltas) is serialized and written by
-  *     [[DeletionVectors.writeFile]]; the driver only ever holds
-  *     one small descriptor row per file, never position sets.
+  *     [[DeletionVectors.writeFile]] into the attempt's own random
+  *     prefix directory; the driver only ever holds one small
+  *     descriptor row per file, never position sets.
   *     (Executor-side `.bin` writes and footer reads assume a shared
   *     filesystem — the same deployment posture as every staged write
   *     in this engine.)
@@ -251,12 +252,19 @@ object DeltaLakeDml {
     val oldDvs: Map[String, DeletionVectors.Descriptor] =
       st.files.flatMap(f => f.dv.map(d => s"$root/${f.path}" -> d)).toMap
     val bcOld = spark.sparkContext.broadcast(oldDvs)
+    // every DV bin this attempt writes lands in one fresh directory —
+    // the protocol's `u`-type random prefix — so a failed attempt takes
+    // its bins back by path, also those of tasks whose descriptors never
+    // reached the driver
+    val dvPrefix = java.util.UUID.randomUUID().toString.replace("-", "")
+    val dvDir = new File(root, dvPrefix)
+    val aborted = new File(dvDir, AbortedMarker)
 
     // one job: the matched positions grouped by raw file URI (so the
     // normalization runs once per affected file; one file's positions
     // fit one executor), then per file ON AN EXECUTOR the live count
     // and the DV write — only one short descriptor row per file returns
-    val written = matched.select(provenance: _*).as[(String, Long)].rdd
+    val written = try matched.select(provenance: _*).as[(String, Long)].rdd
       .mapPartitions { it =>
         // one record per file per task crosses the shuffle
         val byFile = mutable.HashMap.empty[String, mutable.ArrayBuilder.ofLong]
@@ -281,12 +289,25 @@ object DeltaLakeDml {
           // every remaining live row dies -> bare remove, no DV
           (file, "", -1, 0, 0L, matchedPos.length.toLong)
         } else {
-          val d = DeletionVectors.writeFile(root, old.fold(Array.empty[Long])(
+          dvDir.mkdirs()
+          val d = DeletionVectors.writeFile(dvDir, old.fold(Array.empty[Long])(
             DeletionVectors.positions(root, _)) ++ matchedPos)
-          (file, d.pathOrInlineDv, d.offset.getOrElse(1), d.sizeInBytes,
-            d.cardinality, matchedPos.length.toLong)
+          // the attempt failed while this task ran: take the bin back
+          if (aborted.exists())
+            Files.deleteIfExists(DeletionVectors.resolvePath(dvDir, d).toPath)
+          (file, dvPrefix + d.pathOrInlineDv, d.offset.getOrElse(1),
+            d.sizeInBytes, d.cardinality, matchedPos.length.toLong)
         }
       }.collect()
+    catch { case e: Throwable =>
+      // a failed job does not wait for its other running tasks: mark the
+      // attempt aborted first, so a task that finishes later drops its
+      // own bin, then drop the bins already written
+      dvDir.mkdirs(); aborted.createNewFile()
+      Option(dvDir.listFiles()).getOrElse(Array.empty)
+        .filter(_.getName.endsWith(".bin")).foreach(_.delete())
+      throw e
+    }
 
     val rowsDeleted = written.map(_._6).sum
     // nothing matched and nothing to insert: no staging, no commit
@@ -295,15 +316,11 @@ object DeltaLakeDml {
     def drop(files: Seq[DeltaLakeWrite.Staged]): Unit =
       files.foreach(s => Files.deleteIfExists(new File(root, s.rel).toPath))
     // an attempt that fails after the DV step takes back everything it
-    // physically landed: its staged files and its new DV bins
+    // physically landed: its staged files and its DV bins' directory
+    // (every DV task has ended, so none can write there any more)
     def rollback(files: Seq[DeltaLakeWrite.Staged]): Unit = {
       drop(files)
-      written.foreach { case (_, dvPath, dvOff, dvSize, dvCard, _) =>
-        if (dvPath.nonEmpty)
-          Files.deleteIfExists(DeletionVectors.resolvePath(
-            root, DeletionVectors.Descriptor("u",
-              dvPath, Some(dvOff), dvSize, dvCard)).toPath)
-      }
+      FsOps.deleteRecursively(dvDir)
     }
     val physParts = st.partitionColumns.map(c =>
       DeltaLakeRead.physFieldName(st.schema(c)))
@@ -442,20 +459,22 @@ object DeltaLakeDml {
       s"mutation computed against it (conflicting commit at " +
       s"$conflictVersion)")
 
+  /** Left in an aborted attempt's DV directory: a DV task that
+    * finishes after its job failed finds it and deletes its own bin. */
+  private val AbortedMarker = "_aborted"
+
   /** Recomputes a mutation may spend on commit races before it gives
     * up ([[withRetries]]). */
   private val MaxRetries = 5
 
   /** Re-execute `op` from scratch on each commit race, up to
-    * [[MaxRetries]] recomputes —
-    * optimistic concurrency by full re-execution, the same pattern
-    * [[VersionedTableIO]]'s concurrent-DV-delete path proves out.
-    * Exhaustion aborts loudly: sustained conflict means the caller is
-    * racing mutators faster than they can serialize. Each attempt is
-    * one [[Ckpt.scoped]] scope: the frames it computes once and reads
-    * many times (matched rows, upsert source and per-key counts, CDF
-    * postimages) are eager checkpoints released when the attempt ends,
-    * however it ends. */
+    * [[MaxRetries]] recomputes — optimistic concurrency by full
+    * re-execution. Exhaustion aborts loudly: sustained conflict means
+    * the caller is racing mutators faster than they can serialize.
+    * Each attempt is one [[Ckpt.scoped]] scope: the frames it computes
+    * once and reads many times (matched rows, upsert source and
+    * per-key counts, CDF postimages) are eager checkpoints released
+    * when the attempt ends, however it ends. */
   private def withRetries(op: Ckpt.Pins => DmlResult): DmlResult = {
     var tries = 0
     while (true) {

@@ -25,9 +25,9 @@ import java.nio.file.{Files, StandardCopyOption}
   * pattern for bronze ingest — including appends to column-mapped
   * (`name`-mode) tables, which stage parquet under the mapping's
   * PHYSICAL names. Row-level DML (DELETE/UPDATE/MERGE via deletion
-  * vectors) lives in [[DeltaLakeDml]]; the engine's native format
-  * stays [[VersionedTableIO]] — this writer exists for interop
-  * hand-off, not as a second table format.
+  * vectors) lives in [[DeltaLakeDml]]; the older [[VersionedTableIO]]
+  * format still serves the queries that have not moved to Delta
+  * (ROADMAP item 6).
   *
   * Mechanics: data files are staged by a normal
   * `df.write.partitionBy(...).parquet` into a dot-prefixed temp dir
@@ -581,7 +581,7 @@ object DeltaLakeWrite {
     * executor). Lets DML report rowsInserted without re-running the
     * source plan, and take a data file's live rows without counting
     * them. */
-  private[ingest] def footerRows(f: File): Long = {
+  private[graft] def footerRows(f: File): Long = {
     val r = org.apache.parquet.hadoop.ParquetFileReader.open(
       new org.apache.parquet.io.LocalInputFile(f.toPath))
     try r.getRecordCount finally r.close()

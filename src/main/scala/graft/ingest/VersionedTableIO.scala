@@ -5,11 +5,12 @@ import java.io.File
 import scala.util.control.NonFatal
 
 import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.databind.node.ObjectNode
 import com.fasterxml.jackson.module.scala.DefaultScalaModule
 import graft.core.Metrics
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.types.{NumericType, StringType, StructType}
-import org.apache.spark.sql.functions.{broadcast, coalesce, col, concat, count, expr, floor, greatest, least, lit, max, min, shiftleft, shiftrightunsigned, struct, substring_index, sum, when}
+import org.apache.spark.sql.functions.{coalesce, col, count, expr, floor, greatest, least, lit, max, min, shiftleft, shiftrightunsigned, struct, sum, when}
 
 /** One committed snapshot of a versioned table: the ordered list of
   * immutable data directories that make it up, plus carried-forward
@@ -22,15 +23,16 @@ final case class Manifest(
     version: Long, ts: Long, op: String,
     dataDirs: Seq[String], properties: Map[String, String],
     stats: Map[String, Map[String, Seq[Double]]] = Map.empty,
-    dvDirs: Seq[String] = Nil,
     strStats: Map[String, Map[String, Seq[String]]] = Map.empty)
 
-/** Versioned-table format over plain parquet — the engine's stand-in
-  * for Delta Lake's transaction log (the reference writes Delta
+/** Versioned-table format over plain parquet — the engine's older
+  * ACID format, kept beside the Delta protocol implementation
+  * ([[DeltaLakeWrite]], [[DeltaLakeDml]], [[DeltaLakeRead]]) until the
+  * queries that still use it move to Delta (the reference writes Delta
   * everywhere: spark/jobs/alphavantage/bronze2_to_silver.py:142-152,
-  * uber/drop_dup.py:97, coin_to_delta_w_cp.py:124; the harness
-  * classpath has no delta jars, so the log is reimplemented from first
-  * principles on public Spark + filesystem APIs).
+  * uber/drop_dup.py:97, coin_to_delta_w_cp.py:124). Row-level deletes
+  * by deletion vector exist only on the Delta side; this format's
+  * DELETE, UPDATE and MERGE rewrite the snapshot.
   *
   * Layout per table:
   * {{{
@@ -64,12 +66,9 @@ final case class Manifest(
   * the atomic claim is pluggable ([[CommitBackend]]) — hard link
   * locally, conditional put (S3 if-none-match) on a store.
   */
-final class VersionedTableIO private[graft] (root: String,
-    backend: CommitBackend, dvBroadcastMaxRows: Long) extends TableIO {
+final class VersionedTableIO(root: String,
+    backend: CommitBackend = LocalLinkBackend) extends TableIO {
   import VersionedTableIO._
-
-  def this(root: String, backend: CommitBackend = LocalLinkBackend) =
-    this(root, backend, VersionedTableIO.DvBroadcastMaxRows)
 
   private def tableDir(table: String) = s"$root/$table"
   private def logDir(table: String) = s"${tableDir(table)}/_graft_log"
@@ -102,7 +101,17 @@ final class VersionedTableIO private[graft] (root: String,
     require(f.exists(),
       s"version $version of '$table' does not exist (or was vacuumed); " +
         s"available: ${versions(table).mkString(", ")}")
-    mapper.readValue(f, classOf[Manifest])
+    val tree = mapper.readTree(f).asInstanceOf[ObjectNode]
+    // earlier builds wrote deletion-vector sidecar dirs under `dvDirs`;
+    // an empty list reads as before, a non-empty one cannot be honoured
+    // here — reading the data dirs alone would bring the masked rows back
+    Option(tree.remove("dvDirs")).filter(_.size > 0).foreach { dvs =>
+      throw new IllegalStateException(s"version $version of '$table' " +
+        s"masks rows with deletion-vector dirs ($dvs), which this build " +
+        "no longer reads; rewrite the table (compact) with the build " +
+        "that wrote it")
+    }
+    mapper.treeToValue(tree, classOf[Manifest])
   }
 
   private def latestManifest(table: String): Option[Manifest] =
@@ -122,23 +131,14 @@ final class VersionedTableIO private[graft] (root: String,
     * carried-over dirs ride along from the base manifest), and a
     * properties delta — or None to abort without committing (used by
     * the idempotent path when a replay is detected mid-race). */
-  private def commitLoop(table: String, op: String,
-      dv: Option[Manifest] => Seq[String] = carryDv)(
+  private def commitLoop(table: String, op: String)(
       build: Option[Manifest] => (Seq[String], Map[String, Map[String, Seq[Double]]])): Manifest =
-    commitLoopEx(table, op, dv)(base => {
+    commitLoopEx(table, op)(base => {
       val (dirs, st) = build(base)
       Some((dirs, st, Map.empty[String, String]))
     }).get
 
-  /** Default deletion-vector policy for a commit: CARRY the base
-    * snapshot's DV dirs (appends/metadata commits leave deletes in
-    * force). Rewrites that materialize deletes pass `clearDv`. */
-  private val carryDv: Option[Manifest] => Seq[String] =
-    _.flatMap(b => Option(b.dvDirs)).getOrElse(Nil)
-  private val clearDv: Option[Manifest] => Seq[String] = _ => Nil
-
-  private def commitLoopEx(table: String, op: String,
-      dv: Option[Manifest] => Seq[String] = carryDv)(
+  private def commitLoopEx(table: String, op: String)(
       build: Option[Manifest] => Option[(Seq[String],
         Map[String, Map[String, Seq[Double]]], Map[String, String])]): Option[Manifest] = {
     var attempts = 0
@@ -164,8 +164,7 @@ final class VersionedTableIO private[graft] (root: String,
       else build(base) match {
         case None => return None
         case Some((dirs, newStats, propsDelta)) =>
-          val dvs = dv(base)
-          val dirSet = dirs.toSet ++ dvs
+          val dirSet = dirs.toSet
           // an EMPTY value in the DELTA unsets that key (how
           // dropConstraint removes its property through the same merge
           // path every other commit uses) — scoped to the delta's own
@@ -180,7 +179,6 @@ final class VersionedTableIO private[graft] (root: String,
               propsDelta) -- unset,
             stats = (base.map(_.stats).getOrElse(Map.empty) ++ newStats)
               .view.filterKeys(dirSet).toMap,
-            dvDirs = dvs,
             // string min/max ride a per-writer side channel keyed by
             // the (globally unique) rel dir: writeDataDir/clone/restore
             // seed it, the commit folds entries for THIS snapshot's
@@ -211,49 +209,8 @@ final class VersionedTableIO private[graft] (root: String,
     require(m.dataDirs.nonEmpty, s"version ${m.version} of '$table' is empty")
     // mergeSchema across commit dirs = write-side schema evolution:
     // columns added in later commits surface as null in earlier files
-    val raw = spark.read.option("mergeSchema", "true")
+    spark.read.option("mergeSchema", "true")
       .parquet(m.dataDirs.map(d => s"${tableDir(table)}/$d"): _*)
-    if (Option(m.dvDirs).forall(_.isEmpty)) raw
-    else dvSubtract(spark, table, m,
-      raw.withColumn(DvPath, relFilePath)
-        .withColumn(DvPos, col("_metadata.row_index")))
-      .drop(DvPath, DvPos)
-  }
-
-  /** Table-relative file path of the current row — `data/<uuid>/<file>`
-    * — the key deletion vectors store. Relative (not the absolute URI
-    * `_metadata.file_path` yields) so hard-link CLONES of the table
-    * keep their deletes: the same key resolves under either root. */
-  private def relFilePath: Column =
-    concat(lit("data/"),
-      substring_index(col("_metadata.file_path"), "/data/", -1))
-
-  /** Anti-join `withKeys` (carrying DvPath/DvPos columns) against the
-    * snapshot's deletion vectors. For the common O(k)-delete workload
-    * the DV side is tiny (positions only, no row data) and is
-    * BROADCAST, so the read overhead is O(scan + |deleted positions|)
-    * with no shuffle of the table. A MASS delete (say 1B masked rows
-    * at 100 TB) would make that broadcast a driver/executor OOM, so
-    * the plan is size-guarded from the manifest's per-DV-dir count
-    * stats: above `dvBroadcastMaxRows` ([[DvBroadcastMaxRows]]) —
-    * or when any DV dir predates count stats — the anti-join runs as
-    * a shuffled hash join on (file, pos) instead: both sides hash-
-    * partition on the position key, the per-partition build side is
-    * |dv|/parts, and no single JVM ever holds the full position set. */
-  private def dvSubtract(spark: SparkSession, table: String, m: Manifest,
-      withKeys: DataFrame): DataFrame = {
-    val dv = spark.read
-      .parquet(m.dvDirs.map(d => s"${tableDir(table)}/$d"): _*)
-      .select(col(DvPath), col(DvPos))
-    val dvRows: Option[Long] = {
-      val per = m.dvDirs.map(d =>
-        m.stats.get(d).flatMap(_.get(CountStat)).map(_.head.toLong))
-      if (per.forall(_.isDefined)) Some(per.flatten.sum) else None
-    }
-    if (dvRows.exists(_ <= dvBroadcastMaxRows))
-      withKeys.join(broadcast(dv), Seq(DvPath, DvPos), "left_anti")
-    else
-      withKeys.join(dv.hint("shuffle_hash"), Seq(DvPath, DvPos), "left_anti")
   }
 
   def read(spark: SparkSession, table: String): DataFrame =
@@ -389,15 +346,6 @@ final class VersionedTableIO private[graft] (root: String,
     (rel, num)
   }
 
-  /** Parquet-write `df` to `abs` with the row count riding the write
-    * job. One fewer job for every DV mask write. */
-  private def writeCounted(df: DataFrame, abs: String): Long = {
-    val (observed, obs) = Metrics.observed(df,
-      s"__graft_n_${java.util.UUID.randomUUID()}", "__n" -> count(lit(1)))
-    observed.write.parquet(abs)
-    obs.get("__n").asInstanceOf[Number].longValue()
-  }
-
   /** The numeric and the string columns of `schema`: the columns a
     * data dir records [min, max] stats for. */
   private def statCols(schema: StructType): (Seq[String], Seq[String]) = (
@@ -502,8 +450,7 @@ final class VersionedTableIO private[graft] (root: String,
   }
 
   /** A [n, n] count-stat entry — what [[statsOf]] records for
-    * data dirs; DV writers record the same for their sidecar dirs so
-    * reads can size-guard the DV plan from the manifest alone. */
+    * data dirs. */
   private def countStatOf(n: Long): Map[String, Seq[Double]] =
     Map(CountStat -> Seq(n.toDouble, n.toDouble))
 
@@ -523,7 +470,7 @@ final class VersionedTableIO private[graft] (root: String,
   def overwrite(df: DataFrame, table: String, partitionBy: Seq[String] = Nil): Unit = {
     requireWritable(table)
     val (rel, st) = writeDataDir(df, table)
-    commitLoop(table, "overwrite", clearDv)(_ => (Seq(rel), Map(rel -> st)))
+    commitLoop(table, "overwrite")(_ => (Seq(rel), Map(rel -> st)))
     ()
   }
 
@@ -551,24 +498,31 @@ final class VersionedTableIO private[graft] (root: String,
     var attempts = 0
     while (attempts < 10) {
       val baseVersion = latestVersion(table)
-      val (rels, st) = write(readVersion(spark, table, baseVersion))
-      // an effectively-empty snapshot (empty overwrite, or every row
-      // masked by deletion vectors) materializes NO dirs: committing
-      // dataDirs = Nil would make the head unreadable, so bail without
-      // a commit — the same no-op contract as compactSmall
-      if (rels.isEmpty) return
-      // the rewrite read the DV-aware snapshot, so deletes are
-      // MATERIALIZED in the new dirs: clear the vectors
-      val committed = commitLoopEx(table, op, clearDv) { base =>
-        if (base.map(_.version).contains(baseVersion))
-          Some((rels, st, Map.empty[String, String]))
-        else None // head moved since we read: stale result, recompute
+      // a restore and a vacuum landing while the base is read can sweep
+      // its dirs: that makes the base stale, not the table broken —
+      // recompute on the new head, the same as losing the commit race.
+      // Rethrow when the head did NOT move: then the failure is real.
+      val written =
+        try Some(write(readVersion(spark, table, baseVersion)))
+        catch { case NonFatal(_) if latestVersion(table) != baseVersion => None }
+      written match {
+        case None =>
+        case Some((rels, st)) =>
+          // a z-order of an empty snapshot materializes NO dirs:
+          // committing dataDirs = Nil would make the head unreadable, so
+          // bail without a commit
+          if (rels.isEmpty) return
+          val committed = commitLoopEx(table, op) { base =>
+            if (base.map(_.version).contains(baseVersion))
+              Some((rels, st, Map.empty[String, String]))
+            else None // head moved since we read: stale result, recompute
+          }
+          if (committed.isDefined) return
+          // nested rels (data/<uuid>/__zb=k) share one staging root: drop it
+          rels.foreach(r => pendingStrStats.remove(r))
+          rels.map(_.split("/").take(2).mkString("/")).distinct.foreach(r =>
+            discardDataDir(table, r))
       }
-      if (committed.isDefined) return
-      // nested rels (data/<uuid>/__zb=k) share one staging root: drop it
-      rels.foreach(r => pendingStrStats.remove(r))
-      rels.map(_.split("/").take(2).mkString("/")).distinct.foreach(r =>
-        discardDataDir(table, r))
       attempts += 1
     }
     throw new IllegalStateException(
@@ -602,80 +556,6 @@ final class VersionedTableIO private[graft] (root: String,
       _.repartitionByRange(numFiles, cols: _*).sortWithinPartitions(cols: _*))
   }
 
-  /** OPTIMIZE, bin-packing form (Delta's default OPTIMIZE semantics):
-    * rewrite ONLY the commit dirs whose row count (from manifest
-    * stats) is below `minRows`, packing them into one fresh dir;
-    * every large dir rides into the new manifest untouched. The
-    * whole-snapshot [[compact]] is the wrong tool at 100 TB — a table
-    * is mostly cold large files plus a tail of small recent appends,
-    * and OPTIMIZE must cost O(small tail), not O(table). Dirs without
-    * a count stat are treated as small (conservative: packing them is
-    * always safe). Read-validated like every rewrite: the commit
-    * lands only if the head hasn't moved since the small set was
-    * chosen. No-op when fewer than two dirs qualify. */
-  def compactSmall(spark: SparkSession, table: String, minRows: Long,
-      numFiles: Int = 1): Unit = {
-    requireWritable(table)
-    var attempts = 0
-    while (attempts < 10) {
-      val baseVersion = latestVersion(table)
-      val m = manifest(table, baseVersion)
-      val small = m.dataDirs.filter(d =>
-        m.stats.get(d).flatMap(_.get(CountStat)).map(_.head)
-          .forall(_ < minRows.toDouble))
-      if (small.size <= 1) return
-      val big = m.dataDirs.filterNot(small.toSet)
-      // read the smalls through the DV filter so packing MATERIALIZES
-      // their deletes; vectors for the carried big dirs stay in force
-      val packed = scan(spark, table, m.copy(dataDirs = small))
-        .repartition(numFiles)
-      val (rel, st) = writeDataDir(packed, table)
-      // Carried vectors must not keep positions that reference the
-      // PACKED dirs: those deletes are already materialized in `rel`,
-      // and the stale positions — harmless to reads (their path keys
-      // no longer resolve) — would make [[rowCount]]'s Σdata − Σdv
-      // double-subtract them. Rewrite the vectors down to positions on
-      // the carried big dirs (consolidating any stack into one dir);
-      // no survivors → the snapshot commits with DVs fully cleared.
-      val oldDvs = Option(m.dvDirs).getOrElse(Nil)
-      val (newDvs, dvStats) =
-        if (oldDvs.isEmpty)
-          (Nil, Map.empty[String, Map[String, Seq[Double]]])
-        else {
-          val dvRel = s"data/${java.util.UUID.randomUUID()}"
-          val dvAbs = s"${tableDir(table)}/$dvRel"
-          // a DV path is data/<uuid>/<file> (or data/<uuid>/__zb=k/
-          // <file> for z-ordered dirs): its owning rel dir is the 2- or
-          // 3-segment prefix — O(1) per row however many dirs packed
-          val nKept = writeCounted(spark.read
-            .parquet(oldDvs.map(d => s"${tableDir(table)}/$d"): _*)
-            .select(col(DvPath), col(DvPos))
-            .filter(
-              !substring_index(col(DvPath), "/", 2).isin(small: _*) &&
-              !substring_index(col(DvPath), "/", 3).isin(small: _*)),
-            dvAbs)
-          if (nKept == 0L) {
-            FsOps.deleteRecursively(new File(dvAbs))
-            (Nil, Map.empty[String, Map[String, Seq[Double]]])
-          } else
-            (Seq(dvRel), Map(dvRel -> countStatOf(nKept)))
-        }
-      val committed = commitLoopEx(table, "compact",
-        dv = _ => newDvs) { base =>
-        if (base.map(_.version).contains(baseVersion))
-          Some((big :+ rel, Map(rel -> st) ++ dvStats,
-            Map.empty[String, String]))
-        else None // head moved: small set is stale, re-pick
-      }
-      if (committed.isDefined) return
-      discardDataDir(table, rel)
-      newDvs.foreach(discardDataDir(table, _))
-      attempts += 1
-    }
-    throw new IllegalStateException(
-      s"compactSmall('$table') lost the commit race 10 times")
-  }
-
   /** OPTIMIZE ZORDER analog — MULTI-dimensional clustering.
     * [[compactClustered]]'s linear sort tightens stats on its leading
     * column only: a predicate on the second column still scans every
@@ -697,7 +577,7 @@ final class VersionedTableIO private[graft] (root: String,
     * every snapshot rewrite. `numDirs` must be a power of two ≤
     * 2^(8·nCols); cluster columns must be numeric and not all-null
     * (rows with a NULL key cluster at that column's min bucket); an
-    * effectively-empty snapshot (all rows DV-masked) is a no-op. */
+    * empty snapshot is a no-op. */
   def compactZOrder(spark: SparkSession, table: String,
       clusterCols: Seq[String], numDirs: Int): Unit = {
     requireWritable(table)
@@ -775,8 +655,8 @@ final class VersionedTableIO private[graft] (root: String,
         zbDirs.sortBy(_.getName.stripPrefix("__zb=").toInt)
           .map(f => s"$rel/${f.getName}")
       }
-      // an all-rows-masked snapshot still writes an empty staging root
-      // (or none at all): drop it; empty rels → rewriteSnapshotEx no-op
+      // an empty snapshot still writes an empty staging root (or none
+      // at all): drop it; empty rels → rewriteSnapshotEx no-op
       if (rels.isEmpty) FsOps.deleteRecursively(new File(abs))
       (rels, zOrderStats(spark, abs, rel, rels, cur.schema))
     }
@@ -831,9 +711,8 @@ final class VersionedTableIO private[graft] (root: String,
     val m = manifest(src, srcVersion)
     require(versions(dst).isEmpty,
       s"clone target '$dst' already has commits")
-    val dvs = Option(m.dvDirs).getOrElse(Nil)
     try {
-      (m.dataDirs ++ dvs).foreach { rel =>
+      m.dataDirs.foreach { rel =>
         linkTree(new File(s"${tableDir(src)}/$rel"),
           new File(s"${tableDir(dst)}/$rel"))
       }
@@ -859,16 +738,14 @@ final class VersionedTableIO private[graft] (root: String,
         // the same src version shares them — and that peer aborts on
         // the same vanished-source condition that aborted us). Without
         // a commit the partial copy was never visible anyway.
-        (m.dataDirs ++ dvs).foreach { rel =>
+        m.dataDirs.foreach { rel =>
           FsOps.deleteRecursively(new File(s"${tableDir(dst)}/$rel"))
         }
         throw t
     }
     Option(m.strStats).getOrElse(Map.empty)
       .foreach { case (d, st) => pendingStrStats.put(d, st) }
-    // DV keys are TABLE-RELATIVE paths, so the linked vectors keep
-    // masking the same rows under the clone's root
-    commitLoopEx(dst, "clone", _ => dvs) { base =>
+    commitLoopEx(dst, "clone") { base =>
       require(base.isEmpty, s"clone target '$dst' already has commits")
       Some((m.dataDirs, m.stats, m.properties))
     }
@@ -891,186 +768,9 @@ final class VersionedTableIO private[graft] (root: String,
     * back to a scan). */
   def rowCount(table: String, version: Long): Option[Long] = {
     val m = manifest(table, version)
-    def counts(dirs: Seq[String]): Seq[Option[Long]] = dirs.map(d =>
+    val counts = m.dataDirs.map(d =>
       m.stats.get(d).flatMap(_.get(CountStat)).map(_.head.toLong))
-    val data = counts(m.dataDirs)
-    // every DV row masks exactly one LIVE row (writers exclude already-
-    // masked positions up front, so positions never duplicate across
-    // stacked vectors) — the snapshot count is Σdata − Σdv, still a
-    // pure manifest read even while deletes are unmaterialized
-    val dv = counts(Option(m.dvDirs).getOrElse(Nil))
-    if ((data ++ dv).forall(_.isDefined))
-      Some(data.flatten.sum - dv.flatten.sum)
-    else None
-  }
-
-  /** Delta DELETE with DELETION VECTORS: mark matching rows deleted by
-    * POSITION — (relative file path, row index) pairs in a sidecar
-    * parquet dir the manifest's `dvDirs` references — without touching
-    * a single data file. [[deleteWhere]] rewrites the whole snapshot;
-    * at 100 TB that makes deleting 100 rows cost a table rewrite,
-    * which is why Delta grew DVs. Cost here: one scan to find matches
-    * + O(matched positions) written; readers anti-join the broadcast
-    * position set (see [[dvSubtract]]). Deletes stack (each DELETE
-    * appends a DV dir); any snapshot REWRITE (overwrite / merge /
-    * update / compact / z-order) materializes them — its DV-aware
-    * input already excludes the rows — and clears `dvDirs`. Time
-    * travel before the delete still sees the rows. [[rowCount]] stays
-    * exact while DVs are live (Σdata − Σdv from the manifest's count
-    * stats — every rewrite keeps vectors consistent with their dirs);
-    * only [[exportManifest]] refuses, since a plain-parquet reader
-    * has no way to apply the mask. A no-match DELETE commits
-    * nothing. */
-  def deleteWhereVectors(spark: SparkSession, table: String,
-      predicate: Column): Unit = {
-    requireWritable(table)
-    var attempts = 0
-    while (attempts < 10) {
-      val baseVersion = latestVersion(table)
-      val m = manifest(table, baseVersion)
-      val rel = s"data/${java.util.UUID.randomUUID()}"
-      val abs = s"${tableDir(table)}/$rel"
-      // positions of surviving-then-matching rows: already-deleted rows
-      // are excluded up front so DV rows never duplicate
-      val nDv = writeCounted(scan(spark, table, m.copy(dvDirs = Nil))
-        .withColumn(DvPath, relFilePath)
-        .withColumn(DvPos, col("_metadata.row_index"))
-        .transform(df =>
-          if (Option(m.dvDirs).forall(_.isEmpty)) df
-          else dvSubtract(spark, table, m, df))
-        .filter(predicate)
-        .select(col(DvPath), col(DvPos)), abs)
-      if (nDv == 0L) {
-        discardDataDir(table, rel) // no matches: no commit
-        return
-      }
-      val committed = commitLoopEx(table, "delete",
-        dv = base => carryDv(base) :+ rel) { base =>
-        if (base.map(_.version).contains(baseVersion))
-          Some((m.dataDirs, Map(rel -> countStatOf(nDv)),
-            Map.empty[String, String]))
-        else None // head moved: positions may be stale, recompute
-      }
-      if (committed.isDefined) return
-      discardDataDir(table, rel)
-      attempts += 1
-    }
-    throw new IllegalStateException(
-      s"deleteWhereVectors('$table') lost the commit race 10 times")
-  }
-
-  /** Delta UPDATE with deletion vectors: mask the matched rows by
-    * position AND append their updated images — ONE commit, cost
-    * O(matched rows), no snapshot rewrite (the [[updateWhere]] form
-    * rewrites everything; at 100 TB updating 0.1% of a table must not
-    * cost 100%). The matched set is pinned with an eager local
-    * checkpoint so the mask and the images come from the SAME
-    * evaluation; the appended dir goes through the normal
-    * constraint-validated [[writeDataDir]] path, so a CHECK-violating
-    * update still aborts whole. Stacks with prior DVs and with itself
-    * (updated images live in ordinary data dirs and can be masked by
-    * the next update). */
-  def updateWhereVectors(spark: SparkSession, table: String,
-      predicate: Column, assignments: Map[String, Column]): Unit = {
-    requireWritable(table)
-    var attempts = 0
-    while (attempts < 10) {
-      // one scope per attempt: a lost race releases its matched set
-      val done = graft.core.Ckpt.scoped { pins =>
-        val baseVersion = latestVersion(table)
-        val m = manifest(table, baseVersion)
-        val matched = pins.checkpoint(scan(spark, table, m.copy(dvDirs = Nil))
-          .withColumn(DvPath, relFilePath)
-          .withColumn(DvPos, col("_metadata.row_index"))
-          .transform(df =>
-            if (Option(m.dvDirs).forall(_.isEmpty)) df
-            else dvSubtract(spark, table, m, df))
-          .filter(predicate))
-        val nDv = matched.count()
-        nDv == 0L || {
-          val dvRel = s"data/${java.util.UUID.randomUUID()}"
-          val dvAbs = s"${tableDir(table)}/$dvRel"
-          matched.select(col(DvPath), col(DvPos)).write.parquet(dvAbs)
-          val updated = assignments.foldLeft(matched.drop(DvPath, DvPos)) {
-            case (df, (c, e)) => df.withColumn(c, e)
-          }
-          val (rel, st) =
-            try writeDataDir(updated, table)
-            catch { case e: Throwable => // constraint violation: no orphan
-              discardDataDir(table, dvRel); throw e
-            }
-          val committed = commitLoopEx(table, "update",
-            dv = base => carryDv(base) :+ dvRel) { base =>
-            if (base.map(_.version).contains(baseVersion))
-              Some((m.dataDirs :+ rel,
-                Map(rel -> st, dvRel -> countStatOf(nDv)),
-                Map.empty[String, String]))
-            else None // head moved: matched set is stale, recompute
-          }
-          if (committed.isEmpty) {
-            discardDataDir(table, dvRel)
-            discardDataDir(table, rel)
-          }
-          committed.isDefined
-        }
-      }
-      if (done) return
-      attempts += 1
-    }
-    throw new IllegalStateException(
-      s"updateWhereVectors('$table') lost the commit race 10 times")
-  }
-
-  /** Delta MERGE with deletion vectors (source wins on key match):
-    * mask the target rows whose keys appear in `source`, append the
-    * source as one new dir — ONE commit costing O(|source| +
-    * matched positions), no snapshot rewrite, same result as the
-    * rewrite-based [[upsert]] (spec-asserted equal). Degenerates to a
-    * plain append when no keys match (insert-only merge: no DV dir
-    * committed). The daily-upsert loop at 100 TB: each batch costs
-    * the batch, not the table. */
-  def upsertVectors(spark: SparkSession, source: DataFrame,
-      table: String, keys: Seq[String]): Unit = {
-    requireWritable(table)
-    var attempts = 0
-    while (attempts < 10) {
-      val baseVersion = latestVersion(table)
-      val m = manifest(table, baseVersion)
-      val dvRel = s"data/${java.util.UUID.randomUUID()}"
-      val dvAbs = s"${tableDir(table)}/$dvRel"
-      val nDv = writeCounted(scan(spark, table, m.copy(dvDirs = Nil))
-        .withColumn(DvPath, relFilePath)
-        .withColumn(DvPos, col("_metadata.row_index"))
-        .transform(df =>
-          if (Option(m.dvDirs).forall(_.isEmpty)) df
-          else dvSubtract(spark, table, m, df))
-        .join(broadcast(source.select(keys.map(col): _*).distinct()),
-          keys, "left_semi")
-        .select(col(DvPath), col(DvPos)), dvAbs)
-      val anyMatch = nDv > 0L
-      if (!anyMatch) discardDataDir(table, dvRel)
-      val (rel, st) =
-        try writeDataDir(source, table)
-        catch { case e: Throwable =>
-          if (anyMatch) discardDataDir(table, dvRel); throw e
-        }
-      val committed = commitLoopEx(table, "merge",
-        dv = base =>
-          if (anyMatch) carryDv(base) :+ dvRel else carryDv(base)) { base =>
-        if (base.map(_.version).contains(baseVersion))
-          Some((m.dataDirs :+ rel,
-            Map(rel -> st) ++
-              (if (anyMatch) Map(dvRel -> countStatOf(nDv)) else Map.empty),
-            Map.empty[String, String]))
-        else None // head moved: matched mask is stale, recompute
-      }
-      if (committed.isDefined) return
-      if (anyMatch) discardDataDir(table, dvRel)
-      discardDataDir(table, rel)
-      attempts += 1
-    }
-    throw new IllegalStateException(
-      s"upsertVectors('$table') lost the commit race 10 times")
+    if (counts.forall(_.isDefined)) Some(counts.flatten.sum) else None
   }
 
   /** Delta DELETE: drop rows matching `predicate` as a snapshot
@@ -1162,7 +862,7 @@ final class VersionedTableIO private[graft] (root: String,
     requireWritable(table)
     val target = manifest(table, toVersion)
     val now = System.currentTimeMillis()
-    (target.dataDirs ++ Option(target.dvDirs).getOrElse(Nil)).foreach { d =>
+    target.dataDirs.foreach { d =>
       // layer 0: rel dirs may be nested (data/<uuid>/__zb=k); the
       // vacuum candidate is the 2-segment data/<uuid> root — touch it
       val root = d.split("/").take(2).mkString("/")
@@ -1174,14 +874,13 @@ final class VersionedTableIO private[graft] (root: String,
     }
     Option(target.strStats).getOrElse(Map.empty)
       .foreach { case (d, st) => pendingStrStats.put(d, st) }
-    val dvs = Option(target.dvDirs).getOrElse(Nil)
-    val committed = commitLoopEx(table, "restore", _ => dvs) { _ =>
+    val committed = commitLoopEx(table, "restore") { _ =>
       require(manifestFile(table, toVersion).exists(),
         s"cannot restore '$table' to $toVersion: version was vacuumed " +
           "during the restore")
       Some((target.dataDirs, target.stats, Map.empty[String, String]))
     }.get
-    val missing = (target.dataDirs ++ dvs)
+    val missing = target.dataDirs
       .filterNot(d => new File(s"${tableDir(table)}/$d").exists())
     if (missing.nonEmpty) {
       // layer 3: the race landed — repair the head, then fail loudly.
@@ -1200,8 +899,7 @@ final class VersionedTableIO private[graft] (root: String,
         // the pre-restore state here would clobber that newer commit
         // (it would survive only as a non-head version). In that case
         // abort the rollback build and just throw.
-        commitLoopEx(table, "restore-rollback",
-          _ => Option(p.dvDirs).getOrElse(Nil))(base =>
+        commitLoopEx(table, "restore-rollback")(base =>
           if (base.exists(_.version == committed.version))
             Some((p.dataDirs, p.stats, Map.empty[String, String]))
           else None)
@@ -1251,23 +949,13 @@ final class VersionedTableIO private[graft] (root: String,
     // violating dir after our validation scan but before our property
     // commit — Delta detects this as a metadata conflict and fails one
     // side. Here the commit lands only if the head hasn't moved since
-    // the scan; when it has, only the dirs ADDED since are re-scanned.
-    // Data dirs are immutable, but a dir-name verdict alone is NOT
-    // stable: validation reads through the head's deletion vectors, and
-    // a concurrent restore() can re-commit the same dir names with
-    // FEWER dvDirs — re-exposing a violating row that was masked when
-    // we scanned. So verdicts are additionally keyed on the DV set
-    // they were computed under: whenever the head's dvDirs is not a
-    // superset of the one validated against, every verdict resets.
+    // the scan; when it has, only the dirs ADDED since are re-scanned
+    // (data dirs are immutable, so a dir's verdict stays valid — also
+    // when a concurrent restore() re-commits dirs validated earlier).
     var validated = Set.empty[String]
-    var validatedDvs = Option.empty[Set[String]]
     var attempts = 0
     while (attempts < 10) {
       val head = latestManifest(table)
-      val headDvs = head.map(m =>
-        Option(m.dvDirs).getOrElse(Nil).toSet).getOrElse(Set.empty)
-      if (validatedDvs.exists(v => !v.subsetOf(headDvs)))
-        validated = Set.empty // masks removed: prior verdicts are stale
       val toCheck = head.map(m =>
         m.dataDirs.filterNot(validated)).getOrElse(Nil)
       head.filter(_ => toCheck.nonEmpty).foreach { m =>
@@ -1275,8 +963,7 @@ final class VersionedTableIO private[graft] (root: String,
         // vacuously satisfied (rows surface it as null once schema
         // evolution introduces it) — Delta refuses these; accepting is
         // the evolution-friendly divergence, enforced the moment a
-        // batch actually carries the column. DV masks apply: a
-        // violating row already deleted by position doesn't block.
+        // batch actually carries the column.
         val bad =
           try Some(scan(spark, table, m.copy(dataDirs = toCheck))
             .filter(!coalesce(expr(predicate), lit(true))).count())
@@ -1286,7 +973,6 @@ final class VersionedTableIO private[graft] (root: String,
             s"violate ($predicate)"))
       }
       validated ++= toCheck
-      validatedDvs = Some(headDvs)
       val headVersion = head.map(_.version)
       val committed = commitLoopEx(table, "setProperty") { base =>
         if (base.map(_.version) != headVersion)
@@ -1399,10 +1085,8 @@ final class VersionedTableIO private[graft] (root: String,
         // IllegalArgumentException: the delete can also land BETWEEN
         // manifest()'s exists() check and its readValue, which
         // surfaces as FileNotFoundException/IOException instead
-        try {
-          val m = manifest(table, v)
-          m.dataDirs ++ Option(m.dvDirs).getOrElse(Nil)
-        } catch { case NonFatal(_) => Nil }
+        try manifest(table, v).dataDirs
+        catch { case NonFatal(_) => Nil }
       }.toSet
     val dataDir = new File(dataRoot(table))
     val candidates = Option(dataDir.listFiles()).getOrElse(Array.empty)
@@ -1443,10 +1127,6 @@ final class VersionedTableIO private[graft] (root: String,
     * contract as Delta's generated manifests). */
   def exportManifest(table: String, version: Long): Seq[String] = {
     val m = manifest(table, version)
-    require(Option(m.dvDirs).forall(_.isEmpty),
-      s"version $version of '$table' has live deletion vectors — a " +
-        "plain-parquet reader would resurrect deleted rows; run a " +
-        "rewrite (compact) to materialize them first")
     val files = m.dataDirs.flatMap { d =>
       val dir = new File(s"${tableDir(table)}/$d")
       Option(dir.listFiles((_, n) => n.endsWith(".parquet")))
@@ -1549,14 +1229,6 @@ object VersionedTableIO {
   val PropGeneratedPrefix = "generated."
   /** Reserved stats key: per-dir row count (stored as [n, n]). */
   val CountStat = "__count"
-  /** Deletion-vector column names: table-relative file path + row
-    * index within that file. */
-  val DvPath = "__dv_path"
-  val DvPos = "__dv_pos"
-  /** Max deletion-vector positions to BROADCAST on read; larger (or
-    * unknown-size) vectors anti-join via shuffled hash join instead
-    * (see [[VersionedTableIO.dvSubtract]]). */
-  val DvBroadcastMaxRows: Long = 1L << 20
   private val mapper: ObjectMapper = {
     val m = new ObjectMapper()
     m.registerModule(DefaultScalaModule)

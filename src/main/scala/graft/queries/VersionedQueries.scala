@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.QueryDef
 import graft.core.{Money, Tables}
-import graft.ingest.VersionedTableIO
+import graft.ingest.{DeltaLakeDml, DeltaLakeMaintain, DeltaLakeRead, DeltaLakeWrite, VersionedTableIO}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
@@ -11,10 +11,12 @@ import org.apache.spark.sql.functions._
   * ACID upsert, VACUUM: alphavantage/bronze2_to_silver.py:142-152,
   * uber/drop_dup.py:97), re-expressed over [[VersionedTableIO]].
   *
-  * Both queries BUILD a versioned table from `orders` with a fixed
-  * commit sequence (overwrite → append → merge-upsert), so every
-  * snapshot is a deterministic function of the source table and the
-  * whole version history is DuckDB-oracle-checkable. */
+  * Every query BUILDS its table from `orders` with a fixed commit
+  * sequence (overwrite → append → merge-upsert, …), so every snapshot
+  * is a deterministic function of the source table and the whole
+  * version history is DuckDB-oracle-checkable. The deletion-vector
+  * queries (q152's `dvt` row, q156–q160) run on Delta tables
+  * ([[deltaRoot]]); the rest on the versioned format ([[builtRoot]]). */
 object VersionedQueries {
 
   /** Per-sfDir built-once root: commit sequence
@@ -90,18 +92,6 @@ object VersionedQueries {
       io.deleteWhere(s, "dml", col("o_orderkey") % 5 === 4)
       io.updateWhere(s, "dml", col("o_orderkey") % 5 === 0,
         Map("o_totalprice" -> (col("o_totalprice") + 500.0)))
-      // "opt": one big commit + three small appends, a DV delete whose
-      // positions span the big dir AND the small tail, then bin-packing
-      // OPTIMIZE at 30% of the table — only the small tail packs (the
-      // big dir rides through untouched), the pack materializes the
-      // small-dir deletes, and the carried vector is rewritten down to
-      // the big-dir positions so metadata rowCount stays exact (q156)
-      io.overwrite(orders.filter(col("o_orderkey") % 7 <= 3), "opt")
-      io.append(orders.filter(col("o_orderkey") % 7 === 4), "opt")
-      io.append(orders.filter(col("o_orderkey") % 7 === 5), "opt")
-      io.append(orders.filter(col("o_orderkey") % 7 === 6), "opt")
-      io.deleteWhereVectors(s, "opt", col("o_orderkey") % 11 === 7)
-      io.compactSmall(s, "opt", minRows = (orders.count() * 3) / 10)
       // "prs": STRING-stats pruning — a date-string column over three
       // month-range commits; a bounded dt predicate must scan one dir
       val dated = orders.select(col("o_orderkey"), col("o_totalprice"),
@@ -121,23 +111,6 @@ object VersionedQueries {
       io.append(orders.filter(col("o_orderkey") % 3000 >= 1000 &&
         col("o_orderkey") % 3000 < 2000), "gen")
       io.append(orders.filter(col("o_orderkey") % 3000 >= 2000), "gen")
-      // "dvt": DELETE via deletion vectors — two stacking deletes, not
-      // one data file rewritten (q157 carries the dir-identity proof)
-      io.overwrite(orders, "dvt")
-      io.deleteWhereVectors(s, "dvt", col("o_orderkey") % 4 === 3)
-      io.deleteWhereVectors(s, "dvt", col("o_orderkey") % 10 === 6)
-      // "dvu": UPDATE via deletion vectors — mask matched rows, append
-      // their updated images, one commit, no rewrite
-      io.overwrite(orders, "dvu")
-      io.updateWhereVectors(s, "dvu", col("o_orderkey") % 5 === 0,
-        Map("o_totalprice" -> (col("o_totalprice") + 500.0)))
-      // "dvm": MERGE via deletion vectors — mask matched keys, append
-      // the source batch; equals the rewrite-based upsert's answer
-      io.overwrite(orders, "dvm")
-      io.upsertVectors(s,
-        orders.filter(col("o_orderkey") % 3 <= 1)
-          .withColumn("o_totalprice", col("o_totalprice") + 1000.0),
-        "dvm", keys = Seq("o_orderkey"))
       // "con": CHECK constraint enforced on write — the violating
       // append MUST be rejected before any commit (and is: the
       // require below is load-bearing for q153's n_versions contract)
@@ -153,6 +126,73 @@ object VersionedQueries {
       require(rejected, "violating append must be rejected")
       root
     })
+
+  /** Per-sfDir built-once root of the Delta tables behind the
+    * deletion-vector queries. Their labels count from 1 like the
+    * versioned tables' versions: label = Delta version + 1.
+    *   "opt": v0 keys ≡ 0..3 (mod 7), v1–v3 keys ≡ 4, 5, 6 (one
+    *          staging job), v4 DELETE ≡ 7 (mod 11), v5 compact
+    *   "dvt": v0 all orders, v1 DELETE ≡ 3 (mod 4), v2 DELETE ≡ 6 (mod 10)
+    *   "dvu": v0 all orders, v1 UPDATE price + 500 on keys ≡ 0 (mod 5)
+    *   "dvm": v0 all orders, v1 upsert of keys ≤ 1 (mod 3) at
+    *          price + 1000 (source wins) */
+  private val deltaCache =
+    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private[queries] def deltaRoot(s: SparkSession, dir: String): String =
+    deltaCache.computeIfAbsent(dir, { d =>
+      val root =
+        java.nio.file.Files.createTempDirectory("graft_versioned_dv").toString
+      val orders = Tables.load(s, d, "orders")
+        .select("o_orderkey", "o_totalprice")
+      val k = col("o_orderkey")
+      DeltaLakeWrite.appendSliced(orders,
+        when(k % 7 <= 3, 0L).otherwise(k % 7 - 3), 4, s"$root/opt")
+      DeltaLakeDml.delete(s, s"$root/opt", "o_orderkey % 11 = 7")
+      DeltaLakeMaintain.compact(s, s"$root/opt")
+      DeltaLakeWrite.append(orders, s"$root/dvt")
+      DeltaLakeDml.delete(s, s"$root/dvt", "o_orderkey % 4 = 3")
+      DeltaLakeDml.delete(s, s"$root/dvt", "o_orderkey % 10 = 6")
+      DeltaLakeWrite.append(orders, s"$root/dvu")
+      DeltaLakeDml.update(s, s"$root/dvu", "o_orderkey % 5 = 0",
+        Map("o_totalprice" -> "o_totalprice + 500.0"))
+      DeltaLakeWrite.append(orders, s"$root/dvm")
+      DeltaLakeDml.upsert(s, s"$root/dvm",
+        orders.filter(k % 3 <= 1)
+          .withColumn("o_totalprice", col("o_totalprice") + 1000.0),
+        Seq("o_orderkey"))
+      root
+    })
+
+  /** The replayed states of Delta table `t` at labels 1..`label`. */
+  private def deltaStates(s: SparkSession, t: String,
+      label: Long): IndexedSeq[DeltaLakeRead.Snapshot] =
+    (0L until label).map(v => DeltaLakeRead.state(s, t, Some(v)))
+
+  /** The "dirs" of the last of `states`: its live files grouped by the
+    * version that first added each path. A DV re-add keeps its path,
+    * so a masked file stays in its group; the facts do not depend on
+    * how many files a write landed. */
+  private def dirsOf(
+      states: Seq[DeltaLakeRead.Snapshot]): Set[(Int, Set[String])] = {
+    val firstAdded = states.zipWithIndex
+      .flatMap { case (st, v) => st.files.map(_.path -> v) }
+      .groupMapReduce(_._1)(_._2)(math.min)
+    states.last.files.map(_.path).toSet.groupBy(firstAdded).toSet
+  }
+
+  /** How many of the commits behind `states` wrote deletion vectors. */
+  private def dvCommits(states: Seq[DeltaLakeRead.Snapshot]): Int = {
+    val dvs = states.map(_.files.flatMap(_.dv).toSet)
+    (Set.empty[graft.ingest.DeletionVectors.Descriptor] +: dvs).zip(dvs)
+      .count { case (before, after) => (after -- before).nonEmpty }
+  }
+
+  /** Metadata-only COUNT(*) of a replayed state: each live file's
+    * parquet footer row count minus its DV's cardinality — footer
+    * reads only, no Spark job. */
+  private def metaRows(t: String, st: DeltaLakeRead.Snapshot): Long =
+    st.files.map(f => DeltaLakeWrite.footerRows(new java.io.File(t, f.path)) -
+      f.dv.fold(0L)(_.cardinality)).sum
 
   /** Time travel: read versions 1..3 of the same table and aggregate
     * each — the oracle replays the commit sequence declaratively. A
@@ -449,13 +489,14 @@ object VersionedQueries {
     }.reduce(_.unionByName(_))
   }
 
-  /** Metadata-only COUNT(*): every row count below comes from
+  /** Metadata-only COUNT(*): the `tt` and `dml` counts come from
     * [[VersionedTableIO.rowCount]] — a pure manifest read, no Spark
     * job, no file opens (the history's counts from kilobytes of log,
-    * Delta's numRecords-from-stats answer shape). The `dvt` row counts
-    * THROUGH two live deletion vectors (Σdata − Σdv from the DV dirs'
-    * own count stats — deletes don't cost the metadata answer). The
-    * oracle recounts each snapshot from the source table. */
+    * Delta's numRecords-from-stats answer shape). The `dvt` row is a
+    * Delta table counted THROUGH two live deletion vectors: each live
+    * file's parquet footer row count minus its DV's cardinality
+    * ([[metaRows]]) — deletes don't cost the metadata answer either.
+    * The oracle recounts each snapshot from the source table. */
   val qMetaCount: QueryDef = QueryDef(
     "q152_meta_count",
     """SELECT 'tt' AS tbl, CAST(1 AS BIGINT) AS version,
@@ -476,9 +517,10 @@ object VersionedQueries {
       |WHERE o_orderkey % 4 <> 3 AND o_orderkey % 10 <> 6""".stripMargin) { (s, dir) =>
     import s.implicits._
     val io = new VersionedTableIO(builtRoot(s, dir))
+    val dvt = s"${deltaRoot(s, dir)}/dvt"
     val rows = ((1L to 3L).map(v => ("tt", v, io.rowCount("tt", v).get)) :+
       ("dml", 3L, io.rowCount("dml", 3L).get) :+
-      ("dvt", 3L, io.rowCount("dvt", 3L).get)).toSeq
+      ("dvt", 3L, metaRows(dvt, DeltaLakeRead.state(s, dvt, Some(2L))))).toSeq
     rows.toDF("tbl", "version", "n_rows")
   }
 
@@ -521,44 +563,64 @@ object VersionedQueries {
     io.history(s, "dml").select("version", "op", "n_rows")
   }
 
-  /** Bin-packing OPTIMIZE with live deletion vectors: after 1 big + 3
-    * small commits and a DV delete spanning both, compacting at a 30%
-    * threshold packs exactly the three-small tail into one dir and
-    * CARRIES the big dir physically untouched (the intersection
-    * contract) — O(small tail) cost, content identical. The pack
-    * materializes the small-dir deletes and rewrites the carried
-    * vector down to the big-dir positions, so the post-pack snapshot
-    * keeps ONE consolidated DV dir and the metadata-only rowCount
-    * (meta_n, zero file opens) still equals the scanned count — the
-    * oracle replays content, dir arithmetic, and both contracts. */
+  /** OPTIMIZE with live deletion vectors, on Delta: after 1 big + 3
+    * small appends (4 dirs) and a DV delete spanning all of them,
+    * [[DeltaLakeMaintain.compact]] rewrites every small or DV-bearing
+    * file — here all of them — into one file: the deletes are
+    * materialized, so no live file carries a DV, nothing is carried
+    * and one dir remains. The metadata-only count (meta_n: footer
+    * rows minus DV cardinalities, no scan) still equals the scanned
+    * count; the oracle replays content, dir arithmetic and both
+    * counts. */
   val qOptimize: QueryDef = QueryDef(
     "q156_optimize_binpack",
     s"""SELECT CAST(count(*) AS BIGINT) AS n,
       |  ${Money.moneySumSql("o_totalprice")} AS total,
-      |  CAST(4 AS INT) AS n_dirs_before, CAST(2 AS INT) AS n_dirs_after,
-      |  CAST(1 AS INT) AS n_dirs_carried,
-      |  CAST(1 AS INT) AS n_dv_dirs_after,
+      |  CAST(4 AS INT) AS n_dirs_before, CAST(1 AS INT) AS n_dirs_after,
+      |  CAST(0 AS INT) AS n_dirs_carried,
+      |  CAST(0 AS INT) AS n_dv_dirs_after,
       |  CAST(count(*) AS BIGINT) AS meta_n
       |FROM orders WHERE o_orderkey % 11 <> 7""".stripMargin) { (s, dir) =>
-    val io = new VersionedTableIO(builtRoot(s, dir))
-    val (m5, m6) = (io.manifest("opt", 5L), io.manifest("opt", 6L))
-    io.read(s, "opt")
+    val t = s"${deltaRoot(s, dir)}/opt"
+    val states = deltaStates(s, t, 6L)
+    val (before, after) = (dirsOf(states.take(5)), dirsOf(states))
+    DeltaLakeRead.snapshot(s, t)
       .agg(count(lit(1)).as("n"),
         Money.moneySum(col("o_totalprice")).as("total"))
       .select(col("n"), col("total"),
-        lit(m5.dataDirs.size).as("n_dirs_before"),
-        lit(m6.dataDirs.size).as("n_dirs_after"),
-        lit(m6.dataDirs.toSet.intersect(m5.dataDirs.toSet).size)
-          .as("n_dirs_carried"),
-        lit(m6.dvDirs.size).as("n_dv_dirs_after"),
-        lit(io.rowCount("opt", 6L).getOrElse(-1L)).as("meta_n"))
+        lit(before.size).as("n_dirs_before"),
+        lit(after.size).as("n_dirs_after"),
+        lit(after.intersect(before).size).as("n_dirs_carried"),
+        lit(states.last.files.count(_.dv.isDefined)).as("n_dv_dirs_after"),
+        lit(metaRows(t, states.last)).as("meta_n"))
   }
 
-  /** Deletion vectors: two stacked DELETEs mask rows by position in
-    * sidecar files while the data dirs ride through IDENTICAL
-    * (n_dirs_carried) — deleting k rows cost O(k) positions, not a
-    * table rewrite — and time travel to v1 still sees every row. The
-    * oracle replays both predicates and the full v1 content. */
+  /** Head and v1 of a DV-mutated Delta table, each aggregated, with
+    * its structural facts at `label` (the head) as literal columns:
+    * dirs and DV commits from [[dirsOf]]/[[dvCommits]], and the dirs
+    * carried identical from v1. */
+  private def dvScopes(s: SparkSession, t: String,
+      label: Long): org.apache.spark.sql.DataFrame = {
+    val states = deltaStates(s, t, label)
+    val dirs = dirsOf(states)
+    Seq(("head", DeltaLakeRead.snapshot(s, t)),
+        ("v1", DeltaLakeRead.snapshot(s, t, Some(0L))))
+      .map { case (scope, df) =>
+        df.agg(count(lit(1)).as("n"),
+            Money.moneySum(col("o_totalprice")).as("total"))
+          .select(lit(scope).as("scope"), col("n"), col("total"),
+            lit(dirs.size).as("n_dirs"),
+            lit(dvCommits(states)).as("n_dv_dirs"),
+            lit(dirs.intersect(dirsOf(states.take(1))).size)
+              .as("n_dirs_carried"))
+      }.reduce(_.unionByName(_))
+  }
+
+  /** Deletion vectors: two stacked DELETEs mask rows by position while
+    * the data files ride through IDENTICAL (n_dirs_carried) —
+    * deleting k rows cost O(k) positions, not a table rewrite — and
+    * time travel to v1 still sees every row. The oracle replays both
+    * predicates and the full v1 content. */
   val qDeletionVectors: QueryDef = QueryDef(
     "q157_deletion_vectors",
     s"""SELECT 'head' AS scope, CAST(count(*) AS BIGINT) AS n,
@@ -569,24 +631,14 @@ object VersionedQueries {
       |SELECT 'v1', CAST(count(*) AS BIGINT), ${Money.moneySumSql("o_totalprice")},
       |  CAST(2 AS INT), CAST(1 AS INT)
       |FROM orders""".stripMargin) { (s, dir) =>
-    val io = new VersionedTableIO(builtRoot(s, dir))
-    val (m1, m3) = (io.manifest("dvt", 1L), io.manifest("dvt", 3L))
-    val carried = m3.dataDirs.toSet.intersect(m1.dataDirs.toSet).size
-    Seq(("head", io.read(s, "dvt")), ("v1", io.readVersion(s, "dvt", 1L)))
-      .map { case (scope, df) =>
-        df.agg(count(lit(1)).as("n"),
-            Money.moneySum(col("o_totalprice")).as("total"))
-          .select(lit(scope).as("scope"), col("n"), col("total"),
-            lit(m3.dvDirs.size).as("n_dv_dirs"),
-            lit(carried).as("n_dirs_carried"))
-      }.reduce(_.unionByName(_))
+    dvScopes(s, s"${deltaRoot(s, dir)}/dvt", 3L).drop("n_dirs")
   }
 
   /** UPDATE via deletion vectors: the head shows the assignment
-    * applied, v1 the original — with the ORIGINAL data dir carried
-    * untouched (the update cost O(matched): one DV sidecar + one
-    * appended dir of updated images, n_dirs 1→2). Oracle replays the
-    * CASE form of the assignment. */
+    * applied, v1 the original — with the ORIGINAL data files carried
+    * untouched (the update cost O(matched): one DV + one new dir of
+    * updated images, n_dirs 1→2). Oracle replays the CASE form of the
+    * assignment. */
   val qDvUpdate: QueryDef = QueryDef(
     "q158_dv_update",
     s"""SELECT 'head' AS scope, CAST(count(*) AS BIGINT) AS n,
@@ -600,25 +652,14 @@ object VersionedQueries {
       |SELECT 'v1', CAST(count(*) AS BIGINT), ${Money.moneySumSql("o_totalprice")},
       |  CAST(2 AS INT), CAST(1 AS INT), CAST(1 AS INT)
       |FROM orders""".stripMargin) { (s, dir) =>
-    val io = new VersionedTableIO(builtRoot(s, dir))
-    val (m1, m2) = (io.manifest("dvu", 1L), io.manifest("dvu", 2L))
-    val carried = m2.dataDirs.toSet.intersect(m1.dataDirs.toSet).size
-    Seq(("head", io.read(s, "dvu")), ("v1", io.readVersion(s, "dvu", 1L)))
-      .map { case (scope, df) =>
-        df.agg(count(lit(1)).as("n"),
-            Money.moneySum(col("o_totalprice")).as("total"))
-          .select(lit(scope).as("scope"), col("n"), col("total"),
-            lit(m2.dataDirs.size).as("n_dirs"),
-            lit(m2.dvDirs.size).as("n_dv_dirs"),
-            lit(carried).as("n_dirs_carried"))
-      }.reduce(_.unionByName(_))
+    dvScopes(s, s"${deltaRoot(s, dir)}/dvu", 2L)
   }
 
   /** MERGE via deletion vectors: the head equals the rewrite-based
-    * upsert's answer (source wins on matched keys, inserts ride
-    * along) while the original data dir is carried untouched — the
-    * merge cost O(batch + matched positions). Same content as q115's
-    * v3, so the oracle is the same CASE replay. */
+    * upsert's answer (source wins on matched keys) while the original
+    * data files are carried untouched — the merge cost O(batch +
+    * matched positions). Same content as q115's v3 plus the ≡2 keys,
+    * so the oracle is the same CASE replay. */
   val qDvMerge: QueryDef = QueryDef(
     "q159_dv_merge",
     s"""SELECT 'head' AS scope, CAST(count(*) AS BIGINT) AS n,
@@ -632,28 +673,18 @@ object VersionedQueries {
       |SELECT 'v1', CAST(count(*) AS BIGINT), ${Money.moneySumSql("o_totalprice")},
       |  CAST(2 AS INT), CAST(1 AS INT), CAST(1 AS INT)
       |FROM orders""".stripMargin) { (s, dir) =>
-    val io = new VersionedTableIO(builtRoot(s, dir))
-    val (m1, m2) = (io.manifest("dvm", 1L), io.manifest("dvm", 2L))
-    val carried = m2.dataDirs.toSet.intersect(m1.dataDirs.toSet).size
-    Seq(("head", io.read(s, "dvm")), ("v1", io.readVersion(s, "dvm", 1L)))
-      .map { case (scope, df) =>
-        df.agg(count(lit(1)).as("n"),
-            Money.moneySum(col("o_totalprice")).as("total"))
-          .select(lit(scope).as("scope"), col("n"), col("total"),
-            lit(m2.dataDirs.size).as("n_dirs"),
-            lit(m2.dvDirs.size).as("n_dv_dirs"),
-            lit(carried).as("n_dirs_carried"))
-      }.reduce(_.unionByName(_))
+    dvScopes(s, s"${deltaRoot(s, dir)}/dvm", 2L)
   }
 
   /** Streaming CDC apply ([[graft.stream.StreamCdcApply]]): a keyed
-    * change stream drains as one DV-merge per micro-batch — batch 0
-    * seeds the table, batch 1 carries TWO change sets for overlapping
+    * change stream drains into a Delta table as one DV-merge per
+    * micro-batch — batch 0 seeds the table, batch 1 carries TWO change sets for overlapping
     * keys (seq 1: +1000 on keys ≡0,1 mod 3; seq 2: +7777 on keys ≡0
     * mod 5) so in-batch latest-wins must pick seq 2 where they
     * collide. Final content = the CASE fold the oracle replays;
-    * version count proves one commit per non-empty batch (no rewrite,
-    * no extra versions). Replay idempotence is StreamingSpec's. */
+    * version count (Delta versions 0..1) proves one commit per
+    * non-empty batch (no rewrite, no extra versions). Replay
+    * idempotence is StreamingSpec's. */
   val qStreamCdc: QueryDef = QueryDef(
     "q160_stream_cdc_apply",
     s"""SELECT CAST(count(*) AS BIGINT) AS n,
@@ -676,17 +707,16 @@ object VersionedQueries {
     val srcDir = JFiles.createTempDirectory("graft_cdc_src").toString
     // r15: both ordered micro-batch files staged from ONE job
     graft.core.StageSlices.writeBatches(Seq(b0, b1), srcDir)
-    val io = new VersionedTableIO(
-      JFiles.createTempDirectory("graft_cdc_tbl").toString)
+    val t = s"${JFiles.createTempDirectory("graft_cdc_tbl")}/t"
     graft.stream.StreamCdcApply.run(s, srcDir,
-      JFiles.createTempDirectory("graft_cdc_ck").toString, io, "t",
+      JFiles.createTempDirectory("graft_cdc_ck").toString, t,
       keys = Seq("o_orderkey"), seqCol = "seq", schema = b0.schema,
       maxFilesPerTrigger = Some(1))
-    io.read(s, "t")
+    DeltaLakeRead.snapshot(s, t)
       .agg(count(lit(1)).as("n"),
         Money.moneySum(col("o_totalprice")).as("total"))
       .select(col("n"), col("total"),
-        lit(io.versions("t").size).as("n_versions"))
+        lit((DeltaLakeRead.latestVersion(t) + 1).toInt).as("n_versions"))
   }
 
   /** GENERATED ALWAYS AS: the writer computed `bucket` on every

@@ -27,6 +27,7 @@ class DeltaDmlSpec extends AnyFunSuite {
     val t = newTable()
     DeltaLakeWrite.append((0L until 10L).map(i => (i, s"v$i"))
       .toDF("id", "v"), t)
+    val paths = DeltaLakeRead.state(spark, t).files.map(_.path).toSet
     val r = DeltaLakeDml.delete(spark, t, "id % 3 = 0")
     assert(r.version === 1L)
     assert(r.rowsDeleted === 4L) // 0,3,6,9
@@ -41,6 +42,8 @@ class DeltaDmlSpec extends AnyFunSuite {
     assert(st.writerFeatures.contains("invariants"))
     assert(st.config.get("delta.enableDeletionVectors") === Some("true"))
     assert(st.files.exists(_.dv.isDefined))
+    // no data file was rewritten: the same files, some now masked
+    assert(st.files.map(_.path).toSet.subsetOf(paths))
     assert(st.tombstones.nonEmpty, "the pre-DV add must be tombstoned")
     // no-match delete is a no-op, no empty commit
     val r2 = DeltaLakeDml.delete(spark, t, "id > 100")
@@ -91,13 +94,30 @@ class DeltaDmlSpec extends AnyFunSuite {
       .as[(Long, Long)].collect().sortBy(_._1).toSeq
     assert(got === Seq((0L, 0L), (1L, 10L), (2L, 20L), (3L, 30L),
       (4L, 44L), (5L, 55L)))
+    // a second UPDATE re-masks rows the first one wrote: the file the
+    // first landed keeps a live row and gains a DV of its own
+    val t2 = newTable()
+    DeltaLakeWrite.append((0L until 6L).map(i => (i, i * 10L))
+      .toDF("id", "amt").repartition(1), t2)
+    DeltaLakeDml.update(spark, t2, "id >= 3", Map("amt" -> "amt + 1000"))
+    val landed = DeltaLakeRead.state(spark, t2).files.filter(_.dv.isEmpty)
+      .map(_.path).toSet
+    val r2 = DeltaLakeDml.update(spark, t2, "id >= 4",
+      Map("amt" -> "amt - 1000"))
+    assert(r2.rowsDeleted === 2L && r2.rowsInserted === 2L)
+    assert(DeltaLakeRead.state(spark, t2).files.filter(f => landed(f.path))
+      .flatMap(_.dv).map(_.cardinality).sum === 2L)
+    assert(DeltaLakeRead.snapshot(spark, t2).as[(Long, Long)].collect()
+      .sortBy(_._1).toSeq === Seq((0L, 0L), (1L, 10L), (2L, 20L),
+        (3L, 1030L), (4L, 40L), (5L, 50L)))
   }
 
   test("upsert: WHEN MATCHED UPDATE ALL / WHEN NOT MATCHED INSERT " +
       "ALL on keys; duplicate source keys reject") {
     val t = newTable()
-    DeltaLakeWrite.append(Seq((1L, "a", 10L), (2L, "b", 20L),
-      (3L, "c", 30L)).toDF("id", "v", "amt"), t)
+    val base = Seq((1L, "a", 10L), (2L, "b", 20L), (3L, "c", 30L))
+      .toDF("id", "v", "amt")
+    DeltaLakeWrite.append(base, t)
     val src = Seq((2L, "B2", 200L), (9L, "NEW", 900L))
       .toDF("id", "v", "amt")
     val r = DeltaLakeDml.upsert(spark, t, src, Seq("id"))
@@ -106,6 +126,17 @@ class DeltaDmlSpec extends AnyFunSuite {
       .as[(Long, String, Long)].collect().sortBy(_._1).toSeq
     assert(got === Seq((1L, "a", 10L), (2L, "B2", 200L), (3L, "c", 30L),
       (9L, "NEW", 900L)))
+    // row for row the copy-on-write TableIO.upsert answer
+    val cow = new graft.ingest.ParquetTableIO(newTable())
+    cow.overwrite(base, "t")
+    cow.upsert(spark, src, "t", Seq("id"))
+    assert(cow.read(spark, "t").select("id", "v", "amt")
+      .as[(Long, String, Long)].collect().sortBy(_._1).toSeq === got)
+    // an insert-only upsert masks nothing
+    val r3 = DeltaLakeDml.upsert(spark, t,
+      Seq((10L, "I", 1L)).toDF("id", "v", "amt"), Seq("id"))
+    assert(r3.rowsDeleted === 0L && r3.filesChanged === 0 &&
+      r3.rowsInserted === 1L)
     val dup = Seq((1L, "x", 1L), (1L, "y", 2L)).toDF("id", "v", "amt")
     val e = intercept[IllegalArgumentException] {
       DeltaLakeDml.upsert(spark, t, dup, Seq("id"))
@@ -673,9 +704,13 @@ class DeltaDmlSpec extends AnyFunSuite {
   private def persisted: Set[Int] =
     spark.sparkContext.getPersistentRDDs.keySet.toSet
 
-  private def dvBins(t: String): Set[String] =
-    new java.io.File(t).listFiles().map(_.getName)
-      .filter(_.endsWith(".bin")).toSet
+  /** Every DV `.bin` under the table, prefix directories included. */
+  private def dvBins(t: String): Set[String] = {
+    def walk(d: java.io.File): Seq[java.io.File] =
+      Option(d.listFiles()).getOrElse(Array.empty).toSeq.flatMap(f =>
+        if (f.isDirectory) walk(f) else Seq(f))
+    walk(new java.io.File(t)).map(_.getPath).filter(_.endsWith(".bin")).toSet
+  }
 
   test("UPDATE on a CDF table evaluates SET once: the table's new " +
       "values are the change feed's postimages") {
@@ -717,6 +752,55 @@ class DeltaDmlSpec extends AnyFunSuite {
     assert(e.getMessage.contains("boom"), e.getMessage)
     assert(dvBins(t) === bins, "the attempt's DV files must be deleted")
     assert(DeltaLakeRead.latestVersion(t) === version)
+    assert(ids(t) === before)
+    assert(persisted -- pinned === Set.empty, "the failure left pins")
+  }
+
+  test("a DV job that fails partway takes back the bins its other tasks " +
+      "wrote: no new .bin, the snapshot as it was, no pins left") {
+    import org.apache.spark.sql.functions.col
+    val t = newTable()
+    val root = new java.io.File(t)
+    // eight healthy 10-row files, then one whose 4-row footer sits
+    // under an 8-row DV: its task refuses while the others write DVs
+    val stage = new java.io.File(root, ".stage")
+    (100L until 180L).toDF("id").withColumn("v", col("id").cast("string"))
+      .repartition(8).write.parquet(stage.getPath)
+    Seq((0L, "a"), (1L, "b"), (2L, "c"), (3L, "d")).toDF("id", "v")
+      .coalesce(1).write.parquet(new java.io.File(stage, "bad").getPath)
+    val parts = (stage.listFiles() ++ new java.io.File(stage, "bad")
+      .listFiles()).filter(_.getName.endsWith(".parquet")).toSeq
+    val data = parts.zipWithIndex.map { case (p, i) =>
+      val f = new java.io.File(root, s"part-$i.parquet")
+      Files.move(p.toPath, f.toPath); f
+    }
+    val dv = graft.ingest.DeletionVectors.writeFile(root,
+      (1L to 8L).toArray)
+    val schema = new com.fasterxml.jackson.databind.ObjectMapper()
+      .writeValueAsString(Seq((0L, "")).toDF("id", "v").schema.json)
+    def add(f: java.io.File, dvJson: String) =
+      s"""{"add":{"path":"${f.getName}","partitionValues":{},"size":${f.length},"modificationTime":0,"dataChange":true$dvJson}}"""
+    val log = new java.io.File(root, "_delta_log"); log.mkdirs()
+    Files.write(new java.io.File(log, f"${0L}%020d.json").toPath, (Seq(
+      """{"protocol":{"minReaderVersion":3,"minWriterVersion":7,"readerFeatures":["deletionVectors"],"writerFeatures":["deletionVectors"]}}""",
+      s"""{"metaData":{"id":"partial","format":{"provider":"parquet","options":{}},"schemaString":$schema,"partitionColumns":[],"configuration":{"delta.enableDeletionVectors":"true"}}}""") ++
+      data.init.map(add(_, "")) :+
+      add(data.last, s""","deletionVector":{"storageType":"u","pathOrInlineDv":"${dv.pathOrInlineDv}","offset":${dv.offset.get},"sizeInBytes":${dv.sizeInBytes},"cardinality":${dv.cardinality}}"""))
+      .mkString("\n").getBytes("UTF-8"))
+    val (bins, before) = (dvBins(t), ids(t))
+    assert(before.size === 81)
+    val pinned = persisted
+    val e = intercept[Exception](
+      DeltaLakeDml.delete(spark, t, "id % 10 = 0"))
+    assert(e.getMessage.contains("fewer than the 8 its deletion vector"),
+      e.getMessage)
+    // a task still running when the job failed drops its own bin
+    // once it sees the attempt marked aborted
+    val deadline = System.currentTimeMillis() + 10000L
+    while (dvBins(t) != bins && System.currentTimeMillis() < deadline)
+      Thread.sleep(50)
+    assert(dvBins(t) === bins, "the failed attempt's DV bins must be deleted")
+    assert(DeltaLakeRead.latestVersion(t) === 0L)
     assert(ids(t) === before)
     assert(persisted -- pinned === Set.empty, "the failure left pins")
   }

@@ -160,26 +160,30 @@ class StreamingSpec extends AnyFunSuite {
         StandardCopyOption.REPLACE_EXISTING)
       dst.toFile.setLastModified(t0 + i * 120000L)
     }
-    def drain(): (graft.ingest.VersionedTableIO, Seq[(Long, Long)]) = {
-      val io = new graft.ingest.VersionedTableIO(tmp("dvcdc_tbl"))
-      graft.stream.StreamCdcApply.run(spark, src, tmp("dvcdc_ck"), io,
-        "t", keys = Seq("k"), seqCol = "seq", schema = b0.schema,
+    def drain(): (String, Seq[(Long, Long)]) = {
+      val t = s"${tmp("dvcdc_tbl")}/t"
+      graft.stream.StreamCdcApply.run(spark, src, tmp("dvcdc_ck"), t,
+        keys = Seq("k"), seqCol = "seq", schema = b0.schema,
         maxFilesPerTrigger = Some(1))
-      (io, io.read(spark, "t").orderBy("k").as[(Long, Long)]
-        .collect().toSeq)
+      (t, graft.ingest.DeltaLakeRead.snapshot(spark, t).orderBy("k")
+        .as[(Long, Long)].collect().toSeq)
     }
-    val (io1, got) = drain()
+    val (t1, got) = drain()
     val expect = (0L until 100L).map { k =>
       if (k < 5) (k, 7L)
       else if (k % 10 == 0) (k, k + 1000L)
       else (k, k)
     }
     assert(got === expect)
-    // one commit per batch: v1 append + v2 DV-merge, original dir carried
-    assert(io1.versions("t") == Seq(1L, 2L))
-    assert(io1.manifest("t", 2L).dataDirs.head ==
-      io1.manifest("t", 1L).dataDirs.head)
-    assert(io1.manifest("t", 2L).dvDirs.size == 1)
+    // one commit per batch: v0 append + v1 DV-merge; v0's files are all
+    // carried into v1, the 14 changed keys masked by their DVs
+    import graft.ingest.DeltaLakeRead
+    assert(DeltaLakeRead.latestVersion(t1) == 1L)
+    val (v0, v1) = (DeltaLakeRead.state(spark, t1, Some(0L)),
+      DeltaLakeRead.state(spark, t1, Some(1L)))
+    val carried = v1.files.filter(f => v0.files.exists(_.path == f.path))
+    assert(carried.size == v0.files.size)
+    assert(carried.flatMap(_.dv).map(_.cardinality).sum == 14L)
     // full replay into a FRESH table+checkpoint: identical content
     assert(drain()._2 === expect)
   }

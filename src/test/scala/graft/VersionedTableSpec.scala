@@ -31,6 +31,38 @@ class VersionedTableSpec extends AnyFunSuite {
     assert(io.history("t").map(_.op) == Seq("overwrite", "append", "overwrite"))
   }
 
+  /** Hand-write manifest `version` of `table` as an earlier build did,
+    * with a `dvDirs` field, over the data dirs of version 1. */
+  private def writeOldManifest(io: VersionedTableIO, root: String,
+      table: String, version: Long, dvDirs: String): Unit = {
+    val dirs = io.manifest(table, 1L).dataDirs.map(d => s"\"$d\"")
+    java.nio.file.Files.write(
+      new File(s"$root/$table/_graft_log", f"$version%020d.json").toPath,
+      (s"""{"version":$version,"ts":0,"op":"delete",""" +
+        s""""dataDirs":[${dirs.mkString(",")}],"properties":{},""" +
+        s""""stats":{},"dvDirs":$dvDirs,"strStats":{}}""").getBytes("UTF-8"))
+  }
+
+  test("a manifest an earlier build wrote with an empty dvDirs reads as " +
+      "before") {
+    val (io, root) = freshIo()
+    io.overwrite(spark.range(0, 10).toDF("id"), "t")
+    writeOldManifest(io, root, "t", 2L, "[ ]")
+    assert(io.manifest("t", 2L).dataDirs == io.manifest("t", 1L).dataDirs)
+    assert(io.read(spark, "t").count() == 10)
+  }
+
+  test("a manifest with deletion-vector dirs is refused, naming the " +
+      "table and version — never read without its masks") {
+    val (io, root) = freshIo()
+    io.overwrite(spark.range(0, 10).toDF("id"), "t")
+    writeOldManifest(io, root, "t", 2L, """["data/dv-0"]""")
+    val e = intercept[IllegalStateException](io.read(spark, "t"))
+    assert(e.getMessage.contains("version 2 of 't'"), e.getMessage)
+    assert(e.getMessage.contains("data/dv-0"), e.getMessage)
+    assert(io.readVersion(spark, "t", 1L).count() == 10)
+  }
+
   test("crash consistency: a data dir without a manifest is invisible") {
     val (io, root) = freshIo()
     io.overwrite(Seq((1, "a")).toDF("k", "v"), "t")
@@ -558,166 +590,13 @@ class VersionedTableSpec extends AnyFunSuite {
     assert(io.read(spark, "t").count() == 6)
   }
 
-  test("deletion vectors: DELETE touches no data file; deletes stack " +
-      "and time-travel away; no-match commits nothing; rewrite " +
-      "materializes; clone keeps deletes; vacuum respects DV dirs") {
-    import org.apache.spark.sql.functions.col
-    val (io, root) = freshIo()
-    io.overwrite(spark.range(0, 1000).toDF("id"), "t")
-    def dataFiles(): Set[String] = {
-      val s = java.nio.file.Files.walk(java.nio.file.Paths.get(s"$root/t"))
-      try {
-        import scala.jdk.CollectionConverters._
-        s.iterator().asScala.map(_.toString)
-          .filter(_.endsWith(".parquet")).toSet
-      } finally s.close()
-    }
-    val before = dataFiles()
-    io.deleteWhereVectors(spark, "t", col("id") % 10 === 0)
-    assert(io.read(spark, "t").count() == 900)
-    // every original data file still present, untouched set + DV files
-    assert(dataFiles().intersect(before) == before)
-    assert(io.manifest("t", 2L).dataDirs == io.manifest("t", 1L).dataDirs)
-    // stacking: second delete over an overlapping predicate
-    io.deleteWhereVectors(spark, "t", col("id") < 100)
-    assert(io.read(spark, "t").count() == 810)
-    assert(io.manifest("t", 3L).dvDirs.size == 2)
-    // time travel sees through the masks version by version
-    assert(io.readVersion(spark, "t", 1L).count() == 1000)
-    assert(io.readVersion(spark, "t", 2L).count() == 900)
-    // no-match delete: no version consumed
-    io.deleteWhereVectors(spark, "t", col("id") === -5)
-    assert(io.latestVersion("t") == 3L)
-    // metadata-only count holds THROUGH live DVs (Σdata − Σdv from the
-    // DV dirs' own count stats); export still refuses — a plain
-    // parquet reader would resurrect the masked rows
-    assert(io.rowCount("t", 3L).contains(810L))
-    assert(io.rowCount("t", 2L).contains(900L))
-    intercept[IllegalArgumentException] { io.exportManifest("t", 3L) }
-    // clone: relative DV keys keep masking under the new root
-    io.cloneTable("t", "c")
-    assert(io.read(spark, "c").count() == 810)
-    // rewrite materializes the deletes and clears the vectors
-    io.compact(spark, "t", numFiles = 2)
-    val head = io.latestVersion("t")
-    assert(io.manifest("t", head).dvDirs.isEmpty)
-    assert(io.read(spark, "t").count() == 810)
-    assert(io.rowCount("t", head).contains(810L))
-    // vacuum to the materialized head sweeps old data AND dv dirs;
-    // content intact
-    assert(io.vacuum("t", retainLast = 1, orphanGraceMs = 0L) > 0)
-    assert(io.read(spark, "t").count() == 810)
-  }
-
-  test("DV update: mask+append in one commit at O(matched); stacks on " +
-      "its own images; CHECK constraints still guard the appended dir") {
-    import org.apache.spark.sql.functions.{col, lit, sum}
-    val (io, _) = freshIo()
-    io.overwrite(spark.range(0, 1000).toDF("id")
-      .withColumn("v", col("id") * lit(1L)), "t")
-    io.updateWhereVectors(spark, "t", col("id") % 2 === 0,
-      Map("v" -> (col("v") + 1000000L)))
-    def total(): Long = io.read(spark, "t")
-      .agg(sum(col("v"))).first().getLong(0)
-    val base = (0L until 1000L).sum
-    assert(io.read(spark, "t").count() == 1000)
-    assert(total() == base + 500L * 1000000L)
-    assert(io.manifest("t", 2L).dataDirs.size == 2 &&
-      io.manifest("t", 2L).dvDirs.size == 1)
-    // second update hits rows APPENDED by the first (stacking)
-    io.updateWhereVectors(spark, "t", col("v") >= 1000000L,
-      Map("v" -> (col("v") - 1000000L)))
-    assert(total() == base && io.read(spark, "t").count() == 1000)
-    // no-match: no commit
-    io.updateWhereVectors(spark, "t", col("id") === -1,
-      Map("v" -> lit(0L)))
-    assert(io.latestVersion("t") == 3L)
-    // a CHECK-violating update aborts whole: no version, no dv leak
-    io.addConstraint(spark, "t", "vpos", "v >= 0")
-    intercept[IllegalStateException] {
-      io.updateWhereVectors(spark, "t", col("id") === 7,
-        Map("v" -> lit(-1L)))
-    }
-    assert(io.latestVersion("t") == 4L) // 4 = the addConstraint commit
-    assert(total() == base)
-  }
-
-  test("DV merge: equals the rewrite-based upsert row for row; " +
-      "insert-only merge commits no DV dir; stacks over prior deletes") {
-    import org.apache.spark.sql.functions.col
-    val (io, _) = freshIo()
-    val base = spark.range(0, 500).toDF("k")
-      .withColumn("v", col("k") * 10L)
-    val src = spark.range(200, 700).toDF("k")
-      .withColumn("v", col("k") * 10L + 1L)
-    io.overwrite(base, "a"); io.upsert(spark, src, "a", Seq("k"))
-    io.overwrite(base, "b"); io.upsertVectors(spark, src, "b", Seq("k"))
-    def rows(t: String) = io.read(spark, t).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(rows("a") == rows("b") && rows("b").size == 700)
-    // the DV merge rewrote nothing: original dir carried
-    assert(io.manifest("b", 2L).dataDirs.head ==
-      io.manifest("b", 1L).dataDirs.head)
-    assert(io.manifest("b", 2L).dvDirs.size == 1)
-    // insert-only merge (disjoint keys): plain append, no DV dir
-    io.upsertVectors(spark,
-      spark.range(1000, 1100).toDF("k").withColumn("v", lit(0L)), "b",
-      Seq("k"))
-    assert(io.manifest("b", 3L).dvDirs.size == 1) // unchanged
-    assert(io.read(spark, "b").count() == 800)
-    // stacks over a prior DV delete
-    io.deleteWhereVectors(spark, "b", col("k") < 100)
-    io.upsertVectors(spark,
-      spark.range(50, 150).toDF("k").withColumn("v", lit(7L)), "b",
-      Seq("k"))
-    // 800 − 100 deleted − 50 masked (100..149 matched; 50..99 were
-    // already gone so nothing to mask) + 100 appended = 750
-    assert(io.read(spark, "b").count() == 750)
-    assert(io.read(spark, "b").filter(col("v") === 7L).count() == 100)
-  }
-
-  test("DV read plan: the position mask applies as a BROADCAST " +
-      "left-anti join — no table shuffle for masked reads") {
-    import org.apache.spark.sql.functions.col
-    val (io, _) = freshIo()
-    io.overwrite(spark.range(0, 50000).toDF("id"), "t")
-    io.deleteWhereVectors(spark, "t", col("id") % 1000 === 0)
-    val plan = io.read(spark, "t").queryExecution.executedPlan.toString
-    assert(plan.contains("BroadcastHashJoin") &&
-      plan.contains("LeftAnti"), plan.take(2000))
-    assert(!plan.contains("SortMergeJoin"), plan.take(2000))
-    assert(io.read(spark, "t").count() == 49950)
-  }
-
-  test("DV mass delete: above the broadcast threshold the position mask " +
-      "applies as a SHUFFLED hash join — no broadcast of the full " +
-      "position set, content identical") {
-    import org.apache.spark.sql.functions.col
-    val (io, root) = freshIo()
-    io.overwrite(spark.range(0, 50000).toDF("id"), "t")
-    // mask half the table — with the guard forced low, the read plan
-    // must NOT broadcast (a 1B-row mask at 100 TB would OOM the driver)
-    io.deleteWhereVectors(spark, "t", col("id") % 2 === 0)
-    val low = new VersionedTableIO(root, graft.ingest.LocalLinkBackend, 1000L)
-    val df = low.read(spark, "t")
-    val plan = df.queryExecution.executedPlan.toString
-    assert(!plan.contains("BroadcastHashJoin"), plan.take(2000))
-    assert(plan.contains("LeftAnti"), plan.take(2000))
-    assert(df.count() == 25000)
-    // pruned reads route through the same guarded subtract
-    assert(low.readPruned(spark, "t", "id", 0, 99).count() == 50)
-    // with the default threshold the same table broadcasts again
-    val plan2 = io.read(spark, "t").queryExecution.executedPlan.toString
-    assert(plan2.contains("BroadcastHashJoin"), plan2.take(2000))
-  }
-
   test("z-order guards: empty/all-masked snapshots are a no-op (never " +
       "an unreadable head); non-numeric cluster columns are refused") {
     import org.apache.spark.sql.functions.{col, lit}
     val (io, _) = freshIo()
-    // all rows masked by a DV: the rewrite would materialize ZERO dirs
+    // every row deleted: the rewrite would materialize ZERO dirs
     io.overwrite(spark.range(0, 100).toDF("id"), "t")
-    io.deleteWhereVectors(spark, "t", lit(true))
+    io.deleteWhere(spark, "t", lit(true))
     assert(io.read(spark, "t").count() == 0)
     val v = io.latestVersion("t")
     io.compactZOrder(spark, "t", Seq("id"), numDirs = 4) // must no-op
@@ -763,26 +642,6 @@ class VersionedTableSpec extends AnyFunSuite {
     assert(io.properties("t").get("comment").contains("hello"))
   }
 
-  test("concurrent DV deletes: two writers race; the loser recomputes " +
-      "against the new head — both deletes land, none lost; pruned " +
-      "reads stay DV-correct") {
-    import org.apache.spark.sql.functions.col
-    val (io, _) = freshIo()
-    io.overwrite(spark.range(0, 10000).toDF("id"), "t")
-    var err: Option[Throwable] = None
-    val ts = Seq(0, 1).map(r => new Thread(() =>
-      try io.deleteWhereVectors(spark, "t", col("id") % 10 === r)
-      catch { case e: Throwable => err.synchronized { err = Some(e) } }))
-    ts.foreach(_.start()); ts.foreach(_.join())
-    assert(err.isEmpty, err.map(_.toString).getOrElse(""))
-    assert(io.read(spark, "t").count() == 8000)
-    assert(io.latestVersion("t") == 3L)
-    assert(io.manifest("t", 3L).dvDirs.size == 2)
-    // stats pruning composes with the DV mask: a pruned read still
-    // subtracts every masked position
-    assert(io.readPruned(spark, "t", "id", 0, 99).count() == 80)
-  }
-
   test("string stats: lexicographic pruning; stats survive clone and " +
       "restore; stat-less dirs scan conservatively, never wrongly") {
     import org.apache.spark.sql.functions.{col, lit}
@@ -813,8 +672,8 @@ class VersionedTableSpec extends AnyFunSuite {
   }
 
   test("generated columns: auto-computed when absent, validated when " +
-      "provided (stale value aborts); DV update regenerating is fine, " +
-      "breaking the invariant is not") {
+      "provided (stale value aborts); an update keeping the invariant " +
+      "is fine, breaking it is not") {
     import org.apache.spark.sql.functions.{col, lit}
     val (io, _) = freshIo()
     io.createTable("t", Map("generated.b" -> "k % 10"))
@@ -829,15 +688,13 @@ class VersionedTableSpec extends AnyFunSuite {
     }
     assert(ex.getMessage.contains("generated:b"))
     assert(io.read(spark, "t").count() == 3)
-    // DV update that leaves the invariant intact commits; one that
+    // an update that leaves the invariant intact commits; one that
     // breaks it (changing k without regenerating b) aborts whole
-    io.updateWhereVectors(spark, "t", col("k") === 15,
-      Map("v" -> lit("x2")))
+    io.updateWhere(spark, "t", col("k") === 15, Map("v" -> lit("x2")))
     assert(io.read(spark, "t").filter(col("v") === "x2").count() == 1)
     val before = io.latestVersion("t")
     intercept[IllegalStateException] {
-      io.updateWhereVectors(spark, "t", col("k") === 27,
-        Map("k" -> lit(99)))
+      io.updateWhere(spark, "t", col("k") === 27, Map("k" -> lit(99)))
     }
     assert(io.latestVersion("t") == before)
   }
@@ -857,7 +714,7 @@ class VersionedTableSpec extends AnyFunSuite {
     io.overwrite(df(Vector((0, 0.0))), "t")
     history :+= Vector((0, 0.0))
     for (step <- 1 to 36) {
-      rnd.nextInt(10) match {
+      rnd.nextInt(7) match {
         case 0 =>
           val rows = freshRows()
           io.append(df(rows), "t"); history :+= (history.last ++ rows)
@@ -884,34 +741,15 @@ class VersionedTableSpec extends AnyFunSuite {
             (history.size - vacuumedBelow + 1).toInt)
           io.restore("t", target)
           history :+= history(target.toInt - 1)
-        case 6 => // DV delete: no-match commits nothing
-          val r = rnd.nextInt(5)
-          io.deleteWhereVectors(spark, "t", col("k") % 5 === r)
-          if (history.last.exists(_._1 % 5 == r))
-            history :+= history.last.filterNot(_._1 % 5 == r)
-        case 7 => // DV update: no-match commits nothing
-          val r = rnd.nextInt(5)
-          io.updateWhereVectors(spark, "t", col("k") % 5 === r,
-            Map("x" -> (col("x") + lit(1000.0))))
-          if (history.last.exists(_._1 % 5 == r))
-            history :+= history.last.map { case (k, x) =>
-              if (k % 5 == r) (k, x + 1000.0) else (k, x) }
-        case 8 => // DV merge ≡ upsert semantics
-          val rows = freshRows().distinctBy(_._1)
-          io.upsertVectors(spark, df(rows), "t", keys = Seq("k"))
-          val keys = rows.map(_._1).toSet
-          history :+= (history.last.filterNot(r => keys(r._1)) ++ rows)
-        case 9 => // bin-packing OPTIMIZE: content-preserving IF it commits
-          val before = io.latestVersion("t")
-          io.compactSmall(spark, "t", minRows = 3)
-          if (io.latestVersion("t") > before) history :+= history.last
+        case 6 => // OPTIMIZE: a content-preserving rewrite
+          io.compact(spark, "t", numFiles = 1)
+          history :+= history.last
       }
       // head must equal the model (as bags)
       assert(io.read(spark, "t").as[(Int, Double)].collect().sorted.toSeq ==
         history.last.sorted, s"head diverged at step $step")
       // metadata-only count must agree with the model at EVERY step —
-      // catches any op that leaves carried DV stats inconsistent with
-      // its rewritten dirs (Σdata − Σdv double-subtraction)
+      // catches any op whose count stats disagree with its dirs
       assert(io.rowCount("t", history.size.toLong)
         .contains(history.last.size.toLong),
         s"rowCount diverged at step $step: " +
@@ -961,39 +799,6 @@ class VersionedTableSpec extends AnyFunSuite {
     assert(io.readVersion(spark, "t", 1).count() == 1000)
   }
 
-  test("compactSmall with live DVs: carried vectors are rewritten to the " +
-      "surviving dirs — rowCount never double-subtracts materialized " +
-      "deletes") {
-    val (io, root) = freshIo()
-    io.overwrite(spark.range(0, 1000).toDF("id"), "t") // v1: the big dir
-    io.append(spark.range(1000, 1010).toDF("id"), "t") // v2: small
-    io.append(spark.range(1010, 1020).toDF("id"), "t") // v3: small
-    // masks span BOTH a small dir (1005) and the big dir (5, 6)
-    io.deleteWhereVectors(spark, "t", col("id").isin(5L, 6L, 1005L))
-    assert(io.rowCount("t", 4L).contains(1017L))
-    io.compactSmall(spark, "t", minRows = 100) // v5: packs the two smalls
-    val m = io.manifest("t", 5L)
-    assert(m.dataDirs.size == 2) // big dir carried + one packed dir
-    assert(io.read(spark, "t").count() == 1017)
-    // the bug this pins: positions referencing the packed dirs must be
-    // dropped from the carried vectors, or Σdata − Σdv undercounts
-    assert(io.rowCount("t", 5L).contains(1017L))
-    // vectors consolidated to ONE dir holding only the big-dir positions
-    assert(m.dvDirs.size == 1)
-    assert(spark.read.parquet(s"$root/t/${m.dvDirs.head}").count() == 2L)
-    // when every masked position lived in a packed dir, DVs clear whole
-    val (io2, _) = freshIo()
-    io2.overwrite(spark.range(0, 1000).toDF("id"), "t")
-    io2.append(spark.range(1000, 1010).toDF("id"), "t")
-    io2.append(spark.range(1010, 1020).toDF("id"), "t")
-    io2.deleteWhereVectors(spark, "t", col("id") >= 1015L)
-    io2.compactSmall(spark, "t", minRows = 100)
-    val m2 = io2.manifest("t", 5L)
-    assert(m2.dvDirs.isEmpty)
-    assert(io2.read(spark, "t").count() == 1015)
-    assert(io2.rowCount("t", 5L).contains(1015L))
-  }
-
   test("z-order tolerates partially-null cluster keys: nulls land in the " +
       "min bucket, no __HIVE_DEFAULT_PARTITION__ dir, content preserved") {
     val (io, _) = freshIo()
@@ -1012,18 +817,19 @@ class VersionedTableSpec extends AnyFunSuite {
       .forall(_.getString(0).contains("__zb=0")))
   }
 
-  test("addConstraint vs concurrent restore: a restore that removes DV " +
-      "masks re-exposes rows — the constraint must never commit over a " +
-      "violating head it skipped re-scanning") {
+  test("addConstraint vs concurrent restore: a restore that re-exposes " +
+      "deleted rows — the constraint must never commit over a violating " +
+      "head it skipped re-scanning") {
     // v1: a violating row (v = -5) lives in the data dir
-    // v2: the row is DV-masked, so the HEAD satisfies the predicate
-    // race: restore(1) — same dir names, FEWER dvDirs — while
+    // v2: a DELETE rewrote the snapshot without it, so the HEAD
+    //     satisfies the predicate
+    // race: restore(1) — v1's dir back in the head — while
     // addConstraint validates. Contract: whichever way the race lands,
     // the constraint commit's BASE version must satisfy the predicate.
     for (round <- 0 until 3) {
       val (io, _) = freshIo()
       io.overwrite(Seq((1L, 10.0), (2L, -5.0), (3L, 7.0)).toDF("k", "v"), "t")
-      io.deleteWhereVectors(spark, "t", col("v") < 0)
+      io.deleteWhere(spark, "t", col("v") < 0)
       assert(io.read(spark, "t").count() == 2)
       @volatile var constraintErr: Option[Throwable] = None
       val adder = new Thread(() =>
@@ -1031,7 +837,7 @@ class VersionedTableSpec extends AnyFunSuite {
         catch { case t: Throwable => constraintErr = Some(t) })
       adder.start()
       Thread.sleep(20L * round) // vary the interleaving across rounds
-      io.restore("t", 1L) // re-commits v1's dirs with NO dvDirs
+      io.restore("t", 1L) // re-commits v1's dir, violating row included
       adder.join()
       val committed = io.properties("t").contains("constraint.vpos")
       assert(committed || constraintErr.isDefined)
@@ -1049,8 +855,8 @@ class VersionedTableSpec extends AnyFunSuite {
     }
   }
 
-  /** Random walk over a SOURCE table (appends / overwrites / DV deletes
-    * / compactSmall / restore) interleaved with CLONES at random live
+  /** Random walk over a SOURCE table (appends / overwrites / deletes
+    * / compactions / restore) interleaved with CLONES at random live
     * versions and retention VACUUMs — on the given backend. Every clone
     * must capture exactly its pinned snapshot and stay readable after
     * the source is vacuumed past that version (links keep inodes alive;
@@ -1075,13 +881,11 @@ class VersionedTableSpec extends AnyFunSuite {
           io.overwrite(df(rows), "src"); history :+= rows
         case 2 =>
           val r = rnd.nextInt(5)
-          io.deleteWhereVectors(spark, "src", col("id") % 5 === r)
-          if (history.last.exists(_ % 5 == r))
-            history :+= history.last.filterNot(_ % 5 == r)
+          io.deleteWhere(spark, "src", col("id") % 5 === r)
+          history :+= history.last.filterNot(_ % 5 == r)
         case 3 =>
-          val before = io.latestVersion("src")
-          io.compactSmall(spark, "src", minRows = 10)
-          if (io.latestVersion("src") > before) history :+= history.last
+          io.compact(spark, "src", numFiles = 1)
+          history :+= history.last
         case 4 =>
           val target = vacuumedBelow + rnd.nextInt(
             (history.size - vacuumedBelow + 1).toInt)
@@ -1249,7 +1053,7 @@ class VersionedTableSpec extends AnyFunSuite {
             }
           }
         })
-        // fifth party: OPTIMIZE packs the small appended dirs mid-churn.
+        // fifth party: OPTIMIZE packs the snapshot into one dir mid-churn.
         // A landed compaction rewrites files but must never change
         // CONTENT — the decomposition invariant below (one whole base +
         // whole appended batches) is exactly the torn-compaction
@@ -1261,7 +1065,7 @@ class VersionedTableSpec extends AnyFunSuite {
         val compactorSession = spark.newSession()
         val compactor = new Thread(() => {
           for (_ <- 0 until 3)
-            try io.compactSmall(compactorSession, "t", minRows = 200L)
+            try io.compact(compactorSession, "t", numFiles = 1)
             catch {
               case _: IllegalArgumentException | _: IllegalStateException |
                   _: java.io.UncheckedIOException | _: java.io.IOException =>
